@@ -3,7 +3,8 @@ package graft
 import java.security.MessageDigest
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 import graft.checkpoint.{Fingerprint, LineageStore}
@@ -22,24 +23,30 @@ import graft.sources.TranscriptTable
   *                     reprocesses it from scratch (S9)
   *  3. removal       — lineage entries whose files left the manifest are
   *                     pruned (J4 set-difference → offset Delete)
-  *  4. process       — parse → enrich → route, computed once and persisted
-  *                     so every sink and every count derives from the same
-  *                     fan-out (consistent-fan-out requirement, SURVEY §4)
-  *  5. deliver       — per-sink filtered writes to
-  *                     `<outDir>/<sink>/batch=<id>/route_key=…` where the
-  *                     batch id is a pure function of ONE file's path and
-  *                     content hash (content-addressed per file, NOT per
-  *                     run): a batch dir that already exists is never
-  *                     rewritten, so replay after a crash re-delivers
-  *                     nothing even if the todo set has meanwhile changed
-  *                     (a run-wide id would mint fresh dirs for
-  *                     already-delivered files in exactly that window)
+  *  4. process       — parse → enrich → route as ONE lazy plan, never
+  *                     persisted: the source is a pinned snapshot of
+  *                     immutable files, so the delivery write and the
+  *                     lineage counts each recompute the identical fan-out
+  *                     (consistent-fan-out requirement, SURVEY §4)
+  *  5. deliver       — ONE distributed write for every sink, partitioned by
+  *                     (sink, batch, route_key) under a per-run staging dir,
+  *                     then one atomic rename per new
+  *                     `<outDir>/<sink>/batch=<id>` dir. The batch id is a
+  *                     pure function of ONE file's path and content hash
+  *                     (content-addressed per file, NOT per run): a batch
+  *                     dir that already exists is never rewritten, so
+  *                     replay after a crash re-delivers nothing even if the
+  *                     todo set has meanwhile changed (a run-wide id would
+  *                     mint fresh dirs for already-delivered files in
+  *                     exactly that window)
   *  6. commit        — per-(file, sink) lineage rows written atomically
   *                     AFTER all sink writes succeeded, mirroring "offset
   *                     saved only after the callback batch completed"
   *                     (internal/collector/collector.go:104-117); the rows
   *                     are computed and written distributed (one shared
-  *                     scan), never collected per-file to the driver
+  *                     scan), never collected per-file to the driver, and
+  *                     the report's per-sink totals are observed on that
+  *                     same write
   */
 object Pipeline {
 
@@ -168,15 +175,16 @@ object Pipeline {
     val fps = todoFps.toMap
     val bids = todo.map(f => f -> fileBatchId(f, fps(f))).toMap
     // A5 collector metrics (lines_total / bytes_total / blank) ride on the
-    // counting job via Observation — no extra scan of the input
-    val obs = new org.apache.spark.sql.Observation(s"graft-$runId")
-    val src = spark.read.parquet(todo: _*)
+    // delivery jobs via Observation — no extra scan of the input
+    val obs = new Observation(s"graft-$runId")
+    val inputAggs = Seq(
+      count(lit(1)).as("lines_total"),
+      coalesce(sum(length(col("text"))), lit(0L)).as("bytes_total"),
+      coalesce(sum(when(length(col("text")) === 0, 1L).otherwise(0L)), lit(0L))
+        .as("blank_total"))
+    val scanned = spark.read.parquet(todo: _*)
       .withColumn("src_file", input_file_name())
-      .observe(obs,
-        count(lit(1)).as("lines_total"),
-        coalesce(sum(length(col("text"))), lit(0L)).as("bytes_total"),
-        coalesce(sum(when(length(col("text")) === 0, 1L).otherwise(0L)), lit(0L))
-          .as("blank_total"))
+    val src = scanned.observe(obs, inputAggs.head, inputAggs.tail: _*)
 
     // Optional multiline assembly: blank lines are dropped first (the
     // blank-record rule — counted in the observation, never delivered,
@@ -331,108 +339,137 @@ object Pipeline {
         .withColumn("fname", substring_index(col("src_file"), "/", -1))
         .join(bidDf, "fname")
 
-      // deliver per sink: ONE distributed write partitioned by
-      // (batch, route_key), then one atomic rename per NEW batch dir.
-      // Already-present dirs (crash-replay window) are never rewritten,
-      // whatever the current todo set looks like.
-      //
-      // Wire sinks (rule.url set) additionally POST the just-committed
-      // rows over HTTP AFTER the renames — at-most-once per batch dir: a
-      // crash between rename and POST is a missed flush on replay, the
-      // reference's logged-and-dropped flush analogue — and their exact
-      // per-item accounting lands in `wireAcc` for the lineage rows.
-      val wireAcc = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      cfg.sinks.foreach { rule =>
+      // every (row, accepting sink) pair, flagged where that sink's remote
+      // rejects the row: the one sink fan-out the delivery write and the
+      // lineage counts both derive from
+      val failFlag = cfg.sinks.foldLeft(lit(false)) { (acc, r) =>
+        when(col("sink") === r.name,
+          Route.rejectPredicate(r, col("text"))).otherwise(acc)
+      }
+      def perSink(rows: DataFrame): DataFrame = rows
+        .withColumn("sink", explode(Route.acceptingSinks(cfg.sinks, col("text"))))
+        .withColumn("failed", failFlag)
+
+      // deliver: ONE distributed write for every sink, partitioned by
+      // (sink, batch, route_key), then one atomic rename per NEW
+      // (sink, batch) dir. Already-present dirs (crash-replay window) are
+      // never rewritten, whatever the current todo set looks like.
+      val pending: Seq[(String, String)] = cfg.sinks.flatMap { rule =>
         val sinkRoot = new Path(fsRoot, rule.name)
         val existing: Set[String] =
           if (!fs.exists(sinkRoot)) Set.empty
           else fs.listStatus(sinkRoot).map(_.getPath.getName)
             .collect { case n if n.startsWith("batch=") => n.stripPrefix("batch=") }
             .toSet
-        val newBids = todo.map(bids).filterNot(existing).toSet
-        if (newBids.nonEmpty) {
-          val staging = new Path(fsRoot, s"_staging-${rule.name}-$runId")
-          // remote-rejected rows are attempted (counted as failed below)
-          // but never land in the sink — NumFailed semantics
-          val base = Route.forSink(routedB, rule)
-            .filter(!Route.rejectPredicate(rule, col("text")))
-          val subset =
-            if (newBids.size == todo.size) base
-            else base.filter(col("batch").isin(newBids.toSeq: _*))
-          // constant labels ride every delivered row (SinkConfig.Labels
-          // parity — the K5/K6 label-map slot)
-          val labelsCol =
-            if (cfg.labels.isEmpty)
-              map().cast("map<string,string>")
-            else map(cfg.labels.toSeq.sortBy(_._1)
-              .flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
-          subset
-            .select(col("ts"), col("host"), col("route_key"), col("batch"),
-              col("text").as("message"), col("conv_id"), col("turn_idx"),
-              col("verb"), col("dur_ms"), col("status"), col("tool_family"),
-              col("src_file"), labelsCol.as("labels"))
-            .write.mode("overwrite").partitionBy("batch", "route_key")
-            .parquet(staging.toString)
+        todo.map(bids).filterNot(existing).map(rule.name -> _)
+      }
+      if (pending.nonEmpty) {
+        val staging = new Path(fsRoot, s"_staging-$runId")
+        // an upstream shuffle (dedup, multiline) spreads every batch over
+        // all shuffle partitions, and each partition would write its own
+        // file into every (sink, batch, route_key) dir: re-cluster by
+        // (batch, route_key) before the sink explode. The explicit count
+        // keeps AQE from coalescing a small batch into ONE writer task.
+        // Without such a stage the scan is already aligned with the input
+        // files (one batch per file), so no exchange is added.
+        val clustered =
+          if (cfg.dedup.isEmpty && cfg.multiline.isEmpty) routedB
+          else routedB.repartition(
+            spark.conf.get("spark.sql.shuffle.partitions").toInt,
+            col("batch"), col("route_key"))
+        // remote-rejected rows are attempted (counted as failed below)
+        // but never land in the sink — NumFailed semantics
+        val accepted = perSink(clustered).filter(!col("failed"))
+        // batch ids are fixed-width hex, so "<sink>/<batch>" is unambiguous
+        val subset =
+          if (pending.size == cfg.sinks.size * todo.size) accepted
+          else accepted.filter(concat(col("sink"), lit("/"), col("batch"))
+            .isin(pending.map { case (s, b) => s"$s/$b" }: _*))
+        // constant labels ride every delivered row (SinkConfig.Labels
+        // parity — the K5/K6 label-map slot)
+        val labelsCol =
+          if (cfg.labels.isEmpty)
+            map().cast("map<string,string>")
+          else map(cfg.labels.toSeq.sortBy(_._1)
+            .flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
+        subset
+          .select(col("sink"), col("ts"), col("host"), col("route_key"),
+            col("batch"), col("text").as("message"), col("conv_id"),
+            col("turn_idx"), col("verb"), col("dur_ms"), col("status"),
+            col("tool_family"), col("src_file"), labelsCol.as("labels"))
+          .write.mode("overwrite").partitionBy("sink", "batch", "route_key")
+          .parquet(staging.toString)
+        pending.foreach { case (sink, b) =>
+          val sinkRoot = new Path(fsRoot, sink)
           fs.mkdirs(sinkRoot)
-          newBids.foreach { b =>
-            val src = new Path(staging, s"batch=$b")
-            val dest = new Path(sinkRoot, s"batch=$b")
-            if (fs.exists(src) && !fs.exists(dest))
-              require(fs.rename(src, dest),
-                s"sink commit rename failed for ${rule.name}/batch=$b")
-          }
-          fs.delete(staging, true)
-
-          // wire flush: read the committed dirs back (no re-parse — the
-          // parquet IS the attempted row set, fan-out included) and POST
-          rule.url.foreach { wireUrl =>
-            val committed = newBids.toSeq.sorted
-              .map(b => new Path(sinkRoot, s"batch=$b").toString)
-              .filter(p => fs.exists(new Path(p)))
-            if (committed.nonEmpty) {
-              // basePath anchors partition discovery over the subset of
-              // batch= dirs (leaf roots alone conflict)
-              val rows = spark.read.option("basePath", sinkRoot.toString)
-                .parquet(committed: _*)
-              val doc =
-                if (rule.kind == "clickhouse")
-                  // the INSERT column shape (clickhouse.go:113):
-                  // (ts, host, labels, message) as JSONEachRow keys
-                  to_json(struct(col("ts"), col("host"), col("labels"),
-                    col("message")))
-                else
-                  // the BulkIndexer doc (opensearch.go:103-108)
-                  to_json(struct(
-                    date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
-                      .as("@timestamp"),
-                    col("message"), col("host"), col("labels")))
-              val spec = graft.sinks.HttpSink.WireSpec(rule.kind, wireUrl,
-                rule.target, rule.user, rule.pass,
-                cfg.batchSize, cfg.batchIntervalMs,
-                maxRetries = cfg.batchRetries)
-              // the POSTs are a task side effect: a SPECULATIVE duplicate
-              // attempt re-delivers its partition's rows, so the
-              // at-least-once-per-attempt contract (HttpSink.deliver)
-              // is enforced here, not just documented — wire delivery
-              // refuses to run under speculation
-              require(!spark.sparkContext.getConf
-                .getBoolean("spark.speculation", defaultValue = false),
-                "wire sinks require spark.speculation=false: a speculative " +
-                  "task attempt would re-POST rows the original already " +
-                  "delivered")
-              // localCheckpoint(eager) EXECUTES the POSTs here, once: the
-              // accounting frame is otherwise lazy and a recomputation
-              // (fetch failure, speculative task) would re-POST delivered
-              // rows; the pinned result is a handful of per-file counts
-              wireAcc += graft.sinks.HttpSink.deliver(
-                rows.select(
-                  substring_index(col("src_file"), "/", -1).as("fname"),
-                  doc.as("doc")),
-                spec).withColumn("sink", lit(rule.name))
-                .localCheckpoint(true)
-            }
-          }
+          // the staged dir name is Spark's partition-path escaping of the
+          // sink name (a name with '=', '%', ':' … differs on disk)
+          val src = new Path(staging,
+            s"${ExternalCatalogUtils.getPartitionPathString("sink", sink)}/batch=$b")
+          val dest = new Path(sinkRoot, s"batch=$b")
+          if (fs.exists(src) && !fs.exists(dest))
+            require(fs.rename(src, dest),
+              s"sink commit rename failed for $sink/batch=$b")
         }
+        fs.delete(staging, true)
+      }
+
+      // Wire sinks (rule.url set) additionally POST the just-committed rows
+      // over HTTP AFTER the renames — at-most-once per batch dir: a crash
+      // between rename and POST is a missed flush on replay, the
+      // reference's logged-and-dropped flush analogue — and their exact
+      // per-item accounting lands in `wireAcc` for the lineage rows.
+      val wireAcc: Seq[DataFrame] = for {
+        rule <- cfg.sinks
+        wireUrl <- rule.url
+        sinkRoot = new Path(fsRoot, rule.name)
+        // wire flush: read the committed dirs back (no re-parse — the
+        // parquet IS the attempted row set, fan-out included) and POST
+        committed = pending.filter(_._1 == rule.name).map(_._2).sorted
+          .map(b => new Path(sinkRoot, s"batch=$b").toString)
+          .filter(p => fs.exists(new Path(p)))
+        if committed.nonEmpty
+      } yield {
+        // basePath anchors partition discovery over the subset of
+        // batch= dirs (leaf roots alone conflict)
+        val rows = spark.read.option("basePath", sinkRoot.toString)
+          .parquet(committed: _*)
+        val doc =
+          if (rule.kind == "clickhouse")
+            // the INSERT column shape (clickhouse.go:113):
+            // (ts, host, labels, message) as JSONEachRow keys
+            to_json(struct(col("ts"), col("host"), col("labels"),
+              col("message")))
+          else
+            // the BulkIndexer doc (opensearch.go:103-108)
+            to_json(struct(
+              date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
+                .as("@timestamp"),
+              col("message"), col("host"), col("labels")))
+        val spec = graft.sinks.HttpSink.WireSpec(rule.kind, wireUrl,
+          rule.target, rule.user, rule.pass,
+          cfg.batchSize, cfg.batchIntervalMs,
+          maxRetries = cfg.batchRetries)
+        // the POSTs are a task side effect: a SPECULATIVE duplicate
+        // attempt re-delivers its partition's rows, so the
+        // at-least-once-per-attempt contract (HttpSink.deliver)
+        // is enforced here, not just documented — wire delivery
+        // refuses to run under speculation
+        require(!spark.sparkContext.getConf
+          .getBoolean("spark.speculation", defaultValue = false),
+          "wire sinks require spark.speculation=false: a speculative " +
+            "task attempt would re-POST rows the original already " +
+            "delivered")
+        // localCheckpoint(eager) EXECUTES the POSTs here, once: the
+        // accounting frame is otherwise lazy and a recomputation
+        // (fetch failure, speculative task) would re-POST delivered
+        // rows; the pinned result is a handful of per-file counts
+        graft.sinks.HttpSink.deliver(
+          rows.select(
+            substring_index(col("src_file"), "/", -1).as("fname"),
+            doc.as("doc")),
+          spec).withColumn("sink", lit(rule.name))
+          .localCheckpoint(true)
       }
 
       // per-(sink, file) delivered counts in ONE shared scan, kept
@@ -442,15 +479,8 @@ object Pipeline {
       // driver metadata)
       val now = System.currentTimeMillis()
       // attempted rows per (sink, fname), split into delivered vs remote-
-      // rejected (the failed flag resolves per exploded sink name)
-      val failFlag = cfg.sinks.foldLeft(lit(false)) { (acc, r) =>
-        when(col("sink") === r.name,
-          Route.rejectPredicate(r, col("text"))).otherwise(acc)
-      }
-      val countsDf = routedB
-        .select(col("fname"), col("text"),
-          explode(Route.acceptingSinks(cfg.sinks, col("text"))).as("sink"))
-        .withColumn("failed", failFlag)
+      // rejected
+      val countsDf = perSink(routedB)
         .groupBy("sink", "fname")
         .agg(sum(when(col("failed"), 0L).otherwise(1L)).as("n"),
           sum(when(col("failed"), 1L).otherwise(0L)).as("nf"))
@@ -472,6 +502,15 @@ object Pipeline {
             .withColumn("wf", lit(null).cast("long"))
         else grid.join(wireAcc.reduce(_ unionByName _),
           Seq("sink", "fname"), "left")
+      // report totals are observed on the commit write itself, one
+      // index-named (delivered, failed) aggregate pair per sink — sink
+      // names never become Catalyst identifiers
+      val sinkObs = new Observation(s"graft-sinks-$runId")
+      val sinkAggs = cfg.sinks.zipWithIndex.flatMap { case (r, i) =>
+        val mine = col("sink") === r.name
+        Seq(sum(when(mine, col("rowsDelivered")).otherwise(0L)).as(s"d_$i"),
+          sum(when(mine, col("rowsFailed")).otherwise(0L)).as(s"f_$i"))
+      }
       val entriesDf = withWire
         .select(lit(runId).as("runId"), lit(snapId).as("snapshotId"),
           col("file"), col("sink"),
@@ -479,24 +518,29 @@ object Pipeline {
           (coalesce(col("nf"), lit(0L)) + coalesce(col("wf"), lit(0L)))
             .as("rowsFailed"),
           col("contentHash"), lit(now).as("committedAtMs"))
+        .observe(sinkObs, sinkAggs.head, sinkAggs.tail: _*)
       lineage.commitDf(entriesDf, runId)
       // dedup store publishes strictly AFTER the lineage commit (the
       // crash-ordering contract above); also releases the stage's caches
       dedupStage.foreach(_._2())
 
-      // report totals come from the just-committed (small) lineage slice
-      val perSink = lineage.entriesDf()
-        .filter(col("runId") === runId)
-        .groupBy("sink").agg(sum("rowsDelivered").as("n"), sum("rowsFailed").as("nf"))
-        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-
-      // the lineage write materialized src, so the observation is set
-      val metrics = obs.get
+      val totals = sinkObs.get
+      def perSinkTotal(prefix: String): Map[String, Long] =
+        cfg.sinks.zipWithIndex.map { case (r, i) =>
+          r.name -> totals(s"${prefix}_$i").asInstanceOf[Long] }.toMap
+      // the lineage write's plan holds src, so its observation is complete
+      // here — but EMPTY when AQE pruned the CollectMetrics node: a batch
+      // the minhash stage drops in full leaves empty caches above it, and
+      // empty-relation propagation removes the subtree. Only then are the
+      // input totals counted by a job of their own.
+      val metrics = Some(obs.get).filter(_.contains("lines_total"))
+        .getOrElse(scanned.agg(inputAggs.head, inputAggs.tail: _*).head()
+          .getValuesMap[Any](Seq("lines_total", "bytes_total", "blank_total")))
       RunReport(runId, snapId, todo, invalidated, pruned,
-        cfg.sinks.map(r => r.name -> perSink.get(r.name).map(_._1).getOrElse(0L)).toMap,
+        perSinkTotal("d"),
         metrics("lines_total").asInstanceOf[Long],
         metrics("blank_total").asInstanceOf[Long],
-        cfg.sinks.map(r => r.name -> perSink.get(r.name).map(_._2).getOrElse(0L)).toMap,
+        perSinkTotal("f"),
         inputBytes = metrics("bytes_total").asInstanceOf[Long],
         manifestFiles = files.size)
     }

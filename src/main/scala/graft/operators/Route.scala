@@ -10,10 +10,17 @@ import graft.model.SinkRule
   * The reference routes every line to exactly ONE configured sink
   * (cmd/freader/sink.go:18-87) after an include/exclude substring filter
   * (cmd/freader/sink/common/filter.go:11-30). The north rule generalizes
-  * this to fan-out: each row is assigned `role:<role>` and (for tool turns)
-  * `tool:<tool>` route keys, exploded, filtered per sink rule, and written
-  * with a single `partitionBy(route_key)` pass per sink family — one
-  * shuffle-free write, N output directories.
+  * this to fan-out on two axes:
+  *
+  *  - route keys: every row is assigned `role:<role>` and (for tool turns)
+  *    `tool:<tool>`, one output row per key ([[routed]]);
+  *  - sinks: each sink rule's include/exclude filter ([[sinkPredicate]])
+  *    admits a row independently, so one row can reach several sinks
+  *    ([[acceptingSinks]] gives the whole accepting set as one column).
+  *
+  * Everything here is a Column or DataFrame transform; the delivery write
+  * itself lives in `Pipeline.run` (one partitioned write for all sinks).
+  * [[sinkCounts]] accounts every (sink, route_key) pair in one aggregate.
   *
   * Blank lines are counted but never delivered — the reference's
   * blank-record rule (internal/tailer/tail_reader.go:272-279: the offset
@@ -87,16 +94,19 @@ object Route {
         lit(0L).as("rows_delivered"), lit(0L).as("bytes_delivered"))
     if (rules.isEmpty) return empty
     val len = length(col("text")).cast("long")
-    val aggs = rules.flatMap { r =>
+    // aliases are index-named: a config-supplied sink name ("errors.v2")
+    // would otherwise be parsed as a nested-field reference by col()
+    val aggs = rules.zipWithIndex.flatMap { case (r, i) =>
       val p = sinkPredicate(r, col("text"))
-      Seq(sum(when(p, 1L).otherwise(0L)).as(s"__c_${r.name}"),
-        sum(when(p, len).otherwise(0L)).as(s"__b_${r.name}"))
+      Seq(sum(when(p, 1L).otherwise(0L)).as(s"__c_$i"),
+        sum(when(p, len).otherwise(0L)).as(s"__b_$i"))
     }
     routedDf.groupBy(col("route_key")).agg(aggs.head, aggs.tail: _*)
-      .select(col("route_key"), explode(array(rules.map(r =>
-        struct(lit(r.name).as("sink"),
-          col(s"__c_${r.name}").as("rows_delivered"),
-          col(s"__b_${r.name}").as("bytes_delivered"))): _*)).as("__s"))
+      .select(col("route_key"), explode(array(rules.zipWithIndex.map {
+        case (r, i) => struct(lit(r.name).as("sink"),
+          col(s"__c_$i").as("rows_delivered"),
+          col(s"__b_$i").as("bytes_delivered"))
+      }: _*)).as("__s"))
       .filter(col("__s.rows_delivered") > 0)
       .select(col("__s.sink").as("sink"), col("route_key"),
         col("__s.rows_delivered").as("rows_delivered"),
@@ -114,19 +124,6 @@ object Route {
       sum(when(length(col("text")) > 0,
         when(col("tool") =!= "", 2).otherwise(1)).otherwise(0)).as("routed_rows"))
   }
-
-  /** Sink write: the ClickHouse/OpenSearch row shape
-    * (ts, host, labels→route_key, message) as partitioned parquet per sink
-    * directory — `partitionBy(route_key)` gives one directory per route,
-    * single pass, no extra shuffle.
-    */
-  def writeSink(routedDf: DataFrame, rule: SinkRule, outDir: String): Unit =
-    forSink(routedDf, rule)
-      .select(col("ts"), col("host"), col("route_key"),
-        col("text").as("message"), col("conv_id"), col("turn_idx"))
-      .write.mode("overwrite")
-      .partitionBy("route_key")
-      .parquet(s"$outDir/${rule.name}")
 
   /** Plain-text sink flavor — the console/file sink shape
     * (cmd/freader/sink/console/console.go:39-93): one line per delivered

@@ -23,6 +23,21 @@ class PipelineSpec extends AnyFunSuite {
 
   private def tmp(): String = Files.createTempDirectory("graft-pipe").toString
 
+  /** Every parquet data file under `dir` → its modification time. */
+  private def dataFiles(dir: String): Map[String, Long] = {
+    val root = java.nio.file.Paths.get(dir)
+    if (!Files.exists(root)) Map.empty
+    else {
+      val walk = Files.walk(root)
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala
+          .filter(p => p.getFileName.toString.endsWith(".parquet"))
+          .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toMap
+      } finally walk.close()
+    }
+  }
+
   private def sinkRows(outDir: String, sink: String): Long = {
     val p = new Path(s"$outDir/$sink")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -609,5 +624,154 @@ class PipelineSpec extends AnyFunSuite {
     val removed = lineage.pruneTo(Set("f2.parquet"))
     assert(removed.map(_.file) == Seq("f1.parquet"))
     assert(lineage.readAll().map(_.file) == Seq("f2.parquet"))
+  }
+
+  test("a fully-duplicate batch still reports its input rows (exact and minhash dedup)") {
+    Seq("exact", "minhash").foreach { mode =>
+      val root = tmp()
+      val dcfg = PipelineConfig(
+        sinks = Seq(SinkRule("all", kind = "parquet")),
+        dedup = Some(graft.model.DedupStageSpec(mode, s"$root/store")))
+      val table = new SnapshotTable(spark, s"$root/table")
+      val lineage = new LineageStore(spark, s"$root/lineage")
+      val out = s"$root/sinks"
+      val batch = Transcripts.synthesize(spark, numConvs = 10, turnsPerConv = 10).toDF()
+      table.append(batch)
+      val r1 = Pipeline.run(spark, table, lineage, dcfg, out)
+      assert(r1.inputRows == 100 && r1.perSinkDelivered("all") > 0, mode)
+      // the same batch again: every row is already in the store
+      table.append(batch)
+      val r2 = Pipeline.run(spark, table, lineage, dcfg, out)
+      assert(r2.processedFiles.nonEmpty, mode)
+      assert(r2.inputRows == 100, mode)
+      assert(r2.blankRows == r1.blankRows, mode)
+      assert(r2.perSinkDelivered("all") == 0, mode)
+      assert(sinkRows(out, "all") == r1.perSinkDelivered("all"), mode)
+    }
+  }
+
+  test("sink names outside the identifier grammar land under <out>/<name>/batch=…") {
+    val root = tmp()
+    val table = new SnapshotTable(spark, s"$root/table")
+    val lineage = new LineageStore(spark, s"$root/lineage")
+    val out = s"$root/sinks"
+    val odd = Seq("errors.v2", "a b=c%")
+    val ocfg = PipelineConfig(sinks = Seq(
+      SinkRule(odd(0), include = Seq("status=err")), SinkRule(odd(1))))
+    table.append(Transcripts.synthesize(spark, numConvs = 8, turnsPerConv = 6).toDF())
+    val r = Pipeline.run(spark, table, lineage, ocfg, out)
+    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // exactly the two sink dirs, nothing left staged
+    assert(fs.listStatus(new Path(out)).map(_.getPath.getName).toSet == odd.toSet)
+    val entries = lineage.readAll()
+    odd.foreach { name =>
+      val batches = fs.listStatus(new Path(new Path(out), name)).map(_.getPath.getName)
+      assert(batches.nonEmpty && batches.forall(_.startsWith("batch=")), s"$name: $batches")
+      val landed = sinkRows(out, name)
+      assert(landed > 0, name)
+      assert(entries.filter(_.sink == name).map(_.rowsDelivered).sum == landed, name)
+      assert(r.perSinkDelivered(name) == landed, name)
+    }
+  }
+
+  test("partial crash: only the lost (sink, batch) dir is rewritten; totals equal a clean run") {
+    val root = tmp()
+    val table = new SnapshotTable(spark, s"$root/table")
+    val lineage = new LineageStore(spark, s"$root/lineage")
+    val out = s"$root/sinks"
+    val batch = Transcripts.synthesize(spark, numConvs = 10, turnsPerConv = 10).toDF()
+    table.append(batch)
+    Pipeline.run(spark, table, lineage, cfg, out)
+
+    // crash: one sink's batch dir and every lineage commit are lost
+    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val lost = fs.listStatus(new Path(s"$out/errors")).map(_.getPath).minBy(_.getName)
+    fs.delete(lost, true)
+    val lroot = new Path(s"$root/lineage")
+    fs.listStatus(lroot).foreach(s => fs.delete(s.getPath, true))
+    val survivors = dataFiles(out)
+    val r = Pipeline.run(spark, table, lineage, cfg, out)
+
+    val lostPath = new java.io.File(lost.toUri.getPath).getPath
+    val after = dataFiles(out)
+    // every surviving file is untouched; new files appear only in the lost dir
+    assert(survivors.forall { case (f, t) => after.get(f).contains(t) })
+    val rewritten = after.keySet -- survivors.keySet
+    assert(rewritten.nonEmpty && rewritten.forall(_.startsWith(lostPath + "/")))
+
+    val root2 = tmp()
+    val table2 = new SnapshotTable(spark, s"$root2/table")
+    table2.append(batch)
+    val clean = Pipeline.run(spark, table2, new LineageStore(spark, s"$root2/lineage"),
+      cfg, s"$root2/sinks")
+    Seq("all", "errors").foreach { s =>
+      assert(sinkRows(out, s) == sinkRows(s"$root2/sinks", s), s)
+      assert(r.perSinkDelivered(s) == clean.perSinkDelivered(s), s)
+    }
+  }
+
+  test("dedup on: each delivered route_key dir holds exactly one data file") {
+    val root = tmp()
+    val dcfg = cfg.copy(dedup = Some(graft.model.DedupStageSpec("exact", s"$root/store")))
+    val table = new SnapshotTable(spark, s"$root/table")
+    val lineage = new LineageStore(spark, s"$root/lineage")
+    val out = s"$root/sinks"
+    table.append(Transcripts.synthesize(spark, numConvs = 12, turnsPerConv = 10,
+      numPartitions = 3).toDF())
+    Pipeline.run(spark, table, lineage, dcfg, out)
+    val perLeaf = dataFiles(out).keys.toSeq
+      .groupBy(f => new java.io.File(f).getParent)
+    assert(perLeaf.nonEmpty)
+    assert(perLeaf.keys.forall(_.contains("/route_key=")))
+    assert(perLeaf.values.forall(_.size == 1),
+      perLeaf.filter(_._2.size != 1).keys.mkString(", "))
+  }
+
+  test("delivery is ONE write under the sink root per run, whatever the sink count") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    final class WriteTap extends QueryExecutionListener {
+      val outputs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      @volatile var sentinelSeen = false
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        qe.logical.foreach {
+          case c: InsertIntoHadoopFsRelationCommand => outputs.add(c.outputPath.toUri.getPath)
+          case _ =>
+        }
+        if (qe.logical.output.exists(_.name == "write_tap_sentinel")) sentinelSeen = true
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def writesUnder(out: String)(body: => Unit): Int = {
+      val tap = new WriteTap
+      spark.listenerManager.register(tap)
+      try {
+        body
+        // listener events arrive in order: once the sentinel query is seen,
+        // every write of `body` has been seen too
+        spark.range(1).select(org.apache.spark.sql.functions.lit(1)
+          .as("write_tap_sentinel")).collect()
+        val deadline = System.nanoTime() + 30000000000L
+        while (!tap.sentinelSeen && System.nanoTime() < deadline) Thread.sleep(10)
+        assert(tap.sentinelSeen)
+      } finally spark.listenerManager.unregister(tap)
+      val prefix = new java.io.File(out).getAbsolutePath + "/"
+      tap.outputs.toArray.count(_.toString.startsWith(prefix))
+    }
+    val three = PipelineConfig(sinks = Seq(SinkRule("all"),
+      SinkRule("errors", include = Seq("status=err")),
+      SinkRule("clean", exclude = Seq("status=err", "INFO"))))
+    Seq(PipelineConfig(sinks = Seq(SinkRule("all"))), three).foreach { c =>
+      val root = tmp()
+      val table = new SnapshotTable(spark, s"$root/table")
+      val lineage = new LineageStore(spark, s"$root/lineage")
+      val out = s"$root/sinks"
+      table.append(Transcripts.synthesize(spark, numConvs = 6, turnsPerConv = 6).toDF())
+      var r: Pipeline.RunReport = null
+      assert(writesUnder(out) { r = Pipeline.run(spark, table, lineage, c, out) } == 1,
+        s"${c.sinks.size} sinks")
+      c.sinks.foreach(s => assert(sinkRows(out, s.name) == r.perSinkDelivered(s.name)))
+    }
   }
 }

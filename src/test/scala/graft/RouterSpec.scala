@@ -34,7 +34,9 @@ class RouterSpec extends AnyFunSuite {
     val rules = Seq(
       SinkRule("all"),
       SinkRule("err", include = Seq("status=err")),
-      SinkRule("noinfo", exclude = Seq("INFO")))
+      SinkRule("noinfo", exclude = Seq("INFO")),
+      // a name that parses as a nested field if it ever became a column ref
+      SinkRule("errors.v2", include = Seq("status=err"), exclude = Seq("INFO")))
     val routed = Route.routed(turns)
     val got = Route.sinkCounts(routed, rules)
       .as[(String, String, Long, Long)].collect()
