@@ -31,26 +31,24 @@ final case class LineageEntry(
     committedAtMs: Long)
 
 /** Lineage checkpoint store as a PARQUET TABLE: one atomic commit
-  * directory per run (`commit-<id>/`, written distributed by Spark to a
-  * tmp dir and renamed into place), so committing a run's entries never
-  * funnels per-file rows through the driver — at ~800k data files × S
-  * sinks the entries are themselves a dataset. Readers take the union of
+  * directory per run (`commit-<id>/`, written distributed by Spark and
+  * published by one [[CommitLog]] rename), so committing a run's entries
+  * never funnels per-file rows through the driver — at ~800k data files ×
+  * S sinks the entries are themselves a dataset. Readers take the union of
   * all commit dirs; duplicates per (file, sink) resolve last-writer-wins
   * by `committedAtMs` (Pipeline.run), which is what makes every mutation
   * here crash-safe: additions and compactions both land as a whole
   * directory rename, and a crash between steps only ever leaves
-  * superseded duplicates, never a hole.
+  * superseded duplicates, never a hole. Superseded dirs are deleted at
+  * once (the dedup seen-store retires them instead), so the physical
+  * `commit-*` count is the store's size.
   */
 final class LineageStore(spark: SparkSession, root: String,
     maxCommitDirs: Int = 16) {
   private val conf = spark.sparkContext.hadoopConfiguration
   private val rootPath = new Path(root)
   private def fs: FileSystem = rootPath.getFileSystem(conf)
-
-  private def commitDirs: Seq[Path] =
-    if (!fs.exists(rootPath)) Nil
-    else fs.listStatus(rootPath).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("commit-")).sortBy(_.getName)
+  private def log = new CommitLog(fs, rootPath, "commit-")
 
   /** All committed entries as a DataFrame (LineageEntry schema).
     *
@@ -61,12 +59,13 @@ final class LineageStore(spark: SparkSession, root: String,
     * from pre-column files coalesce to it, so resume against an old
     * store never throws UNRESOLVED_COLUMN (or NPEs in `as[LineageEntry]`).
     */
-  def entriesDf(): org.apache.spark.sql.DataFrame = {
+  def entriesDf(): org.apache.spark.sql.DataFrame = entriesOf(log.live)
+
+  private def entriesOf(dirs: Seq[Path]): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     import org.apache.spark.sql.types.{LongType, StringType}
     import spark.implicits._
     val empty = spark.emptyDataset[LineageEntry].toDF()
-    val dirs = commitDirs
     if (dirs.isEmpty) empty
     else {
       val raw = spark.read.option("mergeSchema", "true")
@@ -100,72 +99,68 @@ final class LineageStore(spark: SparkSession, root: String,
     commitDf(spark.createDataset(entries).toDF(), entries.head.runId)
   }
 
-  /** Distributed atomic commit: Spark writes the entries to a tmp dir,
-    * then one rename publishes the commit — the WAL commit point.
-    * `df` must have the LineageEntry schema.
+  /** Distributed atomic commit: Spark writes the entries, then one rename
+    * publishes the commit — the WAL commit point. Sweeps crash leftovers
+    * first. `df` must have the LineageEntry schema.
     */
   def commitDf(df: org.apache.spark.sql.DataFrame, commitId: String): Unit = {
+    log.sweep()
     writeCommit(df, commitId)
     compactIfNeeded()
   }
 
-  private def writeCommit(df: org.apache.spark.sql.DataFrame, commitId: String): Unit = {
-    fs.mkdirs(rootPath)
-    val tmp = new Path(rootPath, s"_tmp-$commitId")
-    // fixed column order so every commit dir carries the identical schema
-    val cols = Seq("runId", "snapshotId", "file", "sink", "rowsDelivered",
-      "rowsFailed", "contentHash", "committedAtMs")
-    df.select(cols.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode("overwrite").parquet(tmp.toString)
-    require(fs.rename(tmp, new Path(rootPath, s"commit-$commitId")),
-      "lineage commit rename failed")
+  private def writeCommit(df: org.apache.spark.sql.DataFrame, commitId: String): Unit =
+    log.commit(commitId) { tmp =>
+      // fixed column order so every commit dir carries the identical schema
+      val cols = Seq("runId", "snapshotId", "file", "sink", "rowsDelivered",
+        "rowsFailed", "contentHash", "committedAtMs")
+      df.select(cols.map(org.apache.spark.sql.functions.col): _*)
+        .write.mode("overwrite").parquet(tmp.toString)
+    }
+
+  /** Replace `sources` by ONE fresh commit holding `merged`: the merged
+    * dir lands first and only then are the sources deleted, so a crash in
+    * between leaves duplicate entries (harmless, last-writer-wins), never
+    * a hole. `merged` must be derived from [[entriesOf]]`(sources)`.
+    */
+  private def replace(sources: Seq[Path], merged: org.apache.spark.sql.DataFrame): Unit = {
+    writeCommit(merged, s"compact-${CommitLog.freshId()}")
+    sources.foreach(p => fs.delete(p, true))
   }
 
   /** Size-triggered compaction: a long-lived store otherwise accrues one
     * `commit-*` dir per run, so the reader-side union grows O(runs) —
     * unlike the reference's SQLite upsert, which never grows
     * (internal/store/sqlite_store.go:104-119). When the dir count exceeds
-    * `maxCommitDirs`, merge every current dir into ONE fresh commit and
-    * delete the sources. Row-preserving (duplicates resolve
-    * last-writer-wins at read, as always), and crash-safe in the same
-    * order as [[pruneTo]]: the merged dir lands first, so a crash in
-    * between only leaves duplicate entries, never a hole.
+    * `maxCommitDirs`, merge every current dir into ONE fresh commit.
+    * Row-preserving (duplicates resolve last-writer-wins at read, as
+    * always); entriesOf, not a raw read, normalizes old-schema dirs.
     */
   private def compactIfNeeded(): Unit = {
-    val dirs = commitDirs
-    if (dirs.size <= maxCommitDirs) return
-    // entriesDf, not a raw read: normalizes old-schema dirs on the way in
-    val merged = entriesDf()
-    writeCommit(merged, s"compact-${java.util.UUID.randomUUID().toString.take(8)}")
-    dirs.foreach(p => fs.delete(p, true))
+    val dirs = log.live
+    if (dirs.size > maxCommitDirs) replace(dirs, entriesOf(dirs))
   }
 
   /** Remove entries for files no longer present (J4 removal set-difference,
-    * mirroring offset Delete on file removal — collector.go:206-214).
-    * Crash-safe order: the compacted store lands under a FRESH commit name
-    * FIRST, and only then are the superseded commits deleted — a crash in
-    * between leaves duplicate entries (harmless, last-writer-wins), never
-    * an empty store. Returns removed entries.
+    * mirroring offset Delete on file removal — collector.go:206-214),
+    * through the same crash-safe [[replace]] as compaction. Not followed
+    * by an auto-compaction, which would merge the about-to-be-deleted
+    * source dirs and let the pruned entries survive their own prune.
+    * Returns removed entries.
     */
   def pruneTo(liveFiles: Set[String]): Seq[LineageEntry] = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val old = commitDirs
+    import org.apache.spark.sql.functions.broadcast
+    val old = log.live
     if (old.isEmpty) return Seq.empty
     val liveDf = spark.createDataset(liveFiles.toSeq).toDF("file")
-    val all = entriesDf()
+    val all = entriesOf(old)
     val drop = all.join(broadcast(liveDf), Seq("file"), "left_anti")
       .select("runId", "snapshotId", "file", "sink", "rowsDelivered",
         "rowsFailed", "contentHash", "committedAtMs")
       .as[LineageEntry].collect().toSeq
-    if (drop.nonEmpty) {
-      val keep = all.join(broadcast(liveDf), Seq("file"), "left_semi")
-      // writeCommit, NOT commitDf: an auto-compaction here would merge the
-      // about-to-be-deleted source dirs into the fresh commit and the
-      // pruned entries would survive their own prune
-      writeCommit(keep, s"compact-${java.util.UUID.randomUUID().toString.take(8)}")
-      old.foreach(p => fs.delete(p, true))
-    }
+    if (drop.nonEmpty)
+      replace(old, all.join(broadcast(liveDf), Seq("file"), "left_semi"))
     drop
   }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * `aggregate(zip_with(a, b, (x, y) => x*y), 0.0, (acc, x) => acc + x)` —
   * the same left-to-right fold of the same products, and null when the
   * lengths differ (zip_with pads with a null element, which nulls the
-  * interpreted sum). Higher-order functions run INTERPRETED per element;
+  * interpreted sum) or when either side holds a null element. Higher-order functions run INTERPRETED per element;
   * on the embedding near-dup verification (372k candidate pairs × 32
   * dims at sf0.1) the lambda machinery was the dominant cost. Codegen by
   * static call, the [[KvParse]] pattern. [[graft.operators.Similarity]]
@@ -26,7 +26,11 @@ object VecDotHelper {
     if (n != b.numElements()) return null
     var acc = 0.0
     var i = 0
-    while (i < n) { acc = acc + a.getDouble(i) * b.getDouble(i); i += 1 }
+    while (i < n) {
+      // a null element nulls the product, and with it the fold
+      if (a.isNullAt(i) || b.isNullAt(i)) return null
+      acc = acc + a.getDouble(i) * b.getDouble(i); i += 1
+    }
     acc
   }
 }

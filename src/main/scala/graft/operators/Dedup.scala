@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.checkpoint.CommitLog
 import graft.functions.Hashing
 
 /** Deduplication family for a large-scale training-data pipeline:
@@ -66,27 +67,18 @@ object Dedup {
     */
   final case class IncrementalBatch(fresh: DataFrame, commit: () => Unit)
 
-  /** Live store commits: `seen-*` dirs without a `_retired` marker.
-    * Retired dirs stay physically intact until the retention sweep
-    * ([[cleanTmp]]) so a concurrent reader whose plan pinned their file
-    * paths (the streaming near-dup stage explicitly shares the store with
-    * batch runs, streaming/TranscriptStream.scala) never hits a deleted
-    * file mid-scan — new listings just stop seeing them. Public because
-    * it IS the reader view: tests and external consumers must share this
-    * predicate rather than re-deriving it.
+  /** The seen-store's commit log: `seen-<id>` dirs, superseded ones
+    * retired rather than deleted (a concurrent reader whose plan pinned
+    * their files — the streaming near-dup stage shares the store with
+    * batch runs, streaming/TranscriptStream.scala — never hits a deleted
+    * file mid-scan).
     */
-  def listSeen(fs: FileSystem, root: Path): Seq[Path] =
-    if (!fs.exists(root)) Nil
-    else fs.listStatus(root).toSeq.map(_.getPath)
-      .filter(p => p.getName.startsWith("seen-") &&
-        !fs.exists(new Path(p, RetiredMarker)))
-      .sortBy(_.getName.toString)
+  private def seenLog(fs: FileSystem, root: Path) = new CommitLog(fs, root, "seen-")
 
-  /** Marker file a superseded commit dir carries instead of being deleted
-    * in place (leading `_` keeps parquet readers ignoring it). Deletion is
-    * retention-delayed to [[cleanTmp]]'s sweep.
+  /** Live store commits — the reader view. Public so tests and external
+    * consumers share this predicate rather than re-deriving it.
     */
-  private val RetiredMarker = "_retired"
+  def listSeen(fs: FileSystem, root: Path): Seq[Path] = seenLog(fs, root).live
 
   /** Per-commit provenance manifest: the sorted distinct non-null `src`
     * values of the dir's rows, one per line. [[retractSources]] skips any
@@ -127,131 +119,6 @@ object Dedup {
     }
   }
 
-  private def retire(fs: FileSystem, dir: Path): Unit = {
-    val out = fs.create(new Path(dir, RetiredMarker), true)
-    out.close()
-  }
-
-  /** Serialize store MUTATIONS (compaction, retraction) against each
-    * other: both rewrite-and-retire live dirs, and unserialized they can
-    * resurrect retracted hashes (a compaction that listed dirs before a
-    * concurrent retraction rewrote them merges the pre-retraction rows
-    * back in). A `_lock` file at the store root is the lease: atomic
-    * create-no-overwrite to acquire (atomic on HDFS; create-if-absent on
-    * the local fs — adequate for the single-host sharing this sandbox
-    * exercises), deleted to release.
-    *
-    * Ownership and liveness (nothing here may break a LIVE lease — a
-    * broken live lease is exactly the resurrection this lock prevents):
-    *
-    *  - the lock file carries the holder's unique TOKEN, and release
-    *    deletes the lock only while it still holds that token — a waiter
-    *    that (wrongly or rightly) re-took the path is never un-locked by
-    *    the previous holder's `finally`;
-    *  - the holder HEARTBEATS the lock's mtime on a daemon thread every
-    *    [[LockHeartbeatMs]], so "stale" ([[LockStaleMs]] without a touch)
-    *    means a dead holder, not a long Spark job inside the lease;
-    *  - a stale lease is broken ATOMICALLY: rename to a breaker-unique
-    *    name, then delete — exactly one of several concurrent breakers
-    *    wins the rename, so two waiters can never both "free" the path
-    *    and both acquire;
-    *  - a waiter never breaks a live lease; if one is still held past the
-    *    acquire timeout it THROWS rather than proceeding unserialized.
-    *
-    * Readers never take the lock: retention-delayed retirement already
-    * keeps their pinned files alive.
-    */
-  private val LockHeartbeatMs = 20L * 1000
-  private val LockStaleMs = 5L * 60 * 1000
-
-  private def withStoreLock[T](fs: FileSystem, root: Path)(body: => T): T = {
-    fs.mkdirs(root)
-    val lock = new Path(root, "_lock")
-    val token = java.util.UUID.randomUUID().toString
-    val giveUpAt = System.currentTimeMillis() + 10L * 60 * 1000
-    var acquired = false
-    while (!acquired) {
-      try {
-        val out = fs.create(lock, false)
-        try out.write(token.getBytes(StandardCharsets.UTF_8))
-        finally out.close()
-        acquired = true
-      } catch {
-        case _: java.io.IOException =>
-          val mtime =
-            try Some(fs.getFileStatus(lock).getModificationTime)
-            catch { case _: java.io.IOException => None }
-          val now = System.currentTimeMillis()
-          if (mtime.exists(now - _ > LockStaleMs)) {
-            val broken = new Path(root, s"_lock.broken-$token")
-            try { if (fs.rename(lock, broken)) fs.delete(broken, false) }
-            catch { case _: java.io.IOException => () }
-          } else if (now > giveUpAt)
-            throw new IllegalStateException(
-              s"dedup store lock $lock still held live after the acquire " +
-                "timeout; refusing to mutate unserialized")
-          else Thread.sleep(200)
-      }
-    }
-    @volatile var done = false
-    val hb = new Thread(() => {
-      var interrupted = false
-      while (!done && !interrupted) {
-        try fs.setTimes(lock, System.currentTimeMillis(), -1)
-        catch {
-          case _: java.io.IOException => // fs without setTimes: rewrite
-            try {
-              val out = fs.create(lock, true)
-              try out.write(token.getBytes(StandardCharsets.UTF_8))
-              finally out.close()
-            } catch { case _: java.io.IOException => () }
-        }
-        try Thread.sleep(LockHeartbeatMs)
-        catch { case _: InterruptedException => interrupted = true }
-      }
-    }, "graft-store-lock-heartbeat")
-    hb.setDaemon(true)
-    hb.start()
-    try body finally {
-      done = true
-      hb.interrupt()
-      try {
-        val in = fs.open(lock)
-        val cur =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        if (cur == token) fs.delete(lock, false)
-      } catch { case _: java.io.IOException => () }
-    }
-  }
-
-  /** Sweep crash leftovers and expired retirements: `_tmp-*` dirs are
-    * never read as seen state and every commit gets a fresh uuid, so a
-    * long crash-prone campaign must not accrete them — the sink root's
-    * `_staging-*` sweep, applied here. Retired `seen-*` dirs physically
-    * delete here too. Only items OLDER than an hour go: commits in flight
-    * from another batch sharing the store finish in seconds, and a
-    * concurrent reader's pinned plan over a just-retired dir drains long
-    * before the retention window closes.
-    */
-  private def cleanTmp(fs: FileSystem, root: Path): Unit =
-    if (fs.exists(root)) {
-      val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
-      fs.listStatus(root).foreach { st =>
-        val name = st.getPath.getName
-        if (name.startsWith("_tmp-") && st.getModificationTime < cutoff)
-          fs.delete(st.getPath, true)
-        else if (name.startsWith("seen-")) {
-          val marker = new Path(st.getPath, RetiredMarker)
-          val expired =
-            try fs.exists(marker) &&
-              fs.getFileStatus(marker).getModificationTime < cutoff
-            catch { case _: java.io.IOException => false }
-          if (expired) fs.delete(st.getPath, true)
-        }
-      }
-    }
-
   /** Distinct non-null `src` values of a staged batch — the `_srcs`
     * manifest content. A driver-side collect of file BASENAMES, bounded by
     * the batch's source-file count, never data-sized. `srcCol = None` →
@@ -289,55 +156,67 @@ object Dedup {
   private def sized(df: DataFrame, key: String): DataFrame =
     df.repartition(col(key))
 
-  /** Atomic store publish: write under `_tmp-<id>`, one rename to
-    * `seen-<id>` — the LineageStore commit-point pattern. A crash mid-write
-    * leaves only an unread `_tmp-*` dir, never partial seen state.
+  /** A commit dir's parquet components, relative to the dir: a minhash
+    * commit holds `bands`, `sets` and `exact` subdirs (stores written before
+    * the exact component lack it), an exact commit is one component at the
+    * dir itself ("").
     */
-  private def commitSeen(fs: FileSystem, root: Path)(write: Path => Unit): Unit = {
-    val id = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(root, s"_tmp-$id")
-    write(tmp)
-    require(fs.rename(tmp, new Path(root, s"seen-$id")),
-      "dedup store commit rename failed")
-  }
+  private def components(fs: FileSystem, dir: Path): Seq[String] =
+    if (!fs.exists(new Path(dir, "bands"))) Seq("")
+    else Seq("bands", "sets", "exact").filter(p => fs.exists(new Path(dir, p)))
 
-  /** Size-triggered compaction (the LineageStore pattern,
-    * checkpoint/Lineage.scala compactIfNeeded): a long campaign otherwise
-    * accretes one `seen-*` dir per batch and every subsequent run lists and
-    * unions ALL of them — O(batches) reader-side growth. When the dir count
-    * exceeds `maxDirs`, merge every current dir into ONE fresh commit and
-    * only then delete the sources; a crash in between leaves duplicate
-    * hashes (harmless — the consumer is an anti-join), never a hole.
+  private def at(dir: Path, part: String): Path =
+    if (part.isEmpty) dir else new Path(dir, part)
+
+  /** Stage-time store upkeep: sweep crash leftovers, then size-triggered
+    * compaction (as in checkpoint/Lineage.scala compactIfNeeded) — a long
+    * campaign otherwise accretes one `seen-*` dir per batch and every
+    * subsequent run lists and unions ALL of them, O(batches) reader-side
+    * growth. When the live count exceeds `maxDirs`, merge every live dir
+    * into ONE fresh commit, component by component (`mergeSchema` unifies
+    * pre-provenance dirs, without `src`, with provenance dirs; hash
+    * components are de-duplicated), and only then retire the sources; a
+    * crash in between leaves duplicate hashes (harmless — the consumer is
+    * an anti-join), never a hole.
     *
     * Runs at STAGE time, before the batch's read plans are built: a
     * staged batch's `fresh` plan pins the store dirs it was staged
-    * against, so deleting those dirs at commit time would break a caller
-    * that (correctly) consumes `fresh` after `commit()`.
+    * against, so superseding those dirs at commit time would break a
+    * caller that (correctly) consumes `fresh` after `commit()`.
     */
-  private def compactSeen(fs: FileSystem, root: Path, maxDirs: Int)(
-      merge: (Seq[Path], Path) => Unit): Unit = withStoreLock(fs, root) {
-    val dirs = listSeen(fs, root)
-    if (dirs.size > maxDirs) {
-      // merged manifest = union of the sources' manifests, but only when
-      // every source HAS one — a single pre-manifest dir poisons the union
-      // (its rows' srcs are unknown), so the merged dir stays conservative
-      val manifests = dirs.map(readSrcs(fs, _))
-      val union =
-        if (manifests.forall(_.isDefined)) Some(manifests.flatMap(_.get))
-        else None
-      commitSeen(fs, root) { tmp =>
-        merge(dirs, tmp)
-        union.foreach(u => writeSrcs(fs, tmp, u.toSeq))
+  private def compactSeen(spark: SparkSession, fs: FileSystem, log: CommitLog,
+      maxDirs: Int): Unit = {
+    log.sweep()
+    log.withLock {
+      val dirs = log.live
+      if (dirs.size > maxDirs) {
+        // merged manifest = union of the sources' manifests, but only when
+        // every source HAS one — a single pre-manifest dir poisons the union
+        // (its rows' srcs are unknown), so the merged dir stays conservative
+        val manifests = dirs.map(readSrcs(fs, _))
+        val union =
+          if (manifests.forall(_.isDefined)) Some(manifests.flatMap(_.get))
+          else None
+        log.commit(CommitLog.freshId()) { tmp =>
+          parallelJobs(dirs.flatMap(components(fs, _)).distinct.map { part => () =>
+            val merged = spark.read.option("mergeSchema", "true")
+              .parquet(dirs.map(at(_, part)).filter(fs.exists).map(_.toString): _*)
+            (if (part == "bands" || part == "sets") sized(merged, "id")
+            else sized(merged.distinct(), "content_h60"))
+              .write.mode("overwrite").parquet(at(tmp, part).toString)
+          }: _*)
+          union.foreach(u => writeSrcs(fs, tmp, u.toSeq))
+        }
+        dirs.foreach(log.retire)
       }
-      dirs.foreach(retire(fs, _))
     }
   }
 
   /** INCREMENTAL exact dedup against a persisted hash store — the growing-
     * corpus campaign discipline: each batch is deduped within itself, then
     * anti-joined against every content hash any earlier batch committed,
-    * and the survivors' hashes are committed back atomically (temp dir +
-    * rename, the LineageStore pattern) so a crash mid-commit never leaves
+    * and the survivors' hashes are committed back atomically (one
+    * [[CommitLog]] commit) so a crash mid-commit never leaves
     * a partially-visible batch and a replay of the same batch returns
     * nothing new. The store holds ONE 8-byte sha60 per distinct document
     * ever seen — at 100 TB that is a few GB of longs, the natural build
@@ -366,8 +245,8 @@ object Dedup {
 
   /** [[incrementalExact]] with the store publish deferred to
     * `commit()` — see [[IncrementalBatch]] for the crash-ordering contract.
-    */
-  /** `srcCol`: optional per-row provenance column (e.g. source-file
+    *
+    * `srcCol`: optional per-row provenance column (e.g. source-file
     * basename) persisted alongside each committed hash as `src` — what
     * [[retractSources]] matches to drop an invalidated source's exclusive
     * hashes. None commits `src = null`: irrevocable rows, pre-provenance
@@ -379,13 +258,9 @@ object Dedup {
     val spark = df.sparkSession
     val root = new Path(storeDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    cleanTmp(fs, root)
-    compactSeen(fs, root, maxSeenDirs) { (old, tmp) =>
-      sized(spark.read.option("mergeSchema", "true")
-          .parquet(old.map(_.toString): _*).distinct(), "content_h60")
-        .write.mode("overwrite").parquet(tmp.toString)
-    }
-    val dirs = listSeen(fs, root).map(_.toString)
+    val log = seenLog(fs, root)
+    compactSeen(spark, fs, log, maxSeenDirs)
+    val dirs = log.live.map(_.toString)
     val hashed = exactDeduped(df, idCol, textCol)
       .withColumn("content_h60", Hashing.sha60(col(textCol)))
     val fresh = (if (dirs.isEmpty) hashed
@@ -396,7 +271,7 @@ object Dedup {
     val srcExpr = srcCol.map(col).getOrElse(lit(null)).cast("string").as("src")
     val commit = () => try {
       if (!fresh.isEmpty)
-        commitSeen(fs, root) { tmp =>
+        log.commit(CommitLog.freshId()) { tmp =>
           // no `sized` here: a per-batch exact commit is one small write
           // and the repartition exchange costs more than the file-count
           // saving — commit-dir file sizing is enforced at COMPACTION
@@ -453,23 +328,9 @@ object Dedup {
     val spark = df.sparkSession
     val root = new Path(storeDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    cleanTmp(fs, root)
-    compactSeen(fs, root, maxSeenDirs) { (old, tmp) =>
-      parallelJobs(Seq("bands", "sets", "exact").map { part => () =>
-        // stores written before the exact component existed lack the
-        // subdir — merge what exists, never fail on the gap; mergeSchema
-        // unifies pre-provenance dirs (no src) with provenance dirs
-        val srcs = old.filter(d => fs.exists(new Path(d, part)))
-          .map(d => s"$d/$part")
-        if (srcs.nonEmpty) {
-          val merged = spark.read.option("mergeSchema", "true").parquet(srcs: _*)
-          sized(if (part == "exact") merged.distinct() else merged,
-              if (part == "exact") "content_h60" else "id")
-            .write.mode("overwrite").parquet(new Path(tmp, part).toString)
-        }
-      }: _*)
-    }
-    val seenDirs = listSeen(fs, root)
+    val log = seenLog(fs, root)
+    compactSeen(spark, fs, log, maxSeenDirs)
+    val seenDirs = log.live
     // 1) within-batch exact dedup + 2) exact-store pre-filter: identical
     // replays (and identical re-submissions) drop here, for EVERY doc —
     // the shingle-less idempotency hole is closed structurally. Dirs from
@@ -547,7 +408,7 @@ object Dedup {
           case Some(_) =>
             dfc.join(fresh.select(col(idCol).as("id"), srcExpr), "id")
         }
-        commitSeen(fs, root) { tmp =>
+        log.commit(CommitLog.freshId()) { tmp =>
           // the three component writes are independent jobs over the same
           // cached frames — submit them concurrently (guide §2.6: actions
           // are only sequential because the driver calls them sequentially)
@@ -569,7 +430,7 @@ object Dedup {
   }
 
   /** RETRACT a set of sources from an incremental store (exact or minhash
-    * layout, auto-detected per dir): every store row whose `src`
+    * layout, auto-detected per dir by [[components]]): every store row whose `src`
     * provenance is in `sources` is dropped — the content-store analogue of
     * freader deleting a removed file's offset row
     * (internal/collector/collector.go:206-214). Rows with null `src`
@@ -584,10 +445,11 @@ object Dedup {
     * (marker file, retention-delayed delete — see [[listSeen]]) rather
     * than deleted, so a concurrent reader whose plan pinned the old files
     * keeps reading them; the whole pass holds the store mutation lease
-    * ([[withStoreLock]]) so a concurrent compaction cannot merge
+    * ([[CommitLog.withLock]]) so a concurrent compaction cannot merge
     * pre-retraction rows back in. A crash between a rewrite commit and its
-    * retire leaves duplicate surviving rows — harmless to the
-    * anti-join/band-join consumers, never a hole.
+    * retire leaves the old dir live beside its rewrite — never a hole, and
+    * running the retraction again converges to the uninterrupted answer:
+    * the old dir is rewritten again, its rewrite's manifest is disjoint.
     *
     * Hashes a retracted file shared with a LIVE file keep the live file's
     * row only if the live file introduced them first (the store holds one
@@ -604,8 +466,9 @@ object Dedup {
     def keep(dfm: DataFrame): DataFrame =
       if (!dfm.columns.contains("src")) dfm
       else dfm.filter(col("src").isNull || !col("src").isin(sources: _*))
-    withStoreLock(fs, root) {
-      val affected = listSeen(fs, root).filter { d =>
+    val log = seenLog(fs, root)
+    log.withLock {
+      val affected = log.live.filter { d =>
         readSrcs(fs, d) match {
           case Some(srcs) => srcs.exists(srcSet) // manifest: exact answer
           case None => true // pre-manifest commit: conservative rewrite
@@ -613,23 +476,17 @@ object Dedup {
       }
       affected.foreach { d =>
         val survivorSrcs = readSrcs(fs, d).map(s => (s -- srcSet).toSeq)
-        val isMinhash = fs.exists(new Path(d, "bands"))
-        commitSeen(fs, root) { tmp =>
+        log.commit(CommitLog.freshId()) { tmp =>
           // rewrites are 1:1 with the dir they replace — keep the source
           // dir's partitioning (no `sized` exchange; see the exact-commit
-          // note above) and overlap the three component rewrites
-          if (isMinhash)
-            parallelJobs(Seq("bands", "sets", "exact").map { part => () =>
-              if (fs.exists(new Path(d, part)))
-                keep(spark.read.parquet(s"$d/$part"))
-                  .write.mode("overwrite").parquet(new Path(tmp, part).toString)
-            }: _*)
-          else
-            keep(spark.read.parquet(d.toString))
-              .write.mode("overwrite").parquet(tmp.toString)
+          // note above) and overlap the component rewrites
+          parallelJobs(components(fs, d).map { part => () =>
+            keep(spark.read.parquet(at(d, part).toString))
+              .write.mode("overwrite").parquet(at(tmp, part).toString)
+          }: _*)
           survivorSrcs.foreach(writeSrcs(fs, tmp, _))
         }
-        retire(fs, d)
+        log.retire(d)
       }
     }
   }

@@ -124,30 +124,4 @@ object Route {
       sum(when(length(col("text")) > 0,
         when(col("tool") =!= "", 2).otherwise(1)).otherwise(0)).as("routed_rows"))
   }
-
-  /** Plain-text sink flavor — the console/file sink shape
-    * (cmd/freader/sink/console/console.go:39-93): one line per delivered
-    * record, nothing else. `os.Create` truncates the previous file, which
-    * is exactly overwrite mode; Spark's batcher is the shuffle-free
-    * file-split write (the reference's size/interval batcher exists to
-    * amortize syscalls — native parquet/text writers already do that, the
-    * documented-divergence K2 note in COVERAGE.md).
-    */
-  def writeTextSink(routedDf: DataFrame, rule: SinkRule, outDir: String): Unit =
-    forSink(routedDf, rule)
-      .select(col("text"))
-      .write.mode("overwrite").text(s"$outDir/${rule.name}")
-
-  /** JSON-lines sink flavor — the OpenSearch doc shape
-    * (cmd/freader/sink/opensearch/opensearch.go:103-108:
-    * {@timestamp, message, host, labels}); one JSON object per line.
-    */
-  def writeJsonSink(routedDf: DataFrame, rule: SinkRule, outDir: String): Unit =
-    forSink(routedDf, rule)
-      .select(to_json(struct(
-        date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSXXX").as("@timestamp"),
-        col("text").as("message"),
-        col("host"),
-        col("route_key"))).as("doc"))
-      .write.mode("overwrite").text(s"$outDir/${rule.name}")
 }

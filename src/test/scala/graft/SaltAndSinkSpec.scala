@@ -3,8 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.model.SinkRule
-import graft.operators.{Enrich, Parse, Route, Salt}
+import graft.operators.{Parse, Salt}
 import graft.sources.Transcripts
 
 class SaltAndSinkSpec extends AnyFunSuite {
@@ -50,31 +49,5 @@ class SaltAndSinkSpec extends AnyFunSuite {
     val drop = Parse.parsedOrRaw(parsed, payload, hit, dropNonMatching = true)
       .select("out").as[String].collect()
     assert(drop.length == 1 && drop.head.startsWith("{"))
-  }
-
-  test("json-lines sink writes one OpenSearch-shaped doc per delivered row") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonsink").toString
-    val turns = Transcripts.synthesize(spark, 5, 8, numPartitions = 2).toDF()
-    val routed = Route.routed(Enrich.enrich(turns))
-    val rule = SinkRule("js", include = Seq("CALL"))
-    Route.writeJsonSink(routed, rule, dir)
-    val docs = spark.read.text(s"$dir/js").as[String].collect()
-    assert(docs.length == Route.forSink(routed, rule).count())
-    assert(docs.forall(d => d.startsWith("{\"@timestamp\":") &&
-      d.contains("\"message\":") && d.contains("\"host\":\"graft\"")))
-  }
-
-  test("plain-text sink writes one line per delivered record and truncates on rewrite (K4)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-textsink").toString
-    val turns = Transcripts.synthesize(spark, 5, 8, numPartitions = 2).toDF()
-    val routed = Route.routed(Enrich.enrich(turns))
-    val rule = SinkRule("txt", include = Seq("CALL"))
-    Route.writeTextSink(routed, rule, dir)
-    val lines = spark.read.text(s"$dir/txt").as[String].collect().toSeq
-    val want = Route.forSink(routed, rule).select("text").as[String].collect().toSeq
-    assert(lines.sorted == want.sorted)
-    // os.Create truncate semantics: a second write replaces, not appends
-    Route.writeTextSink(routed, rule, dir)
-    assert(spark.read.text(s"$dir/txt").count() == want.size)
   }
 }

@@ -115,10 +115,16 @@ class SimilaritySpec extends AnyFunSuite {
     val interpreted = aggregate(zip_with(v, reverse(v), (x, y) => x * y),
       lit(0.0), (acc, x) => acc + x)
     val interpNorm = sqrt(aggregate(v, lit(0.0), (acc, x) => acc + x * x))
+    // a null element nulls the interpreted fold; the native form must too
+    val vn = transform(v, (x, i) => when(i === 1, lit(null).cast("double")).otherwise(x))
+    val interpNull = aggregate(zip_with(vn, v, (x, y) => x * y),
+      lit(0.0), (acc, x) => acc + x)
     val mismatches = emb.select(
         Similarity.dot(v, reverse(v)).as("nd"), interpreted.as("id_"),
-        Similarity.l2norm(v).as("nn"), interpNorm.as("in_"))
-      .filter($"nd" =!= $"id_" || $"nn" =!= $"in_")
+        Similarity.l2norm(v).as("nn"), interpNorm.as("in_"),
+        Similarity.dot(vn, v).as("ndn"), interpNull.as("idn"))
+      .filter($"nd" =!= $"id_" || $"nn" =!= $"in_" || !($"ndn" <=> $"idn") ||
+        $"idn".isNotNull)
       .count()
     assert(mismatches == 0L)
     // length mismatch nulls out, exactly like the zip_with null padding
