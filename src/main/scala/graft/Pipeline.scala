@@ -15,14 +15,19 @@ import graft.sources.TranscriptTable
 
 /** One pipeline run = freader's collector loop re-expressed as a batch:
   *
-  *  1. discovery     — manifest listing of the current snapshot (S1/S5);
-  *                     "what's new" = snapshot files minus lineage-committed
-  *                     files (the offset-restore left join, J3)
-  *  2. fingerprint   — recompute each committed file's content hash; a
-  *                     mismatch invalidates that file's lineage and
-  *                     reprocesses it from scratch (S9)
-  *  3. removal       — lineage entries whose files left the manifest are
-  *                     pruned (J4 set-difference → offset Delete)
+  *  1. discovery     — manifest listing of the current snapshot (S1/S5),
+  *                     each file fingerprinted in ONE executor-side pass
+  *  2. resume diff   — ONE query over ONE lineage read: the per-file
+  *                     lineage summary full-outer-joined with the
+  *                     fingerprints, collecting only the files not done
+  *                     ([[resumeDiff]]): new files and files some sink
+  *                     lacks are todo (the offset-restore join, J3); a
+  *                     hash mismatch invalidates that file's lineage and
+  *                     reprocesses it from scratch (S9); lineage files
+  *                     no longer in the manifest are vanished
+  *  3. removal       — vanished files' lineage entries are pruned (J4
+  *                     set-difference → offset Delete); the store is
+  *                     rewritten only when the diff found any
   *  4. process       — parse → enrich → route as ONE lazy plan, never
   *                     persisted: the source is a pinned snapshot of
   *                     immutable files, so the delivery write and the
@@ -89,6 +94,45 @@ object Pipeline {
     md.digest().take(12).map("%02x".format(_)).mkString
   }
 
+  /** The files a resume must act on, each list sorted by file:
+    * `vanished` = lineage files no longer in the manifest (to prune),
+    * `invalidated` = (file, previous hash) of manifest files whose
+    * fingerprint differs from their last-written lineage hash, `todo` =
+    * (file, current hash) of manifest files to process: no lineage, an
+    * invalidated file, or fewer configured sinks with a row than
+    * configured.
+    */
+  final case class ResumeDiff(
+      vanished: Seq[String],
+      invalidated: Seq[(String, String)],
+      todo: Seq[(String, String)])
+
+  /** S9 + J3 + J4 as ONE query over one lineage read and one fingerprint
+    * pass: the lineage entries grouped by file — previous hash
+    * last-writer-wins by `committedAtMs` over every sink, and the count of
+    * distinct configured sinks — full-outer-joined with the manifest
+    * fingerprints (`file`, `contentHash`). Only the rows that are not done
+    * reach the driver, so a no-op resume collects nothing, and the
+    * fingerprints are computed once whatever the outcome.
+    */
+  private[graft] def resumeDiff(entries: DataFrame, fingerprints: DataFrame,
+      sinks: Seq[String]): ResumeDiff = {
+    val perFile = entries.groupBy(col("file")).agg(
+      max(struct(col("committedAtMs"), col("contentHash")))
+        .getField("contentHash").as("prevHash"),
+      size(collect_set(when(col("sink").isin(sinks: _*), col("sink")))).as("ns"))
+    val notDone = fingerprints.join(perFile, Seq("file"), "full_outer")
+      .filter(col("contentHash").isNull || col("prevHash").isNull ||
+        col("contentHash") =!= col("prevHash") || col("ns") < sinks.size)
+      .select("file", "contentHash", "prevHash")
+      .collect().map(r => (r.getString(0), Option(r.getString(1)), Option(r.getString(2))))
+      .sortBy(_._1).toSeq
+    ResumeDiff(
+      vanished = notDone.collect { case (f, None, _) => f },
+      invalidated = notDone.collect { case (f, Some(h), Some(p)) if h != p => f -> p },
+      todo = notDone.collect { case (f, Some(h), _) => f -> h })
+  }
+
   def run(
       spark: SparkSession,
       table: TranscriptTable,
@@ -117,54 +161,27 @@ object Pipeline {
     val files = table.filesAt(snapId)
       .filter(f => operators.PathFilter.matches(pathSpec, f))
 
-    // J4: prune lineage of vanished files
-    val pruned = lineage.pruneTo(files.toSet).map(_.file).distinct
-
-    // S9 + S4, DISTRIBUTED: fingerprint every manifest file in one
-    // executor-side job (the reference fingerprints per-file inside
-    // parallel discovery callbacks, collector.go:165-199 — a serial
-    // driver loop over ~800k files would dominate the run), and derive
-    // committed/invalidated/todo with DataFrame joins against the lineage
-    // table. Last-writer-wins per (file, sink); nothing per-file reaches
-    // the driver except the final todo list + hashes (the same driver
-    // metadata any Spark file scan holds) and the (small) invalidated set.
-    import spark.implicits._
-    val filesDf = files.toDF("file")
     // fingerprint strategy (watcher/config.go:21-42): deviceAndInode is
     // storage identity — the path — so in-place rewrites are undetected by
     // design; checksum/checksumSeparator hash a content prefix + length
     // (separator framing belongs to text rows; for binary snapshot files
     // it maps to the prefix checksum — Model.scala divergence note)
+    import spark.implicits._
     val fpDf =
       if (cfg.fingerprintStrategy == "deviceAndInode")
-        filesDf.select(col("file"), col("file").as("contentHash"))
+        files.toDF("file").select(col("file"), col("file").as("contentHash"))
       else Fingerprint.ofFilesDf(spark, files, cfg.fingerprintSize)
-    val entries = lineage.entriesDf()
-    val latestPerFile = entries
-      .groupBy(col("file"))
-      .agg(max(struct(col("committedAtMs"), col("contentHash"))).as("m"))
-      .select(col("file"), col("m.contentHash").as("prevHash"))
-    val invalidatedRows = fpDf.join(latestPerFile, "file")
-      .filter(col("contentHash") =!= col("prevHash"))
-      .select("file", "prevHash").collect()
-    val invalidated = invalidatedRows.map(_.getString(0)).toSeq.sorted
-    val oldHashByFile = invalidatedRows.map(r => r.getString(0) -> r.getString(1)).toMap
+    val diff = resumeDiff(lineage.entriesDf(), fpDf, cfg.sinks.map(_.name))
+    val invalidated = diff.invalidated.map(_._1)
+    val oldHashByFile = diff.invalidated.toMap
 
-    // a file is done only if every configured sink has a lineage row for it
-    // (and its fingerprint still matches)
-    val doneDf = entries
-      .filter(col("sink").isin(cfg.sinks.map(_.name): _*))
-      .groupBy(col("file"))
-      .agg(countDistinct(col("sink")).as("ns"))
-      .filter(col("ns") === cfg.sinks.size)
-      .join(broadcast(invalidated.toDF("file")), Seq("file"), "left_anti")
-      .select("file")
-    val todoFps = filesDf.join(doneDf, Seq("file"), "left_anti")
-      .join(fpDf, "file")
-      .collect().map(r => r.getString(0) -> r.getString(1))
-      .sortBy(_._1)
+    // J4: prune lineage of vanished files — a rewrite of the store, so it
+    // runs only when the diff saw any, and still before delivery
+    val pruned =
+      if (diff.vanished.isEmpty) Nil
+      else lineage.pruneTo(files.toSet).map(_.file).distinct.sorted
 
-    val todo = todoFps.map(_._1).toSeq
+    val todo = diff.todo.map(_._1)
     if (todo.isEmpty)
       return RunReport(runId, snapId, Nil, invalidated, pruned, Map.empty,
         0L, 0L, manifestFiles = files.size)
@@ -172,7 +189,7 @@ object Pipeline {
     // the distributed fingerprints serve both as the idempotency key (a
     // reprocessed file with NEW content must land in a NEW batch dir) and
     // as the lineage rows' content hash
-    val fps = todoFps.toMap
+    val fps = diff.todo.toMap
     val bids = todo.map(f => f -> fileBatchId(f, fps(f))).toMap
     // A5 collector metrics (lines_total / bytes_total / blank) ride on the
     // delivery jobs via Observation — no extra scan of the input

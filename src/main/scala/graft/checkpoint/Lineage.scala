@@ -54,33 +54,31 @@ final class LineageStore(spark: SparkSession, root: String,
     *
     * Schema evolution: commit dirs written before a column existed (e.g.
     * `rowsFailed`, added after the first stores shipped) must stay
-    * readable — `mergeSchema` unions the per-file schemas, then any
-    * column still absent is backfilled with its type default and nulls
-    * from pre-column files coalesce to it, so resume against an old
-    * store never throws UNRESOLVED_COLUMN (or NPEs in `as[LineageEntry]`).
+    * readable. Every dir is read with the explicit LineageEntry schema,
+    * all fields nullable — no footer is read to infer a schema, so the
+    * read adds no Spark job — and a column a dir lacks reads as null and
+    * coalesces to its type default, so resume against an old store never
+    * throws UNRESOLVED_COLUMN (or NPEs in `as[LineageEntry]`).
     */
   def entriesDf(): org.apache.spark.sql.DataFrame = entriesOf(log.live)
 
   private def entriesOf(dirs: Seq[Path]): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    import org.apache.spark.sql.types.{LongType, StringType}
+    import org.apache.spark.sql.types.{LongType, StringType, StructType}
     import spark.implicits._
     val empty = spark.emptyDataset[LineageEntry].toDF()
     if (dirs.isEmpty) empty
     else {
-      val raw = spark.read.option("mergeSchema", "true")
-        .parquet(dirs.map(_.toString): _*)
-      val normalized = empty.schema.map { f =>
+      val readSchema = StructType(empty.schema.map(_.copy(nullable = true)))
+      val raw = spark.read.schema(readSchema).parquet(dirs.map(_.toString): _*)
+      raw.select(empty.schema.map { f =>
         val default = f.dataType match {
           case LongType => lit(0L)
           case StringType => lit("")
           case _ => lit(null).cast(f.dataType)
         }
-        if (raw.columns.contains(f.name))
-          coalesce(col(f.name).cast(f.dataType), default).as(f.name)
-        else default.as(f.name)
-      }
-      raw.select(normalized: _*)
+        coalesce(col(f.name), default).as(f.name)
+      }: _*)
     }
   }
 
@@ -250,6 +248,10 @@ object Fingerprint {
         val conf = confSer.value
         it.map(f => (f, hashOne(conf, f, prefixBytes)))
       }
+      .setName(RddName)
       .toDF("file", "contentHash")
   }
+
+  /** Name of the hashing RDD, as Spark's stage info reports it. */
+  val RddName = "Fingerprint.ofFilesDf"
 }

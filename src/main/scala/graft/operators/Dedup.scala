@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.checkpoint.CommitLog
 import graft.functions.Hashing
@@ -165,6 +166,14 @@ object Dedup {
     if (!fs.exists(new Path(dir, "bands"))) Seq("")
     else Seq("bands", "sets", "exact").filter(p => fs.exists(new Path(dir, p)))
 
+  /** Read schema of an exact-hash component (an exact commit dir, or a
+    * minhash commit's `exact` subdir): given, not inferred, so a read
+    * opens no footer and runs no schema-merge job. A pre-provenance dir,
+    * written without `src`, reads it as null.
+    */
+  private val ExactSchema = StructType(Seq(
+    StructField("content_h60", LongType), StructField("src", StringType)))
+
   private def at(dir: Path, part: String): Path =
     if (part.isEmpty) dir else new Path(dir, part)
 
@@ -250,7 +259,8 @@ object Dedup {
     * basename) persisted alongside each committed hash as `src` — what
     * [[retractSources]] matches to drop an invalidated source's exclusive
     * hashes. None commits `src = null`: irrevocable rows, pre-provenance
-    * store compatible (mixed stores merge via parquet schema merging).
+    * store compatible (the store is read with [[ExactSchema]], so a dir
+    * without `src` reads it as null).
     */
   def incrementalExactStaged(df: DataFrame, idCol: String, textCol: String,
       storeDir: String, maxSeenDirs: Int = 16,
@@ -265,8 +275,7 @@ object Dedup {
       .withColumn("content_h60", Hashing.sha60(col(textCol)))
     val fresh = (if (dirs.isEmpty) hashed
       else hashed.join(
-        spark.read.option("mergeSchema", "true").parquet(dirs: _*)
-          .select("content_h60"),
+        spark.read.schema(ExactSchema).parquet(dirs: _*).select("content_h60"),
         Seq("content_h60"), "left_anti")).cache()
     val srcExpr = srcCol.map(col).getOrElse(lit(null)).cast("string").as("src")
     val commit = () => try {
@@ -342,7 +351,7 @@ object Dedup {
       .withColumn("__h60", Hashing.sha60(col(textCol)))
     val unseen = (if (exactDirs.isEmpty) batch
       else batch.join(
-        spark.read.parquet(exactDirs: _*),
+        spark.read.schema(ExactSchema).parquet(exactDirs: _*),
         col("__h60") === col("content_h60"), "left_anti")).cache()
     // 3+4) near-dup removal, within-batch and cross-batch FUSED into one
     // candidate pass when the store is non-empty: the batch's band rows

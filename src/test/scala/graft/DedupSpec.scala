@@ -459,6 +459,45 @@ class DedupSpec extends AnyFunSuite {
     assert(r3 == Seq(11L))
   }
 
+  test("a pre-provenance exact dir (no src column) still suppresses a re-submitted row") {
+    import org.apache.hadoop.fs.Path
+    import graft.functions.Hashing
+    // shingle-less docs (< 3 tokens): under minhash only the exact
+    // component can suppress them, so the hand-written dir is what decides
+    val seen = "aa bb"
+    def hashesOnly(texts: String*) =
+      texts.toDF("text").select(Hashing.sha60($"text").as("content_h60"))
+    def stage(mode: String, store: String, rows: (Long, String)*) = {
+      val df = rows.toDF("doc_id", "text").withColumn("src", lit("f"))
+      if (mode == "exact")
+        Dedup.incrementalExactStaged(df, "doc_id", "text", store, srcCol = Some("src"))
+      else Dedup.incrementalMinhashStaged(df, "doc_id", "text", store,
+        bands = 8, rowsPerBand = 2, threshold = 0.6, srcCol = Some("src"))
+    }
+    Seq("exact", "minhash").foreach { mode =>
+      val store = java.nio.file.Files.createTempDirectory(s"graft-preprov-$mode").toString
+      val fs = new Path(store).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val exact =
+        if (mode == "exact") s"$store/seen-000-old"
+        else {
+          // a real minhash commit whose exact component is then rewritten
+          // in the pre-provenance shape
+          stage(mode, store, (1L, seen)).commit()
+          val dir = new Path(Dedup.listSeen(fs, new Path(store)).head, "exact")
+          assert(fs.delete(dir, true))
+          dir.toString
+        }
+      hashesOnly(seen).write.parquet(exact)
+      assert(spark.read.parquet(exact).columns.toSeq == Seq("content_h60"), mode)
+      val b = stage(mode, store, (10L, seen), (11L, "ee ff"))
+      assert(b.fresh.select("doc_id").as[Long].collect().toSeq == Seq(11L), mode)
+      b.commit()
+      // old and provenance-carrying dirs read together afterwards
+      val again = stage(mode, store, (20L, seen), (21L, "ee ff"), (22L, "gg hh"))
+      assert(again.fresh.select("doc_id").as[Long].collect().toSeq == Seq(22L), mode)
+    }
+  }
+
   test("incremental minhash: seen-dir count stays bounded by compaction") {
     val store = java.nio.file.Files.createTempDirectory("graft-incmh-compact").toString
     val fs = new org.apache.hadoop.fs.Path(store)

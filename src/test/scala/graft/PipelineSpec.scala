@@ -45,6 +45,59 @@ class PipelineSpec extends AnyFunSuite {
     else spark.read.parquet(p.toString).count()
   }
 
+  /** Spark work while `body` runs: (jobs ended, stages that computed the
+    * fingerprint RDD). The listener bus is drained on both sides, so every
+    * event of `body`, and none from before it, is counted.
+    */
+  private def sparkWork(body: => Unit): (Int, Int) = {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerStageCompleted}
+    val sc = spark.sparkContext
+    // LiveListenerBus.waitUntilEmpty is private[spark]: reached by reflection
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    val jobs, fingerprints = new AtomicInteger
+    val tap = new SparkListener {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == graft.checkpoint.Fingerprint.RddName))
+          fingerprints.incrementAndGet()
+    }
+    drain()
+    sc.addSparkListener(tap)
+    try { body; drain() } finally sc.removeSparkListener(tap)
+    (jobs.get, fingerprints.get)
+  }
+
+  test("resume job budget: a no-op run is ≤ 4 jobs; each run fingerprints once") {
+    val root = tmp()
+    val table = new SnapshotTable(spark, s"$root/table")
+    val lineage = new LineageStore(spark, s"$root/lineage")
+    val out = s"$root/sinks"
+    table.append(Transcripts.synthesize(spark, numConvs = 20, turnsPerConv = 10).toDF())
+    Pipeline.run(spark, table, lineage, cfg, out)
+    table.append(Transcripts.synthesize(spark, numConvs = 7, turnsPerConv = 10).toDF()
+      .withColumn("conv_id", org.apache.spark.sql.functions.concat(
+        org.apache.spark.sql.functions.lit("b2-"), $"conv_id")))
+
+    var incr: Pipeline.RunReport = null
+    val (incrJobs, incrFps) = sparkWork { incr = Pipeline.run(spark, table, lineage, cfg, out) }
+    assert(incr.processedFiles.nonEmpty && incr.inputRows == 70)
+    assert(incrFps == 1, "incremental run")
+    // 23 = this run's jobs when the prune, the invalidated set and the
+    // todo set were three separate queries (11 on the no-op below)
+    assert(incrJobs < 23, s"incremental run ran $incrJobs Spark jobs")
+
+    var noop: Pipeline.RunReport = null
+    val (noopJobs, noopFps) = sparkWork { noop = Pipeline.run(spark, table, lineage, cfg, out) }
+    assert(noop.processedFiles.isEmpty && noop.invalidatedFiles.isEmpty)
+    assert(noopFps == 1, "no-op run")
+    assert(noopJobs <= 4, s"no-op resume ran $noopJobs Spark jobs")
+  }
+
   test("run → append → resume delivers exactly the delta; totals equal a from-scratch run") {
     val root = tmp()
     val table = new SnapshotTable(spark, s"$root/table")
