@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 import graft.checkpoint.{Fingerprint, LineageStore}
-import graft.functions.KvParse
 import graft.model.PipelineConfig
 import graft.operators.{Enrich, Parse, Route}
 import graft.sources.TranscriptTable
@@ -141,7 +140,6 @@ object Pipeline {
       outDir: String): RunReport = {
 
     cfg.validate().left.foreach(err => throw new IllegalArgumentException(err))
-    KvParse.register(spark)
     val runId = java.util.UUID.randomUUID().toString.take(12)
 
     val snapId = table.currentSnapshotId.getOrElse(

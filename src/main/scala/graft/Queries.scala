@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Hashing, KvParse, SimHash}
+import graft.functions.Hashing
 import graft.model.{MultilineMode, SinkRule}
 import graft.operators.{AsOf, Cardinality, Conversations, CorpusLm, Dedup, Drift, Enrich, Frequency, Mixing, Multimodal, Parse, Quantile, Route, Segments, Similarity, TextAnalysis}
 import graft.sources.Transcripts
@@ -98,22 +98,18 @@ object Queries {
     "q_parse_grok" -> ((s, dir) => Parse.parseTurnsSql(tx(s, dir))),
 
     // P5: quoted key=value tokenizer (custom Catalyst expression), exploded
-    "q_parse_kv" -> ((s, dir) => {
-      KvParse.register(s)
+    "q_parse_kv" -> ((s, dir) =>
       Parse.parseTurns(tx(s, dir))
         .where(col("verb") === "CALL")
-        .select(col("conv_id"), col("turn_idx"), explode(col("kv")).as(Seq("kv_key", "kv_value")))
-    }),
+        .select(col("conv_id"), col("turn_idx"), explode(col("kv")).as(Seq("kv_key", "kv_value")))),
 
     // P4 proper: auditd header + fields
-    "q_audit_parse" -> ((s, dir) => {
-      KvParse.register(s)
+    "q_audit_parse" -> ((s, dir) =>
       Parse.auditParse(auditLines(s, dir), "line")
         .select(col("event_id"), col("a_type"), col("epoch_sec"), col("epoch_nsec"),
           col("serial"),
           try_element_at(col("fields"), lit("success")).as("success"),
-          try_element_at(col("fields"), lit("exe")).as("exe"))
-    }),
+          try_element_at(col("fields"), lit("exe")).as("exe"))),
 
     // P7: dmesg bit-split + subsystem heuristics
     "q_dmesg_parse" -> ((s, dir) =>
@@ -363,10 +359,8 @@ object Queries {
 
     // SimHash near-dup pairs (native expression, sha256-derived token hash
     // — the DuckDB oracle recomputes the identical 60-bit fingerprints)
-    "q_dedup_simhash" -> ((s, dir) => {
-      SimHash.register(s)
-      Dedup.simhashPairs(nearDupFixture(s, dir), "doc_id", "text", maxHamming = 3)
-    }),
+    "q_dedup_simhash" -> ((s, dir) =>
+      Dedup.simhashPairs(nearDupFixture(s, dir), "doc_id", "text", maxHamming = 3)),
 
     // content-defined chunking: word-grain LBFS/rsync boundaries from a
     // window-hash mask (native cdc_chunks expression). The fixture plants

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -39,7 +38,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * hashes are positional (a per-position fold), which the staged-Column
   * form can only express through higher-order-function lambdas that
   * CollapseProject re-inlines per reference. One expression, one pass,
-  * whole-stage codegen via static call (the [[KvParse]] pattern).
+  * whole-stage codegen via static call.
   *
   * Reference tie-in: fingerprint.go:27-53 hashes a fixed head window to
   * identify file content; CDC is that identity made insertion-robust and
@@ -106,14 +105,4 @@ case class CdcChunks(child: Expression, w: Int, d: Long) extends UnaryExpression
 
   override protected def withNewChildInternal(newChild: Expression): CdcChunks =
     copy(child = newChild)
-}
-
-object CdcChunks {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cdc_chunks",
-      exprs => CdcChunks(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].longValue()),
-      "scala_udf")
 }

@@ -22,6 +22,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * `str_to_map` cannot honor quoting, so this is a native Catalyst
   * expression: `doGenCode` emits a static call into [[KvParseHelper]],
   * keeping the operator inside whole-stage codegen (no UDF/serde).
+  *
+  * Every native expression in this package follows that shape, and
+  * callers build its Column without a session:
+  * `column(KvParse(expression(c)))` ([[org.apache.spark.sql.graft.Catalyst]]).
   */
 object KvParseHelper {
 
@@ -100,7 +104,11 @@ case class KvParse(child: Expression) extends UnaryExpression {
 }
 
 object KvParse {
-  /** Register `kv_parse(str) -> map<string,string>` for use via `expr(...)`. */
+  /** Registers `kv_parse(str) -> map<string,string>` on `spark` for SQL
+    * text (`expr`, `selectExpr`, `spark.sql`) only. Library code never
+    * needs it: it builds the Column directly with
+    * [[org.apache.spark.sql.graft.Catalyst]].
+    */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "kv_parse", exprs => KvParse(exprs.head), "scala_udf")

@@ -20,8 +20,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * higher-order-function transforms per row (~|hs| lambda evaluations
   * each); this computes every signature and band in one tight loop per row
   * with the per-permutation coefficients cached statically. Codegen by
-  * static call, the [[KvParse]] pattern. The evaluate-once guarantee is
-  * structural (no CollapseProject/Generate-barrier concerns).
+  * static call. The evaluate-once guarantee is structural (no
+  * CollapseProject/Generate-barrier concerns).
   *
   * An empty input set yields an empty array (no band rows after
   * posexplode); every caller already filters `size(hs) > 0`, where the
@@ -89,6 +89,10 @@ case class MinhashBands(child: Expression, bands: Int, rowsPerBand: Int)
 }
 
 object MinhashBands {
+  /** Registers `minhash_bands` on `spark` for SQL text (`expr`, `selectExpr`,
+    * `spark.sql`) only. Library code never needs it: it builds the Column
+    * directly with [[org.apache.spark.sql.graft.Catalyst]].
+    */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "minhash_bands",

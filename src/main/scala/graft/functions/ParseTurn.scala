@@ -14,8 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * String + Matcher allocation; at 10^6+ rows/s/core that allocation rate is
   * what stops the job scaling with cores. This expression byte-scans the
   * leading verb and runs the quoted-KV tokenizer once for CALL rows —
-  * everything else derives from the map. Codegen by static call, same
-  * pattern as [[KvParse]].
+  * everything else derives from the map. Codegen by static call.
   */
 object ParseTurnHelper {
 
@@ -83,6 +82,10 @@ case class ParseTurn(child: Expression) extends UnaryExpression {
 }
 
 object ParseTurn {
+  /** Registers `parse_turn` on `spark` for SQL text (`expr`, `selectExpr`,
+    * `spark.sql`) only. Library code never needs it: it builds the Column
+    * directly with [[org.apache.spark.sql.graft.Catalyst]].
+    */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "parse_turn", exprs => ParseTurn(exprs.head), "scala_udf")

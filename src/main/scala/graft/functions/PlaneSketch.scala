@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -12,7 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * interpreted lambda per (plane × dimension) — ~12M closure calls for
   * 2k vectors × 96 planes × 64 dims. This expression runs the identical
   * arithmetic as tight JVM loops behind one static call, staying inside
-  * whole-stage codegen (the KvParse pattern).
+  * whole-stage codegen.
   *
   * Bit-exactness contract: the plane matrix comes from the same
   * [[Hashing.planeComponent]] recipe, and the projection accumulates
@@ -75,16 +74,4 @@ case class PlaneSketch(child: Expression, bands: Int, planesPerBand: Int)
 
   override protected def withNewChildInternal(newChild: Expression): PlaneSketch =
     copy(child = newChild)
-}
-
-object PlaneSketch {
-  /** Registers `plane_sketch_<bands>_<ppb>` for one geometry (the registry
-    * builder only sees child expressions, so geometry rides in the name).
-    */
-  def register(spark: SparkSession, bands: Int, planesPerBand: Int): String = {
-    val name = s"plane_sketch_${bands}_$planesPerBand"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PlaneSketch(exprs.head, bands, planesPerBand), "scala_udf")
-    name
-  }
 }

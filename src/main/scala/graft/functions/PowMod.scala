@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -14,8 +13,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   *
   * Fixed modulus [[Hashing.P]] (the fold family's modulus everywhere in
   * this engine) keeps the expression total — no division-by-zero or
-  * negative-modulus surface. Codegen by static call, the [[KvParse]]
-  * pattern.
+  * negative-modulus surface. Codegen by static call.
   */
 object PowModHelper {
   def eval(base: Long, exp: Long): Long = {
@@ -46,10 +44,4 @@ case class PowMod(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): PowMod = copy(left = newLeft, right = newRight)
-}
-
-object PowMod {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pow_mod", exprs => PowMod(exprs.head, exprs(1)), "scala_udf")
 }

@@ -21,8 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * inlining the token-hash array into every lambda reference (measured
   * 7s → 46s at sf0.1 without it) — an undocumented optimizer invariant a
   * Spark upgrade could silently break. One expression makes the
-  * evaluate-once guarantee structural. Codegen by static call, the
-  * [[KvParse]] pattern.
+  * evaluate-once guarantee structural. Codegen by static call.
   *
   * Reference role: the shingling kernel under MinHash-LSH dedup and 8-gram
   * decontamination — the fingerprint idea of
@@ -78,6 +77,10 @@ case class ShingleHashes(child: Expression, n: Int) extends UnaryExpression {
 }
 
 object ShingleHashes {
+  /** Registers `shingle_hashes` on `spark` for SQL text (`expr`, `selectExpr`,
+    * `spark.sql`) only. Library code never needs it: it builds the Column
+    * directly with [[org.apache.spark.sql.graft.Catalyst]].
+    */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "shingle_hashes",

@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * tokens, emit the sign vector as a long. Single pass per row — a native
   * expression because the pure-Column formulation needs 60 aggregate()
   * passes over the token array. Codegen stays inside whole-stage via a
-  * static call, same pattern as [[KvParse]].
+  * static call.
   *
   * The token hash is sha256-derived (not xxhash64) so the DuckDB oracle can
   * recompute the identical fingerprint: bit width 60 because that is the
@@ -78,6 +78,10 @@ case class SimHash(child: Expression) extends UnaryExpression {
 }
 
 object SimHash {
+  /** Registers `simhash64` on `spark` for SQL text (`expr`, `selectExpr`,
+    * `spark.sql`) only. Library code never needs it: it builds the Column
+    * directly with [[org.apache.spark.sql.graft.Catalyst]].
+    */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "simhash64", exprs => SimHash(exprs.head), "scala_udf")

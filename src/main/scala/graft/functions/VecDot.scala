@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -16,7 +15,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * interpreted sum) or when either side holds a null element. Higher-order functions run INTERPRETED per element;
   * on the embedding near-dup verification (372k candidate pairs × 32
   * dims at sf0.1) the lambda machinery was the dominant cost. Codegen by
-  * static call, the [[KvParse]] pattern. [[graft.operators.Similarity]]
+  * static call. [[graft.operators.Similarity]]
   * routes both `dot` and `l2norm` (= sqrt(dot(v, v)) — identical
   * arithmetic to its previous x*x fold) through this.
   */
@@ -58,10 +57,4 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecDot =
     copy(left = newLeft, right = newRight)
-}
-
-object VecDot {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs.head, exprs(1)), "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -32,8 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why native rather than staged Columns: the k-gram array must be
   * evaluated once and sliced `w` ways per position; as a Column composition
   * that is a CollapseProject re-evaluation hazard (see [[ShingleHashes]]),
-  * natively it is one linear scan. Codegen by static call, the [[KvParse]]
-  * pattern.
+  * natively it is one linear scan. Codegen by static call.
   *
   * Reference role: the third fingerprinting family next to whole-content
   * sha256 identity (internal/file_tracker/fingerprint.go:27-53) and CDC
@@ -100,14 +98,4 @@ case class WinnowHashes(child: Expression, k: Int, w: Int)
 
   override protected def withNewChildInternal(newChild: Expression): WinnowHashes =
     copy(child = newChild)
-}
-
-object WinnowHashes {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_hashes",
-      exprs => WinnowHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
 }

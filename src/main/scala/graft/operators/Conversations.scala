@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Catalyst.{column, expression}
+
+import graft.functions.PowMod
 
 /** Conversation-level training-data operators over the transcript table
   * (conv_id, turn_idx, role, text, tool, ts — BASELINE.json `input_hint`).
@@ -150,7 +153,6 @@ object Conversations {
   def fingerprintSalted(transcripts: DataFrame,
       bucketWidth: Int = 4096): DataFrame = {
     require(bucketWidth >= 1, s"bucketWidth must be >= 1: $bucketWidth")
-    graft.functions.PowMod.register(transcripts.sparkSession)
     val P = graft.functions.Hashing.P
     val h = (graft.functions.Hashing.sha60(
       concat(col("role"), lit(":"), col("text"))) % P)
@@ -170,8 +172,8 @@ object Conversations {
       .agg(sort_array(collect_list("__p")).as("__ps"))
       .select(col("conv_id"),
         aggregate(col("__ps"), lit(0L),
-          (acc, p) => (acc * call_function("pow_mod", lit(8191L),
-            p.getField("n_b")) + p.getField("fp_b")) % P).as("conv_fp"),
+          (acc, p) => (acc * column(PowMod(expression(lit(8191L)),
+            expression(p.getField("n_b")))) + p.getField("fp_b")) % P).as("conv_fp"),
         aggregate(transform(col("__ps"), p => p.getField("n_b")), lit(0L),
           (acc, x) => acc + x).as("n_turns"))
   }

@@ -5,10 +5,12 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.graft.Catalyst.{column, expression}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType,
+  StructField, StructType}
 
 import graft.checkpoint.CommitLog
-import graft.functions.Hashing
+import graft.functions.{CdcChunks, Hashing, MinhashBands, ShingleHashes, SimHash, WinnowHashes}
 
 /** Deduplication family for a large-scale training-data pipeline:
   *
@@ -173,6 +175,18 @@ object Dedup {
     */
   private val ExactSchema = StructType(Seq(
     StructField("content_h60", LongType), StructField("src", StringType)))
+
+  /** Read schemas of a minhash commit's `bands` and `sets` components,
+    * given for the same reason as [[ExactSchema]]. `id` is the id type of
+    * the batch being staged: a store's id type is fixed by its first
+    * commit, and every later batch must use it.
+    */
+  private def bandsSchema(id: DataType) = StructType(Seq(StructField("id", id),
+    StructField("band", IntegerType), StructField("bhash", LongType),
+    StructField("src", StringType)))
+
+  private def setsSchema(id: DataType) = StructType(Seq(StructField("id", id),
+    StructField("hs", ArrayType(LongType)), StructField("src", StringType)))
 
   private def at(dir: Path, part: String): Path =
     if (part.isEmpty) dir else new Path(dir, part)
@@ -374,10 +388,11 @@ object Dedup {
         unseen.join(pairs.select(col("b").as(idCol)).distinct(),
           Seq(idCol), "left_anti")
       } else {
-        val oldBands = spark.read.option("mergeSchema", "true")
+        val idType = sets.schema("id").dataType
+        val oldBands = spark.read.schema(bandsSchema(idType))
           .parquet(seenDirs.map(d => s"$d/bands"): _*)
           .select("id", "band", "bhash")
-        val oldSets = spark.read.option("mergeSchema", "true")
+        val oldSets = spark.read.schema(setsSchema(idType))
           .parquet(seenDirs.map(d => s"$d/sets"): _*)
           .select("id", "hs")
         val selfBands = bandRowsOf(sets, bands, rowsPerBand)
@@ -519,12 +534,10 @@ object Dedup {
     * tokens → hashes → folds → distinct per row, so the evaluate-once
     * guarantee is structural — no CollapseProject-era Generate barrier.
     */
-  def shingleHashSets(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    graft.functions.ShingleHashes.register(df.sparkSession)
+  def shingleHashSets(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     df.select(col(idCol).as("id"),
-        call_function("shingle_hashes", col(textCol), lit(n)).as("hs"))
+        column(ShingleHashes(expression(col(textCol)), n)).as("hs"))
       .filter(size(col("hs")) > 0)
-  }
 
   /** Cross-document EXACT n-gram duplication coverage — the reporting face
     * of exact-substring dedup (Lee et al. 2022, "Deduplicating Training
@@ -576,11 +589,10 @@ object Dedup {
     */
   def winnowCoverage(df: DataFrame, idCol: String, textCol: String,
       k: Int, w: Int): DataFrame = {
-    graft.functions.WinnowHashes.register(df.sparkSession)
     val base = df.select(col(idCol).as("doc_id"),
         (size(graft.operators.TextAnalysis.tokens(col(textCol))) - lit(k - 1))
           .cast("long").as("n_kgrams"),
-        call_function("winnow_hashes", col(textCol), lit(k), lit(w)).as("fps"))
+        column(WinnowHashes(expression(col(textCol)), k, w)).as("fps"))
       .filter(size(col("fps")) > 0)
     val ex = base.select(col("doc_id"), explode(col("fps")).as("f"))
     val shared = ex.groupBy(col("f")).agg(count(lit(1)).as("docs"))
@@ -685,14 +697,12 @@ object Dedup {
     * chunk text. Expected chunk length ≈ `d` tokens.
     */
   def cdcChunks(df: DataFrame, idCol: String, textCol: String,
-      w: Int = 3, d: Long = 8L): DataFrame = {
-    graft.functions.CdcChunks.register(df.sparkSession)
+      w: Int = 3, d: Long = 8L): DataFrame =
     df.select(col(idCol),
-        posexplode(call_function("cdc_chunks", col(textCol), lit(w), lit(d)))
+        posexplode(column(CdcChunks(expression(col(textCol)), w, d)))
           .as(Seq("chunk_idx", "__ch")))
       .select(col(idCol), col("chunk_idx"),
         col("__ch.n_tok").as("n_tok"), col("__ch.chunk_hash").as("chunk_hash"))
-  }
 
   /** Chunk-level dedup accounting per document, keep-first semantics: a
     * chunk is DUP if the same chunk hash already occurred at a smaller
@@ -754,6 +764,17 @@ object Dedup {
   // Collisions only ADD candidates, and every candidate is verified with
   // exact Jaccard, so a 31-bit band value is safe.
 
+  /** Band rows (id, band, bhash) of hashed-shingle sets — the LSH index
+    * rows shared by [[minhashLsh]] and [[incrementalMinhash]]. One native
+    * [[graft.functions.MinhashBands]] call per row (bit-identical to the
+    * Column formulation pinned in DedupSpec) instead of bands·rowsPerBand
+    * interpreted higher-order-function transforms.
+    */
+  private def bandRowsOf(sets: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
+    sets.select(col("id"), posexplode(
+      column(MinhashBands(expression(col("hs")), bands, rowsPerBand)))
+      .as(Seq("band", "bhash")))
+
   /** MinHash + banded LSH near-dup detection over HASHED shingles
     * ([[shingleHashSets]]: one sha60 per token, n-gram strings never
     * materialized); permutation i's value is the two-integer-op
@@ -764,21 +785,8 @@ object Dedup {
     * all-pairs comparison never materializes: band buckets bound the
     * candidate set, AQE handles bucket skew, and verification joins only
     * candidate ids back to the (integer) shingle sets.
-    */
-  /** Band rows (id, band, bhash) of hashed-shingle sets — the LSH index
-    * rows shared by [[minhashLsh]] and [[incrementalMinhash]]. One native
-    * [[graft.functions.MinhashBands]] call per row (bit-identical to the
-    * Column formulation pinned in DedupSpec) instead of bands·rowsPerBand
-    * interpreted higher-order-function transforms.
-    */
-  private def bandRowsOf(sets: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
-    graft.functions.MinhashBands.register(sets.sparkSession)
-    sets.select(col("id"), posexplode(
-      call_function("minhash_bands", col("hs"), lit(bands), lit(rowsPerBand)))
-      .as(Seq("band", "bhash")))
-  }
-
-  /** `maxBucket`: candidate generation is QUADRATIC in band-bucket size —
+    *
+    * `maxBucket`: candidate generation is QUADRATIC in band-bucket size —
     * a family of B near-identical docs shares every band, so one
     * mega-family costs B²/2 candidate pairs per band (the real 100 TB
     * hazard of LSH dedup; run [[exactDeduped]] first so IDENTICAL docs
@@ -1033,9 +1041,9 @@ object Dedup {
   }
 
   /** 60-bit SimHash fingerprint — native single-pass expression
-    * ([[graft.functions.SimHash]], registered as `simhash64`).
+    * ([[graft.functions.SimHash]]), built as a plain Column.
     */
-  def simhash(text: Column): Column = call_function("simhash64", text)
+  def simhash(text: Column): Column = column(SimHash(expression(text)))
 
   /** Hamming distance between two fingerprints. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -1078,8 +1086,8 @@ object Dedup {
     // vectors rejoin after distinct, so the corpus×corpus candidate
     // shuffle moves 3 longs per row, not 2×dims doubles
     val blocks = withNorm.select(col("id"),
-      posexplode(Similarity.allBandSketches(df.sparkSession, col("v"),
-        bands, planesPerBand)).as(Seq("band", "sk")))
+      posexplode(Similarity.allBandSketches(col("v"), bands, planesPerBand))
+        .as(Seq("band", "sk")))
     val pairs = blocks.as("l").join(blocks.as("r"),
         col("l.band") === col("r.band") && col("l.sk") === col("r.sk") &&
           col("l.id") < col("r.id"))

@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Catalyst.{column, expression}
+
+import graft.functions.{KvParse, ParseTurn}
 
 /** The grok/regex parse stage family. Each parser is a pure
   * `DataFrame => DataFrame` (or Column-producing) transform built from
@@ -28,8 +31,7 @@ object Parse {
     // which pays a String+Matcher allocation — the allocation rate is what
     // stops the job scaling with cores). Whole-stage codegen CSEs the
     // repeated parse_turn(text) into one evaluation per row.
-    graft.functions.ParseTurn.register(df.sparkSession)
-    val p = call_function("parse_turn", col("text"))
+    val p = column(ParseTurn(expression(col("text"))))
     // one projection, not five chained withColumns: each withColumn is an
     // analyzed Dataset of its own, and this plan is re-built per bench
     // iteration — planning cost is part of the measured fixed per-job
@@ -95,7 +97,7 @@ object Parse {
       .withColumn("epoch_sec", when(headHit, regexp_extract(t, auditHeadRe, 2).cast("long")))
       .withColumn("epoch_nsec", when(headHit, nsec))
       .withColumn("serial", when(headHit, regexp_extract(t, auditHeadRe, 4).cast("long")))
-      .withColumn("fields", when(col("audit_hit"), call_function("kv_parse", rest)))
+      .withColumn("fields", when(col("audit_hit"), column(KvParse(expression(rest)))))
   }
 
   // ---------------------------------------------------------------- dmesg

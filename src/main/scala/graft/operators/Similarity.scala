@@ -2,8 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Catalyst.{column, expression}
 
-import graft.functions.Hashing
+import graft.functions.{Hashing, PlaneSketch, VecDot}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -34,12 +35,10 @@ object Similarity {
   /** Native codegen'd dot product ([[graft.functions.VecDot]]) — the same
     * left fold of the same products as the interpreted
     * `aggregate(zip_with(...))` composition it replaced (SimilaritySpec
-    * pins the equality), registered on the active session at plan time.
+    * pins the equality). A plain Column: building it needs no session.
     */
-  def dot(a: Column, b: Column): Column = {
-    graft.functions.VecDot.register(org.apache.spark.sql.SparkSession.active)
-    call_function("vec_dot", a, b)
-  }
+  def dot(a: Column, b: Column): Column =
+    column(VecDot(expression(a), expression(b)))
 
   /** sqrt of the self-dot — identical arithmetic to the previous
     * `aggregate(v, 0.0, (acc, x) => acc + x*x)` fold.
@@ -104,9 +103,8 @@ object Similarity {
     * ([[graft.functions.PlaneSketch]]): one static call per row instead
     * of an interpreted lambda per (plane × dimension).
     */
-  def allBandSketches(spark: org.apache.spark.sql.SparkSession, v: Column,
-      bands: Int, planesPerBand: Int): Column =
-    call_function(graft.functions.PlaneSketch.register(spark, bands, planesPerBand), v)
+  def allBandSketches(v: Column, bands: Int, planesPerBand: Int): Column =
+    column(PlaneSketch(expression(v), bands, planesPerBand))
 
   /** Embedding width, fetched once at plan time (one tiny job). */
   def dimsOf(df: DataFrame, embCol: String): Int =
@@ -256,8 +254,8 @@ object Similarity {
     }
     def buckets(df: DataFrame, id: String): DataFrame =
       df.select(col(idCol).as(id),
-        posexplode(allBandSketches(df.sparkSession,
-          toDoubleVec(col(embCol)), bands, planesPerBand)).as(Seq("band", "sk")))
+        posexplode(allBandSketches(toDoubleVec(col(embCol)), bands, planesPerBand))
+          .as(Seq("band", "sk")))
     // ids only through the bucket join + dedup; vectors rejoin for rerank
     val cand = buckets(corpus, "neighbor_id").join(buckets(queries, "query_id"), Seq("band", "sk"))
       .filter(col("query_id") =!= col("neighbor_id"))

@@ -46,9 +46,6 @@ object Probe {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.functions.KvParse.register(s)
-    graft.functions.ParseTurn.register(s)
-    graft.functions.SimHash.register(s)
     s
   }
 

@@ -135,6 +135,29 @@ class ConversationsSpec extends AnyFunSuite {
     val x = PowModHelper.eval(8191L, 123L)
     val y = PowModHelper.eval(8191L, 456L)
     assert(PowModHelper.eval(8191L, 579L) == x * y % Hashing.P)
+
+    // property: the native expression ≡ BigInteger.modPow in the JVM,
+    // over the whole long range of bases and non-negative exponents
+    import java.math.BigInteger
+    import org.apache.spark.sql.graft.Catalyst.{column, expression}
+    import org.scalacheck.Gen
+    import graft.functions.PowMod
+    val P = Hashing.P
+    val genBase = Gen.oneOf(Gen.long, Gen.choose(-3L, 3L),
+      Gen.oneOf(P - 1, P, P + 1, -P, Long.MinValue, Long.MaxValue, 8191L))
+    val genExp = Gen.oneOf(Gen.choose(0L, Long.MaxValue), Gen.choose(0L, 70L),
+      Gen.oneOf(P - 2, P - 1, P, Long.MaxValue))
+    val fixed = Seq((2L, 10L), (8191L, 0L), (12345L, 1L), (8191L, P - 1L),
+      (8191L, 123L), (8191L, 456L), (8191L, 579L))
+    Cases.check(Gen.zip(genBase, genExp), fixed) { cases =>
+      val modPow = cases.map { case (b, e) =>
+        (b, e, BigInteger.valueOf(b).modPow(BigInteger.valueOf(e), BigInteger.valueOf(P))
+          .longValueExact())
+      }
+      modPow.toDF("base", "exp", "expected")
+        .filter(column(PowMod(expression($"base"), expression($"exp"))) =!= $"expected")
+        .as[(Long, Long, Long)].collect().toSeq
+    }
   }
 
   test("dedupExact: keeps lowest conv_id, counts copies") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{SimHash, SimHashHelper}
+import graft.functions.SimHashHelper
 import graft.operators.Dedup
 
 class DedupSpec extends AnyFunSuite {
@@ -359,24 +359,54 @@ class DedupSpec extends AnyFunSuite {
 
   test("native minhash_bands equals the Column signature/band formulation") {
     import org.apache.spark.sql.Column
-    import graft.functions.{Hashing, MinhashBands}
+    import org.apache.spark.sql.graft.Catalyst.{column, expression}
+    import org.scalacheck.Gen
+    import graft.functions.{Hashing, MinhashBands, ShingleHashes}
+    // the Column formulation of one band geometry: k = bands·rpb
+    // signature minima, folded per band
+    def colForm(hs: Column, bands: Int, rpb: Int): Column = {
+      val sig = (0 until bands * rpb).map(i =>
+        array_min(transform(hs, h => Hashing.mix(h, i))))
+      array((0 until bands).map(b =>
+        (0 until rpb).foldLeft(lit(0L): Column) { (acc, r) =>
+          (acc * 8191L + sig(b * rpb + r)) % Hashing.P
+        }): _*)
+    }
+    def native(hs: Column, bands: Int, rpb: Int): Column =
+      column(MinhashBands(expression(hs), bands, rpb))
+
+    // fixed case: the shared-vocabulary fixture at 4 bands × 2 rows
     val sets = Dedup.shingleHashSets(docs, "doc_id", "text", 3)
-    val bands = 4; val rpb = 2
-    val sig = array((0 until bands * rpb).map(i =>
-      array_min(transform($"hs", h => Hashing.mix(h, i)))): _*)
-    def bandValue(b: Int): Column =
-      (0 until rpb).foldLeft(lit(0L): Column) { (acc, r) =>
-        (acc * 8191L + sig.getItem(b * rpb + r)) % Hashing.P
+    def bandRows(c: Column) = sets.select($"id", posexplode(c).as(Seq("band", "bhash")))
+      .as[(Long, Int, Long)].collect().toSet
+    val fixed = bandRows(native($"hs", 4, 2))
+    assert(fixed == bandRows(colForm($"hs", 4, 2)) && fixed.nonEmpty)
+
+    // property: random texts over a small vocabulary (many shorter than
+    // the n = 3 shingle width, so their sets are empty) at a random
+    // geometry each. One CASE branch per geometry keeps every case a row
+    // of one DataFrame, and an empty set yields an empty array natively
+    // (documented on MinhashBandsHelper) where the Column form yields nulls
+    val geoms = for (b <- 1 to 5; r <- 1 to 3) yield (b, r)
+    val genCase = for {
+      nTok <- Gen.choose(0, 10)
+      toks <- Gen.listOfN(nTok, Gen.oneOf("a", "b", "c", "d", "e", "F", "a b", " "))
+      g <- Gen.choose(0, geoms.size - 1)
+    } yield (toks.mkString(" "), g)
+    def byGeom(f: (Column, Int, Int) => Column): Column =
+      geoms.zipWithIndex.foldLeft(lit(null): Column) { case (acc, ((b, r), i)) =>
+        when($"g" === i, f($"hs", b, r)).otherwise(acc)
       }
-    val colForm = sets.select($"id",
-        posexplode(array((0 until bands).map(bandValue): _*)).as(Seq("band", "bhash")))
-      .as[(Long, Int, Long)].collect().toSet
-    MinhashBands.register(spark)
-    val native = sets.select($"id",
-        posexplode(call_function("minhash_bands", $"hs", lit(bands), lit(rpb)))
-          .as(Seq("band", "bhash")))
-      .as[(Long, Int, Long)].collect().toSet
-    assert(native == colForm && native.nonEmpty)
+    Cases.check(genCase) { cases =>
+      cases.toDF("text", "g")
+        .select($"text", $"g", column(ShingleHashes(expression($"text"), 3)).as("hs"))
+        .select($"text", $"g", size($"hs").as("n_hs"),
+          byGeom(native).as("native"), byGeom(colForm).as("col_form"))
+        .as[(String, Int, Int, Seq[Long], Seq[Option[Long]])].collect().toSeq
+        .filterNot { case (_, _, nHs, nat, cf) =>
+          if (nHs == 0) nat.isEmpty else nat.map(Option(_)) == cf
+        }
+    }
   }
 
   test("hashed shingle sets equal sha60-of-string shingles in size (no in-doc collisions here)") {
@@ -388,7 +418,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("simhash: expression equals model; identical docs at distance 0; near-dups close") {
-    SimHash.register(spark)
     val got = docs.select($"doc_id", Dedup.simhash($"text").as("fp"))
       .as[(Long, Long)].collect().toMap
     val model = docs.as[(Long, String)].collect()
@@ -403,7 +432,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("simhashPairs finds exact copies within hamming radius") {
-    SimHash.register(spark)
     val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
       .select("a", "b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((3L, 1003L)))
@@ -465,6 +493,10 @@ class DedupSpec extends AnyFunSuite {
     // shingle-less docs (< 3 tokens): under minhash only the exact
     // component can suppress them, so the hand-written dir is what decides
     val seen = "aa bb"
+    // a near-copy (last token changed, Jaccard 9/11): under minhash only
+    // the bands/sets components can suppress it
+    val long = (0 until 12).map(j => s"w$j").mkString(" ")
+    val nearCopy = long.replace("w11", "zz")
     def hashesOnly(texts: String*) =
       texts.toDF("text").select(Hashing.sha60($"text").as("content_h60"))
     def stage(mode: String, store: String, rows: (Long, String)*) = {
@@ -480,17 +512,26 @@ class DedupSpec extends AnyFunSuite {
       val exact =
         if (mode == "exact") s"$store/seen-000-old"
         else {
-          // a real minhash commit whose exact component is then rewritten
+          // a real minhash commit whose components are all then rewritten
           // in the pre-provenance shape
-          stage(mode, store, (1L, seen)).commit()
-          val dir = new Path(Dedup.listSeen(fs, new Path(store)).head, "exact")
-          assert(fs.delete(dir, true))
-          dir.toString
+          stage(mode, store, (1L, seen), (2L, long)).commit()
+          val dir = Dedup.listSeen(fs, new Path(store)).head
+          Seq("bands", "sets").foreach { part =>
+            val p = new Path(dir, part)
+            val old = new Path(dir, s"_old-$part")
+            assert(fs.rename(p, old))
+            spark.read.parquet(old.toString).drop("src").write.parquet(p.toString)
+            assert(fs.delete(old, true))
+            assert(!spark.read.parquet(p.toString).columns.contains("src"), part)
+          }
+          assert(fs.delete(new Path(dir, "exact"), true))
+          new Path(dir, "exact").toString
         }
       hashesOnly(seen).write.parquet(exact)
       assert(spark.read.parquet(exact).columns.toSeq == Seq("content_h60"), mode)
-      val b = stage(mode, store, (10L, seen), (11L, "ee ff"))
-      assert(b.fresh.select("doc_id").as[Long].collect().toSeq == Seq(11L), mode)
+      val b = stage(mode, store, (10L, seen), (11L, "ee ff"), (12L, nearCopy))
+      assert(b.fresh.select("doc_id").as[Long].collect().sorted.toSeq ==
+        (if (mode == "exact") Seq(11L, 12L) else Seq(11L)), mode)
       b.commit()
       // old and provenance-carrying dirs read together afterwards
       val again = stage(mode, store, (20L, seen), (21L, "ee ff"), (22L, "gg hh"))

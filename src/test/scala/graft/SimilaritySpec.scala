@@ -78,7 +78,7 @@ class SimilaritySpec extends AnyFunSuite {
         array((0 until 24).map(b => Similarity.bandSketch(v, b, 4, mat)): _*).as("sk"))
       .as[(Long, Seq[Long])].collect().toMap
     val native = emb.select($"vec_id",
-        Similarity.allBandSketches(spark, v, 24, 4).as("sk"))
+        Similarity.allBandSketches(v, 24, 4).as("sk"))
       .as[(Long, Seq[Long])].collect().toMap
     assert(native == colForm)
   }
@@ -131,6 +131,26 @@ class SimilaritySpec extends AnyFunSuite {
     val r = emb.limit(1)
       .select(Similarity.dot(v, slice(v, 1, 3)).as("d")).collect().head
     assert(r.isNullAt(0))
+
+    // property: random lengths (often unequal), null elements and null
+    // arrays, special values included; `<=>` equates NaN with NaN
+    import org.scalacheck.Gen
+    val genElem: Gen[Option[Double]] = Gen.frequency(
+      8 -> Gen.choose(-1e3, 1e3).map(Some(_)),
+      1 -> Gen.oneOf(0.0, -0.0, Double.NaN, Double.PositiveInfinity, Double.MinPositiveValue)
+        .map(Some(_)),
+      1 -> Gen.const(None))
+    val genVec: Gen[Option[Seq[Option[Double]]]] = Gen.frequency(
+      12 -> Gen.choose(0, 8).flatMap(n => Gen.listOfN(n, genElem)).map(Some(_)),
+      1 -> Gen.const(None))
+    val genCase = for (a <- genVec; b <- genVec) yield (a, b)
+    Cases.check(genCase) { cases =>
+      val fold = aggregate(zip_with($"a", $"b", (x, y) => x * y), lit(0.0),
+        (acc, x) => acc + x)
+      cases.toDF("a", "b")
+        .filter(!(Similarity.dot($"a", $"b") <=> fold))
+        .as[(Option[Seq[Option[Double]]], Option[Seq[Option[Double]]])].collect().toSeq
+    }
   }
 
   test("cosine of a vector with itself is 1") {
