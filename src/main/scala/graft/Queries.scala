@@ -1272,26 +1272,7 @@ object Queries {
     // four stages — within-batch exact dedup, exact-store pre-filter
     // (including the shingle-less path), within-batch LSH, cross-batch
     // band match — and the DuckDB oracle re-derives every stage.
-    "q_neardup_incremental" -> ((s, dir) => {
-      import s.implicits._
-      val d = documents(s, dir).select(col("doc_id"), col("text"))
-        .filter(col("doc_id") < 400)
-      val a = d.filter(col("doc_id") % 2 === 0)
-        .unionByName(Seq((900000L, "aa bb")).toDF("doc_id", "text"))
-      val b = d.filter(col("doc_id") % 2 === 1)
-        .unionByName(d.filter(col("doc_id") % 2 === 0 && col("doc_id") < 60 &&
-            size(split(lower(trim(col("text"))), "\\s+")) >= 12)
-          .select((col("doc_id") + 700000).as("doc_id"),
-            concat(col("text"), lit(" tail tail")).as("text")))
-        .unionByName(d.filter(col("doc_id") % 2 === 0 && col("doc_id") < 40)
-          .select((col("doc_id") + 800000).as("doc_id"), col("text")))
-        .unionByName(Seq((900001L, "aa bb"), (900002L, "aa bb")).toDF("doc_id", "text"))
-      val store = tempStore("graft-q-incmh")
-      Dedup.incrementalMinhashStaged(a, "doc_id", "text", store,
-        n = 3, bands = 4, rowsPerBand = 2, threshold = 0.6).commit()
-      Dedup.incrementalMinhash(b, "doc_id", "text", store,
-        n = 3, bands = 4, rowsPerBand = 2, threshold = 0.6)
-    }),
+    "q_neardup_incremental" -> ((s, dir) => neardupIncrementalStaged(s, dir).committed()),
 
     // STORE RETRACTION, end to end: batch A (even doc_ids, per-row source
     // f1/f2 by doc_id % 4) seeds the store WITH provenance; source f1 is
@@ -1340,6 +1321,32 @@ object Queries {
     val dir = java.nio.file.Files.createTempDirectory(prefix)
     tempStores.add(dir.toFile)
     dir.toString
+  }
+
+  /** q_neardup_incremental's batch B, staged against a fresh store seeded
+    * with its batch A (see the query). Shared with `tools.PlanDump`, which
+    * dumps the plan of the staged `fresh` rows.
+    */
+  private[graft] def neardupIncrementalStaged(s: SparkSession,
+      dir: String): Dedup.IncrementalBatch = {
+    import s.implicits._
+    val d = documents(s, dir).select(col("doc_id"), col("text"))
+      .filter(col("doc_id") < 400)
+    val a = d.filter(col("doc_id") % 2 === 0)
+      .unionByName(Seq((900000L, "aa bb")).toDF("doc_id", "text"))
+    val b = d.filter(col("doc_id") % 2 === 1)
+      .unionByName(d.filter(col("doc_id") % 2 === 0 && col("doc_id") < 60 &&
+          size(split(lower(trim(col("text"))), "\\s+")) >= 12)
+        .select((col("doc_id") + 700000).as("doc_id"),
+          concat(col("text"), lit(" tail tail")).as("text")))
+      .unionByName(d.filter(col("doc_id") % 2 === 0 && col("doc_id") < 40)
+        .select((col("doc_id") + 800000).as("doc_id"), col("text")))
+      .unionByName(Seq((900001L, "aa bb"), (900002L, "aa bb")).toDF("doc_id", "text"))
+    val store = tempStore("graft-q-incmh")
+    def stage(df: DataFrame) = Dedup.incrementalMinhashStaged(df, "doc_id", "text",
+      store, n = 3, bands = 4, rowsPerBand = 2, threshold = 0.6)
+    stage(a).commit()
+    stage(b)
   }
 
   /** Near-duplicate fixture: documents plus, for long-enough docs with

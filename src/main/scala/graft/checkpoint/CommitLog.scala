@@ -19,9 +19,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * Layout (byte-identical to the stores' hand-written predecessors, so
   * existing stores read unchanged):
   * `<root>/<prefix><id>/`, `<root>/_tmp-<id>/`, `<root>/<prefix><id>/_retired`,
-  * `<root>/_lock`.
+  * `<root>/_lock`, and store-level files `<root>/_<name>` ([[putFile]]).
   */
-private[graft] final class CommitLog(fs: FileSystem, root: Path, prefix: String) {
+private[graft] final class CommitLog(val fs: FileSystem, val root: Path, prefix: String) {
   import CommitLog._
 
   /** Committed dirs without a `_retired` marker, sorted by name. */
@@ -33,13 +33,49 @@ private[graft] final class CommitLog(fs: FileSystem, root: Path, prefix: String)
       .sortBy(_.getName)
 
   /** Atomic publish: `write` fills `_tmp-<id>`, then one rename makes it
-    * `<prefix><id>`.
+    * `<prefix><id>`. A `write` that returns false abandons the commit: its
+    * `_tmp-<id>` is deleted and nothing is published. Returns whether the
+    * commit was published.
     */
-  def commit(id: String)(write: Path => Unit): Unit = {
+  def commit(id: String)(write: Path => Boolean): Boolean = {
     val tmp = new Path(root, s"_tmp-$id")
     val dest = new Path(root, s"$prefix$id")
-    write(tmp)
-    require(fs.rename(tmp, dest), s"commit rename $tmp -> $dest failed")
+    if (!write(tmp)) { fs.delete(tmp, true); false }
+    else {
+      require(fs.rename(tmp, dest), s"commit rename $tmp -> $dest failed")
+      true
+    }
+  }
+
+  /** The text of file `p`, if present. */
+  def read(p: Path): Option[String] =
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString) finally in.close()
+    }
+
+  /** Write `text` to file `p`; without `overwrite`, fails if `p` exists. */
+  def write(p: Path, text: String, overwrite: Boolean = true): Unit = {
+    val out = fs.create(p, overwrite)
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
+  }
+
+  /** Publish the store-level file `<root>/<name>` atomically: written under
+    * `_tmp-<id>` and renamed, so a crash leaves the whole file or none (the
+    * leftover is swept like any `_tmp-*`). Returns false, publishing
+    * nothing, when `<root>/<name>` already exists — another writer got
+    * there first.
+    */
+  def putFile(name: String, text: String): Boolean = {
+    val tmp = new Path(root, s"_tmp-${freshId()}")
+    val dest = new Path(root, name)
+    write(tmp, text, overwrite = false)
+    fs.rename(tmp, dest) || {
+      fs.delete(tmp, false)
+      require(fs.exists(dest), s"publish $tmp -> $dest failed")
+      false
+    }
   }
 
   /** Supersede `dir` in place: it drops out of [[live]] at once but stays
@@ -85,9 +121,7 @@ private[graft] final class CommitLog(fs: FileSystem, root: Path, prefix: String)
     var acquired = false
     while (!acquired) {
       try {
-        val out = fs.create(lock, false)
-        try out.write(token.getBytes(StandardCharsets.UTF_8))
-        finally out.close()
+        write(lock, token, overwrite = false)
         acquired = true
       } catch {
         case _: java.io.IOException =>
@@ -113,11 +147,7 @@ private[graft] final class CommitLog(fs: FileSystem, root: Path, prefix: String)
         try fs.setTimes(lock, System.currentTimeMillis(), -1)
         catch {
           case _: java.io.IOException => // fs without setTimes: rewrite
-            try {
-              val out = fs.create(lock, true)
-              try out.write(token.getBytes(StandardCharsets.UTF_8))
-              finally out.close()
-            } catch { case _: java.io.IOException => () }
+            try write(lock, token) catch { case _: java.io.IOException => () }
         }
         try Thread.sleep(LockHeartbeatMs)
         catch { case _: InterruptedException => interrupted = true }
@@ -128,13 +158,8 @@ private[graft] final class CommitLog(fs: FileSystem, root: Path, prefix: String)
     try body finally {
       done = true
       hb.interrupt()
-      try {
-        val in = fs.open(lock)
-        val cur =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        if (cur == token) fs.delete(lock, false)
-      } catch { case _: java.io.IOException => () }
+      try { if (read(lock).contains(token)) fs.delete(lock, false) }
+      catch { case _: java.io.IOException => () }
     }
   }
 

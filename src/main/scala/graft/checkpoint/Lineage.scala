@@ -114,6 +114,7 @@ final class LineageStore(spark: SparkSession, root: String,
         "rowsFailed", "contentHash", "committedAtMs")
       df.select(cols.map(org.apache.spark.sql.functions.col): _*)
         .write.mode("overwrite").parquet(tmp.toString)
+      true
     }
 
   /** Replace `sources` by ONE fresh commit holding `merged`: the merged

@@ -267,9 +267,9 @@ object ConfigLoader {
       mode <- lk.str("collector.dedup.mode", "")
       dir <- lk.str("collector.dedup.store-dir", "")
       thr <- lk.dbl("collector.dedup.threshold", 0.8)
-      ngram <- lk.int("collector.dedup.ngram", 3)
-      bands <- lk.int("collector.dedup.bands", 4)
-      rpb <- lk.int("collector.dedup.rows-per-band", 2)
+      ngram <- lk.int("collector.dedup.ngram", graft.operators.Dedup.StoreNgram)
+      bands <- lk.int("collector.dedup.bands", graft.operators.Dedup.StoreBands)
+      rpb <- lk.int("collector.dedup.rows-per-band", graft.operators.Dedup.StoreRowsPerBand)
       retract <- lk.bool("collector.dedup.retract-on-invalidate", dflt = true)
     } yield Some(graft.model.DedupStageSpec(mode, dir, thr, ngram, bands, rpb,
       retractOnInvalidate = retract))

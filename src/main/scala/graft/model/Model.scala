@@ -408,9 +408,9 @@ final case class DedupStageSpec(
     mode: String,
     storeDir: String,
     threshold: Double = 0.8,
-    ngram: Int = 3,
-    bands: Int = 4,
-    rowsPerBand: Int = 2,
+    ngram: Int = graft.operators.Dedup.StoreNgram,
+    bands: Int = graft.operators.Dedup.StoreBands,
+    rowsPerBand: Int = graft.operators.Dedup.StoreRowsPerBand,
     /** Rewrite the store on file invalidation, dropping hashes whose only
       * provenance was the invalidated file's old content — the analogue of
       * freader's offset Delete on source removal (collector.go:206-214):

@@ -1,13 +1,11 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Catalyst.{column, expression}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType,
-  StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField,
+  StructType}
 
 import graft.checkpoint.CommitLog
 import graft.functions.{CdcChunks, Hashing, MinhashBands, ShingleHashes, SimHash, WinnowHashes}
@@ -68,7 +66,29 @@ object Dedup {
     * dedup store ONLY after its own delivery commit, so a crash-and-replay
     * never loses rows to a store that committed ahead of the sink.
     */
-  final case class IncrementalBatch(fresh: DataFrame, commit: () => Unit)
+  final case class IncrementalBatch(fresh: DataFrame, commit: () => Unit) {
+    /** `fresh` materialized, then `commit()`: the materialized rows outlive
+      * the caches `commit()` releases, so their consumers read blocks
+      * instead of re-running the stage. localCheckpoint blocks are
+      * ContextCleaner-reclaimed on GC (no leak). Callers that DISCARD the
+      * rows (store seeding) and cluster jobs that must survive executor
+      * loss (checkpoint blocks don't recompute) should commit directly.
+      */
+    private[graft] def committed(): DataFrame = {
+      val out = fresh.localCheckpoint(true)
+      commit()
+      out
+    }
+  }
+
+  /** Default shingle size and LSH geometry of the incremental near-dup
+    * store. A store's `_meta` pins the values of its first stage, so every
+    * stage that may share a store ([[graft.model.DedupStageSpec]], the
+    * streaming near-dup stage, [[incrementalMinhash]]) defaults to these.
+    */
+  val StoreNgram = 3
+  val StoreBands = 4
+  val StoreRowsPerBand = 2
 
   /** The seen-store's commit log: `seen-<id>` dirs, superseded ones
     * retired rather than deleted (a concurrent reader whose plan pinned
@@ -77,6 +97,11 @@ object Dedup {
     * file mid-scan).
     */
   private def seenLog(fs: FileSystem, root: Path) = new CommitLog(fs, root, "seen-")
+
+  private def seenLog(spark: SparkSession, storeDir: String): CommitLog = {
+    val root = new Path(storeDir)
+    seenLog(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+  }
 
   /** Live store commits — the reader view. Public so tests and external
     * consumers share this predicate rather than re-deriving it.
@@ -93,147 +118,188 @@ object Dedup {
     */
   private val SrcsManifest = "_srcs"
 
-  /** The manifest is line-delimited, so line-breaking bytes inside a src
+  /** Retractions recorded against a store that predates `_meta`, one file
+    * each; its migration applies them (see [[openSeen]]).
+    */
+  private val Retracted = "_retracted-"
+
+  /** Source lists are line-delimited, so line-breaking bytes inside a src
     * value (legal in POSIX file names) are percent-escaped — an unescaped
     * "a\nb.log" would split into two fragment lines, never match the
     * retracted set, and make the retraction silently skip the dir.
     */
-  private def encSrc(s: String): String =
-    s.replace("%", "%25").replace("\n", "%0A").replace("\r", "%0D")
+  private def encSrcs(srcs: Iterable[String]): String = srcs.toSeq.distinct.sorted
+    .map(_.replace("%", "%25").replace("\n", "%0A").replace("\r", "%0D")).mkString("\n")
 
-  private def decSrc(s: String): String =
-    s.replace("%0D", "\r").replace("%0A", "\n").replace("%25", "%")
+  private def decSrcs(text: String): Set[String] = text.split("\n").filter(_.nonEmpty)
+    .map(_.replace("%0D", "\r").replace("%0A", "\n").replace("%25", "%")).toSet
 
-  private def writeSrcs(fs: FileSystem, dir: Path, srcs: Seq[String]): Unit = {
-    val out = fs.create(new Path(dir, SrcsManifest), true)
-    try out.write(srcs.distinct.sorted.map(encSrc).mkString("\n")
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+
+  /** Store identity, `<root>/_meta`: `key=value` lines holding the format
+    * version and mode, and for a minhash store the shingle size, band
+    * geometry and id type its `hs` and `bh` were derived with. Shingle
+    * sets of another `n`, or bands of another geometry, never match the
+    * stored ones, so a batch staged with them would let near-dups of
+    * stored docs through without a sign; the id type fixes the stored `id`
+    * column. The first stage of a store writes `_meta`, and every later
+    * stage must match it.
+    */
+  private val MetaFile = "_meta"
+
+  private type Meta = Seq[(String, String)]
+
+  private def seenMeta(mode: String, params: (String, Any)*): Meta =
+    (Seq("version" -> 2, "mode" -> mode) ++ params).map { case (k, v) => k -> v.toString }
+
+  private def readMeta(log: CommitLog): Option[Meta] =
+    log.read(new Path(log.root, MetaFile)).map(_.split("\n").toSeq.filter(_.nonEmpty).map { l =>
+      val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) })
+
+  /** Fails unless the store's identity `have` is this stage's `want`,
+    * naming both values of every key that differs (only the version or
+    * the mode when those differ: the other keys then mean nothing).
+    */
+  private def requireSame(root: Path, have: Meta, want: Meta): Unit = {
+    val (h, w) = (have.toMap, want.toMap)
+    val diff = (want ++ have).map(_._1).distinct.filter(k => h.get(k) != w.get(k))
+    val shown = diff.find(k => k == "version" || k == "mode").fold(diff)(Seq(_))
+    def show(m: Map[String, String]) =
+      shown.map(k => s"$k=${m.getOrElse(k, "none")}").mkString(", ")
+    require(diff.isEmpty,
+      s"seen-store $root was built with ${show(h)}; this batch has ${show(w)}")
   }
 
-  private def readSrcs(fs: FileSystem, dir: Path): Option[Set[String]] = {
-    val p = new Path(dir, SrcsManifest)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().filter(_.nonEmpty).map(decSrc).toSet)
-      finally in.close()
+  /** Read schema of a store's commits: given, not inferred, so a read
+    * opens no footer and runs no inference job. A minhash commit is ONE
+    * table (id, content_h60, hs, bh, src) — one row per survivor, `bh` the
+    * [[graft.functions.MinhashBands]] array of `hs`; readers prune to their
+    * columns. Every column is nullable: `hs` and `bh` are null for a doc
+    * too short to shingle, a row migrated from a pre-v2 `sets` component
+    * has no `content_h60`, one from an `exact` component has only
+    * `content_h60` and `src`, and a pre-provenance row has no `src`. An
+    * exact store holds (content_h60, src).
+    */
+  private def seenSchema(meta: Meta): StructType = {
+    val m = meta.toMap
+    val h60 = StructField("content_h60", LongType)
+    val src = StructField("src", StringType)
+    if (m("mode") == "exact") StructType(Seq(h60, src))
+    else StructType(Seq(StructField("id", DataType.fromDDL(m("id"))), h60,
+      StructField("hs", ArrayType(LongType)), StructField("bh", ArrayType(LongType)), src))
+  }
+
+  /** The rows of `dirs`, read with `schema` (an empty relation for none). */
+  private def rowsOf(spark: SparkSession, dirs: Seq[Path], schema: StructType): DataFrame =
+    if (dirs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).parquet(dirs.map(_.toString): _*)
+
+  private def without(rows: DataFrame, sources: Set[String]): DataFrame =
+    if (sources.isEmpty) rows
+    else rows.filter(col("src").isNull || !col("src").isin(sources.toSeq: _*))
+
+  private def bandsOf(hs: Column, bands: Int, rowsPerBand: Int): Column =
+    column(MinhashBands(expression(hs), bands, rowsPerBand))
+
+  /** Publish `rows` as one store commit with its `_srcs` manifest. The
+    * write is the only Spark job: the row count and the distinct non-null
+    * srcs are observed on it. Zero rows publish nothing. The observation
+    * comes back empty only when the optimizer pruned its node (an input
+    * known to be empty); then one aggregate job counts instead, as
+    * `Pipeline` does for `lines_total` — zero is never assumed.
+    */
+  private def publish(log: CommitLog, rows: DataFrame): Unit = {
+    val aggs = Seq(count(lit(1)).as("n"), collect_set(col("src")).as("srcs"))
+    val obs = new Observation()
+    log.commit(CommitLog.freshId()) { tmp =>
+      rows.observe(obs, aggs.head, aggs.tail: _*)
+        .write.mode("overwrite").parquet(tmp.toString)
+      val m = Some(obs.get).filter(_.contains("n")).getOrElse(
+        rows.agg(aggs.head, aggs.tail: _*).head().getValuesMap[Any](Seq("n", "srcs")))
+      val n = m("n").asInstanceOf[Long]
+      if (n > 0) log.write(new Path(tmp, SrcsManifest),
+        encSrcs(m("srcs").asInstanceOf[scala.collection.Seq[String]]))
+      n > 0
     }
   }
 
-  /** Distinct non-null `src` values of a staged batch — the `_srcs`
-    * manifest content. A driver-side collect of file BASENAMES, bounded by
-    * the batch's source-file count, never data-sized. `srcCol = None` →
-    * empty manifest: every row is null-src, so retraction can skip the dir
-    * outright.
-    */
-  private def distinctSrcs(fresh: DataFrame, srcCol: Option[String]): Seq[String] =
-    srcCol.toSeq.flatMap { c =>
-      fresh.select(col(c).cast("string")).na.drop().distinct()
-        .collect().map(_.getString(0)).toSeq
-    }
-
-  /** Run independent Spark actions concurrently and wait for all of them —
-    * the overlap-independent-jobs discipline: a store commit's component
-    * writes (and a compaction's per-part merges) have no data dependency,
-    * so running them from a small thread pool turns N sequential
-    * job-latency payments into one. Exceptions propagate to the caller.
-    */
-  private def parallelJobs(fs: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    Await.result(Future.sequence(fs.map(f => Future(f()))), Duration.Inf)
-    ()
-  }
-
-  /** Scale-adaptive output sizing for store-commit writes: an AQE-coalesced
-    * repartition on the row key lets adaptive execution size the commit's
-    * files by advisory partition bytes — ONE file for a fixture-sized
-    * commit, ~64 MB files for a billion-hash batch — instead of one tiny
-    * file per upstream partition (the small-files anti-pattern: every later
-    * campaign read pays per-file open + `mergeSchema` footer costs
-    * O(files), and a long campaign reads each commit many times).
-    */
-  private def sized(df: DataFrame, key: String): DataFrame =
-    df.repartition(col(key))
-
-  /** A commit dir's parquet components, relative to the dir: a minhash
-    * commit holds `bands`, `sets` and `exact` subdirs (stores written before
-    * the exact component lack it), an exact commit is one component at the
-    * dir itself ("").
-    */
-  private def components(fs: FileSystem, dir: Path): Seq[String] =
-    if (!fs.exists(new Path(dir, "bands"))) Seq("")
-    else Seq("bands", "sets", "exact").filter(p => fs.exists(new Path(dir, p)))
-
-  /** Read schema of an exact-hash component (an exact commit dir, or a
-    * minhash commit's `exact` subdir): given, not inferred, so a read
-    * opens no footer and runs no schema-merge job. A pre-provenance dir,
-    * written without `src`, reads it as null.
-    */
-  private val ExactSchema = StructType(Seq(
-    StructField("content_h60", LongType), StructField("src", StringType)))
-
-  /** Read schemas of a minhash commit's `bands` and `sets` components,
-    * given for the same reason as [[ExactSchema]]. `id` is the id type of
-    * the batch being staged: a store's id type is fixed by its first
-    * commit, and every later batch must use it.
-    */
-  private def bandsSchema(id: DataType) = StructType(Seq(StructField("id", id),
-    StructField("band", IntegerType), StructField("bhash", LongType),
-    StructField("src", StringType)))
-
-  private def setsSchema(id: DataType) = StructType(Seq(StructField("id", id),
-    StructField("hs", ArrayType(LongType)), StructField("src", StringType)))
-
-  private def at(dir: Path, part: String): Path =
-    if (part.isEmpty) dir else new Path(dir, part)
-
-  /** Stage-time store upkeep: sweep crash leftovers, then size-triggered
-    * compaction (as in checkpoint/Lineage.scala compactIfNeeded) — a long
-    * campaign otherwise accretes one `seen-*` dir per batch and every
-    * subsequent run lists and unions ALL of them, O(batches) reader-side
-    * growth. When the live count exceeds `maxDirs`, merge every live dir
-    * into ONE fresh commit, component by component (`mergeSchema` unifies
-    * pre-provenance dirs, without `src`, with provenance dirs; hash
-    * components are de-duplicated), and only then retire the sources; a
-    * crash in between leaves duplicate hashes (harmless — the consumer is
-    * an anti-join), never a hole.
+  /** Stage-time store upkeep, under the store lease
+    * ([[CommitLog.withLock]]), after a sweep of crash leftovers:
+    *
+    *  - identity: the first stage of a store writes `_meta`; a later stage
+    *    whose identity differs fails ([[requireSame]]);
+    *  - migration: live dirs and no `_meta` are a store from before format
+    *    2, when a minhash commit was three parquet components (`bands`,
+    *    `sets`, `exact`) and nothing recorded its geometry. Every live dir
+    *    merges into ONE v2 commit: `sets` and `exact` rows become v2 rows,
+    *    `bh` is re-derived from `hs` at this stage's geometry, and the
+    *    retractions recorded against the old store apply. Then the sources
+    *    retire and `_meta` is written LAST, so a crash anywhere before
+    *    re-runs the migration, which converges (its earlier output is one
+    *    more live dir);
+    *  - compaction: past `maxDirs` live dirs (a long campaign otherwise
+    *    accretes one `seen-*` dir per batch, and every later stage lists
+    *    and unions all of them), every live dir merges into one, duplicate
+    *    rows dropped, and only then do the sources retire; a crash in
+    *    between leaves duplicate rows (harmless — every reader is an
+    *    anti-join or a verification join), never a hole.
     *
     * Runs at STAGE time, before the batch's read plans are built: a
     * staged batch's `fresh` plan pins the store dirs it was staged
     * against, so superseding those dirs at commit time would break a
-    * caller that (correctly) consumes `fresh` after `commit()`.
+    * caller that (correctly) consumes `fresh` after `commit()`. Returns
+    * the store's rows for those plans.
     */
-  private def compactSeen(spark: SparkSession, fs: FileSystem, log: CommitLog,
-      maxDirs: Int): Unit = {
+  private def openSeen(spark: SparkSession, log: CommitLog, meta: Meta,
+      maxDirs: Int): DataFrame = {
+    val schema = seenSchema(meta)
+    // the merge's distinct exchange lets adaptive execution size the
+    // merged files: one file for a fixture-sized store, advisory-sized
+    // ones for a large one, instead of one file per source partition
+    def merge(dirs: Seq[Path], rows: DataFrame): Unit = {
+      publish(log, rows.distinct())
+      dirs.foreach(log.retire)
+    }
     log.sweep()
     log.withLock {
-      val dirs = log.live
-      if (dirs.size > maxDirs) {
-        // merged manifest = union of the sources' manifests, but only when
-        // every source HAS one — a single pre-manifest dir poisons the union
-        // (its rows' srcs are unknown), so the merged dir stays conservative
-        val manifests = dirs.map(readSrcs(fs, _))
-        val union =
-          if (manifests.forall(_.isDefined)) Some(manifests.flatMap(_.get))
-          else None
-        log.commit(CommitLog.freshId()) { tmp =>
-          parallelJobs(dirs.flatMap(components(fs, _)).distinct.map { part => () =>
-            val merged = spark.read.option("mergeSchema", "true")
-              .parquet(dirs.map(at(_, part)).filter(fs.exists).map(_.toString): _*)
-            (if (part == "bands" || part == "sets") sized(merged, "id")
-            else sized(merged.distinct(), "content_h60"))
-              .write.mode("overwrite").parquet(at(tmp, part).toString)
-          }: _*)
-          union.foreach(u => writeSrcs(fs, tmp, u.toSeq))
-        }
-        dirs.foreach(log.retire)
+      readMeta(log) match {
+        case Some(have) => requireSame(log.root, have, meta)
+        case None =>
+          val dirs = log.live
+          if (dirs.nonEmpty) {
+            val fs = log.fs
+            val retractions = fs.listStatus(log.root).toSeq.map(_.getPath)
+              .filter(_.getName.startsWith(Retracted))
+            val retracted = retractions.flatMap(log.read).flatMap(decSrcs).toSet
+            // a pre-v2 minhash commit's rows are its `sets` and `exact`
+            // components (`bands` holds nothing `bh` re-derived from `hs`
+            // lacks); any other dir is its own rows
+            val parts = dirs.flatMap { d =>
+              if (!fs.exists(new Path(d, "bands"))) Seq(d)
+              else Seq("sets", "exact").map(new Path(d, _)).filter(fs.exists)
+            }
+            val rows = rowsOf(spark, parts, schema)
+            val m = meta.toMap
+            merge(dirs, without(
+              if (m("mode") == "exact") rows.filter(col("content_h60").isNotNull)
+              else rows.withColumn("bh",
+                bandsOf(col("hs"), m("bands").toInt, m("rowsPerBand").toInt)),
+              retracted))
+            retractions.foreach(fs.delete(_, false))
+          }
+          // the lease is create-if-absent, not atomic, on a local file
+          // system: two first stages can race here, and the loser checks
+          // the winner's identity
+          if (!log.putFile(MetaFile, meta.map { case (k, v) => s"$k=$v" }.mkString("\n")))
+            requireSame(log.root, readMeta(log).get, meta)
       }
+      val dirs = log.live
+      if (dirs.size > maxDirs) merge(dirs, rowsOf(spark, dirs, schema))
     }
+    rowsOf(spark, log.live, schema)
   }
+
+  private def srcOf(srcCol: Option[String]): Column =
+    srcCol.map(col).getOrElse(lit(null)).cast("string").as("src")
 
   /** INCREMENTAL exact dedup against a persisted hash store — the growing-
     * corpus campaign discipline: each batch is deduped within itself, then
@@ -251,20 +317,10 @@ object Dedup {
     * this is the corpus-level analogue for content instead of offsets.
     */
   def incrementalExact(df: DataFrame, idCol: String, textCol: String,
-      storeDir: String, maxSeenDirs: Int = 16): DataFrame = {
-    val b = incrementalExactStaged(df, idCol, textCol, storeDir, maxSeenDirs)
+      storeDir: String, maxSeenDirs: Int = 16): DataFrame =
     // (no srcCol: callers outside the pipeline stage rarely have stable
     // per-row provenance; their store rows carry src = null → irrevocable)
-    // materialize before commit releases the stage cache, so consumers of
-    // the returned frame read blocks instead of re-running the anti-join;
-    // localCheckpoint blocks are ContextCleaner-reclaimed on GC (no leak).
-    // Callers that DISCARD the result (store seeding) and cluster jobs
-    // that must survive executor loss (checkpoint blocks don't recompute)
-    // should use the staged form + commit() directly instead.
-    val out = b.fresh.localCheckpoint(true)
-    b.commit()
-    out
-  }
+    incrementalExactStaged(df, idCol, textCol, storeDir, maxSeenDirs).committed()
 
   /** [[incrementalExact]] with the store publish deferred to
     * `commit()` — see [[IncrementalBatch]] for the crash-ordering contract.
@@ -272,39 +328,22 @@ object Dedup {
     * `srcCol`: optional per-row provenance column (e.g. source-file
     * basename) persisted alongside each committed hash as `src` — what
     * [[retractSources]] matches to drop an invalidated source's exclusive
-    * hashes. None commits `src = null`: irrevocable rows, pre-provenance
-    * store compatible (the store is read with [[ExactSchema]], so a dir
-    * without `src` reads it as null).
+    * hashes. None commits `src = null`: irrevocable rows.
     */
   def incrementalExactStaged(df: DataFrame, idCol: String, textCol: String,
       storeDir: String, maxSeenDirs: Int = 16,
       srcCol: Option[String] = None): IncrementalBatch = {
     val spark = df.sparkSession
-    val root = new Path(storeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val log = seenLog(fs, root)
-    compactSeen(spark, fs, log, maxSeenDirs)
-    val dirs = log.live.map(_.toString)
-    val hashed = exactDeduped(df, idCol, textCol)
-      .withColumn("content_h60", Hashing.sha60(col(textCol)))
-    val fresh = (if (dirs.isEmpty) hashed
-      else hashed.join(
-        spark.read.schema(ExactSchema).parquet(dirs: _*).select("content_h60"),
-        Seq("content_h60"), "left_anti")).cache()
-    val srcExpr = srcCol.map(col).getOrElse(lit(null)).cast("string").as("src")
-    val commit = () => try {
-      if (!fresh.isEmpty)
-        log.commit(CommitLog.freshId()) { tmp =>
-          // no `sized` here: a per-batch exact commit is one small write
-          // and the repartition exchange costs more than the file-count
-          // saving — commit-dir file sizing is enforced at COMPACTION
-          // (the accretion control point a long campaign actually hits)
-          fresh.select(col("content_h60"), srcExpr)
-            .write.mode("overwrite").parquet(tmp.toString)
-          writeSrcs(fs, tmp, distinctSrcs(fresh, srcCol))
-        }
-    } finally fresh.unpersist(false)
-    IncrementalBatch(fresh.drop("content_h60"), commit)
+    val log = seenLog(spark, storeDir)
+    val stored = openSeen(spark, log, seenMeta("exact"), maxSeenDirs)
+    val fresh = exactDeduped(df, idCol, textCol)
+      .withColumn("__h60", Hashing.sha60(col(textCol)))
+      .join(stored.select(col("content_h60").as("__h60")), Seq("__h60"), "left_anti")
+      .cache()
+    val commit = () =>
+      try publish(log, fresh.select(col("__h60").as("content_h60"), srcOf(srcCol)))
+      finally fresh.unpersist(false)
+    IncrementalBatch(fresh.drop("__h60"), commit)
   }
 
   /** INCREMENTAL near-dup (MinHash-LSH) against a persisted signature
@@ -313,167 +352,127 @@ object Dedup {
     *
     *  1. exact-deduped within itself (lowest id per content — also covers
     *     docs too short to shingle, which the LSH path cannot see),
-    *  2. anti-joined against the store's `exact` component (one sha60 per
+    *  2. anti-joined against the stored `content_h60` (one sha60 per
     *     EVERY past survivor, shingled or not — this is what makes a
     *     replay of any committed batch a guaranteed no-op, including
     *     shingle-less docs),
     *  3. near-dedup'd within itself (banded LSH candidates + exact-Jaccard
     *     verification, keep the lower id of each verified pair),
-    *  4. its remaining docs' band rows equi-joined against every band any
-    *     earlier batch committed (candidates only — never all-pairs) and
-    *     candidates exact-Jaccard-verified against the stored
-    *     hashed-shingle sets.
+    *  4. its remaining docs' band rows equi-joined against every stored
+    *     `bh` band (candidates only — never all-pairs) and candidates
+    *     exact-Jaccard-verified against the stored hashed-shingle sets.
     *
-    * Survivors' `(bands, sets, exact)` state is committed as ONE
-    * atomically-renamed dir, and the store compacts back to one dir past
-    * `maxSeenDirs` commits. The store holds integer band rows + 8-byte
-    * shingle hashes + one sha60 per survivor — no document text ever
-    * persists or shuffles.
+    * Each survivor commits ONE row (id, content_h60, hs, bh, src) — see
+    * [[seenSchema]] — in ONE atomically-renamed dir per batch, and the
+    * store compacts back to one dir past `maxSeenDirs` commits. The store
+    * holds 8-byte shingle hashes, one band value per band and one sha60
+    * per survivor — no document text ever persists or shuffles. A store's
+    * `n`, `bands`, `rowsPerBand` and id type are fixed by its first stage.
     */
   def incrementalMinhash(df: DataFrame, idCol: String, textCol: String,
-      storeDir: String, n: Int = 3, bands: Int = 4, rowsPerBand: Int = 2,
-      threshold: Double = 0.8, maxSeenDirs: Int = 16): DataFrame = {
-    val b = incrementalMinhashStaged(df, idCol, textCol, storeDir, n, bands,
-      rowsPerBand, threshold, maxSeenDirs)
-    // see incrementalExact: materialize, then commit-and-release
-    val out = b.fresh.localCheckpoint(true)
-    b.commit()
-    out
-  }
+      storeDir: String, n: Int = StoreNgram, bands: Int = StoreBands,
+      rowsPerBand: Int = StoreRowsPerBand, threshold: Double = 0.8,
+      maxSeenDirs: Int = 16): DataFrame =
+    incrementalMinhashStaged(df, idCol, textCol, storeDir, n, bands, rowsPerBand,
+      threshold, maxSeenDirs).committed()
 
   /** [[incrementalMinhash]] with the store publish deferred to
     * `commit()` — see [[IncrementalBatch]] for the crash-ordering contract.
     */
   def incrementalMinhashStaged(df: DataFrame, idCol: String, textCol: String,
-      storeDir: String, n: Int = 3, bands: Int = 4, rowsPerBand: Int = 2,
-      threshold: Double = 0.8, maxSeenDirs: Int = 16,
-      srcCol: Option[String] = None): IncrementalBatch = {
+      storeDir: String, n: Int = StoreNgram, bands: Int = StoreBands,
+      rowsPerBand: Int = StoreRowsPerBand, threshold: Double = 0.8,
+      maxSeenDirs: Int = 16, srcCol: Option[String] = None): IncrementalBatch = {
     val spark = df.sparkSession
-    val root = new Path(storeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val log = seenLog(fs, root)
-    compactSeen(spark, fs, log, maxSeenDirs)
-    val seenDirs = log.live
+    val log = seenLog(spark, storeDir)
+    val idType = df.select(col(idCol)).schema.head.dataType
+    val stored = openSeen(spark, log, seenMeta("minhash", "n" -> n, "bands" -> bands,
+      "rowsPerBand" -> rowsPerBand, "id" -> idType.simpleString), maxSeenDirs)
     // 1) within-batch exact dedup + 2) exact-store pre-filter: identical
     // replays (and identical re-submissions) drop here, for EVERY doc —
-    // the shingle-less idempotency hole is closed structurally. Dirs from
-    // stores predating the exact component simply contribute nothing to
-    // this filter (their band/set state still cross-matches below).
-    val exactDirs = seenDirs.filter(d => fs.exists(new Path(d, "exact")))
-      .map(d => s"$d/exact")
-    val batch = exactDeduped(df, idCol, textCol)
+    // the shingle-less idempotency hole is closed structurally. The
+    // survivors' shingle sets and bands are computed once, as columns of
+    // the cached rows: the LSH pass and the commit both read them there
+    val unseen = exactDeduped(df, idCol, textCol)
       .withColumn("__h60", Hashing.sha60(col(textCol)))
-    val unseen = (if (exactDirs.isEmpty) batch
-      else batch.join(
-        spark.read.schema(ExactSchema).parquet(exactDirs: _*),
-        col("__h60") === col("content_h60"), "left_anti")).cache()
+      .join(stored.select(col("content_h60").as("__h60")), Seq("__h60"), "left_anti")
+      .withColumn("__hs", column(ShingleHashes(expression(col(textCol)), n)))
+      .withColumn("__hs", when(size(col("__hs")) > 0, col("__hs")))
+      .withColumn("__bh", bandsOf(col("__hs"), bands, rowsPerBand))
+      .cache()
     // 3+4) near-dup removal, within-batch and cross-batch FUSED into one
-    // candidate pass when the store is non-empty: the batch's band rows
-    // join ONCE against (batch bands ∪ stored bands), candidates are
-    // verified once against (batch sets ∪ stored sets), and the drop set
-    // is {b of each verified within pair} ∪ {a matched to the store}.
-    // Provably the same survivor set as the former two-stage shape
-    // (within-keep, then keep-side vs store): a doc the store also matches
-    // but the within pass already dropped is simply dropped by both
-    // members of the union — anti-join semantics make the double removal
-    // a no-op — while every former drop is still generated. Halves the
-    // LSH exchanges of a batch (one band join + one distinct + one
-    // verification + one anti-join instead of two of each). The `__self`
-    // flag rides the candidate AND the set lookup so colliding id VALUES
-    // between batch and store can never cross-verify.
-    val sets = shingleHashSets(unseen, idCol, textCol, n).cache()
-    val fresh0 =
-      if (seenDirs.isEmpty) {
-        val pairs = lshPairsFromSets(sets, bands, rowsPerBand, threshold)
-        unseen.join(pairs.select(col("b").as(idCol)).distinct(),
-          Seq(idCol), "left_anti")
-      } else {
-        val idType = sets.schema("id").dataType
-        val oldBands = spark.read.schema(bandsSchema(idType))
-          .parquet(seenDirs.map(d => s"$d/bands"): _*)
-          .select("id", "band", "bhash")
-        val oldSets = spark.read.schema(setsSchema(idType))
-          .parquet(seenDirs.map(d => s"$d/sets"): _*)
-          .select("id", "hs")
-        val selfBands = bandRowsOf(sets, bands, rowsPerBand)
-        val rightBands = selfBands.withColumn("__self", lit(true))
-          .unionByName(oldBands.withColumn("__self", lit(false)))
-        val cand = selfBands.as("l").join(rightBands.as("r"),
-            col("l.band") === col("r.band") && col("l.bhash") === col("r.bhash") &&
-              (!col("r.__self") || col("l.id") < col("r.id")))
-          .select(col("l.id").as("a"), col("r.id").as("b"),
-            col("r.__self").as("__self"))
-          .distinct()
-        val rightSets = sets.withColumn("__self", lit(true))
-          .unionByName(oldSets.withColumn("__self", lit(false)))
-        val dropped = cand
-          .join(sets.select(col("id").as("a"), col("hs").as("hsa_")), "a")
-          .join(rightSets.select(col("id").as("b"), col("__self"),
-            col("hs").as("hsb_")), Seq("b", "__self"))
-          .withColumn("inter", size(array_intersect(col("hsa_"), col("hsb_"))))
-          .filter(col("inter").cast("double") /
-            (size(col("hsa_")) + size(col("hsb_")) - col("inter")) >= threshold)
-          .select(when(col("__self"), col("b")).otherwise(col("a")).as(idCol))
-          .distinct()
-        unseen.join(dropped, Seq(idCol), "left_anti")
-      }
-    val fresh = fresh0.cache()
-    val commit = () => try {
-      if (!fresh.isEmpty) {
-        // provenance rides every component row so retractSources can
-        // rewrite all three in one pass. Without srcCol the src column is a
-        // null LITERAL — attaching it via the freshSrc join would pay two
-        // extra join exchanges per commit for a constant
-        val srcExpr = srcCol.map(col).getOrElse(lit(null)).cast("string").as("src")
-        val freshSets = sets.join(fresh.select(col(idCol).as("id")),
-          Seq("id"), "left_semi")
-        def withSrc(dfc: DataFrame): DataFrame = srcCol match {
-          case None => dfc.withColumn("src", lit(null).cast("string"))
-          case Some(_) =>
-            dfc.join(fresh.select(col(idCol).as("id"), srcExpr), "id")
-        }
-        log.commit(CommitLog.freshId()) { tmp =>
-          // the three component writes are independent jobs over the same
-          // cached frames — submit them concurrently (guide §2.6: actions
-          // are only sequential because the driver calls them sequentially)
-          // so the commit's wall time is the slowest write, not the sum
-          parallelJobs(
-            () => withSrc(bandRowsOf(freshSets, bands, rowsPerBand))
-              .write.mode("overwrite").parquet(new Path(tmp, "bands").toString),
-            () => withSrc(freshSets)
-              .write.mode("overwrite").parquet(new Path(tmp, "sets").toString),
-            () => fresh.select(col("__h60").as("content_h60"), srcExpr)
-              .write.mode("overwrite").parquet(new Path(tmp, "exact").toString))
-          writeSrcs(fs, tmp, distinctSrcs(fresh, srcCol))
-        }
-      }
-    } finally {
-      fresh.unpersist(false); unseen.unpersist(false); sets.unpersist(false)
-    }
-    IncrementalBatch(fresh.drop("__h60"), commit)
+    // candidate pass: the batch's band rows join ONCE against (batch
+    // bands ∪ stored bands), candidates are verified once against (batch
+    // sets ∪ stored sets), and the drop set is {b of each verified within
+    // pair} ∪ {a matched to the store}. Provably the same survivor set as
+    // the two-stage shape (within-keep, then keep-side vs store): a doc
+    // the store also matches but the within pass already dropped is
+    // simply dropped by both members of the union — anti-join semantics
+    // make the double removal a no-op — while every two-stage drop is
+    // still generated. An empty store is an empty relation, which the
+    // optimizer prunes from both unions. The `__self` flag rides the
+    // candidate AND the set lookup so colliding id VALUES between batch
+    // and store can never cross-verify.
+    val sets = unseen.filter(col("__hs").isNotNull)
+      .select(col(idCol).as("id"), col("__hs").as("hs"), col("__bh").as("bh"))
+    val old = stored.filter(col("hs").isNotNull)
+    def bandRows(s: DataFrame): DataFrame =
+      s.select(col("id"), posexplode(col("bh")).as(Seq("band", "bhash")))
+    val selfBands = bandRows(sets)
+    val rightBands = selfBands.withColumn("__self", lit(true))
+      .unionByName(bandRows(old).withColumn("__self", lit(false)))
+    val cand = selfBands.as("l").join(rightBands.as("r"),
+        col("l.band") === col("r.band") && col("l.bhash") === col("r.bhash") &&
+          (!col("r.__self") || col("l.id") < col("r.id")))
+      .select(col("l.id").as("a"), col("r.id").as("b"),
+        col("r.__self").as("__self"))
+      .distinct()
+    val rightSets = sets.select(col("id"), col("hs"), lit(true).as("__self"))
+      .unionByName(old.select(col("id"), col("hs"), lit(false).as("__self")))
+    val dropped = cand
+      .join(sets.select(col("id").as("a"), col("hs").as("hsa_")), "a")
+      .join(rightSets.select(col("id").as("b"), col("__self"),
+        col("hs").as("hsb_")), Seq("b", "__self"))
+      .withColumn("inter", size(array_intersect(col("hsa_"), col("hsb_"))))
+      .filter(col("inter").cast("double") /
+        (size(col("hsa_")) + size(col("hsb_")) - col("inter")) >= threshold)
+      .select(when(col("__self"), col("b")).otherwise(col("a")).as(idCol))
+      .distinct()
+    val fresh = unseen.join(dropped, Seq(idCol), "left_anti").cache()
+    val commit = () =>
+      try publish(log, fresh.select(col(idCol).as("id"), col("__h60").as("content_h60"),
+        col("__hs").as("hs"), col("__bh").as("bh"), srcOf(srcCol)))
+      finally { fresh.unpersist(false); unseen.unpersist(false) }
+    IncrementalBatch(fresh.drop("__h60", "__hs", "__bh"), commit)
   }
 
-  /** RETRACT a set of sources from an incremental store (exact or minhash
-    * layout, auto-detected per dir by [[components]]): every store row whose `src`
-    * provenance is in `sources` is dropped — the content-store analogue of
-    * freader deleting a removed file's offset row
-    * (internal/collector/collector.go:206-214). Rows with null `src`
-    * (pre-provenance commits, or batches staged without `srcCol`) are
-    * irrevocable and always survive.
+  /** RETRACT a set of sources from an incremental store (exact or
+    * minhash): every store row whose `src` provenance is in `sources` is
+    * dropped — the content-store analogue of freader deleting a removed
+    * file's offset row (internal/collector/collector.go:206-214). Rows
+    * with null `src` (pre-provenance commits, or batches staged without
+    * `srcCol`) are irrevocable and always survive.
     *
     * Cost is O(affected commit dirs), not O(store): each commit carries a
     * `_srcs` provenance manifest, and a dir whose manifest is disjoint
     * from the retracted set is left byte-for-byte untouched (pre-manifest
-    * dirs are conservatively rewritten). Each affected dir is rewritten as
-    * its own atomically-renamed fresh commit and the old dir is RETIRED
-    * (marker file, retention-delayed delete — see [[listSeen]]) rather
-    * than deleted, so a concurrent reader whose plan pinned the old files
-    * keeps reading them; the whole pass holds the store mutation lease
-    * ([[CommitLog.withLock]]) so a concurrent compaction cannot merge
-    * pre-retraction rows back in. A crash between a rewrite commit and its
-    * retire leaves the old dir live beside its rewrite — never a hole, and
-    * running the retraction again converges to the uninterrupted answer:
-    * the old dir is rewritten again, its rewrite's manifest is disjoint.
+    * dirs are conservatively rewritten). Each affected dir is rewritten —
+    * one read with the store schema, one write — as its own
+    * atomically-renamed fresh commit (none when no row survives), and the
+    * old dir is RETIRED (marker file, retention-delayed delete — see
+    * [[listSeen]]) rather than deleted, so a concurrent reader whose plan
+    * pinned the old files keeps reading them; the whole pass holds the
+    * store mutation lease ([[CommitLog.withLock]]) so a concurrent
+    * compaction cannot merge pre-retraction rows back in. A crash between
+    * a rewrite commit and its retire leaves the old dir live beside its
+    * rewrite — never a hole, and running the retraction again converges
+    * to the uninterrupted answer: the old dir is rewritten again, its
+    * rewrite's manifest is disjoint.
+    *
+    * A store from before `_meta` cannot be read before a stage tells its
+    * id type and geometry, so its retraction is recorded and applied by
+    * the migration every stage runs first ([[openSeen]]); a stage is the
+    * only reader of the store.
     *
     * Hashes a retracted file shared with a LIVE file keep the live file's
     * row only if the live file introduced them first (the store holds one
@@ -484,33 +483,19 @@ object Dedup {
   def retractSources(spark: SparkSession, storeDir: String,
       sources: Seq[String]): Unit = {
     if (sources.isEmpty) return
-    val root = new Path(storeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val log = seenLog(spark, storeDir)
     val srcSet = sources.toSet
-    def keep(dfm: DataFrame): DataFrame =
-      if (!dfm.columns.contains("src")) dfm
-      else dfm.filter(col("src").isNull || !col("src").isin(sources: _*))
-    val log = seenLog(fs, root)
     log.withLock {
-      val affected = log.live.filter { d =>
-        readSrcs(fs, d) match {
-          case Some(srcs) => srcs.exists(srcSet) // manifest: exact answer
-          case None => true // pre-manifest commit: conservative rewrite
-        }
-      }
-      affected.foreach { d =>
-        val survivorSrcs = readSrcs(fs, d).map(s => (s -- srcSet).toSeq)
-        log.commit(CommitLog.freshId()) { tmp =>
-          // rewrites are 1:1 with the dir they replace — keep the source
-          // dir's partitioning (no `sized` exchange; see the exact-commit
-          // note above) and overlap the component rewrites
-          parallelJobs(components(fs, d).map { part => () =>
-            keep(spark.read.parquet(at(d, part).toString))
-              .write.mode("overwrite").parquet(at(tmp, part).toString)
-          }: _*)
-          survivorSrcs.foreach(writeSrcs(fs, tmp, _))
-        }
-        log.retire(d)
+      readMeta(log) match {
+        case None =>
+          if (log.live.nonEmpty) log.putFile(Retracted + CommitLog.freshId(), encSrcs(sources))
+        case Some(meta) =>
+          log.live.filter(d => log.read(new Path(d, SrcsManifest)).map(decSrcs)
+              .forall(_.exists(srcSet))).foreach { d =>
+            // a rewrite is 1:1 with the dir it replaces: no exchange
+            publish(log, without(rowsOf(spark, Seq(d), seenSchema(meta)), srcSet))
+            log.retire(d)
+          }
       }
     }
   }
@@ -764,17 +749,6 @@ object Dedup {
   // Collisions only ADD candidates, and every candidate is verified with
   // exact Jaccard, so a 31-bit band value is safe.
 
-  /** Band rows (id, band, bhash) of hashed-shingle sets — the LSH index
-    * rows shared by [[minhashLsh]] and [[incrementalMinhash]]. One native
-    * [[graft.functions.MinhashBands]] call per row (bit-identical to the
-    * Column formulation pinned in DedupSpec) instead of bands·rowsPerBand
-    * interpreted higher-order-function transforms.
-    */
-  private def bandRowsOf(sets: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
-    sets.select(col("id"), posexplode(
-      column(MinhashBands(expression(col("hs")), bands, rowsPerBand)))
-      .as(Seq("band", "bhash")))
-
   /** MinHash + banded LSH near-dup detection over HASHED shingles
     * ([[shingleHashSets]]: one sha60 per token, n-gram strings never
     * materialized); permutation i's value is the two-integer-op
@@ -800,25 +774,18 @@ object Dedup {
     */
   def minhashLsh(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, bands: Int = 4, rowsPerBand: Int = 2,
-      threshold: Double = 0.8, maxBucket: Option[Int] = None): DataFrame =
+      threshold: Double = 0.8, maxBucket: Option[Int] = None): DataFrame = {
     // cached: the hashed-shingle sets feed the band-row index AND both
     // sides of the exact-Jaccard verification; only the upstream EXCHANGE
     // is deduped across those uses (ReuseExchange), so everything above it
     // — including the sha256-per-token shingling — would otherwise
-    // recompute per use. Rows are (id, array<long>) — compact, never text
-    // (the incremental-store path has cached its sets since r5 for the
-    // same reason).
-    lshPairsFromSets(shingleHashSets(df, idCol, textCol, n).cache(), bands,
-      rowsPerBand, threshold, maxBucket)
-
-  /** Verified near-dup pairs (a < b) from precomputed hashed-shingle sets:
-    * banded candidates + exact-Jaccard verification of candidates only.
-    * Shared by [[minhashLsh]] and [[incrementalMinhashStaged]] (which
-    * builds `sets` once and reuses it for the cross-batch join).
-    */
-  private def lshPairsFromSets(sets: DataFrame, bands: Int, rowsPerBand: Int,
-      threshold: Double, maxBucket: Option[Int] = None): DataFrame = {
-    val bandRows0 = bandRowsOf(sets, bands, rowsPerBand)
+    // recompute per use. Rows are (id, array<long>) — compact, never text.
+    val sets = shingleHashSets(df, idCol, textCol, n).cache()
+    // one native minhash_bands call per row (bit-identical to the Column
+    // formulation pinned in DedupSpec) instead of bands·rowsPerBand
+    // interpreted higher-order-function transforms
+    val bandRows0 = sets.select(col("id"),
+      posexplode(bandsOf(col("hs"), bands, rowsPerBand)).as(Seq("band", "bhash")))
     val bandRows = maxBucket match {
       case None => bandRows0
       case Some(cap) =>

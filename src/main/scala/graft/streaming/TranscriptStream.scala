@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode, S
 
 import graft.model.{MultilineSpec, Turn}
 import graft.operators.{Parse, Route, Segments}
+import graft.operators.Dedup.{StoreBands, StoreNgram, StoreRowsPerBand}
 
 /** Structured Streaming flavor of the engine — the "tail -f" capability the
   * batch pipeline supplies via resumable runs, expressed natively:
@@ -104,7 +105,7 @@ object TranscriptStream {
     * Sinks keyed by `batchId` (e.g. partitioned writes) are exactly-once.
     */
   def dedupStreamNearDup(turns: Dataset[Turn], storeDir: String,
-      n: Int = 3, bands: Int = 8, rowsPerBand: Int = 2,
+      n: Int = StoreNgram, bands: Int = StoreBands, rowsPerBand: Int = StoreRowsPerBand,
       threshold: Double = 0.8,
       /** Streaming checkpoint location — REQUIRED in production for the
         * "at-least-once bounded to one crash" contract: without it the

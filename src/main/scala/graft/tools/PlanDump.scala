@@ -14,15 +14,18 @@ import graft.operators.{Enrich, Parse, Route}
   *   runMain graft.tools.PlanDump <outDir> <suffix> [names...]
   *
   * No names = the heavy-query slice the optimization round touches, plus
-  * the e2e scaling job (the Bench part-2 workload) under the pseudo-name
-  * `e2e_scaling`. Runs over $SPARK_GRAFT_SF_DIR (default sf0.1) so the
-  * plans match the benched scale.
+  * two pseudo-names: `e2e_scaling`, the e2e scaling job (the Bench part-2
+  * workload), and `q_neardup_incremental_staged`, the staged LSH plan of
+  * q_neardup_incremental (whose own plan is only the scan of its
+  * materialized result). Runs over $SPARK_GRAFT_SF_DIR (default sf0.1) so
+  * the plans match the benched scale.
   */
 object PlanDump {
 
   private val defaultNames = Seq(
     "e2e_scaling",
-    "q_dedup_ngram", "q_neardup_incremental", "q_curate_full",
+    "q_dedup_ngram", "q_neardup_incremental", "q_neardup_incremental_staged",
+    "q_curate_full",
     "q_prep_pipeline", "q_dedup_retract", "q_knn_recall",
     "q_dedup_clusters_star", "q_dedup_clusters", "q_dedup_canonical",
     "q_emb_neardup", "q_conv_neardup", "q_dedup_incremental",
@@ -39,11 +42,14 @@ object PlanDump {
     val s = Probe.session(cpus)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
-      val df =
-        if (n == "e2e_scaling")
+      val df = n match {
+        case "e2e_scaling" =>
           Route.sinkCounts(Route.routed(Enrich.enrich(Parse.parseTurns(
             graft.sources.Transcripts.fromEvents(s, sfDir)))), graft.Queries.demoRules)
-        else graft.SparkEntry.queries(n)(s, sfDir)
+        case "q_neardup_incremental_staged" =>
+          graft.Queries.neardupIncrementalStaged(s, sfDir).fresh
+        case _ => graft.SparkEntry.queries(n)(s, sfDir)
+      }
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       Files.write(Paths.get(outDir, s"${n}_$suffix.txt"),

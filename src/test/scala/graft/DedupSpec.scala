@@ -512,16 +512,12 @@ class DedupSpec extends AnyFunSuite {
       val exact =
         if (mode == "exact") s"$store/seen-000-old"
         else {
-          // a real minhash commit whose components are all then rewritten
-          // in the pre-provenance shape
-          stage(mode, store, (1L, seen), (2L, long)).commit()
-          val dir = Dedup.listSeen(fs, new Path(store)).head
+          // a hand-built minhash commit of the three-component layout, its
+          // components in the pre-provenance shape, in a store without _meta
+          val dir = LegacySeenStore.commit(store, "000-old",
+            Seq((1L, seen), (2L, long)).toDF("id", "text"), n = 3, bands = 8, rowsPerBand = 2)
           Seq("bands", "sets").foreach { part =>
             val p = new Path(dir, part)
-            val old = new Path(dir, s"_old-$part")
-            assert(fs.rename(p, old))
-            spark.read.parquet(old.toString).drop("src").write.parquet(p.toString)
-            assert(fs.delete(old, true))
             assert(!spark.read.parquet(p.toString).columns.contains("src"), part)
           }
           assert(fs.delete(new Path(dir, "exact"), true))
@@ -537,6 +533,54 @@ class DedupSpec extends AnyFunSuite {
       val again = stage(mode, store, (20L, seen), (21L, "ee ff"), (22L, "gg hh"))
       assert(again.fresh.select("doc_id").as[Long].collect().toSeq == Seq(22L), mode)
     }
+  }
+
+  test("a store's shingle size, band geometry, mode and id type are fixed by its first stage") {
+    def tmp() = java.nio.file.Files.createTempDirectory("graft-geometry").toString
+    val store = tmp()
+    val x = (0 until 40).map(i => s"g$i").mkString(" ")
+    val edit = Seq(("e", x.replace("g20", "edited"))).toDF("id", "text")
+    def stage(df: org.apache.spark.sql.DataFrame, n: Int = 3, bands: Int = 4, rpb: Int = 2) =
+      Dedup.incrementalMinhashStaged(df, "id", "text", store, n, bands, rpb)
+    def failure(body: => Any): String = intercept[IllegalArgumentException](body).getMessage
+    stage(Seq(("x", x)).toDF("id", "text")).commit()
+    // at the store's own geometry the one-word edit is a near-dup of X
+    assert(stage(edit).fresh.count() == 0L)
+    // at another geometry its bands could never match X's: a clear error
+    val geometry = failure(stage(edit, bands = 8, rpb = 1))
+    Seq("bands=4", "rowsPerBand=2", "bands=8", "rowsPerBand=1").foreach(v =>
+      assert(geometry.contains(v), geometry))
+    val ngram = failure(stage(edit, n = 4))
+    assert(ngram.contains("n=3") && ngram.contains("n=4"), ngram)
+    // and likewise for another id type, or a minhash stage of an exact store
+    val idType = failure(stage(Seq((1L, x)).toDF("id", "text")))
+    assert(idType.contains("id=string") && idType.contains("id=bigint"), idType)
+    val exactStore = tmp()
+    Dedup.incrementalExactStaged(Seq(("x", x)).toDF("id", "text"), "id", "text",
+      exactStore).commit()
+    val mode = failure(Dedup.incrementalMinhashStaged(edit, "id", "text", exactStore))
+    assert(mode.contains("mode=exact") && mode.contains("mode=minhash"), mode)
+  }
+
+  test("commit budget: a staged minhash batch with provenance commits in ≤ 2 Spark jobs") {
+    val store = java.nio.file.Files.createTempDirectory("graft-commit-jobs").toString
+    def batch(src: String, k: Int) = (0 until 30).map(i =>
+      (s"$src#$i", (0 until 12).map(j => s"c${k}_${i}_$j").mkString(" "), src))
+      .toDF("id", "text", "src")
+    def stage(df: org.apache.spark.sql.DataFrame) =
+      Dedup.incrementalMinhashStaged(df, "id", "text", store, srcCol = Some("src"))
+    stage(batch("f1", 1)).commit()
+    // batch 2: new docs, a replay and a near-dup of batch 1, a shingle-less doc
+    val b = stage(batch("f2", 2)
+      .unionByName(batch("f2", 1).limit(2).withColumn("id", concat($"id", lit("r"))))
+      .unionByName(Seq(("f2#n", (0 until 12).map(j => s"c1_3_$j").mkString(" ") + " x",
+        "f2"), ("f2#s", "aa bb", "f2")).toDF("id", "text", "src")))
+    assert(b.fresh.count() == 31L)
+    val work = SparkWork(spark)(b.commit())
+    assert(work.jobs <= 2, s"commit ran ${work.jobs} Spark jobs")
+    // the commit landed in full: a replay of batch 2 returns nothing
+    assert(stage(batch("f3", 2).unionByName(Seq(("f3#s", "aa bb", "f3"))
+      .toDF("id", "text", "src"))).fresh.count() == 0L)
   }
 
   test("incremental minhash: seen-dir count stays bounded by compaction") {

@@ -46,30 +46,11 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   /** Spark work while `body` runs: (jobs ended, stages that computed the
-    * fingerprint RDD). The listener bus is drained on both sides, so every
-    * event of `body`, and none from before it, is counted.
+    * fingerprint RDD).
     */
   private def sparkWork(body: => Unit): (Int, Int) = {
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-      SparkListenerStageCompleted}
-    val sc = spark.sparkContext
-    // LiveListenerBus.waitUntilEmpty is private[spark]: reached by reflection
-    def drain(): Unit = {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    }
-    val jobs, fingerprints = new AtomicInteger
-    val tap = new SparkListener {
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.incrementAndGet()
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (e.stageInfo.rddInfos.exists(_.name == graft.checkpoint.Fingerprint.RddName))
-          fingerprints.incrementAndGet()
-    }
-    drain()
-    sc.addSparkListener(tap)
-    try { body; drain() } finally sc.removeSparkListener(tap)
-    (jobs.get, fingerprints.get)
+    val w = SparkWork(spark)(body)
+    (w.jobs, w.stages.count(_.rddInfos.exists(_.name == graft.checkpoint.Fingerprint.RddName)))
   }
 
   test("resume job budget: a no-op run is ≤ 4 jobs; each run fingerprints once") {
