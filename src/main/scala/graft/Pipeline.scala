@@ -239,7 +239,6 @@ object Pipeline {
     // only that file ever delivered must become deliverable again from
     // whichever file next carries it. Hashes whose provenance is another
     // (still-live) file, or pre-provenance store rows (src null), stay.
-    // Gated by dedup.retract-on-invalidate (default on).
     //
     // CRASH-REPLAY ATTRIBUTION WINDOW (documented, accepted): the within-
     // run exact dedup attributes each surviving row to the
@@ -254,7 +253,7 @@ object Pipeline {
     // delivery, and the window closes at the lineage commit.
     val invalidatedNames = invalidated.map(f => new Path(f).getName).toSet
     val dedupStage = cfg.dedup.map { dd =>
-      if (invalidatedNames.nonEmpty && dd.retractOnInvalidate)
+      if (invalidatedNames.nonEmpty)
         operators.Dedup.retractSources(spark, dd.storeDir,
           invalidatedNames.toSeq.sorted)
       def staged(rows: org.apache.spark.sql.DataFrame, compact: Boolean) = {

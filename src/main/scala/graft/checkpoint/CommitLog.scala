@@ -78,6 +78,19 @@ private[graft] final class CommitLog(val fs: FileSystem, val root: Path, prefix:
     }
   }
 
+  /** Create file `p` holding `text`; fails if `p` exists, and of several
+    * concurrent callers exactly one succeeds. Hadoop's local file system
+    * implements `create(p, overwrite = false)` as an existence check
+    * followed by an open, which two threads can both pass, so on `file:`
+    * the create is the platform's own CREATE_NEW; elsewhere
+    * `create(p, false)` (atomic on HDFS).
+    */
+  private def createExclusive(p: Path, text: String): Unit =
+    if (fs.getUri.getScheme == "file")
+      java.nio.file.Files.write(java.nio.file.Paths.get(fs.makeQualified(p).toUri),
+        text.getBytes(StandardCharsets.UTF_8), java.nio.file.StandardOpenOption.CREATE_NEW)
+    else write(p, text, overwrite = false)
+
   /** Supersede `dir` in place: it drops out of [[live]] at once but stays
     * physically intact until the [[sweep]], so a concurrent reader whose
     * plan pinned its file paths never hits a deleted file mid-scan. The
@@ -89,9 +102,9 @@ private[graft] final class CommitLog(val fs: FileSystem, val root: Path, prefix:
     * other: both rewrite-and-supersede live dirs, and unserialized they can
     * resurrect retracted rows (a compaction that listed dirs before a
     * concurrent retraction rewrote them merges the pre-retraction rows
-    * back in). A `_lock` file at the store root is the lease: atomic
-    * create-no-overwrite to acquire (atomic on HDFS; create-if-absent on
-    * the local fs — adequate for single-host sharing), deleted to release.
+    * back in). A `_lock` file at the store root is the lease: an exclusive
+    * create acquires it ([[createExclusive]]), so of several contenders
+    * exactly one holds it at a time; it is deleted to release.
     *
     * Ownership and liveness (nothing here may break a LIVE lease — a
     * broken live lease is exactly the resurrection this lock prevents):
@@ -121,7 +134,7 @@ private[graft] final class CommitLog(val fs: FileSystem, val root: Path, prefix:
     var acquired = false
     while (!acquired) {
       try {
-        write(lock, token, overwrite = false)
+        createExclusive(lock, token)
         acquired = true
       } catch {
         case _: java.io.IOException =>

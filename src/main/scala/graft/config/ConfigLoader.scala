@@ -21,14 +21,24 @@ import graft.model.{MultilineMode, MultilineSpec, PipelineConfig, SinkRule}
   *    PipelineConfig.validate for the collector-side checks.
   *
   * Key map (reference key → engine field):
-  *   collector.separator / include / exclude → same
-  *   collector.salt-buckets / lineage-partitions / checkpoint-dir → same
-  *   collector.multiline.{mode,start-pattern,condition-pattern,timeout,java}
+  *   collector.include / exclude / lineage-partitions → same
+  *   collector.fingerprint-strategy / fingerprint-size → same
+  *   collector.multiline.{mode,start-pattern,condition-pattern,java}
+  *     → PipelineConfig.multiline
   *   collector.dedup.{mode,store-dir,threshold,ngram,bands,rows-per-band}
   *     → PipelineConfig.dedup (engine extension, no reference analogue)
-  *   sink.batch-size / sink.batch-interval → validated (lossless-batch
-  *     divergence, COVERAGE.md §2.6: values checked, not used)
-  *   sink.<name>.{type,include,exclude,reject-where} → SinkRule per section
+  *   collector.separator / poll-interval / workers, multiline.timeout →
+  *     validated only: the batch engine has no line separator, poll loop,
+  *     worker pool or idle flush for them to set
+  *   sink.batch-size / batch-interval / retries → batchSize /
+  *     batchIntervalMs / batchRetries (the HTTP wire sinks)
+  *   prometheus.enable / addr → prometheusAddr
+  *   sink.labels.* → labels
+  *   sink.<name>.{type,include,exclude,reject-where,url,index,table,
+  *     database,user,password} → SinkRule per section
+  *
+  * Keys outside this map are ignored, so a file written for an older
+  * surface still loads.
   */
 object ConfigLoader {
 
@@ -46,8 +56,7 @@ object ConfigLoader {
     */
   private val knownKeys: Seq[String] = Seq(
     "collector.separator", "collector.include", "collector.exclude",
-    "collector.salt-buckets", "collector.lineage-partitions",
-    "collector.checkpoint-dir", "collector.poll-interval",
+    "collector.lineage-partitions", "collector.poll-interval",
     "collector.workers", "collector.fingerprint-strategy",
     "collector.fingerprint-size",
     "collector.multiline.mode", "collector.multiline.start-pattern",
@@ -56,18 +65,6 @@ object ConfigLoader {
     "collector.dedup.mode", "collector.dedup.store-dir",
     "collector.dedup.threshold", "collector.dedup.ngram",
     "collector.dedup.bands", "collector.dedup.rows-per-band",
-    "collector.dedup.retract-on-invalidate",
-    "collector.sketch.cms-depth", "collector.sketch.cms-width",
-    "collector.sketch.hll-p", "collector.sketch.expected-distinct",
-    "collector.curation.quantile-rate", "collector.curation.outlier-k",
-    "collector.curation.winnow-k", "collector.curation.winnow-w",
-    "collector.curation.cdc-window", "collector.curation.cdc-divisor",
-    "collector.curation.bm25-k1", "collector.curation.bm25-b",
-    "collector.curation.conv-bucket-width",
-    "collector.curation.span-k", "collector.curation.mix-budget-permille",
-    "collector.curation.lm-alpha", "collector.curation.dsir-buckets",
-    "collector.curation.dsir-alpha", "collector.curation.pmi-min-count",
-    "collector.curation.zipf-k",
     "sink.batch-size", "sink.batch-interval", "sink.retries",
     "prometheus.enable", "prometheus.addr")
 
@@ -75,21 +72,12 @@ object ConfigLoader {
     "GRAFT_" + key.toUpperCase.replace('.', '_').replace('-', '_')
 
   private val arrayKeys = Set("collector.include", "collector.exclude")
-  private val boolKeys = Set("collector.multiline.java", "prometheus.enable",
-    "collector.dedup.retract-on-invalidate")
-  private val intKeys = Set("collector.salt-buckets",
+  private val boolKeys = Set("collector.multiline.java", "prometheus.enable")
+  private val intKeys = Set(
     "collector.lineage-partitions", "sink.batch-size", "sink.retries",
     "collector.workers", "collector.fingerprint-size",
     "collector.dedup.ngram", "collector.dedup.bands",
-    "collector.dedup.rows-per-band",
-    "collector.sketch.cms-depth", "collector.sketch.cms-width",
-    "collector.sketch.hll-p", "collector.sketch.expected-distinct",
-    "collector.curation.outlier-k", "collector.curation.winnow-k",
-    "collector.curation.winnow-w", "collector.curation.cdc-window",
-    "collector.curation.cdc-divisor", "collector.curation.conv-bucket-width",
-    "collector.curation.span-k", "collector.curation.mix-budget-permille",
-    "collector.curation.dsir-buckets", "collector.curation.pmi-min-count",
-    "collector.curation.zipf-k")
+    "collector.dedup.rows-per-band")
 
   val sinkKinds: Set[String] =
     Set("console", "file", "clickhouse", "opensearch", "parquet")
@@ -185,12 +173,6 @@ object ConfigLoader {
         else Right(v.toInt)
       case Some(other) => Left(s"$k: expected integer, got $other")
     }
-    // full 64-bit range — expected-distinct at corpus scale exceeds 2^31
-    def long(k: String, dflt: Long): Either[String, Long] = map.get(k) match {
-      case None => Right(dflt)
-      case Some(I(v)) => Right(v)
-      case Some(other) => Left(s"$k: expected integer, got $other")
-    }
     def bool(k: String, dflt: Boolean): Either[String, Boolean] = map.get(k) match {
       case None => Right(dflt)
       case Some(B(v)) => Right(v)
@@ -211,42 +193,31 @@ object ConfigLoader {
   private def build(kvs: Seq[(String, Value)]): Either[String, PipelineConfig] = {
     val lk = new Lookup(kvs)
     for {
-      separator <- lk.str("collector.separator", "\n")
       include <- lk.arr("collector.include")
       exclude <- lk.arr("collector.exclude")
-      saltBuckets <- lk.int("collector.salt-buckets", 16)
       lineageParts <- lk.int("collector.lineage-partitions", 32)
-      checkpointDir <- lk.str("collector.checkpoint-dir", "")
       fpStrategy <- lk.str("collector.fingerprint-strategy", "checksum")
       fpSize <- lk.int("collector.fingerprint-size", 64 * 1024)
-      _ <- schedulerChecks(lk)
+      _ <- parityChecks(lk)
       promAddr <- prometheusChecks(lk)
       batch <- batchChecks(lk)
       ml <- multiline(lk)
       dd <- dedupStage(lk)
-      sk <- sketchSpec(lk)
-      cu <- curationSpec(lk)
       sinks <- sinkRules(kvs, lk)
       labels <- Right(kvs.collect {
         case (k, S(v)) if k.startsWith("sink.labels.") =>
           k.stripPrefix("sink.labels.") -> v
       }.toMap)
     } yield PipelineConfig(
-      separator = separator,
-      multiline = ml.map(_._1),
+      multiline = ml,
       sinks = sinks,
-      saltBuckets = saltBuckets,
       lineagePartitions = lineageParts,
-      checkpointDir = if (checkpointDir.isEmpty) None else Some(checkpointDir),
       include = include,
       exclude = exclude,
-      multilineTimeoutMs = ml.map(_._2),
       fingerprintStrategy = fpStrategy,
       fingerprintSize = fpSize,
       labels = labels,
       dedup = dd,
-      sketch = sk,
-      curation = cu,
       prometheusAddr = promAddr,
       batchSize = batch._1,
       batchIntervalMs = batch._2,
@@ -270,61 +241,18 @@ object ConfigLoader {
       ngram <- lk.int("collector.dedup.ngram", graft.operators.Dedup.StoreNgram)
       bands <- lk.int("collector.dedup.bands", graft.operators.Dedup.StoreBands)
       rpb <- lk.int("collector.dedup.rows-per-band", graft.operators.Dedup.StoreRowsPerBand)
-      retract <- lk.bool("collector.dedup.retract-on-invalidate", dflt = true)
-    } yield Some(graft.model.DedupStageSpec(mode, dir, thr, ngram, bands, rpb,
-      retractOnInvalidate = retract))
+    } yield Some(graft.model.DedupStageSpec(mode, dir, thr, ngram, bands, rpb))
   }
 
-  /** The `[collector.sketch]` sub-section — sizing for the CMS/HLL sketch
-    * operators (engine extension, no reference analogue). Saturation and
-    * range checks live in [[graft.model.SketchSpec.validate]], reached via
-    * PipelineConfig.validate; this just unmarshals.
+  /** separator non-empty, poll-interval > 0 and workers >= 1 when set —
+    * the reference's checks (config.go:190-237), kept because they reject
+    * bad outside input; the values themselves set nothing here: delivery
+    * reads rows, not separated lines, and the batch engine's scheduler
+    * (snapshot poll cadence, task parallelism) absorbs the other two.
     */
-  private def sketchSpec(lk: Lookup): Either[String, Option[graft.model.SketchSpec]] = {
-    val present = lk.map.keys.exists(_.startsWith("collector.sketch."))
-    if (!present) return Right(None)
-    for {
-      d <- lk.int("collector.sketch.cms-depth", 4)
-      w <- lk.int("collector.sketch.cms-width", 1024)
-      p <- lk.int("collector.sketch.hll-p", 8)
-      n <- lk.long("collector.sketch.expected-distinct", -1L)
-    } yield Some(graft.model.SketchSpec(d, w, p, if (n < 0) None else Some(n)))
-  }
-
-  /** The `[collector.curation]` sub-section — parameters for the
-    * curation-analytics operators (engine extension, no reference
-    * analogue). Range rules live in [[graft.model.CurationSpec.validate]],
-    * reached via PipelineConfig.validate; this just unmarshals.
-    */
-  private def curationSpec(lk: Lookup): Either[String, Option[graft.model.CurationSpec]] = {
-    val present = lk.map.keys.exists(_.startsWith("collector.curation."))
-    if (!present) return Right(None)
-    for {
-      qr <- lk.dbl("collector.curation.quantile-rate", 0.25)
-      ok <- lk.int("collector.curation.outlier-k", 3)
-      wk <- lk.int("collector.curation.winnow-k", 4)
-      ww <- lk.int("collector.curation.winnow-w", 4)
-      cw <- lk.int("collector.curation.cdc-window", 3)
-      cd <- lk.long("collector.curation.cdc-divisor", 4L)
-      k1 <- lk.dbl("collector.curation.bm25-k1", 1.2)
-      b <- lk.dbl("collector.curation.bm25-b", 0.75)
-      bw <- lk.int("collector.curation.conv-bucket-width", 4096)
-      sk <- lk.int("collector.curation.span-k", 8)
-      mb <- lk.int("collector.curation.mix-budget-permille", 500)
-      la <- lk.dbl("collector.curation.lm-alpha", 0.1)
-      db <- lk.int("collector.curation.dsir-buckets", 8192)
-      da <- lk.dbl("collector.curation.dsir-alpha", 0.5)
-      pm <- lk.long("collector.curation.pmi-min-count", 5L)
-      zk <- lk.int("collector.curation.zipf-k", 100)
-    } yield Some(graft.model.CurationSpec(qr, ok, wk, ww, cw, cd, k1, b, bw,
-      sk, mb, la, db, da, pm, zk))
-  }
-
-  /** poll-interval > 0 and workers >= 1 when set — validated for parity;
-    * the batch engine's scheduler (snapshot poll cadence, task parallelism)
-    * absorbs both values.
-    */
-  private def schedulerChecks(lk: Lookup): Either[String, Unit] = for {
+  private def parityChecks(lk: Lookup): Either[String, Unit] = for {
+    sep <- lk.str("collector.separator", "\n")
+    _ <- if (sep.nonEmpty) Right(()) else Left("separator must be non-empty")
     pi <- lk.str("collector.poll-interval", "2s")
     ms <- parseDuration(pi).left.map(e => s"collector.poll-interval: $e")
     _ <- if (ms > 0) Right(()) else Left("collector.poll-interval must be > 0")
@@ -390,9 +318,12 @@ object ConfigLoader {
   /** The multiline sub-unmarshal incl. the Java preset (config.go:100-131)
     * and MultilineReader.Validate strictness (multline_reader.go:37-48:
     * start-pattern, condition-pattern and timeout > 0 are all required).
-    * Returns (spec, timeoutMs) when the section is present at all.
+    * The timeout is validated only: a run's batch assembly closes every
+    * record at the end of its conversation and has no idle flush to set
+    * (the streaming flush takes its timeout as a parameter).
+    * Returns the spec when the section is present at all.
     */
-  private def multiline(lk: Lookup): Either[String, Option[(MultilineSpec, Long)]] = {
+  private def multiline(lk: Lookup): Either[String, Option[MultilineSpec]] = {
     val present = lk.map.keys.exists(_.startsWith("collector.multiline."))
     if (!present) return Right(None)
     for {
@@ -413,7 +344,7 @@ object ConfigLoader {
       _ <- if (tout.nonEmpty) Right(()) else Left("multiline timeout must be > 0")
       ms <- parseDuration(tout).left.map(e => s"multiline timeout: $e")
       _ <- if (ms > 0) Right(()) else Left("multiline timeout must be > 0")
-    } yield Some((MultilineSpec(m, cond, Some(start)), ms))
+    } yield Some(MultilineSpec(m, cond, Some(start)))
   }
 
   private def compile(re: String, what: String): Either[String, Unit] =

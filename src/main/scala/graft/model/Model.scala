@@ -38,27 +38,6 @@ final case class ParsedTurn(
     kv: Map[String, String]    // quoted key=value fields (audit.go:82-147 semantics)
 )
 
-/** One lineage checkpoint row. Plays the role of freader's SQLite offsets row
-  * (reference: internal/store/migrations/00001_create_table_offsets.sql —
-  * offsets(id, strategy, path, offset, created_at, updated_at)).
-  *
-  * - `partition_id`  ≈ file id (here: a conversation bucket)
-  * - `watermark`     ≈ byte offset (here: max committed turn_seq in the bucket)
-  * - `content_hash`  ≈ file fingerprint (internal/file_tracker/fingerprint.go:27-53):
-  *                     recomputed at resume; mismatch → reprocess from scratch,
-  *                     mirroring the fingerprint-mismatch reopen
-  *                     (internal/tailer/tail_reader.go:95-106).
-  */
-final case class LineageRow(
-    run_id: String,
-    snapshot_id: Long,
-    partition_id: Int,
-    sink: String,
-    rows_delivered: Long,
-    content_hash: String,
-    committed_at: Timestamp
-)
-
 /** Routing rule: a named sink with include/exclude substring predicates,
   * the reference's sink filter semantics verbatim
   * (cmd/freader/sink/common/filter.go:11-30):
@@ -140,12 +119,9 @@ object MultilineSpec {
   * `validate()` mirrors Config.Validate strictness (config.go:190-237).
   */
 final case class PipelineConfig(
-    separator: String = "\n",
     multiline: Option[MultilineSpec] = None,
     sinks: Seq[SinkRule] = Seq(SinkRule("console")),
-    saltBuckets: Int = 16,
     lineagePartitions: Int = 32,
-    checkpointDir: Option[String] = None,
     /** Path include patterns over manifest/data-file paths — S3 semantics
       * of internal/watcher/watcher.go:213-275 (Go filepath.Match globs,
       * broad-dir vs specific includes). Empty ⇒ admit all.
@@ -153,10 +129,6 @@ final case class PipelineConfig(
     include: Seq[String] = Nil,
     /** Path exclude patterns (basename or full path, watcher.go:267-275). */
     exclude: Seq[String] = Nil,
-    /** Multiline idle-flush timeout (multline_reader.go:21,97) — consumed
-      * by the streaming flavor; carried from config for validation parity.
-      */
-    multilineTimeoutMs: Option[Long] = None,
     /** File fingerprint strategy (internal/watcher/config.go:21-42 matrix:
       * checksum | deviceAndInode | checksumSeparator). `checksum` hashes the
       * first `fingerprintSize` bytes + length; `deviceAndInode` is storage
@@ -188,24 +160,6 @@ final case class PipelineConfig(
       * `incrementalMinhashStaged`.
       */
     dedup: Option[DedupStageSpec] = None,
-    /** Optional sizing surface for the sketch operators
-      * ([[graft.operators.Frequency]] d×w count-min,
-      * [[graft.operators.Cardinality]] 2^p-register HLL) — an engine-side
-      * extension: the operators take parameters, this is where a campaign
-      * configures them, with saturation validation (a 4×1024 CMS drowns on
-      * a 100 TB vocabulary — see [[SketchSpec.validate]]).
-      */
-    sketch: Option[SketchSpec] = None,
-    /** Optional parameter surface for the curation-analytics operators
-      * ([[graft.operators.Quantile]] sampling + MAD gate,
-      * [[graft.operators.Dedup]] winnowing/CDC knobs,
-      * [[graft.operators.Search]] BM25,
-      * [[graft.operators.Conversations]] salted-fingerprint bucketing) —
-      * engine-side extension; the operators take parameters, this is
-      * where a campaign pins them once with range validation
-      * ([[CurationSpec.validate]]).
-      */
-    curation: Option[CurationSpec] = None,
     /** `/metrics` endpoint address when `prometheus.enable` is set
       * (cmd/freader/main.go:69-84; prometheus.addr required by the
       * validation matrix, config.go:227-229). None ⇒ no endpoint.
@@ -237,11 +191,9 @@ final case class PipelineConfig(
   def validate(
       isDir: String => Boolean = graft.operators.PathFilter.localIsDir
   ): Either[String, PipelineConfig] =
-    if (separator.isEmpty) Left("separator must be non-empty")
-    else if (sinks.isEmpty) Left("at least one sink is required")
+    if (sinks.isEmpty) Left("at least one sink is required")
     else if (sinks.map(_.name).distinct.size != sinks.size)
       Left("sink names must be unique")
-    else if (saltBuckets < 1) Left("saltBuckets must be >= 1")
     else if (lineagePartitions < 1) Left("lineagePartitions must be >= 1")
     // the watcher fingerprint matrix (internal/watcher/config.go:21-42)
     else if (!Set("checksum", "deviceAndInode", "checksumSeparator")
@@ -276,126 +228,8 @@ final case class PipelineConfig(
     else if (batchSize < 1) Left("sink.batch-size must be > 0")
     else if (batchIntervalMs < 1) Left("sink.batch-interval must be > 0")
     else if (batchRetries < 0) Left("sink.retries must be >= 0")
-    else {
-      val dv = dedup.map(_.validate().map(_ => ())).getOrElse(Right(()))
-      val sv = sketch.map(_.validate().map(_ => ())).getOrElse(Right(()))
-      val cv = curation.map(_.validate().map(_ => ())).getOrElse(Right(()))
-      dv.flatMap(_ => sv).flatMap(_ => cv).map(_ => this)
-    }
-}
-
-/** Sizing of the sketch operators ([[PipelineConfig.sketch]]): count-min
-  * depth×width and HLL precision, with the saturation check a 100 TB
-  * campaign needs BEFORE burning a pass. Sizing rules (documented in
-  * COVERAGE.md):
-  *
-  *  - CMS point estimates over-count by ≈ the collision mass landing in a
-  *    counter; with n distinct keys the average load is n/w keys per
-  *    counter, and past ~64 the min-over-d rows is dominated by collision
-  *    mass rather than the item — so when `expectedDistinct` is declared,
-  *    `cmsWidth >= expectedDistinct / 64` is REQUIRED (choose w ≈ e/ε for
-  *    a target additive error of ε·N to be safe).
-  *  - HLL standard error is 1.04/√(2^p) regardless of n (no n-dependent
-  *    saturation); p ∈ [7, 16] spans 2.9% down to 0.4%.
-  */
-final case class SketchSpec(
-    cmsDepth: Int = 4,
-    cmsWidth: Int = 1024,
-    hllP: Int = 8,
-    /** Declared scale of the keyed domain (distinct shingles / urls /
-      * tokens expected). None skips the saturation check.
-      */
-    expectedDistinct: Option[Long] = None) {
-  def validate(): Either[String, SketchSpec] =
-    if (cmsDepth < 1 || cmsDepth > 16)
-      Left("sketch cms-depth must be in [1, 16]")
-    else if (cmsWidth < 2) Left("sketch cms-width must be >= 2")
-    else if (hllP < 7 || hllP > 16) Left("sketch hll-p must be in [7, 16]")
-    else if (expectedDistinct.exists(_ < 1))
-      Left("sketch expected-distinct must be >= 1")
-    else expectedDistinct match {
-      case Some(n) if n > cmsWidth.toLong * 64 =>
-        Left(s"sketch cms-width $cmsWidth saturates at $n expected distinct " +
-          s"keys (~${n / cmsWidth} keys per counter; bound is 64): " +
-          "size cms-width >= expected-distinct / 64")
-      case _ => Right(this)
-    }
-}
-
-/** Parameters of the curation-analytics operators
-  * ([[PipelineConfig.curation]]), each with its sizing rule:
-  *
-  *  - `quantileRate`: hash-sample rate for the quantile sketch — by DKW,
-  *    m sampled rows bound the CDF error by ε ≈ √(ln(2/δ)/2m); pick
-  *    rate = m/N for the N at hand (rate 1.0 = exact order statistics,
-  *    and the sampling predicate short-circuits away).
-  *  - `outlierK`: the MAD multiplier of the robust gate (3 ≈ the classic
-  *    "3 sigma" under normality, where MAD·1.4826 ≈ σ).
-  *  - `winnowK`/`winnowW`: detection floor is any shared span of
-  *    `w + k − 1` tokens; expected index density 2/(w+1) of the full
-  *    k-gram index — larger w = smaller index, longer guaranteed span.
-  *  - `cdcWindow`/`cdcDivisor`: boundary when the window hash ≡ 0 mod
-  *    divisor ⇒ expected chunk length ≈ divisor tokens.
-  *  - `bm25K1`/`bm25B`: Robertson–Zaragoza saturation / length
-  *    normalization (Lucene defaults 1.2 / 0.75).
-  *  - `convBucketWidth`: salted-fingerprint range width — a conversation
-  *    spreads over ceil(turns/width) tasks; width 4096 keeps per-bucket
-  *    arrays comfortably in task memory while a 10M-turn conversation
-  *    still fans out over ~2400 tasks.
-  */
-final case class CurationSpec(
-    quantileRate: Double = 0.25,
-    outlierK: Int = 3,
-    winnowK: Int = 4,
-    winnowW: Int = 4,
-    cdcWindow: Int = 3,
-    cdcDivisor: Long = 4L,
-    bm25K1: Double = 1.2,
-    bm25B: Double = 0.75,
-    convBucketWidth: Int = 4096,
-    /** Span-scrub block size (tokens): the duplicated-span removal grain
-      * AND the short-span floor — spans shorter than `spanK` are never
-      * treated as duplication evidence (Lee et al.'s minimum match
-      * length), so 1 would scrub every repeated single token.
-      */
-    spanK: Int = 8,
-    /** Temperature-mix token budget as a permille of the corpus. */
-    mixBudgetPermille: Int = 500,
-    /** Add-α for the CCNet bigram model; NaN fails the > 0 check. */
-    lmAlpha: Double = 0.1,
-    /** DSIR hashed-feature buckets — sizes the count tables; too few
-      * buckets alias unrelated tokens into one importance estimate.
-      */
-    dsirBuckets: Int = 8192,
-    /** Add-α for the DSIR bucket counts. */
-    dsirAlpha: Double = 0.5,
-    /** PMI min pair count: below it, PMI is noise (Church & Hanks). */
-    pmiMinCount: Long = 5L,
-    /** Zipf-fit rank depth. */
-    zipfK: Int = 100) {
-  def validate(): Either[String, CurationSpec] =
-    if (quantileRate <= 0.0 || quantileRate > 1.0)
-      Left("curation quantile-rate must be in (0, 1]")
-    else if (outlierK < 1) Left("curation outlier-k must be >= 1")
-    else if (winnowK < 1) Left("curation winnow-k must be >= 1")
-    else if (winnowW < 1) Left("curation winnow-w must be >= 1")
-    else if (cdcWindow < 1) Left("curation cdc-window must be >= 1")
-    else if (cdcDivisor < 2) Left("curation cdc-divisor must be >= 2")
-    else if (!(bm25K1 > 0.0)) Left("curation bm25-k1 must be > 0")
-    else if (bm25B < 0.0 || bm25B > 1.0)
-      Left("curation bm25-b must be in [0, 1]")
-    else if (convBucketWidth < 1)
-      Left("curation conv-bucket-width must be >= 1")
-    else if (spanK < 2) Left("curation span-k must be >= 2")
-    else if (mixBudgetPermille < 0 || mixBudgetPermille > 1000)
-      Left("curation mix-budget-permille must be in [0, 1000]")
-    else if (!(lmAlpha > 0.0)) Left("curation lm-alpha must be > 0")
-    else if (dsirBuckets < 16)
-      Left("curation dsir-buckets must be >= 16")
-    else if (!(dsirAlpha > 0.0)) Left("curation dsir-alpha must be > 0")
-    else if (pmiMinCount < 1) Left("curation pmi-min-count must be >= 1")
-    else if (zipfK < 2) Left("curation zipf-k must be >= 2")
-    else Right(this)
+    else dedup.fold[Either[String, PipelineConfig]](Right(this))(
+      _.validate().map(_ => this))
 }
 
 /** Configuration of the optional incremental dedup stage
@@ -410,13 +244,7 @@ final case class DedupStageSpec(
     threshold: Double = 0.8,
     ngram: Int = graft.operators.Dedup.StoreNgram,
     bands: Int = graft.operators.Dedup.StoreBands,
-    rowsPerBand: Int = graft.operators.Dedup.StoreRowsPerBand,
-    /** Rewrite the store on file invalidation, dropping hashes whose only
-      * provenance was the invalidated file's old content — the analogue of
-      * freader's offset Delete on source removal (collector.go:206-214):
-      * content no sink holds any more must become deliverable again.
-      */
-    retractOnInvalidate: Boolean = true) {
+    rowsPerBand: Int = graft.operators.Dedup.StoreRowsPerBand) {
   def validate(): Either[String, DedupStageSpec] =
     if (!Set("exact", "minhash").contains(mode))
       Left(s"unsupported dedup mode: $mode (exact | minhash)")

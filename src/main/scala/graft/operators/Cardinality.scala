@@ -90,11 +90,6 @@ object Cardinality {
   def sketch(items: DataFrame, item: Column, p: Int = 8): DataFrame =
     estimate(registers(items, item, p), p)
 
-  /** [[sketch]] sized from config ([[graft.model.SketchSpec]]). */
-  def sketch(items: DataFrame, item: Column,
-      spec: graft.model.SketchSpec): DataFrame =
-    sketch(items, item, spec.hllP)
-
   /** One-row (n_occupied: long, e: double) estimate from [[registers]]
     * output. Raw harmonic-mean estimator with the standard linear-counting
     * small-range correction (E ≤ 2.5m with empty buckets present →

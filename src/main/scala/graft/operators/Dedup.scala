@@ -286,11 +286,9 @@ object Dedup {
               retracted))
             retractions.foreach(fs.delete(_, false))
           }
-          // the lease is create-if-absent, not atomic, on a local file
-          // system: two first stages can race here, and the loser checks
-          // the winner's identity
-          if (!log.putFile(MetaFile, meta.map { case (k, v) => s"$k=$v" }.mkString("\n")))
-            requireSame(log.root, readMeta(log).get, meta)
+          // only the lease holder publishes _meta, and it found none
+          require(log.putFile(MetaFile, meta.map { case (k, v) => s"$k=$v" }.mkString("\n")),
+            s"seen-store ${log.root}: _meta appeared while the lease was held")
       }
       val dirs = log.live
       if (dirs.size > maxDirs) merge(dirs, rowsOf(spark, dirs, schema))

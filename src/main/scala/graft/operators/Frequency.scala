@@ -53,18 +53,6 @@ object Frequency {
       .groupBy("row", "col").agg(count(lit(1)).as("cnt"))
   }
 
-  /** [[sketch]] sized from config ([[graft.model.SketchSpec]] — carries
-    * the saturation validation a 100 TB vocabulary needs).
-    */
-  def sketch(items: DataFrame, item: Column,
-      spec: graft.model.SketchSpec): DataFrame =
-    sketch(items, item, spec.cmsDepth, spec.cmsWidth)
-
-  /** [[estimate]] sized from the same config as the sketch build. */
-  def estimate(sk: DataFrame, queries: DataFrame, item: Column,
-      spec: graft.model.SketchSpec): DataFrame =
-    estimate(sk, queries, item, spec.cmsDepth, spec.cmsWidth)
-
   /** Counter-wise merge: the sketch of a union is the SUM per counter
     * (contrast [[Cardinality.merge]]'s max) — the per-shard rollup path.
     */

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * functions, so stages choose one of:
   *
   *  - [[saltedRepartition]] for ORDER-FREE stages (parse, enrich, route):
-  *    rows of one conversation spread across `saltBuckets` partitions, so a
+  *    rows of one conversation spread across `buckets` partitions, so a
   *    10^5-turn conversation cannot pin a single task.
   *  - plain `repartition(conv_id) + sortWithinPartitions` for ORDER-SENSITIVE
   *    stages (the multiline FSM), where per-conversation locality is the
@@ -18,20 +18,20 @@ import org.apache.spark.sql.functions._
   */
 object Salt {
 
-  def saltCol(saltBuckets: Int): Column =
-    pmod(hash(col("turn_idx")), lit(saltBuckets))
+  def saltCol(buckets: Int): Column =
+    pmod(hash(col("turn_idx")), lit(buckets))
 
-  /** Spread each conversation over `saltBuckets` partitions; safe for any
+  /** Spread each conversation over `buckets` partitions; safe for any
     * stage that treats rows independently.
     *
-    * Sizing (measured, BENCH.md skew section): saltBuckets must exceed the
+    * Sizing (measured, BENCH.md skew section): buckets must exceed the
     * target partition count or a mega-conversation splits into too few
     * distinct keys to spread — 16 buckets into 32 partitions measured
     * max/median task time 4.6; at 4× the partition count it flattens to
-    * 1.2. Rule of thumb: saltBuckets ≥ 4 × numPartitions.
+    * 1.2. Rule of thumb: buckets ≥ 4 × numPartitions.
     */
-  def saltedRepartition(df: DataFrame, numPartitions: Int, saltBuckets: Int): DataFrame =
-    df.repartition(numPartitions, col("conv_id"), saltCol(saltBuckets))
+  def saltedRepartition(df: DataFrame, numPartitions: Int, buckets: Int): DataFrame =
+    df.repartition(numPartitions, col("conv_id"), saltCol(buckets))
 
   /** Two-phase ordered aggregation for decomposable per-conversation
     * reductions: phase 1 computes partials per (conv_id, contiguous

@@ -113,7 +113,7 @@ object TranscriptStream {
         * replays the whole source (still no duplicate deliveries — the
         * store anti-joins replays away — but every batch re-runs).
         */
-      checkpointDir: Option[String] = None)(
+      checkpointLocation: Option[String] = None)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     val writer = turns.writeStream
       .foreachBatch { (batch: Dataset[Turn], batchId: Long) =>
@@ -129,7 +129,7 @@ object TranscriptStream {
           staged.commit()
         }
       }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d))
+    checkpointLocation.fold(writer)(d => writer.option("checkpointLocation", d))
       .start()
   }
 

@@ -166,7 +166,7 @@ object Probe {
     measure("two-phase ordered concat (decomposed: bucket partials then merge)") {
       graft.operators.Salt.twoPhaseOrderedConcat(src).count()
     }
-    // saltBuckets must exceed the partition count or the mega-conversation
+    // salt buckets must exceed the partition count or the mega-conversation
     // splits into too few keys to spread (16 buckets into 32 partitions
     // measured max/median 4.6; 4x cores measures ~uniform)
     measure("order-free parse->route (salted repartition)") {

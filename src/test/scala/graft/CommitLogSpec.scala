@@ -1,7 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.Executors
+import java.util.concurrent.{CyclicBarrier, Executors}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
@@ -11,7 +12,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{concat, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.checkpoint.{Fingerprint, LineageEntry, LineageStore}
+import graft.checkpoint.{CommitLog, Fingerprint, LineageEntry, LineageStore}
 import graft.model.{PipelineConfig, SinkRule}
 import graft.operators.Dedup
 import graft.sources.{SnapshotTable, Transcripts}
@@ -209,6 +210,31 @@ class CommitLogSpec extends AnyFunSuite {
       assert(commitDirs(s).size == 2)
       assert(s.answer() == s.model(Set(0, 1)))
       assert(named(s, _.startsWith("_tmp-")).isEmpty)
+  }
+
+  test("the store lease has one holder at a time: 4 threads released together contend it") {
+    val (threads, rounds) = (4, 10)
+    val pool = Executors.newFixedThreadPool(threads)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val overlapped = (0 until rounds).count { _ =>
+        val root = new Path(Files.createTempDirectory("graft-lease").toString, "store")
+        val log = new CommitLog(fs, root, "seen-")
+        val start = new CyclicBarrier(threads)
+        val inFlight = new AtomicInteger(0)
+        val peak = new AtomicInteger(0)
+        Await.result(Future.sequence(Seq.fill(threads)(Future {
+          start.await()
+          log.withLock {
+            peak.accumulateAndGet(inFlight.incrementAndGet(), math.max(_, _))
+            Thread.sleep(50)
+            inFlight.decrementAndGet()
+          }
+        })), 2.minutes)
+        peak.get > 1
+      }
+      assert(overlapped == 0, s"$overlapped of $rounds rounds had two lease holders at once")
+    } finally pool.shutdown()
   }
 
   test("minhash seen-store: (e) a migration of the three-component layout that " +

@@ -12,11 +12,9 @@ class ConfigAndFingerprintSpec extends AnyFunSuite {
 
   test("PipelineConfig.validate mirrors reference strictness") {
     assert(PipelineConfig().validate().isRight)
-    assert(PipelineConfig(separator = "").validate() == Left("separator must be non-empty"))
     assert(PipelineConfig(sinks = Nil).validate() == Left("at least one sink is required"))
     assert(PipelineConfig(sinks = Seq(SinkRule("a"), SinkRule("a"))).validate() ==
       Left("sink names must be unique"))
-    assert(PipelineConfig(saltBuckets = 0).validate() == Left("saltBuckets must be >= 1"))
     assert(PipelineConfig(lineagePartitions = 0).validate() ==
       Left("lineagePartitions must be >= 1"))
   }

@@ -29,9 +29,7 @@ class ConfigLoaderSpec extends AnyFunSuite {
         |separator = "\n"
         |include = ["/data/logs/*.log", "file_1*.txt"]  # trailing comment
         |exclude = ["*.tmp"]
-        |salt-buckets = 8
         |lineage-partitions = 12
-        |checkpoint-dir = "/tmp/ckpt"
         |
         |[collector.multiline]
         |mode = "haltBefore"
@@ -50,14 +48,11 @@ class ConfigLoaderSpec extends AnyFunSuite {
         |[sink.clean]
         |exclude = ["status=err", "INFO"]
         |""".stripMargin).toOption.get
-    assert(cfg.separator == "\n")
     assert(cfg.include == Seq("/data/logs/*.log", "file_1*.txt"))
     assert(cfg.exclude == Seq("*.tmp"))
-    assert(cfg.saltBuckets == 8 && cfg.lineagePartitions == 12)
-    assert(cfg.checkpointDir.contains("/tmp/ckpt"))
+    assert(cfg.lineagePartitions == 12)
     assert(cfg.multiline.contains(MultilineSpec(
       MultilineMode.HaltBefore, "^(CALL|INFO|ask)", Some("^(CALL|INFO)"))))
-    assert(cfg.multilineTimeoutMs.contains(90000L))
     assert(cfg.sinks.map(_.name) == Seq("all", "errors", "clean"))
     assert(cfg.sinks(1).include == Seq("status=err"))
     assert(cfg.sinks(1).rejectWhere == Seq("note=\"lvl 4\""))
@@ -72,7 +67,6 @@ class ConfigLoaderSpec extends AnyFunSuite {
         |java = true
         |""".stripMargin).toOption.get
     assert(cfg.multiline.contains(MultilineSpec.Java))
-    assert(cfg.multilineTimeoutMs.contains(MultilineSpec.JavaTimeoutMs))
 
     // explicit fields win over the preset
     val cfg2 = loadText(
@@ -83,139 +77,23 @@ class ConfigLoaderSpec extends AnyFunSuite {
         |""".stripMargin).toOption.get
     assert(cfg2.multiline.get.mode == MultilineMode.HaltWith)
     assert(cfg2.multiline.get.condPattern == MultilineSpec.Java.condPattern)
-    assert(cfg2.multilineTimeoutMs.contains(2000L))
   }
 
   test("precedence: flags over env over file (viper binding order)") {
     val toml =
       """[collector]
-        |separator = "|"
-        |salt-buckets = 4
+        |fingerprint-strategy = "checksumSeparator"
+        |fingerprint-size = 4
         |include = ["*.log"]
         |""".stripMargin
     val env = Map(
-      ConfigLoader.envName("collector.separator") -> ";",
-      ConfigLoader.envName("collector.salt-buckets") -> "9")
-    val flags = Map("separator" -> "::")
+      ConfigLoader.envName("collector.fingerprint-strategy") -> "checksum",
+      ConfigLoader.envName("collector.fingerprint-size") -> "9")
+    val flags = Map("fingerprint-strategy" -> "deviceAndInode")
     val cfg = loadText(toml, env, flags).toOption.get
-    assert(cfg.separator == "::")   // flag beats env beats file
-    assert(cfg.saltBuckets == 9)    // env beats file
+    assert(cfg.fingerprintStrategy == "deviceAndInode") // flag beats env beats file
+    assert(cfg.fingerprintSize == 9)    // env beats file
     assert(cfg.include == Seq("*.log")) // file survives where not overridden
-  }
-
-  test("curation section: parsed, defaulted, and range-validated") {
-    val cfg = loadText(
-      """[collector.curation]
-        |quantile-rate = 0.1
-        |outlier-k = 4
-        |winnow-k = 5
-        |winnow-w = 8
-        |cdc-window = 4
-        |cdc-divisor = 16
-        |bm25-k1 = 1.5
-        |bm25-b = 0.5
-        |conv-bucket-width = 1024
-        |""".stripMargin).toOption.get
-    assert(cfg.curation.contains(graft.model.CurationSpec(
-      0.1, 4, 5, 8, 4, 16L, 1.5, 0.5, 1024)))
-
-    // partial section fills defaults; absent section stays None
-    val part = loadText("[collector.curation]\noutlier-k = 2\n").toOption.get
-    assert(part.curation.contains(
-      graft.model.CurationSpec(0.25, 2, 4, 4, 3, 4L, 1.2, 0.75, 4096)))
-    assert(loadText("[collector]\nseparator = \"\\n\"\n")
-      .toOption.get.curation.isEmpty)
-
-    // range checks delegate to CurationSpec.validate
-    assert(loadText("[collector.curation]\nquantile-rate = 0.0\n")
-      .swap.toOption.get.contains("quantile-rate"))
-    assert(loadText("[collector.curation]\nquantile-rate = 1.5\n")
-      .swap.toOption.get.contains("quantile-rate"))
-    assert(loadText("[collector.curation]\ncdc-divisor = 1\n")
-      .swap.toOption.get.contains("cdc-divisor"))
-    assert(loadText("[collector.curation]\nbm25-b = 1.25\n")
-      .swap.toOption.get.contains("bm25-b"))
-    // NaN through an env override is rejected at the lookup layer
-    assert(ConfigLoader.load(None,
-      Map("GRAFT_COLLECTOR_CURATION_BM25_K1" -> "NaN"), Map.empty)
-      .swap.toOption.get.contains("bm25-k1"))
-    // env override reaches the typed field
-    val env = ConfigLoader.load(None,
-      Map("GRAFT_COLLECTOR_CURATION_OUTLIER_K" -> "5"), Map.empty).toOption.get
-    assert(env.curation.exists(_.outlierK == 5))
-  }
-
-  test("curation section: round-6 operator sizing keys parse and validate") {
-    val cfg = loadText(
-      """[collector.curation]
-        |span-k = 16
-        |mix-budget-permille = 250
-        |lm-alpha = 0.5
-        |dsir-buckets = 65536
-        |dsir-alpha = 1.0
-        |pmi-min-count = 10
-        |zipf-k = 200
-        |""".stripMargin).toOption.get
-    val cu = cfg.curation.get
-    assert(cu.spanK == 16 && cu.mixBudgetPermille == 250 &&
-      cu.lmAlpha == 0.5 && cu.dsirBuckets == 65536 && cu.dsirAlpha == 1.0 &&
-      cu.pmiMinCount == 10L && cu.zipfK == 200)
-    // defaults when keys absent but section present
-    val part = loadText("[collector.curation]\nspan-k = 4\n").toOption.get
-    val pu = part.curation.get
-    assert(pu.spanK == 4 && pu.mixBudgetPermille == 500 &&
-      pu.dsirBuckets == 8192 && pu.pmiMinCount == 5L && pu.zipfK == 100)
-    // range rules: 1-token spans, out-of-range budget, degenerate buckets
-    assert(loadText("[collector.curation]\nspan-k = 1\n")
-      .swap.toOption.get.contains("span-k"))
-    assert(loadText("[collector.curation]\nmix-budget-permille = 1001\n")
-      .swap.toOption.get.contains("mix-budget-permille"))
-    assert(loadText("[collector.curation]\ndsir-buckets = 8\n")
-      .swap.toOption.get.contains("dsir-buckets"))
-    assert(loadText("[collector.curation]\nlm-alpha = 0.0\n")
-      .swap.toOption.get.contains("lm-alpha"))
-    assert(loadText("[collector.curation]\nzipf-k = 1\n")
-      .swap.toOption.get.contains("zipf-k"))
-    // NaN alpha fails the > 0 check (the DedupStageSpec precedent)
-    assert(ConfigLoader.load(None,
-      Map("GRAFT_COLLECTOR_CURATION_DSIR_ALPHA" -> "NaN"), Map.empty)
-      .swap.toOption.get.contains("dsir-alpha"))
-  }
-
-  test("sketch section: parsed, defaulted, and saturation-validated") {
-    val cfg = loadText(
-      """[collector.sketch]
-        |cms-depth = 6
-        |cms-width = 4096
-        |hll-p = 10
-        |expected-distinct = 200000
-        |""".stripMargin).toOption.get
-    assert(cfg.sketch.contains(graft.model.SketchSpec(6, 4096, 10, Some(200000L))))
-
-    // partial section fills defaults; absent section stays None
-    val part = loadText("[collector.sketch]\nhll-p = 12\n").toOption.get
-    assert(part.sketch.contains(graft.model.SketchSpec(4, 1024, 12, None)))
-    assert(loadText("[collector]\nseparator = \"\\n\"\n").toOption.get.sketch.isEmpty)
-
-    // the sizing rule: a 1024-wide CMS cannot answer a 10^9-distinct
-    // vocabulary (the 100 TB saturation trap, rejected at config time)
-    val sat = loadText(
-      """[collector.sketch]
-        |expected-distinct = 1000000000
-        |""".stripMargin)
-    assert(sat.swap.toOption.get.contains("saturates"))
-    // range checks delegate to SketchSpec.validate
-    assert(loadText("[collector.sketch]\nhll-p = 5\n")
-      .swap.toOption.get.contains("hll-p"))
-    assert(loadText("[collector.sketch]\ncms-depth = 0\n")
-      .swap.toOption.get.contains("cms-depth"))
-    // expected-distinct is 64-bit (corpus scale exceeds 2^31)
-    val big = loadText(
-      """[collector.sketch]
-        |cms-width = 268435456
-        |expected-distinct = 8589934592
-        |""".stripMargin).toOption.get
-    assert(big.sketch.get.expectedDistinct.contains(8589934592L))
   }
 
   test("sink.retries: parsed into batchRetries, negatives rejected") {
@@ -309,7 +187,7 @@ class ConfigLoaderSpec extends AnyFunSuite {
 
   test("missing file errors; no sinks configured falls back to console default") {
     assert(ConfigLoader.load(Some("/nonexistent/x.toml")).isLeft)
-    val cfg = loadText("[collector]\nsalt-buckets = 2\n").toOption.get
+    val cfg = loadText("[collector]\nlineage-partitions = 2\n").toOption.get
     assert(cfg.sinks.map(_.name) == Seq("console"))
     assert(cfg.sinks.head.kind == "console")
   }
@@ -407,11 +285,62 @@ class ConfigLoaderSpec extends AnyFunSuite {
     // fails both ordered comparisons — it must not disable the filter)
     assert(graft.model.DedupStageSpec("minhash", "/tmp/d", Double.NaN)
       .validate().swap.exists(_.contains("threshold")))
-    // retract-on-invalidate is a bool key, default true
-    assert(cfg.dedup.get.retractOnInvalidate)
-    assert(loadText(
-      "[collector.dedup]\nmode = \"exact\"\nstore-dir = \"/tmp/d\"\nretract-on-invalidate = false\n")
-      .toOption.get.dedup.get.retractOnInvalidate == false)
+  }
+
+  test("a file setting keys no run reads loads to the same config as one without them") {
+    val current =
+      """[collector]
+        |lineage-partitions = 12
+        |
+        |[collector.dedup]
+        |mode = "minhash"
+        |store-dir = "/tmp/dstore"
+        |threshold = 0.7
+        |
+        |[sink.all]
+        |type = "parquet"
+        |""".stripMargin
+    val old = current +
+      """[collector]
+        |salt-buckets = 8
+        |checkpoint-dir = "/tmp/ckpt"
+        |
+        |[collector.dedup]
+        |retract-on-invalidate = false
+        |
+        |[collector.sketch]
+        |cms-depth = 6
+        |cms-width = 4096
+        |hll-p = 10
+        |expected-distinct = 200000
+        |
+        |[collector.curation]
+        |quantile-rate = 0.1
+        |outlier-k = 4
+        |winnow-k = 5
+        |winnow-w = 8
+        |cdc-window = 4
+        |cdc-divisor = 16
+        |bm25-k1 = 1.5
+        |bm25-b = 0.5
+        |conv-bucket-width = 1024
+        |span-k = 16
+        |mix-budget-permille = 250
+        |lm-alpha = 0.5
+        |dsir-buckets = 65536
+        |dsir-alpha = 1.0
+        |pmi-min-count = 10
+        |zipf-k = 200
+        |""".stripMargin
+    val want = loadText(current)
+    assert(want.isRight, want)
+    assert(loadText(old) == want)
+  }
+
+  test("examples.toml, the config of the README's run command, loads and validates") {
+    val cfg = ConfigLoader.load(Some("examples.toml"), env = Map.empty)
+    assert(cfg.isRight, cfg)
+    assert(cfg.toOption.get.sinks.map(_.name) == Seq("all", "errors", "clean"))
   }
 
   test("wire sink surface: url/index/table/database/user load; half-config rejected; batch keys consumed") {

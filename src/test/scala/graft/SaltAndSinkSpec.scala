@@ -13,7 +13,7 @@ class SaltAndSinkSpec extends AnyFunSuite {
   test("salted repartition spreads a mega-conversation across partitions") {
     val df = Transcripts.synthesize(spark, numConvs = 10, turnsPerConv = 5,
       megaTurns = 20000, numPartitions = 4).toDF()
-    val salted = Salt.saltedRepartition(df, numPartitions = 8, saltBuckets = 8)
+    val salted = Salt.saltedRepartition(df, numPartitions = 8, buckets = 8)
     val perPartition = salted
       .filter($"conv_id" === "conv-00000000")
       .select(spark_partition_id().as("p"))
