@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.checkpoint.LineageStore
-import graft.model.{PipelineConfig, SinkRule}
+import graft.model.PipelineConfig
 import graft.sources.{SnapshotTable, Transcripts}
 
 /** spark-submit entry point:
@@ -50,10 +50,7 @@ object Main {
                 sys.exit(2)
                 throw new IllegalStateException("unreachable")
             }
-          case None => PipelineConfig(sinks = Seq(
-            SinkRule("all"),
-            SinkRule("errors", include = Seq("status=err")),
-            SinkRule("clean", exclude = Seq("status=err", "INFO"))))
+          case None => PipelineConfig(sinks = Queries.demoRules)
         }
         // optional /metrics endpoint (reference main.go:69-84): starts
         // before the run like the daemon, serves the report's counters

@@ -256,7 +256,7 @@ object Pipeline {
       if (invalidatedNames.nonEmpty)
         operators.Dedup.retractSources(spark, dd.storeDir,
           invalidatedNames.toSeq.sorted)
-      def staged(rows: org.apache.spark.sql.DataFrame, compact: Boolean) = {
+      def staged(rows: org.apache.spark.sql.DataFrame) = {
         // the dedup id is length-prefixed per field (and null-flagged), so
         // no '#' inside conv_id — and no null — can make two distinct rows
         // share an id (a shared id would drop BOTH rows when either loses
@@ -269,14 +269,13 @@ object Pipeline {
             concat(lp(col("src_file")), lit("#"), lp(col("conv_id")),
               lit("#"), col("turn_idx").cast("string")))
           .withColumn("__src", substring_index(col("src_file"), "/", -1))
-        val maxDirs = if (compact) 16 else Int.MaxValue
         if (dd.mode == "minhash")
           operators.Dedup.incrementalMinhashStaged(withId, "__dedup_id", "text",
             dd.storeDir, dd.ngram, dd.bands, dd.rowsPerBand, dd.threshold,
-            maxSeenDirs = maxDirs, srcCol = Some("__src"))
+            srcCol = Some("__src"))
         else
           operators.Dedup.incrementalExactStaged(withId, "__dedup_id", "text",
-            dd.storeDir, maxSeenDirs = maxDirs, srcCol = Some("__src"))
+            dd.storeDir, srcCol = Some("__src"))
       }
       val fromInvalidated =
         if (invalidatedNames.isEmpty) lit(false)
@@ -301,12 +300,12 @@ object Pipeline {
             graft.functions.Hashing.sha60(col("text")).as("__bp_h60")).distinct(),
           graft.functions.Hashing.sha60(col("text")) <=> col("__bp_h60"),
           "left_anti")
-      val batch = staged(mainRows, compact = true)
-      // the bypass batch is staged AFTER the main one and never compacts,
-      // so it cannot delete store dirs the main batch's plan pins
+      // the bypass batch is staged AFTER the main one; its compaction only
+      // retires the dirs the main batch's plan pins, and retired files stay
+      // readable until the retention sweep
+      val batch = staged(mainRows)
       val bypassBatch =
-        if (invalidatedNames.isEmpty) None
-        else Some(staged(bypassRows, compact = false))
+        if (invalidatedNames.isEmpty) None else Some(staged(bypassRows))
       val rows = batch.fresh.drop("__dedup_id", "__src").unionByName(bypassRows)
       (rows, () => { batch.commit(); bypassBatch.foreach(_.commit()) })
     }

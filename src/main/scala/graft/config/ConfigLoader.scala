@@ -315,9 +315,11 @@ object ConfigLoader {
     _ <- if (rt >= 0) Right(()) else Left("sink.retries must be >= 0")
   } yield (bs, ms, rt)
 
-  /** The multiline sub-unmarshal incl. the Java preset (config.go:100-131)
-    * and MultilineReader.Validate strictness (multline_reader.go:37-48:
-    * start-pattern, condition-pattern and timeout > 0 are all required).
+  /** The multiline sub-unmarshal incl. the Java preset (config.go:100-131),
+    * which fills unset fields from [[MultilineSpec.Java]] and
+    * [[MultilineSpec.JavaTimeoutMs]], and MultilineReader.Validate
+    * strictness (multline_reader.go:37-48: start-pattern,
+    * condition-pattern and timeout > 0 are all required).
     * The timeout is validated only: a run's batch assembly closes every
     * record at the end of its conversation and has no idle flush to set
     * (the streaming flush takes its timeout as a parameter).
@@ -331,18 +333,17 @@ object ConfigLoader {
       mode0 <- lk.str("collector.multiline.mode", "")
       start0 <- lk.str("collector.multiline.start-pattern", "")
       cond0 <- lk.str("collector.multiline.condition-pattern", "")
-      tout0 <- lk.str("collector.multiline.timeout", "")
-      mode = if (java && mode0.isEmpty) "continueThrough" else mode0
-      start = if (java && start0.isEmpty) "^(ERROR|WARN|INFO|Exception)" else start0
-      cond = if (java && cond0.isEmpty) "^(\\s|at\\s|Caused by:)" else cond0
-      tout = if (java && tout0.isEmpty) "500ms" else tout0
-      m <- modes.get(mode).toRight(s"invalid multiline mode: '$mode'")
+      tout <- lk.str("collector.multiline.timeout", "")
+      m <- if (java && mode0.isEmpty) Right(MultilineSpec.Java.mode)
+        else modes.get(mode0).toRight(s"invalid multiline mode: '$mode0'")
+      start = if (java && start0.isEmpty) MultilineSpec.Java.startPattern.mkString else start0
+      cond = if (java && cond0.isEmpty) MultilineSpec.Java.condPattern else cond0
       _ <- if (start.nonEmpty) Right(()) else Left("multiline start-pattern is required")
       _ <- if (cond.nonEmpty) Right(()) else Left("multiline condition-pattern is required")
       _ <- compile(start, "start-pattern")
       _ <- compile(cond, "condition-pattern")
-      _ <- if (tout.nonEmpty) Right(()) else Left("multiline timeout must be > 0")
-      ms <- parseDuration(tout).left.map(e => s"multiline timeout: $e")
+      ms <- if (tout.nonEmpty) parseDuration(tout).left.map(e => s"multiline timeout: $e")
+        else Right(if (java) MultilineSpec.JavaTimeoutMs else 0L)
       _ <- if (ms > 0) Right(()) else Left("multiline timeout must be > 0")
     } yield Some(MultilineSpec(m, cond, Some(start)))
   }

@@ -103,14 +103,16 @@ object MultilineSpec {
   /** The Java stack-trace preset, patterns verbatim from the reference's
     * config loader (cmd/freader/config.go:105-120: mode continueThrough,
     * start `^(ERROR|WARN|INFO|Exception)`, cond `^(\s|at\s|Caused by:)`,
-    * timeout 500ms — the timeout pairs with the streaming idle flush).
+    * timeout 500ms).
     */
   val Java: MultilineSpec = MultilineSpec(
     MultilineMode.ContinueThrough,
     "^(\\s|at\\s|Caused by:)",
     Some("^(ERROR|WARN|INFO|Exception)"))
 
-  /** The preset's timeout (config.go:117-119), for the streaming flush. */
+  /** The preset's timeout (config.go:117-119): the config loader's
+    * `collector.multiline.timeout` when `java = true` leaves it unset.
+    */
   val JavaTimeoutMs: Long = 500L
 }
 

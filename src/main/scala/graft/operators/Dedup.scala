@@ -56,15 +56,16 @@ object Dedup {
   }
 
   /** A staged incremental-dedup batch: `fresh` is the batch's surviving
-    * rows — consumable any number of times, deterministically, from stage
-    * until the NEXT batch is staged against the same store (its plan pins
-    * the store dirs that existed at stage time; `commit()` only adds a
-    * dir, but the next stage's compaction may merge-and-delete the pinned
-    * ones). `commit()` atomically publishes the survivors' state to the
-    * store and releases the per-batch caches. Staging lets a caller
-    * (e.g. [[graft.Pipeline]]) deliver the survivors first and commit the
-    * dedup store ONLY after its own delivery commit, so a crash-and-replay
-    * never loses rows to a store that committed ahead of the sink.
+    * rows — consumable any number of times, deterministically. Its plan
+    * pins the store dirs that existed at stage time: `commit()` only adds
+    * a dir, and a later stage's compaction or a retraction only retires
+    * the pinned ones, whose files stay until the one-hour retention sweep
+    * ([[CommitLog.sweep]]). `commit()` atomically publishes the survivors'
+    * state to the store and releases the per-batch caches. Staging lets a
+    * caller (e.g. [[graft.Pipeline]]) deliver the survivors first and
+    * commit the dedup store ONLY after its own delivery commit, so a
+    * crash-and-replay never loses rows to a store that committed ahead of
+    * the sink.
     */
   final case class IncrementalBatch(fresh: DataFrame, commit: () => Unit) {
     /** `fresh` materialized, then `commit()`: the materialized rows outlive

@@ -4,13 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Enrich stage: broadcast left join against a small tool/role lookup
-  * dimension plus constant label/host columns.
+  * dimension plus the constant host column.
   *
   * Reference analogues: the 25-row known-subsystem table
   * (pkg/parser/dmesg/dmesg.go:137-166) for the dimension join, and the
-  * config-constant host/labels every sink row carries
+  * config-constant host every sink row carries
   * (cmd/freader/sink/clickhouse/clickhouse.go:122,
-  * cmd/freader/sink/opensearch/opensearch.go:103-108) for the constants.
+  * cmd/freader/sink/opensearch/opensearch.go:103-108) for the constant.
+  * The configured labels are stamped once, at delivery ([[graft.Pipeline]]).
   *
   * At 100 TB the dimension stays tiny (tens of rows) — `broadcast()` makes
   * this a map-side hash join with zero shuffle of the fact side.
@@ -49,17 +50,12 @@ object Enrich {
     .mkString("(VALUES ", ", ", ") AS tool_dim(tool, tool_family, tool_label)")
 
   /** Broadcast left-outer equi-join on `tool`; unmatched/non-tool turns get
-    * family 'none'. Also stamps constant host + labels (J1: constant
+    * family 'none'. Also stamps the constant host "graft" (J1: constant
     * folding, no join).
     */
-  def enrich(df: DataFrame, host: String = "graft", labels: Map[String, String] = Map.empty): DataFrame = {
-    val dim = broadcast(toolDimDf(df.sparkSession))
-    val joined = df.join(dim, Seq("tool"), "left")
+  def enrich(df: DataFrame): DataFrame =
+    df.join(broadcast(toolDimDf(df.sparkSession)), Seq("tool"), "left")
       .withColumn("tool_family", coalesce(col("tool_family"), lit("none")))
       .withColumn("tool_label", coalesce(col("tool_label"), lit("none")))
-      .withColumn("host", lit(host))
-    if (labels.isEmpty) joined
-    else joined.withColumn("labels",
-      map(labels.toSeq.flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*))
-  }
+      .withColumn("host", lit("graft"))
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,8 +19,8 @@ import graft.model.MultilineMode._
   *     `mapPartitions`. Handles all 4 modes + StartPattern standalone
   *     emission. One shuffle; conversations never split across partitions.
   *
-  *  2. [[assembleWindow]] — declarative: for the 4 modes *without*
-  *     StartPattern, the record boundary is a pure function of the current
+  *  2. [[assembleWindow]] — declarative: for ContinueThrough and
+  *     HaltBefore *without* StartPattern, the record boundary is a pure function of the current
   *     and previous line, so a window `sum(boundary) over (partition by
   *     conv_id order by turn_idx)` yields the segment id; fully
   *     Catalyst-optimizable and DuckDB-oracle-expressible.
@@ -34,75 +34,60 @@ object Segments {
   final case class MetaRow(conv_id: String, turn_idx: Int, text: String,
       role: String, tool: String, ts: java.sql.Timestamp, src_file: String)
 
-  /** Pure single-conversation FSM, shared by `assembleFsm` and the
-    * ScalaTest/ScalaCheck property suite. Input lines in turn order;
-    * output = completed records, each = lines joined with '\n'.
+  /** Pure single-conversation FSM, shared by the batch driver, the
+    * streaming processor and the ScalaTest/ScalaCheck property suite.
+    * Input lines in turn order; output = completed records, each = lines
+    * joined with '\n', paired with the number of lines it consumed (a
+    * line may itself contain '\n', so the joined text does not tell).
+    * `resume` is an open buffer carried over from an earlier streaming
+    * micro-batch (the buffer is the only carried state).
     */
-  final class Fsm(spec: MultilineSpec) {
+  final class Fsm(spec: MultilineSpec, resume: Seq[String] = Nil) {
     private val condRe = spec.condPattern.r
     private val startRe = spec.startPattern.map(_.r)
-    private val buf = mutable.ArrayBuffer.empty[String]
-    private val out = mutable.ArrayBuffer.empty[String]
+    private val buf = mutable.ArrayBuffer.from(resume)
+    private val out = mutable.ArrayBuffer.empty[(String, Int)]
 
     private def matches(re: scala.util.matching.Regex, s: String): Boolean =
       re.findFirstIn(s).isDefined
 
     private def emitBuf(): Unit =
-      if (buf.nonEmpty) { out += buf.mkString("\n"); buf.clear() }
+      if (buf.nonEmpty) { out += ((buf.mkString("\n"), buf.size)); buf.clear() }
 
-    private def standalone(line: String): Unit = out += line
-
-    def write(line: String): Unit = {
-      if (buf.isEmpty) {
-        startRe match {
-          case Some(re) =>
-            if (matches(re, line)) buf += line
-            else standalone(line)
-          case None => buf += line
-        }
-        return
-      }
-      val m = matches(condRe, line)
-      spec.mode match {
-        case ContinuePast =>
-          buf += line
-          if (!m) emitBuf()
-        case ContinueThrough =>
-          if (m) buf += line
-          else {
-            emitBuf()
-            startRe match {
-              case Some(re) =>
-                if (matches(re, line)) buf += line else standalone(line)
-              case None => buf += line
-            }
-          }
-        case HaltBefore =>
-          if (m) {
-            emitBuf()
-            startRe match {
-              case Some(re) =>
-                if (matches(re, line)) buf += line else standalone(line)
-              case None => buf += line
-            }
-          } else buf += line
-        case HaltWith =>
-          buf += line
-          if (m) emitBuf()
-      }
+    /** A line reaching an empty buffer opens a record, unless a start
+      * pattern rejects it: then it is emitted standalone.
+      */
+    private def open(line: String): Unit = startRe match {
+      case Some(re) if !matches(re, line) => out += ((line, 1))
+      case _ => buf += line
     }
 
+    def write(line: String): Unit =
+      if (buf.isEmpty) open(line)
+      else {
+        val m = matches(condRe, line)
+        spec.mode match {
+          case ContinuePast =>
+            buf += line
+            if (!m) emitBuf()
+          case ContinueThrough =>
+            if (m) buf += line else { emitBuf(); open(line) }
+          case HaltBefore =>
+            if (m) { emitBuf(); open(line) } else buf += line
+          case HaltWith =>
+            buf += line
+            if (m) emitBuf()
+        }
+      }
+
     /** Residual flush (multline_reader.go:279-285). */
-    def flush(): Seq[String] = { emitBuf(); val r = out.toSeq; out.clear(); r }
+    def flush(): Seq[(String, Int)] = { emitBuf(); drain() }
 
     /** Drain records completed so far without flushing the open buffer. */
-    def drain(): Seq[String] = { val r = out.toSeq; out.clear(); r }
+    def drain(): Seq[(String, Int)] = { val r = out.toSeq; out.clear(); r }
 
-    /** Open-buffer snapshot/restore — lets the FSM resume across streaming
-      * micro-batches (the buffer is the only carried state).
-      */
+    /** Open-buffer snapshot, the `resume` of the next micro-batch. */
     def bufferLines: Seq[String] = buf.toSeq
-    def restoreBuffer(lines: Seq[String]): Unit = { buf.clear(); buf ++= lines }
   }
 
   /** Run one conversation's lines (already in turn order) through the FSM,
@@ -111,113 +96,81 @@ object Segments {
   def runFsm(spec: MultilineSpec, lines: Iterator[String]): Iterator[(Int, String)] = {
     val fsm = new Fsm(spec)
     lines.foreach(fsm.write)
-    fsm.flush().iterator.zipWithIndex.map { case (r, i) => (i, r) }
+    fsm.flush().iterator.zipWithIndex.map { case ((r, _), i) => (i, r) }
   }
 
-  /** Exact formulation: one hash shuffle on conv_id, in-partition sort,
-    * per-conversation FSM. Output: (conv_id, record_idx, record, n_lines).
+  /** The batch driver: one hash shuffle on conv_id, an in-partition sort
+    * by (conv_id, turn_idx), and one FSM per conversation, fed one line
+    * at a time. Records emit as soon as the FSM closes them, so per-task
+    * memory is O(open buffer), not O(records per conversation) — a
+    * 10^7-turn mega-conversation costs only its largest record. Emitted
+    * records always consume the oldest open lines (standalone emission
+    * only happens on an empty buffer), so a FIFO of the open lines yields
+    * each record's first line. `record` builds the output row from that
+    * first line, the record index, the record and its line count.
     */
-  def assembleFsm(df: DataFrame, spec: MultilineSpec, partitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
+  private def assemble[A, B: Encoder](lines: Dataset[A], spec: MultilineSpec,
+      partitions: Int)(conv: A => String, text: A => String,
+      record: (A, Int, String, Int) => B): Dataset[B] = {
     val parts = if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
-    df.select("conv_id", "turn_idx", "text")
-      .repartition(parts, col("conv_id"))
+      else lines.sparkSession.sessionState.conf.numShufflePartitions
+    lines.repartition(parts, col("conv_id"))
       .sortWithinPartitions("conv_id", "turn_idx")
-      .as[(String, Int, String)]
       .mapPartitions { it =>
-        // fully streaming: records emit as soon as the FSM closes them, so
-        // per-task memory is O(open buffer), not O(records per conversation)
-        // — a 10^7-turn mega-conversation costs only its largest record
-        new Iterator[(String, Int, String, Int)] {
+        new Iterator[B] {
           private val in = it.buffered
-          private var conv: String = _
+          private val open = new java.util.ArrayDeque[A]()
+          private var cur: String = _
           private var fsm: Fsm = _
           private var idx = 0
-          private var pending: Iterator[String] = Iterator.empty
-          private def refill(): Unit = {
+          private var pending: Iterator[(String, Int)] = Iterator.empty
+          private def refill(): Unit =
             while (pending.isEmpty && (fsm != null || in.hasNext)) {
-              if (fsm == null) { conv = in.head._1; fsm = new Fsm(spec); idx = 0 }
-              if (in.hasNext && in.head._1 == conv) {
-                fsm.write(in.next()._3)
+              if (fsm == null) { cur = conv(in.head); fsm = new Fsm(spec); idx = 0 }
+              if (in.hasNext && conv(in.head) == cur) {
+                val line = in.next()
+                open.add(line)
+                fsm.write(text(line))
                 pending = fsm.drain().iterator
               } else { // conversation exhausted: residual flush, then close
                 pending = fsm.flush().iterator
                 fsm = null
               }
             }
-          }
           def hasNext: Boolean = { refill(); pending.hasNext }
-          def next(): (String, Int, String, Int) = {
+          def next(): B = {
             refill()
-            val r = pending.next()
-            val out = (conv, idx, r, r.count(_ == '\n') + 1)
+            val (r, n) = pending.next()
+            val first = open.poll()
+            (1 until n).foreach(_ => open.poll())
             idx += 1
-            out
+            record(first, idx - 1, r, n)
           }
         }
       }
+  }
+
+  /** Exact formulation over (conv_id, turn_idx, text) lines.
+    * Output: (conv_id, record_idx, record, n_lines).
+    */
+  def assembleFsm(df: DataFrame, spec: MultilineSpec, partitions: Int = 0): DataFrame = {
+    import df.sparkSession.implicits._
+    assemble(df.select("conv_id", "turn_idx", "text").as[(String, Int, String)],
+        spec, partitions)(_._1, _._3, (first, idx, r, n) => (first._1, idx, r, n))
       .toDF("conv_id", "record_idx", "record", "n_lines")
   }
 
-  /** [[assembleFsm]] variant that carries row metadata through assembly:
-    * each record inherits role/tool/ts/src_file from its FIRST line.
-    * Emitted records always consume the oldest pending lines (standalone
-    * emission only happens on an empty buffer), so a FIFO of line metas
-    * aligns with drained records. Output keeps the transcript shape with
-    * `turn_idx` = record index and `text` = assembled record, so the
-    * parse→enrich→route stages compose on top unchanged.
+  /** [[assembleFsm]] carrying row metadata through assembly: each record
+    * inherits role/tool/ts/src_file from its FIRST line. Output keeps the
+    * transcript shape with `turn_idx` = record index and `text` = assembled
+    * record, so the parse→enrich→route stages compose on top unchanged.
     */
   def assembleFsmRows(df: DataFrame, spec: MultilineSpec, partitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val parts = if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
-    df.select(col("conv_id"), col("turn_idx"), col("text"), col("role"),
-        col("tool"), col("ts").cast("timestamp").as("ts"), col("src_file"))
-      .as[MetaRow]
-      .repartition(parts, col("conv_id"))
-      .sortWithinPartitions("conv_id", "turn_idx")
-      .mapPartitions { it =>
-        // streaming like assembleFsm: emitted records always consume the
-        // oldest pending line metas, so memory is O(open buffer)
-        new Iterator[MetaRow] {
-          private val in = it.buffered
-          private var conv: String = _
-          private var fsm: Fsm = _
-          private var idx = 0
-          private val metas = new java.util.ArrayDeque[MetaRow]()
-          private var pending: Iterator[String] = Iterator.empty
-          private def emit(r: String): MetaRow = {
-            val n = r.count(_ == '\n') + 1
-            var first: MetaRow = null
-            var i = 0
-            while (i < n) { val m = metas.poll(); if (i == 0) first = m; i += 1 }
-            val out = MetaRow(conv, idx, r, first.role, first.tool, first.ts, first.src_file)
-            idx += 1
-            out
-          }
-          private def refill(): Unit = {
-            while (pending.isEmpty && (fsm != null || in.hasNext)) {
-              if (fsm == null) {
-                conv = in.head.conv_id; fsm = new Fsm(spec); idx = 0; metas.clear()
-              }
-              if (in.hasNext && in.head.conv_id == conv) {
-                val row = in.next()
-                metas.add(row)
-                fsm.write(row.text)
-                pending = fsm.drain().iterator
-              } else {
-                pending = fsm.flush().iterator
-                fsm = null
-              }
-            }
-          }
-          def hasNext: Boolean = { refill(); pending.hasNext }
-          def next(): MetaRow = { refill(); emit(pending.next()) }
-        }
-      }
+    import df.sparkSession.implicits._
+    assemble(df.select(col("conv_id"), col("turn_idx"), col("text"), col("role"),
+        col("tool"), col("ts").cast("timestamp").as("ts"), col("src_file")).as[MetaRow],
+        spec, partitions)(_.conv_id, _.text,
+        (first, idx, r, _) => first.copy(turn_idx = idx, text = r))
       .toDF()
   }
 

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, StatefulProcessorHandle, TimeMode, TimerValues, TTLConfig, ValueState}
 
 import graft.model.{MultilineSpec, Turn}
 import graft.operators.{Parse, Route, Segments}
@@ -122,8 +122,9 @@ object TranscriptStream {
             concat_ws("#", col("conv_id"), col("turn_idx").cast("string")))
           val staged = graft.operators.Dedup.incrementalMinhashStaged(
             withId, "__id", "text", storeDir, n, bands, rowsPerBand, threshold)
-          // materialize survivors BEFORE commit (commit releases the
-          // stage's caches and a later stage may compact pinned dirs)
+          // materialize survivors BEFORE commit: commit releases the
+          // stage's caches, and `sink` reads blocks instead of re-running
+          // the stage
           val fresh = staged.fresh.drop("__id").localCheckpoint(true)
           sink(fresh, batchId)
           staged.commit()
@@ -136,27 +137,37 @@ object TranscriptStream {
   /** Stateful multiline assembly over a stream of turns: one group per
     * conversation. Completed records are emitted append-mode; the open
     * buffer rides in state until a later batch closes it — exactly the
-    * reference's "no flush until the record closes" semantics. No
-    * wall-clock flush: exactly-once, but an abandoned conversation never
-    * emits its tail — pair with [[assembleStreamIdleFlush]] when A2
-    * semantics are wanted.
+    * reference's "no flush until the record closes" semantics.
+    *
+    * `idleTimeoutMs = None`: no wall-clock flush — exactly-once, but an
+    * abandoned conversation never emits its tail. `Some(ms)` adds the
+    * reference's A2 idle-timeout flush
+    * (internal/tailer/multline_reader.go:74-114): a conversation idle past
+    * `ms` flushes its open buffer as a (possibly partial) record. That is
+    * explicitly an AT-LEAST-ONCE window (README.md:250-262): lines
+    * arriving after the flush start a fresh record, so a consumer may see
+    * one logical record split in two. The flush is one processing-time
+    * timer per conversation, re-armed on every data batch
+    * (`transformWithState` timers, `TimeMode.ProcessingTime`); it
+    * requires the RocksDB state store provider
+    * (`spark.sql.streaming.stateStore.providerClass`).
     *
     * SIZING: a micro-batch's rows are never materialized on the task heap.
     * Out-of-order arrivals park in a RocksDB-backed `MapState` keyed by
-    * `turn_idx`, and the FSM consumes the contiguous prefix one row at a
-    * time — so even a historical backfill that lands a mega-conversation
-    * in a single batch streams through in O(open buffer) heap (the r2
-    * per-batch `toSeq.sortBy` constraint, closed structurally). Requires
-    * dense per-conversation `turn_idx` (the transcript model): a gap
-    * holds later rows in state until the gap row arrives, mirroring the
-    * reference's strictly sequential file reads, where gaps cannot exist
-    * (internal/tailer/tail_reader.go:159-215). Feed this operator the
-    * RAW turn stream (filter/route AFTER assembly — the batch pipeline's
-    * order) so upstream filters can't manufacture gaps; when rows can
-    * genuinely go missing, use [[assembleStreamIdleFlush]], whose timeout
-    * drains gap-stranded rows instead of waiting forever.
-    */
-  /** `seedCursor = false` keeps the STRICT 0-based cursor: a new
+    * `turn_idx` ([[OrderedTurns]]), and the FSM consumes the contiguous
+    * prefix one row at a time — so even a historical backfill that lands
+    * a mega-conversation in a single batch streams through in O(open
+    * buffer) heap (the r2 per-batch `toSeq.sortBy` constraint, closed
+    * structurally). Requires dense per-conversation `turn_idx` (the
+    * transcript model): a gap holds later rows in state until the gap row
+    * arrives, mirroring the reference's strictly sequential file reads,
+    * where gaps cannot exist (internal/tailer/tail_reader.go:159-215).
+    * Feed this operator the RAW turn stream (filter/route AFTER assembly —
+    * the batch pipeline's order) so upstream filters can't manufacture
+    * gaps; when rows can genuinely go missing, set `idleTimeoutMs`, whose
+    * flush drains gap-stranded rows instead of waiting forever.
+    *
+    * `seedCursor = false` keeps the STRICT 0-based cursor: a new
     * conversation's rows park until turn 0 arrives, so no head turn can
     * ever be dropped (at the cost of withholding all output from sources
     * whose indices don't start at 0). `droppedBelowSeed`, when given,
@@ -167,38 +178,15 @@ object TranscriptStream {
     * happened; the magnitude is an upper bound, not an exact count.
     */
   def assembleStream(turns: Dataset[Turn], spec: MultilineSpec,
-      seedCursor: Boolean = true,
+      idleTimeoutMs: Option[Long] = None, seedCursor: Boolean = true,
       droppedBelowSeed: Option[org.apache.spark.util.LongAccumulator] = None)
       : Dataset[SegRecord] = {
     import turns.sparkSession.implicits._
     turns.groupByKey(_.conv_id)
       .transformWithState(
-        new SegmentProcessor(spec, None, seedCursor, droppedBelowSeed),
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  /** [[assembleStream]] plus the reference's A2 idle-timeout flush
-    * (internal/tailer/multline_reader.go:74-114): a conversation idle past
-    * `idleTimeoutMs` flushes its open buffer as a (possibly partial)
-    * record. This is explicitly an AT-LEAST-ONCE window (README.md:250-262):
-    * lines arriving after the flush start a fresh record, so a consumer
-    * may see one logical record split in two.
-    *
-    * Expressed with Spark 4's `transformWithState` (the modern stateful
-    * API) because its timers are first-class: one processing-time timer
-    * per conversation, re-armed on every data batch, flushes on expiry.
-    * Requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass`).
-    */
-  def assembleStreamIdleFlush(turns: Dataset[Turn], spec: MultilineSpec,
-      idleTimeoutMs: Long, seedCursor: Boolean = true,
-      droppedBelowSeed: Option[org.apache.spark.util.LongAccumulator] = None)
-      : Dataset[SegRecord] = {
-    import turns.sparkSession.implicits._
-    turns.groupByKey(_.conv_id)
-      .transformWithState(
-        new SegmentProcessor(spec, Some(idleTimeoutMs), seedCursor, droppedBelowSeed),
-        TimeMode.ProcessingTime(), OutputMode.Append())
+        new SegmentProcessor(spec, idleTimeoutMs, seedCursor, droppedBelowSeed),
+        if (idleTimeoutMs.isEmpty) TimeMode.None() else TimeMode.ProcessingTime(),
+        OutputMode.Append())
   }
 
   /** Running per-conversation QC counters — everything
@@ -220,10 +208,10 @@ object TranscriptStream {
 
   /** Streaming conversation QC — the in-motion face of
     * [[graft.operators.Conversations.qc]]: per-conversation counters
-    * update as contiguous turns drain (the MapState ordered-prefix pattern
-    * of [[SegmentProcessor]]), and the FINAL report emits when the
-    * conversation goes idle for `idleTimeoutMs` — the streaming analogue
-    * of "the conversation is over, gate it now".
+    * update as contiguous turns drain (the ordered-prefix drain of
+    * [[OrderedTurns]], shared with [[SegmentProcessor]]), and the FINAL
+    * report emits when the conversation goes idle for `idleTimeoutMs` —
+    * the streaming analogue of "the conversation is over, gate it now".
     *
     * Parity contract (pinned in StreamingSpec): for a conversation fully
     * delivered before its idle flush, the emitted row equals the batch
@@ -246,17 +234,55 @@ object TranscriptStream {
         TimeMode.ProcessingTime(), OutputMode.Append())
   }
 
+  /** The ordered-prefix drain both stateful processors share: a
+    * conversation's turns park in a RocksDB-backed `MapState` keyed by
+    * `turn_idx` and leave it only in turn order — the contiguous run above
+    * the cursor as it arrives, and on the idle timer every stranded turn,
+    * gaps accepted. Create it in `init`.
+    */
+  private[streaming] final class OrderedTurns[V](handle: StatefulProcessorHandle,
+      name: String, enc: Encoder[V]) {
+    private val parked = handle.getMapState[Int, V](name, Encoders.scalaInt, enc,
+      TTLConfig.NONE)
+
+    def park(idx: Int, v: V): Unit = parked.updateValue(idx, v)
+
+    private def take(idx: Int): V = {
+      val v = parked.getValue(idx)
+      parked.removeKey(idx)
+      v
+    }
+
+    /** Consume the contiguous run above cursor `last`; returns the new cursor. */
+    def drainPrefix(last: Int)(step: (Int, V) => Unit): Int = {
+      var k = last
+      while (parked.containsKey(k + 1)) { k += 1; step(k, take(k)) }
+      k
+    }
+
+    /** Consume every parked turn in turn order, gaps accepted; returns the
+      * highest index consumed, or `last` when nothing was parked.
+      */
+    def drainAll(last: Int)(step: (Int, V) => Unit): Int =
+      parked.keys().toArray.sorted.foldLeft(last) { (_, k) => step(k, take(k)); k }
+
+    /** Restart the conversation's idle clock: data arrived. */
+    def rearm(timerValues: TimerValues, idleTimeoutMs: Long): Unit = {
+      handle.listTimers().foreach(handle.deleteTimer)
+      handle.registerTimer(timerValues.getCurrentProcessingTimeInMs() + idleTimeoutMs)
+    }
+  }
+
   final class QcProcessor(idleTimeoutMs: Long)
       extends StatefulProcessor[String, Turn, QcRow] {
     @transient private var st: ValueState[QcState] = _
-    @transient private var pending: MapState[Int, (String, String)] = _
+    @transient private var pending: OrderedTurns[(String, String)] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
       st = getHandle.getValueState[QcState]("qc",
         Encoders.product[QcState], TTLConfig.NONE)
-      pending = getHandle.getMapState[Int, (String, String)]("qpend",
-        Encoders.scalaInt,
-        Encoders.tuple(Encoders.STRING, Encoders.STRING), TTLConfig.NONE)
+      pending = new OrderedTurns(getHandle, "qpend",
+        Encoders.tuple(Encoders.STRING, Encoders.STRING))
     }
 
     private def current: QcState =
@@ -292,18 +318,13 @@ object TranscriptStream {
         timerValues: TimerValues): Iterator[QcRow] = {
       var cur = current
       it.foreach { t =>
-        if (t.turn_idx > cur.lastTurn)
-          pending.updateValue(t.turn_idx, (t.role, t.text))
+        if (t.turn_idx > cur.lastTurn) pending.park(t.turn_idx, (t.role, t.text))
       }
-      while (pending.containsKey(cur.lastTurn + 1)) {
-        val (role, text) = pending.getValue(cur.lastTurn + 1)
-        pending.removeKey(cur.lastTurn + 1)
-        cur = upd(cur, cur.lastTurn + 1, role, text)
+      pending.drainPrefix(cur.lastTurn) { case (k, (role, text)) =>
+        cur = upd(cur, k, role, text)
       }
       st.update(cur)
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(timerValues.getCurrentProcessingTimeInMs()
-        + idleTimeoutMs)
+      pending.rearm(timerValues, idleTimeoutMs)
       Iterator.empty
     }
 
@@ -312,13 +333,10 @@ object TranscriptStream {
       var cur = current
       // drain gap-stranded turns in turn order — batch qc's lag window
       // also only sees present turns, so adjacency across the gap agrees
-      pending.keys().toArray.sorted.foreach { k =>
-        val (role, text) = pending.getValue(k)
-        pending.removeKey(k)
+      pending.drainAll(cur.lastTurn) { case (k, (role, text)) =>
         cur = upd(cur, k, role, text)
       }
       st.clear()
-      pending.clear()
       if (cur.nTurns == 0L) Iterator.empty
       else {
         val frac =
@@ -332,9 +350,9 @@ object TranscriptStream {
   }
 
   /** Per-conversation FSM as a StatefulProcessor: state = open buffer +
-    * record cursor (SegState) + a turn_idx-keyed pending map for
-    * out-of-order arrivals; one idle timer per key when `idleTimeoutMs`
-    * is set (requires `TimeMode.ProcessingTime`; pass `None` with
+    * record cursor (SegState) + the parked out-of-order turns
+    * ([[OrderedTurns]]); one idle timer per key when `idleTimeoutMs` is
+    * set (requires `TimeMode.ProcessingTime`; `None` runs under
     * `TimeMode.None` for the exactly-once no-flush flavor).
     */
   final class SegmentProcessor(spec: MultilineSpec, idleTimeoutMs: Option[Long],
@@ -342,17 +360,19 @@ object TranscriptStream {
       droppedBelowSeed: Option[org.apache.spark.util.LongAccumulator] = None)
       extends StatefulProcessor[String, Turn, SegRecord] {
     @transient private var st: ValueState[SegState] = _
-    @transient private var pending: MapState[Int, String] = _
+    @transient private var pending: OrderedTurns[String] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
       st = getHandle.getValueState[SegState]("seg",
         Encoders.product[SegState], TTLConfig.NONE)
-      pending = getHandle.getMapState[Int, String]("pending",
-        Encoders.scalaInt, Encoders.STRING, TTLConfig.NONE)
+      pending = new OrderedTurns(getHandle, "pending", Encoders.STRING)
     }
 
     private def current: SegState =
       if (st.exists()) st.get() else SegState(Nil, 0, -1)
+
+    private def emit(conv: String, from: Int, recs: Seq[(String, Int)]): Iterator[SegRecord] =
+      recs.iterator.zipWithIndex.map { case ((r, _), i) => SegRecord(conv, from + i, r) }
 
     override def handleInputRows(conv: String, it: Iterator[Turn],
         timerValues: TimerValues): Iterator[SegRecord] = {
@@ -366,13 +386,12 @@ object TranscriptStream {
       // the output otherwise: the assembled record simply lacks its head).
       var minIdx = Int.MaxValue
       it.foreach { t =>
-        if (t.turn_idx > cur.lastTurn) pending.updateValue(t.turn_idx, t.text)
+        if (t.turn_idx > cur.lastTurn) pending.park(t.turn_idx, t.text)
         else if (cur.seedIdx >= 0 && t.turn_idx <= cur.seedIdx)
           droppedBelowSeed.foreach(_.add(1L))
         if (t.turn_idx < minIdx) minIdx = t.turn_idx
       }
-      val fsm = new Segments.Fsm(spec)
-      fsm.restoreBuffer(cur.buf)
+      val fsm = new Segments.Fsm(spec, cur.buf)
       // a NEW conversation seeds its cursor from the lowest index its
       // FIRST batch delivered: a 1-based (or offset) stream emits instead
       // of parking every row forever behind a turn 0 that will never
@@ -386,26 +405,16 @@ object TranscriptStream {
       // turn-0 ordering matters should pass `seedCursor = false` to keep
       // the strict cursor instead.
       val seeded = seedCursor && isNew && minIdx != Int.MaxValue && minIdx > 0
-      var last =
+      val from =
         if (seedCursor && isNew && minIdx != Int.MaxValue) minIdx - 1
         else cur.lastTurn
-      val seedIdx = if (isNew) { if (seeded) last else -1 } else cur.seedIdx
-      while (pending.containsKey(last + 1)) {
-        fsm.write(pending.getValue(last + 1))
-        pending.removeKey(last + 1)
-        last += 1
-      }
+      val seedIdx = if (isNew) { if (seeded) from else -1 } else cur.seedIdx
+      val last = pending.drainPrefix(from)((_, line) => fsm.write(line))
       val recs = fsm.drain()
       st.update(SegState(fsm.bufferLines.toList, cur.nextIdx + recs.size, last,
         seedIdx))
-      idleTimeoutMs.foreach { ms =>
-        // re-arm the idle timer: data arrived, so the clock restarts
-        getHandle.listTimers().foreach(getHandle.deleteTimer)
-        getHandle.registerTimer(timerValues.getCurrentProcessingTimeInMs() + ms)
-      }
-      recs.iterator.zipWithIndex.map { case (r, i) =>
-        SegRecord(conv, cur.nextIdx + i, r)
-      }
+      idleTimeoutMs.foreach(pending.rearm(timerValues, _))
+      emit(conv, cur.nextIdx, recs)
     }
 
     override def handleExpiredTimer(conv: String, timerValues: TimerValues,
@@ -417,22 +426,15 @@ object TranscriptStream {
       // as a final, possibly partial, record. Without this, one lost row
       // would park every later row of the conversation in state forever.
       val cur = current
-      val fsm = new Segments.Fsm(spec)
-      fsm.restoreBuffer(cur.buf)
-      val stranded = pending.keys().toArray.sorted
-      stranded.foreach { k => fsm.write(pending.getValue(k)); pending.removeKey(k) }
-      val closed = fsm.drain()
-      val tail = fsm.bufferLines
-      val recs = if (tail.nonEmpty) closed :+ tail.mkString("\n") else closed
+      val fsm = new Segments.Fsm(spec, cur.buf)
+      val last = pending.drainAll(cur.lastTurn)((_, line) => fsm.write(line))
+      val recs = fsm.flush()
       if (recs.isEmpty) Iterator.empty
       else {
-        val last = if (stranded.nonEmpty) stranded.max else cur.lastTurn
         // a line arriving later starts a fresh record past the flush
         // (the at-least-once split)
         st.update(SegState(Nil, cur.nextIdx + recs.size, last, cur.seedIdx))
-        recs.iterator.zipWithIndex.map { case (r, i) =>
-          SegRecord(conv, cur.nextIdx + i, r)
-        }
+        emit(conv, cur.nextIdx, recs)
       }
     }
   }

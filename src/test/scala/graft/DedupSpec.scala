@@ -244,13 +244,20 @@ class DedupSpec extends AnyFunSuite {
       batch("f2", Seq(longA + " tail tail", longB)),
       "id", "text", dir, bands = 8, rowsPerBand = 2, threshold = 0.6,
       srcCol = Some("src"))
-    // retraction rewrites and retires those dirs mid-stage...
+    // a second stage's compaction merges and retires those dirs...
+    val Seq(d1) = seenDirs(dir)
+    val compacting = Dedup.incrementalMinhashStaged(batch("f3", Seq(longB)),
+      "id", "text", dir, bands = 8, rowsPerBand = 2, threshold = 0.6,
+      maxSeenDirs = 0, srcCol = Some("src"))
+    assert(hadoopFs(dir).exists(new org.apache.hadoop.fs.Path(d1, "_retired")))
+    // ...a retraction rewrites and retires the merged dir mid-stage...
     Dedup.retractSources(spark, dir, Seq("f1"))
     // ...and the staged plan still evaluates against its pinned snapshot:
     // the near-dup of longA is suppressed (pre-retraction view), no
     // FileNotFound from deleted paths
     assert(staged.fresh.select("text").as[String].collect().toSet == Set(longB))
     staged.commit()
+    compacting.commit()
   }
 
   test("a src with a newline in its name retracts exactly (manifest escaping)") {

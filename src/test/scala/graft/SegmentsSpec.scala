@@ -3,6 +3,7 @@ package graft
 import scala.util.Random
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.{MultilineSpec, MultilineMode}
@@ -10,8 +11,10 @@ import graft.model.MultilineMode._
 import graft.operators.Segments
 import graft.sources.Transcripts
 
-/** Distributed segment assembly vs the single-threaded FSM model, plus the
-  * window≡FSM equivalence for the two Markovian modes.
+/** Distributed segment assembly vs the single-threaded FSM model, the
+  * window≡FSM equivalence for the two Markovian modes, and the metadata
+  * carried by assembleFsmRows — randomized properties ([[Cases.check]])
+  * whose fixed cases are the seeded fixtures.
   */
 class SegmentsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -36,37 +39,110 @@ class SegmentsSpec extends AnyFunSuite {
         .map { case (i, r) => (conv, i, r) }
     }.toSet
 
+  /** The seeded fixtures as `fixed` cases: one conversation's lines each. */
+  private def fixture(seed: Long, convs: Int, maxTurns: Int): Seq[Seq[String]] =
+    randomTurns(seed, convs, maxTurns).groupBy(_._1).toSeq.sortBy(_._1)
+      .map(_._2.sortBy(_._2).map(_._3))
+
+  /** A generated conversation: pattern-bearing lines, blanks, indents,
+    * free text, and lines that themselves contain '\n'.
+    */
+  private val genConv: Gen[Seq[String]] = {
+    val vocab = Seq("INFO step", "CALL tool=x", "ask about", "  at frame",
+      "plain text", "END", "ERROR boom", "Caused by: x")
+    val genLine = Gen.frequency(
+      8 -> Gen.zip(Gen.oneOf(vocab), Gen.choose(0, 49)).map { case (b, k) => s"$b $k" },
+      1 -> Gen.const(""),
+      1 -> Gen.alphaNumStr.map(_.take(6)),
+      1 -> Gen.oneOf("INFO a\nb", "  at x\n  at y", "END\n", "\n"))
+    Gen.choose(1, 25).flatMap(Gen.listOfN(_, genLine))
+  }
+
+  private def convId(c: Int) = f"c$c%04d"
+
+  private def linesDf(convs: Seq[Seq[String]]) =
+    convs.zipWithIndex.flatMap { case (ls, c) =>
+      ls.zipWithIndex.map { case (l, t) => (convId(c), t, l) }
+    }.toDF("conv_id", "turn_idx", "text")
+
+  /** The single-threaded model: (conv_id, record_idx, record, n_lines). */
+  private def model(spec: MultilineSpec, convs: Seq[Seq[String]]): Seq[(String, Int, String, Int)] =
+    convs.zipWithIndex.flatMap { case (ls, c) =>
+      val fsm = new Segments.Fsm(spec)
+      ls.foreach(fsm.write)
+      fsm.flush().zipWithIndex.map { case ((r, n), i) => (convId(c), i, r, n) }
+    }
+
+  /** Rows of `a` missing from `b` and of `b` missing from `a`. */
+  private def diff[T](a: Seq[T], b: Seq[T]): Seq[Any] =
+    a.diff(b).map(("missing", _)) ++ b.diff(a).map(("extra", _))
+
+  private val specs = Seq(
+    MultilineSpec(ContinuePast, "^\\s"),
+    MultilineSpec(ContinueThrough, "^\\s"),
+    MultilineSpec(HaltBefore, "^(INFO|CALL|ask)"),
+    MultilineSpec(HaltWith, "END"),
+    MultilineSpec(ContinuePast, "^\\s", startPattern = Some("^(INFO|CALL)")),
+    MultilineSpec(ContinueThrough, "^\\s", startPattern = Some("^(INFO|CALL)")),
+    MultilineSpec(HaltBefore, "^(INFO|CALL)", startPattern = Some("^INFO")),
+    MultilineSpec(HaltWith, "END", startPattern = Some("^(INFO|END)")),
+    MultilineSpec.Java)
+
   test("assembleFsm matches the single-threaded model across all 4 modes and start patterns") {
-    val rows = randomTurns(seed = 42, convs = 30, maxTurns = 25)
-    val df = rows.toDF("conv_id", "turn_idx", "text")
-    val specs = Seq(
-      MultilineSpec(ContinuePast, "^\\s"),
-      MultilineSpec(ContinueThrough, "^\\s"),
-      MultilineSpec(HaltBefore, "^(INFO|CALL|ask)"),
-      MultilineSpec(HaltWith, "END"),
-      MultilineSpec(ContinueThrough, "^\\s", startPattern = Some("^(INFO|CALL)")),
-      MultilineSpec(HaltBefore, "^(INFO|CALL)", startPattern = Some("^INFO")))
-    specs.foreach { spec =>
-      val got = Segments.assembleFsm(df, spec, partitions = 5)
-        .as[(String, Int, String, Int)].collect()
-        .map(r => (r._1, r._2, r._3)).toSet
-      assert(got == fsmExpected(spec, rows), s"mode=$spec")
+    Cases.check(genConv, fixture(seed = 42, convs = 30, maxTurns = 25)) { convs =>
+      val df = linesDf(convs)
+      specs.flatMap { spec =>
+        val got = Segments.assembleFsm(df, spec, partitions = 5)
+          .as[(String, Int, String, Int)].collect().toSeq
+        diff(model(spec, convs), got).map((spec, _))
+      }
     }
   }
 
   test("window formulation equals FSM for ContinueThrough and HaltBefore") {
-    val rows = randomTurns(seed = 7, convs = 40, maxTurns = 20)
-    val df = rows.toDF("conv_id", "turn_idx", "text")
-    Seq(
-      (ContinueThrough: MultilineMode, "^(INFO|CALL|ask)"),
-      (HaltBefore: MultilineMode, "^(INFO|CALL|ask)")
-    ).foreach { case (mode, re) =>
-      val win = Segments.assembleWindow(df, mode, re)
-        .select("conv_id", "record_idx", "record", "n_lines")
-        .as[(String, Int, String, Int)].collect().toSet
-      val fsm = Segments.assembleFsm(df, MultilineSpec(mode, re), partitions = 3)
-        .as[(String, Int, String, Int)].collect().toSet
-      assert(win == fsm, s"mode=$mode")
+    Cases.check(genConv, fixture(seed = 7, convs = 40, maxTurns = 20)) { convs =>
+      val df = linesDf(convs)
+      Seq(
+        (ContinueThrough: MultilineMode, "^(INFO|CALL|ask)"),
+        (HaltBefore: MultilineMode, "^(INFO|CALL|ask)")
+      ).flatMap { case (mode, re) =>
+        val win = Segments.assembleWindow(df, mode, re)
+          .select("conv_id", "record_idx", "record", "n_lines")
+        val fsm = Segments.assembleFsm(df, MultilineSpec(mode, re), partitions = 3)
+        win.exceptAll(fsm).as[(String, Int, String, Int)].collect().map(("window only", mode, _)) ++
+          fsm.exceptAll(win).as[(String, Int, String, Int)].collect().map(("fsm only", mode, _))
+      }
+    }
+  }
+
+  test("assembleFsmRows yields assembleFsm's records, each with its first line's metadata") {
+    // every line's metadata is a distinct function of (conv, turn), so the
+    // record's metadata names the line it came from
+    def meta(c: String, t: Int) =
+      (s"role-$t", s"tool-$t", new java.sql.Timestamp(1700000000000L + t * 1000L), s"$c/f-$t")
+    Cases.check(genConv) { convs =>
+      val df = convs.zipWithIndex.flatMap { case (ls, c) =>
+        ls.zipWithIndex.map { case (l, t) =>
+          val (role, tool, ts, src) = meta(convId(c), t)
+          (convId(c), t, l, role, tool, ts, src)
+        }
+      }.toDF("conv_id", "turn_idx", "text", "role", "tool", "ts", "src_file")
+      specs.flatMap { spec =>
+        val rows = Segments.assembleFsmRows(df, spec, partitions = 5)
+          .as[Segments.MetaRow].collect().toSeq
+        val plain = Segments.assembleFsm(df, spec, partitions = 5)
+          .as[(String, Int, String, Int)].collect().toSeq
+        // the model's line counts place each record's first line
+        val expected = model(spec, convs).groupBy(_._1).toSeq.flatMap { case (c, recs) =>
+          recs.zip(recs.scanLeft(0)(_ + _._4)).map { case (r, first) =>
+            val (role, tool, ts, src) = meta(c, first)
+            (c, r._2, role, tool, ts, src)
+          }
+        }
+        (diff(plain.map(r => (r._1, r._2, r._3)), rows.map(r => (r.conv_id, r.turn_idx, r.text))) ++
+          diff(expected, rows.map(r => (r.conv_id, r.turn_idx, r.role, r.tool, r.ts, r.src_file))))
+          .map((spec, _))
+      }
     }
   }
 

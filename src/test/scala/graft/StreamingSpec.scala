@@ -165,7 +165,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[Turn]
     val spec = MultilineSpec(MultilineMode.HaltBefore, "^(INFO|CALL)")
-    val q = TranscriptStream.assembleStreamIdleFlush(in.toDS(), spec, idleTimeoutMs = 300L)
+    val q = TranscriptStream.assembleStream(in.toDS(), spec, idleTimeoutMs = Some(300L))
       .writeStream.format("memory").queryName("seg_timeout_out")
       .outputMode(OutputMode.Append).start()
     // the engine fires timeout batches on its own wall clock — poll, don't
@@ -205,7 +205,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[Turn]
     val spec = MultilineSpec(MultilineMode.HaltBefore, "^(INFO|CALL)")
-    val q = TranscriptStream.assembleStreamIdleFlush(in.toDS(), spec, idleTimeoutMs = 300L)
+    val q = TranscriptStream.assembleStream(in.toDS(), spec, idleTimeoutMs = Some(300L))
       .writeStream.format("memory").queryName("seg_gap_out")
       .outputMode(OutputMode.Append).start()
     def pollRows(atLeast: Int): Set[(String, Int, String)] = {
