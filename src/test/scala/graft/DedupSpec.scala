@@ -244,19 +244,34 @@ class DedupSpec extends AnyFunSuite {
       batch("f2", Seq(longA + " tail tail", longB)),
       "id", "text", dir, bands = 8, rowsPerBand = 2, threshold = 0.6,
       srcCol = Some("src"))
-    // a second stage's compaction merges and retires those dirs...
+    // retraction rewrites and retires those dirs mid-stage...
     val Seq(d1) = seenDirs(dir)
-    val compacting = Dedup.incrementalMinhashStaged(batch("f3", Seq(longB)),
-      "id", "text", dir, bands = 8, rowsPerBand = 2, threshold = 0.6,
-      maxSeenDirs = 0, srcCol = Some("src"))
-    assert(hadoopFs(dir).exists(new org.apache.hadoop.fs.Path(d1, "_retired")))
-    // ...a retraction rewrites and retires the merged dir mid-stage...
     Dedup.retractSources(spark, dir, Seq("f1"))
+    val fs = hadoopFs(dir)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(d1, "_retired")))
     // ...and the staged plan still evaluates against its pinned snapshot:
     // the near-dup of longA is suppressed (pre-retraction view), no
     // FileNotFound from deleted paths
     assert(staged.fresh.select("text").as[String].collect().toSet == Set(longB))
     staged.commit()
+    // a later stage's compaction retires pinned dirs the same way: stage a
+    // batch that pins the live dirs, then a stage that merges them all
+    val pinned = Dedup.listSeen(fs, new org.apache.hadoop.fs.Path(dir))
+    assert(pinned.nonEmpty)
+    val longC = "charlie " + (0 until 15).map(i => s"u$i").mkString(" ")
+    val second = Dedup.incrementalMinhashStaged(
+      batch("f3", Seq(longB + " tail tail", longC)),
+      "id", "text", dir, bands = 8, rowsPerBand = 2, threshold = 0.6,
+      srcCol = Some("src"))
+    val compacting = Dedup.incrementalMinhashStaged(batch("f4", Seq(longC)),
+      "id", "text", dir, bands = 8, rowsPerBand = 2, threshold = 0.6,
+      maxSeenDirs = 0, srcCol = Some("src"))
+    pinned.foreach(d =>
+      assert(fs.exists(new org.apache.hadoop.fs.Path(d, "_retired")), s"$d not retired"))
+    // the near-dup of longB is suppressed against the pinned, now retired,
+    // dirs
+    assert(second.fresh.select("text").as[String].collect().toSet == Set(longC))
+    second.commit()
     compacting.commit()
   }
 
