@@ -31,7 +31,10 @@ import graft.sources.TranscriptTable
   *                     persisted: the source is a pinned snapshot of
   *                     immutable files, so the delivery write and the
   *                     lineage counts each recompute the identical fan-out
-  *                     (consistent-fan-out requirement, SURVEY §4)
+  *                     (consistent-fan-out requirement, SURVEY §4). With a
+  *                     dedup stage, ONE staged batch over every todo row
+  *                     drops content earlier runs delivered; invalidated
+  *                     files' sources are retracted from the store first
   *  5. deliver       — ONE distributed write for every sink, partitioned by
   *                     (sink, batch, route_key) under a per-run staging dir,
   *                     then one atomic rename per new
@@ -223,22 +226,18 @@ object Pipeline {
     // The dedup id is a content-addressed stable key, not a row number:
     // deterministic under reshuffles and re-runs.
     //
-    // INVALIDATED files bypass the store check: their previous delivery
-    // was just deleted (stale batch dirs removed below), yet their
-    // unchanged rows' hashes are already committed — anti-joining them
-    // would silently erase the unchanged content from every sink.
-    // Bypassed rows re-deliver in full, AND their state still commits to
-    // the store (via a second staged batch whose survivor set is only
-    // used for the commit): content first introduced BY the rewrite must
-    // not re-deliver when a later file repeats it.
-    //
-    // RETRACTION (offset Delete on removal, collector.go:206-214): every
-    // store commit carries (content_h60, src-basename) provenance, and an
-    // invalidated file's exclusive hashes are rewritten OUT of the store
+    // INVALIDATED files (S9) are read again from the start, as freader
+    // treats a file whose fingerprint no longer matches as new
+    // (internal/tailer/tail_reader.go:95-106): their rows stage with the
+    // rest of the run. What keeps a rewritten file's content deliverable
+    // is RETRACTION (offset Delete on removal, collector.go:206-214):
+    // every store commit carries (content_h60, src-basename) provenance,
+    // and an invalidated file's hashes are rewritten OUT of the store
     // before staging — its old delivery dirs are deleted below, so content
-    // only that file ever delivered must become deliverable again from
-    // whichever file next carries it. Hashes whose provenance is another
-    // (still-live) file, or pre-provenance store rows (src null), stay.
+    // only that file delivered must deliver again. Hashes whose provenance
+    // is another (still-live) file stay: that file's sink dirs still hold
+    // the content, so the rewritten file's copy of it is dropped, not
+    // delivered twice.
     //
     // CRASH-REPLAY ATTRIBUTION WINDOW (documented, accepted): the within-
     // run exact dedup attributes each surviving row to the
@@ -251,65 +250,30 @@ object Pipeline {
     // survivor choice over a candidate set that changed between runs can
     // flip; the exactly-once guarantee is per content-addressed FILE
     // delivery, and the window closes at the lineage commit.
-    val invalidatedNames = invalidated.map(f => new Path(f).getName).toSet
     val dedupStage = cfg.dedup.map { dd =>
-      if (invalidatedNames.nonEmpty)
-        operators.Dedup.retractSources(spark, dd.storeDir,
-          invalidatedNames.toSeq.sorted)
-      def staged(rows: org.apache.spark.sql.DataFrame) = {
-        // the dedup id is length-prefixed per field (and null-flagged), so
-        // no '#' inside conv_id — and no null — can make two distinct rows
-        // share an id (a shared id would drop BOTH rows when either loses
-        // a near-dup verdict, silently losing a distinct row)
-        def lp(c: org.apache.spark.sql.Column) =
-          when(c.isNull, lit("-:")).otherwise(
-            concat(length(c).cast("string"), lit(":"), c))
-        val withId = rows
-          .withColumn("__dedup_id",
-            concat(lp(col("src_file")), lit("#"), lp(col("conv_id")),
-              lit("#"), col("turn_idx").cast("string")))
-          .withColumn("__src", substring_index(col("src_file"), "/", -1))
-        if (dd.mode == "minhash")
-          operators.Dedup.incrementalMinhashStaged(withId, "__dedup_id", "text",
-            dd.storeDir, dd.ngram, dd.bands, dd.rowsPerBand, dd.threshold,
-            srcCol = Some("__src"))
-        else
-          operators.Dedup.incrementalExactStaged(withId, "__dedup_id", "text",
-            dd.storeDir, srcCol = Some("__src"))
-      }
-      val fromInvalidated =
-        if (invalidatedNames.isEmpty) lit(false)
-        else substring_index(col("src_file"), "/", -1)
-          .isin(invalidatedNames.toSeq: _*)
-      val bypassRows = turns.filter(fromInvalidated)
-      // content carried by the bypass this run is excluded from the main
-      // batch BEFORE staging: (a) it would deliver twice (the bypass
-      // re-delivers in full; the main batch only anti-joins the STORE),
-      // and (b) the main batch's commit would record provenance for a file
-      // that never delivered the content — a later retraction of the
-      // bypass file would then keep that phantom row and re-suppress
-      // content no sink holds (the tombstone bug through a side door)
-      // null-safe equality (<=>): a null text hashes to null, and under
-      // === the join condition is null, so a null-text row carried by both
-      // an invalidated file and the main batch would never be excluded and
-      // deliver twice
-      val mainRows =
-        if (invalidatedNames.isEmpty) turns.filter(!fromInvalidated)
-        else turns.filter(!fromInvalidated).join(
-          bypassRows.select(
-            graft.functions.Hashing.sha60(col("text")).as("__bp_h60")).distinct(),
-          graft.functions.Hashing.sha60(col("text")) <=> col("__bp_h60"),
-          "left_anti")
-      // the bypass batch is staged AFTER the main one; its compaction only
-      // retires the dirs the main batch's plan pins, and retired files stay
-      // readable until the retention sweep
-      val batch = staged(mainRows)
-      val bypassBatch =
-        if (invalidatedNames.isEmpty) None else Some(staged(bypassRows))
-      val rows = batch.fresh.drop("__dedup_id", "__src").unionByName(bypassRows)
-      (rows, () => { batch.commit(); bypassBatch.foreach(_.commit()) })
+      operators.Dedup.retractSources(spark, dd.storeDir,
+        invalidated.map(f => new Path(f).getName))
+      // the dedup id is length-prefixed per field (and null-flagged), so
+      // no '#' inside conv_id — and no null — can make two distinct rows
+      // share an id (a shared id would drop BOTH rows when either loses
+      // a near-dup verdict, silently losing a distinct row)
+      def lp(c: org.apache.spark.sql.Column) =
+        when(c.isNull, lit("-:")).otherwise(
+          concat(length(c).cast("string"), lit(":"), c))
+      val withId = turns
+        .withColumn("__dedup_id",
+          concat(lp(col("src_file")), lit("#"), lp(col("conv_id")),
+            lit("#"), col("turn_idx").cast("string")))
+        .withColumn("__src", substring_index(col("src_file"), "/", -1))
+      if (dd.mode == "minhash")
+        operators.Dedup.incrementalMinhashStaged(withId, "__dedup_id", "text",
+          dd.storeDir, dd.ngram, dd.bands, dd.rowsPerBand, dd.threshold,
+          srcCol = Some("__src"))
+      else
+        operators.Dedup.incrementalExactStaged(withId, "__dedup_id", "text",
+          dd.storeDir, srcCol = Some("__src"))
     }
-    val toRoute = dedupStage.map(_._1).getOrElse(turns)
+    val toRoute = dedupStage.map(_.fresh.drop("__dedup_id", "__src")).getOrElse(turns)
 
     // One logical fan-out; every sink and count derives from this plan.
     // NOT persisted: the source is a pinned snapshot of immutable files, so
@@ -535,20 +499,15 @@ object Pipeline {
       lineage.commitDf(entriesDf, runId)
       // dedup store publishes strictly AFTER the lineage commit (the
       // crash-ordering contract above); also releases the stage's caches
-      dedupStage.foreach(_._2())
+      dedupStage.foreach(_.commit())
 
       val totals = sinkObs.get
       def perSinkTotal(prefix: String): Map[String, Long] =
         cfg.sinks.zipWithIndex.map { case (r, i) =>
           r.name -> totals(s"${prefix}_$i").asInstanceOf[Long] }.toMap
       // the lineage write's plan holds src, so its observation is complete
-      // here — but EMPTY when AQE pruned the CollectMetrics node: a batch
-      // the minhash stage drops in full leaves empty caches above it, and
-      // empty-relation propagation removes the subtree. Only then are the
-      // input totals counted by a job of their own.
-      val metrics = Some(obs.get).filter(_.contains("lines_total"))
-        .getOrElse(scanned.agg(inputAggs.head, inputAggs.tail: _*).head()
-          .getValuesMap[Any](Seq("lines_total", "bytes_total", "blank_total")))
+      // here unless AQE pruned it
+      val metrics = graft.metrics.Metrics.observedOrCounted(obs, scanned, inputAggs)
       RunReport(runId, snapId, todo, invalidated, pruned,
         perSinkTotal("d"),
         metrics("lines_total").asInstanceOf[Long],

@@ -164,12 +164,6 @@ final class LineageStore(spark: SparkSession, root: String,
   }
 }
 
-/** File fingerprinting for resume validation — the `checksum` strategy
-  * (sha256 of the first N bytes, internal/file_tracker/fingerprint.go:27-53)
-  * applied to immutable data files. Files shorter than N hash what exists
-  * (data files, unlike live logs, cannot grow), but length is mixed in so
-  * truncation is always detected.
-  */
 /** The reference's three fingerprint strategies as an ADT producing hash
   * Columns over row content (internal/watcher/watcher.go:15-18 enum;
   * strategies at internal/file_tracker/fingerprint.go and
@@ -204,6 +198,12 @@ object FingerprintStrategy {
   }
 }
 
+/** File fingerprinting for resume validation — the `checksum` strategy
+  * (sha256 of the first N bytes, internal/file_tracker/fingerprint.go:27-53)
+  * applied to immutable data files. Files shorter than N hash what exists
+  * (data files, unlike live logs, cannot grow), but length is mixed in so
+  * truncation is always detected.
+  */
 object Fingerprint {
   val DefaultPrefixBytes: Int = 64 * 1024
 

@@ -4,6 +4,7 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 
 import graft.Pipeline.RunReport
 
@@ -42,6 +43,20 @@ import graft.Pipeline.RunReport
   * sink, already fully described by the counters — mapped out.
   */
 object Metrics {
+
+  /** Observed, else counted: the values of `aggs` that `obs` observed on a
+    * job over `rows`, or, when the observation came back empty, one
+    * aggregate job over `rows`. It comes back empty only when adaptive
+    * execution pruned its `CollectMetrics` node (an input it knows to be
+    * empty, e.g. a batch the minhash stage drops in full leaves empty
+    * caches above it); zero is never assumed.
+    */
+  private[graft] def observedOrCounted(obs: Observation, rows: DataFrame,
+      aggs: Seq[Column]): Map[String, Any] =
+    Some(obs.get).filter(_.nonEmpty).getOrElse {
+      val r = rows.agg(aggs.head, aggs.tail: _*).head()
+      r.getValuesMap[Any](r.schema.fieldNames.toSeq)
+    }
 
   /** Accumulated counter state over a campaign of runs (the registry). */
   final case class State(reports: Seq[RunReport] = Nil) {

@@ -112,17 +112,12 @@ object Dedup {
   /** Per-commit provenance manifest: the sorted distinct non-null `src`
     * values of the dir's rows, one per line. [[retractSources]] skips any
     * dir whose manifest is disjoint from the retracted set — retraction
-    * cost becomes O(affected dirs), not O(store). Dirs without a manifest
-    * (pre-manifest commits) are conservatively treated as affected. An
+    * cost becomes O(affected dirs), not O(store). A dir without a manifest
+    * is conservatively treated as affected. An
     * EMPTY manifest is meaningful: the dir holds only null-src
     * (irrevocable) rows, so no retraction can ever touch it.
     */
   private val SrcsManifest = "_srcs"
-
-  /** Retractions recorded against a store that predates `_meta`, one file
-    * each; its migration applies them (see [[openSeen]]).
-    */
-  private val Retracted = "_retracted-"
 
   /** Source lists are line-delimited, so line-breaking bytes inside a src
     * value (legal in POSIX file names) are percent-escaped — an unescaped
@@ -152,9 +147,17 @@ object Dedup {
   private def seenMeta(mode: String, params: (String, Any)*): Meta =
     (Seq("version" -> 2, "mode" -> mode) ++ params).map { case (k, v) => k -> v.toString }
 
-  private def readMeta(log: CommitLog): Option[Meta] =
-    log.read(new Path(log.root, MetaFile)).map(_.split("\n").toSeq.filter(_.nonEmpty).map { l =>
-      val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) })
+  /** The store's identity; None for a store no stage has opened yet. Live
+    * dirs without `_meta` are a store from before format 2, whose layout
+    * no stage reads: it is refused.
+    */
+  private def readMeta(log: CommitLog): Option[Meta] = {
+    val meta = log.read(new Path(log.root, MetaFile)).map(_.split("\n").toSeq
+      .filter(_.nonEmpty).map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) })
+    require(meta.nonEmpty || log.live.isEmpty,
+      s"seen-store ${log.root} predates format 2 (live seen-* dirs, no _meta) and cannot be read")
+    meta
+  }
 
   /** Fails unless the store's identity `have` is this stage's `want`,
     * naming both values of every key that differs (only the version or
@@ -174,11 +177,9 @@ object Dedup {
     * opens no footer and runs no inference job. A minhash commit is ONE
     * table (id, content_h60, hs, bh, src) — one row per survivor, `bh` the
     * [[graft.functions.MinhashBands]] array of `hs`; readers prune to their
-    * columns. Every column is nullable: `hs` and `bh` are null for a doc
-    * too short to shingle, a row migrated from a pre-v2 `sets` component
-    * has no `content_h60`, one from an `exact` component has only
-    * `content_h60` and `src`, and a pre-provenance row has no `src`. An
-    * exact store holds (content_h60, src).
+    * columns. `hs` and `bh` are null for a doc too short to shingle, and
+    * `src` for a row staged without `srcCol`. An exact store holds
+    * (content_h60, src).
     */
   private def seenSchema(meta: Meta): StructType = {
     val m = meta.toMap
@@ -194,19 +195,13 @@ object Dedup {
     if (dirs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
     else spark.read.schema(schema).parquet(dirs.map(_.toString): _*)
 
-  private def without(rows: DataFrame, sources: Set[String]): DataFrame =
-    if (sources.isEmpty) rows
-    else rows.filter(col("src").isNull || !col("src").isin(sources.toSeq: _*))
-
   private def bandsOf(hs: Column, bands: Int, rowsPerBand: Int): Column =
     column(MinhashBands(expression(hs), bands, rowsPerBand))
 
   /** Publish `rows` as one store commit with its `_srcs` manifest. The
     * write is the only Spark job: the row count and the distinct non-null
-    * srcs are observed on it. Zero rows publish nothing. The observation
-    * comes back empty only when the optimizer pruned its node (an input
-    * known to be empty); then one aggregate job counts instead, as
-    * `Pipeline` does for `lines_total` — zero is never assumed.
+    * srcs are observed on it ([[graft.metrics.Metrics.observedOrCounted]]).
+    * Zero rows publish nothing.
     */
   private def publish(log: CommitLog, rows: DataFrame): Unit = {
     val aggs = Seq(count(lit(1)).as("n"), collect_set(col("src")).as("srcs"))
@@ -214,8 +209,7 @@ object Dedup {
     log.commit(CommitLog.freshId()) { tmp =>
       rows.observe(obs, aggs.head, aggs.tail: _*)
         .write.mode("overwrite").parquet(tmp.toString)
-      val m = Some(obs.get).filter(_.contains("n")).getOrElse(
-        rows.agg(aggs.head, aggs.tail: _*).head().getValuesMap[Any](Seq("n", "srcs")))
+      val m = graft.metrics.Metrics.observedOrCounted(obs, rows, aggs)
       val n = m("n").asInstanceOf[Long]
       if (n > 0) log.write(new Path(tmp, SrcsManifest),
         encSrcs(m("srcs").asInstanceOf[scala.collection.Seq[String]]))
@@ -227,16 +221,8 @@ object Dedup {
     * ([[CommitLog.withLock]]), after a sweep of crash leftovers:
     *
     *  - identity: the first stage of a store writes `_meta`; a later stage
-    *    whose identity differs fails ([[requireSame]]);
-    *  - migration: live dirs and no `_meta` are a store from before format
-    *    2, when a minhash commit was three parquet components (`bands`,
-    *    `sets`, `exact`) and nothing recorded its geometry. Every live dir
-    *    merges into ONE v2 commit: `sets` and `exact` rows become v2 rows,
-    *    `bh` is re-derived from `hs` at this stage's geometry, and the
-    *    retractions recorded against the old store apply. Then the sources
-    *    retire and `_meta` is written LAST, so a crash anywhere before
-    *    re-runs the migration, which converges (its earlier output is one
-    *    more live dir);
+    *    whose identity differs fails ([[requireSame]]), and so does any
+    *    stage of a store from before format 2 ([[readMeta]]);
     *  - compaction: past `maxDirs` live dirs (a long campaign otherwise
     *    accretes one `seen-*` dir per batch, and every later stage lists
     *    and unions all of them), every live dir merges into one, duplicate
@@ -253,46 +239,23 @@ object Dedup {
   private def openSeen(spark: SparkSession, log: CommitLog, meta: Meta,
       maxDirs: Int): DataFrame = {
     val schema = seenSchema(meta)
-    // the merge's distinct exchange lets adaptive execution size the
-    // merged files: one file for a fixture-sized store, advisory-sized
-    // ones for a large one, instead of one file per source partition
-    def merge(dirs: Seq[Path], rows: DataFrame): Unit = {
-      publish(log, rows.distinct())
-      dirs.foreach(log.retire)
-    }
     log.sweep()
     log.withLock {
       readMeta(log) match {
         case Some(have) => requireSame(log.root, have, meta)
+        // only the lease holder publishes _meta, and it found none
         case None =>
-          val dirs = log.live
-          if (dirs.nonEmpty) {
-            val fs = log.fs
-            val retractions = fs.listStatus(log.root).toSeq.map(_.getPath)
-              .filter(_.getName.startsWith(Retracted))
-            val retracted = retractions.flatMap(log.read).flatMap(decSrcs).toSet
-            // a pre-v2 minhash commit's rows are its `sets` and `exact`
-            // components (`bands` holds nothing `bh` re-derived from `hs`
-            // lacks); any other dir is its own rows
-            val parts = dirs.flatMap { d =>
-              if (!fs.exists(new Path(d, "bands"))) Seq(d)
-              else Seq("sets", "exact").map(new Path(d, _)).filter(fs.exists)
-            }
-            val rows = rowsOf(spark, parts, schema)
-            val m = meta.toMap
-            merge(dirs, without(
-              if (m("mode") == "exact") rows.filter(col("content_h60").isNotNull)
-              else rows.withColumn("bh",
-                bandsOf(col("hs"), m("bands").toInt, m("rowsPerBand").toInt)),
-              retracted))
-            retractions.foreach(fs.delete(_, false))
-          }
-          // only the lease holder publishes _meta, and it found none
           require(log.putFile(MetaFile, meta.map { case (k, v) => s"$k=$v" }.mkString("\n")),
             s"seen-store ${log.root}: _meta appeared while the lease was held")
       }
       val dirs = log.live
-      if (dirs.size > maxDirs) merge(dirs, rowsOf(spark, dirs, schema))
+      if (dirs.size > maxDirs) {
+        // the merge's distinct exchange lets adaptive execution size the
+        // merged files: one file for a fixture-sized store, advisory-sized
+        // ones for a large one, instead of one file per source partition
+        publish(log, rowsOf(spark, dirs, schema).distinct())
+        dirs.foreach(log.retire)
+      }
     }
     rowsOf(spark, log.live, schema)
   }
@@ -449,13 +412,13 @@ object Dedup {
     * minhash): every store row whose `src` provenance is in `sources` is
     * dropped — the content-store analogue of freader deleting a removed
     * file's offset row (internal/collector/collector.go:206-214). Rows
-    * with null `src` (pre-provenance commits, or batches staged without
-    * `srcCol`) are irrevocable and always survive.
+    * with null `src` (batches staged without `srcCol`) are irrevocable and
+    * always survive.
     *
     * Cost is O(affected commit dirs), not O(store): each commit carries a
     * `_srcs` provenance manifest, and a dir whose manifest is disjoint
-    * from the retracted set is left byte-for-byte untouched (pre-manifest
-    * dirs are conservatively rewritten). Each affected dir is rewritten —
+    * from the retracted set is left byte-for-byte untouched (a dir without
+    * a manifest is conservatively rewritten). Each affected dir is rewritten —
     * one read with the store schema, one write — as its own
     * atomically-renamed fresh commit (none when no row survives), and the
     * old dir is RETIRED (marker file, retention-delayed delete — see
@@ -468,10 +431,8 @@ object Dedup {
     * to the uninterrupted answer: the old dir is rewritten again, its
     * rewrite's manifest is disjoint.
     *
-    * A store from before `_meta` cannot be read before a stage tells its
-    * id type and geometry, so its retraction is recorded and applied by
-    * the migration every stage runs first ([[openSeen]]); a stage is the
-    * only reader of the store.
+    * A store from before format 2 is refused, as a stage refuses it
+    * ([[readMeta]]).
     *
     * Hashes a retracted file shared with a LIVE file keep the live file's
     * row only if the live file introduced them first (the store holds one
@@ -485,16 +446,14 @@ object Dedup {
     val log = seenLog(spark, storeDir)
     val srcSet = sources.toSet
     log.withLock {
-      readMeta(log) match {
-        case None =>
-          if (log.live.nonEmpty) log.putFile(Retracted + CommitLog.freshId(), encSrcs(sources))
-        case Some(meta) =>
-          log.live.filter(d => log.read(new Path(d, SrcsManifest)).map(decSrcs)
-              .forall(_.exists(srcSet))).foreach { d =>
-            // a rewrite is 1:1 with the dir it replaces: no exchange
-            publish(log, without(rowsOf(spark, Seq(d), seenSchema(meta)), srcSet))
-            log.retire(d)
-          }
+      readMeta(log).foreach { meta =>
+        log.live.filter(d => log.read(new Path(d, SrcsManifest)).map(decSrcs)
+            .forall(_.exists(srcSet))).foreach { d =>
+          // a rewrite is 1:1 with the dir it replaces: no exchange
+          publish(log, rowsOf(spark, Seq(d), seenSchema(meta))
+            .filter(col("src").isNull || !col("src").isin(sources: _*)))
+          log.retire(d)
+        }
       }
     }
   }

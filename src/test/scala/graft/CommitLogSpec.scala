@@ -107,10 +107,6 @@ class CommitLogSpec extends AnyFunSuite {
     }
 
     def commit(k: Int): Unit = stage(s"f$k", Seq(k)).commit()
-    /** Batch `k` committed in the three-component layout before `_meta`. */
-    def commitLegacy(k: Int): Unit = LegacySeenStore.commit(root.toString, s"legacy$k",
-      texts(k).zipWithIndex.map { case (t, i) => (s"f$k#$i", t, s"f$k") }
-        .toDF("id", "text", "src"), n = 3, bands = 8, rowsPerBand = 2)
     def retract(k: Int): Unit = Dedup.retractSources(spark, root.toString, Seq(s"f$k"))
     def answer(): Set[String] =
       stage("probe", batches).fresh.select("text").as[String].collect().toSet
@@ -235,40 +231,5 @@ class CommitLogSpec extends AnyFunSuite {
       }
       assert(overlapped == 0, s"$overlapped of $rounds rounds had two lease holders at once")
     } finally pool.shutdown()
-  }
-
-  test("minhash seen-store: (e) a migration of the three-component layout that " +
-    "crashed before its retire or before its _meta converges") {
-    Seq("retire", "_meta").foreach { crash =>
-      val dir = Files.createTempDirectory("graft-commitlog").toString
-      val s = new SeenUnderTest(s"$dir/main", minhash = true)
-      Seq(0, 1, 2).foreach(s.commitLegacy)
-      val legacy = commitDirs(s)
-      val meta = new Path(s.root, "_meta")
-      // the first stage migrates: one v2 commit, the legacy dirs retired
-      assert(s.answer() == s.model(Set(0, 1, 2)))
-      assert(fs.exists(meta) && Dedup.listSeen(fs, s.root).size == 1)
-      // roll the migration back to the crash state: its commit landed, but
-      // _meta was never written (and, crashed before the retire, the
-      // legacy dirs are still live beside it)
-      fs.delete(meta, false)
-      if (crash == "retire") legacy.foreach(d => fs.delete(new Path(d, "_retired"), false))
-      assert(Dedup.listSeen(fs, s.root).size == (if (crash == "retire") 4 else 1))
-      assert(s.answer() == s.model(Set(0, 1, 2)), crash)
-      assert(fs.exists(meta) && Dedup.listSeen(fs, s.root).size == 1, crash)
-      // the migrated store goes on as a v2 store
-      s.commit(3)
-      s.retract(0)
-      assert(s.answer() == s.model(Set(1, 2, 3)), crash)
-    }
-  }
-
-  test("minhash seen-store: a retraction before the migration applies at the migration") {
-    val dir = Files.createTempDirectory("graft-commitlog").toString
-    val s = new SeenUnderTest(s"$dir/main", minhash = true)
-    Seq(0, 1, 2).foreach(s.commitLegacy)
-    s.retract(1)
-    assert(s.answer() == s.model(Set(0, 2)))
-    assert(named(s, _.startsWith("_retracted-")).isEmpty)
   }
 }

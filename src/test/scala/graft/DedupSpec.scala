@@ -509,51 +509,68 @@ class DedupSpec extends AnyFunSuite {
     assert(r3 == Seq(11L))
   }
 
-  test("a pre-provenance exact dir (no src column) still suppresses a re-submitted row") {
+  test("rows staged without srcCol (src = null) survive a retraction and still suppress") {
     import org.apache.hadoop.fs.Path
-    import graft.functions.Hashing
     // shingle-less docs (< 3 tokens): under minhash only the exact
-    // component can suppress them, so the hand-written dir is what decides
+    // pre-filter can suppress them
     val seen = "aa bb"
     // a near-copy (last token changed, Jaccard 9/11): under minhash only
-    // the bands/sets components can suppress it
+    // the band join and verification can suppress it
     val long = (0 until 12).map(j => s"w$j").mkString(" ")
     val nearCopy = long.replace("w11", "zz")
-    def hashesOnly(texts: String*) =
-      texts.toDF("text").select(Hashing.sha60($"text").as("content_h60"))
-    def stage(mode: String, store: String, rows: (Long, String)*) = {
-      val df = rows.toDF("doc_id", "text").withColumn("src", lit("f"))
-      if (mode == "exact")
-        Dedup.incrementalExactStaged(df, "doc_id", "text", store, srcCol = Some("src"))
-      else Dedup.incrementalMinhashStaged(df, "doc_id", "text", store,
-        bands = 8, rowsPerBand = 2, threshold = 0.6, srcCol = Some("src"))
+    def stage(mode: String, store: String, src: Option[String], maxDirs: Int,
+        rows: (Long, String)*) = {
+      val df = rows.toDF("doc_id", "text").withColumn("src", lit(src.orNull).cast("string"))
+      if (mode == "exact") Dedup.incrementalExactStaged(df, "doc_id", "text", store,
+        maxSeenDirs = maxDirs, srcCol = src.map(_ => "src"))
+      else Dedup.incrementalMinhashStaged(df, "doc_id", "text", store, bands = 8,
+        rowsPerBand = 2, threshold = 0.6, maxSeenDirs = maxDirs, srcCol = src.map(_ => "src"))
     }
+    def ids(b: Dedup.IncrementalBatch) = b.fresh.select("doc_id").as[Long].collect().sorted.toSeq
     Seq("exact", "minhash").foreach { mode =>
-      val store = java.nio.file.Files.createTempDirectory(s"graft-preprov-$mode").toString
+      val store = java.nio.file.Files.createTempDirectory(s"graft-nullsrc-$mode").toString
       val fs = new Path(store).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val exact =
-        if (mode == "exact") s"$store/seen-000-old"
-        else {
-          // a hand-built minhash commit of the three-component layout, its
-          // components in the pre-provenance shape, in a store without _meta
-          val dir = LegacySeenStore.commit(store, "000-old",
-            Seq((1L, seen), (2L, long)).toDF("id", "text"), n = 3, bands = 8, rowsPerBand = 2)
-          Seq("bands", "sets").foreach { part =>
-            val p = new Path(dir, part)
-            assert(!spark.read.parquet(p.toString).columns.contains("src"), part)
-          }
-          assert(fs.delete(new Path(dir, "exact"), true))
-          new Path(dir, "exact").toString
+      stage(mode, store, None, 16, (1L, seen), (2L, long)).commit()
+      stage(mode, store, Some("g"), 16, (3L, "cc dd")).commit()
+      // a stage past maxSeenDirs merges the null-src rows and g's rows
+      // into one dir, which the retraction of g must rewrite
+      val h = stage(mode, store, Some("h"), 1, (5L, "ii jj"))
+      assert(Dedup.listSeen(fs, new Path(store)).size == 1, mode)
+      assert(ids(h) == Seq(5L), mode)
+      h.commit()
+      Dedup.retractSources(spark, store, Seq("g"))
+      val b = stage(mode, store, Some("p"), 16,
+        (10L, seen), (11L, nearCopy), (12L, "cc dd"), (13L, "ii jj"), (14L, "kk ll"))
+      // the null-src rows suppress the re-submitted row (and, under
+      // minhash, the near-copy), read together with h's row; g's row is
+      // gone, so its content is fresh again
+      assert(ids(b) == (if (mode == "exact") Seq(11L, 12L, 14L) else Seq(12L, 14L)), mode)
+    }
+  }
+
+  test("a store with live dirs but no _meta is refused by a stage and by a retraction") {
+    import org.apache.hadoop.fs.Path
+    Seq("exact", "minhash").foreach { mode =>
+      val store = java.nio.file.Files.createTempDirectory(s"graft-nometa-$mode").toString
+      val fs = new Path(store).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val df = Seq((1L, "aa bb cc dd", "f")).toDF("doc_id", "text", "src")
+      def stage() =
+        if (mode == "exact") Dedup.incrementalExactStaged(df, "doc_id", "text", store,
+          srcCol = Some("src"))
+        else Dedup.incrementalMinhashStaged(df, "doc_id", "text", store, srcCol = Some("src"))
+      stage().commit()
+      assert(fs.delete(new Path(store, "_meta"), false), mode)
+      val live = Dedup.listSeen(fs, new Path(store))
+      assert(live.nonEmpty, mode)
+      Seq(intercept[IllegalArgumentException](stage()),
+        intercept[IllegalArgumentException](Dedup.retractSources(spark, store, Seq("f"))))
+        .map(_.getMessage).foreach { msg =>
+          assert(msg.contains(new Path(store).getName) && msg.contains("predates format 2"),
+            s"$mode: $msg")
         }
-      hashesOnly(seen).write.parquet(exact)
-      assert(spark.read.parquet(exact).columns.toSeq == Seq("content_h60"), mode)
-      val b = stage(mode, store, (10L, seen), (11L, "ee ff"), (12L, nearCopy))
-      assert(b.fresh.select("doc_id").as[Long].collect().sorted.toSeq ==
-        (if (mode == "exact") Seq(11L, 12L) else Seq(11L)), mode)
-      b.commit()
-      // old and provenance-carrying dirs read together afterwards
-      val again = stage(mode, store, (20L, seen), (21L, "ee ff"), (22L, "gg hh"))
-      assert(again.fresh.select("doc_id").as[Long].collect().toSeq == Seq(22L), mode)
+      // refused, not rewritten: the live dirs are as they were
+      assert(Dedup.listSeen(fs, new Path(store)) == live, mode)
+      assert(!fs.exists(new Path(store, "_meta")), mode)
     }
   }
 
@@ -603,6 +620,77 @@ class DedupSpec extends AnyFunSuite {
     // the commit landed in full: a replay of batch 2 returns nothing
     assert(stage(batch("f3", 2).unionByName(Seq(("f3#s", "aa bb", "f3"))
       .toDF("id", "text", "src"))).fresh.count() == 0L)
+  }
+
+  test("incremental ≡ one-shot: any split of a batch into 1–3 stages (exact and minhash)") {
+    import org.scalacheck.Gen
+    // a case: docs over an 8-word vocabulary — originals, and copies or
+    // one-token edits of them — each with the stage it is submitted at
+    val vocab = Seq("p", "q", "r", "s", "t", "u", "v", "w")
+    val genDoc = Gen.choose(1, 14).flatMap(Gen.listOfN(_, Gen.oneOf(vocab)))
+    def edit(b: List[String]): Gen[List[String]] = for {
+      op <- Gen.choose(0, 3); i <- Gen.choose(0, b.size - 1); w <- Gen.oneOf(vocab)
+    } yield op match {
+      case 0 => b
+      case 1 => b.updated(i, w)
+      case 2 => b :+ w
+      case _ => if (b.size > 1) b.patch(i, Nil, 1) else b
+    }
+    val genCase: Gen[Seq[(List[String], Int)]] = for {
+      k <- Gen.choose(1, 3)
+      bases <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, genDoc))
+      derived <- Gen.choose(0, 6).flatMap(Gen.listOfN(_, Gen.oneOf(bases).flatMap(edit)))
+      stages <- Gen.listOfN(bases.size + derived.size, Gen.choose(0, k - 1))
+    } yield (bases ++ derived).zip(stages)
+    // a chain across three stages: X, a copy and an appended-token edit of
+    // X, and a last-token edit (Jaccard 9/11 with X)
+    val x = (0 until 12).map(j => vocab(j % 5) + vocab(j % 3)).toList
+    val fixed = Seq(Seq(x -> 0, x -> 1, (x :+ "p") -> 1, x.updated(11, "w") -> 2))
+    val (n, bands, rpb, threshold) = (3, 8, 2, 0.6)
+    Seq("exact", "minhash").foreach { mode =>
+      Cases.check(genCase, fixed) { cases =>
+        // every token carries its case id, so no two cases share a text or
+        // a shingle; the j-th stage of every case is one DataFrame
+        val submitted = cases.zipWithIndex.flatMap { case (c, ci) =>
+          c.zipWithIndex.map { case ((toks, stage), i) =>
+            (f"c$ci%03d-$i%02d", toks.map(t => s"c${ci}_$t").mkString(" "), stage) }
+        }
+        val store = java.nio.file.Files.createTempDirectory(s"graft-split-$mode").toString
+        val survivors = (0 until 3).flatMap { j =>
+          val batch = submitted.collect { case (id, t, `j`) => (id, t) }.toDF("id", "text")
+          val out =
+            if (mode == "exact") Dedup.incrementalExact(batch, "id", "text", store)
+            else Dedup.incrementalMinhash(batch, "id", "text", store, n, bands, rpb, threshold)
+          out.select("id", "text").as[(String, String)].collect()
+        }
+        def caseOf(id: String) = id.takeWhile(_ != '-')
+        def pairs(rows: Seq[(String, String)]): Seq[(String, String)] =
+          Dedup.minhashLsh(rows.toDF("id", "text"), "id", "text", n, bands, rpb, threshold)
+            .select("a", "b").as[(String, String)].collect().toSeq
+        val union = submitted.map { case (id, t, _) => (id, t) }
+        val kept = survivors.groupBy(p => caseOf(p._1))
+        val unionPaired = if (mode == "exact") Set.empty[String]
+          else pairs(union).flatMap { case (a, b) => Seq(a, b) }.toSet
+        val keptPairs = if (mode == "exact") Nil else pairs(survivors)
+        union.groupBy(p => caseOf(p._1)).toSeq.sortBy(_._1).flatMap { case (c, all) =>
+          val mine = kept.getOrElse(c, Nil)
+          val texts = mine.map(_._2)
+          if (mode == "exact") {
+            if (texts.sorted == all.map(_._2).distinct.sorted) Nil
+            else Seq(s"$c: survivors ${texts.sorted} != distinct ${all.map(_._2).distinct.sorted}")
+          } else {
+            val copies = all.groupBy(_._2).filter(_._2.size > 1).keySet
+            val lost = all.filter { case (id, t) =>
+              !copies(t) && !unionPaired(id) && !mine.exists(_._1 == id) }
+            Seq(
+              Some(s"$c: a text survives twice: $texts").filter(_ => texts.distinct.size < texts.size),
+              keptPairs.find(p => caseOf(p._1) == c).map(p => s"$c: survivors $p are a verified pair"),
+              lost.headOption.map(l => s"$c: $l has no copy and no pair, yet was dropped")
+            ).flatten
+          }
+        }
+      }
+    }
   }
 
   test("incremental minhash: seen-dir count stays bounded by compaction") {

@@ -180,51 +180,73 @@ class PipelineSpec extends AnyFunSuite {
     assert(fs.listStatus(sp).exists(_.getPath.getName.startsWith("seen-")))
   }
 
-  test("dedup stage + invalidation: a rewritten file re-delivers ALL its latest content") {
-    import org.apache.spark.sql.functions.col
-    val root = tmp()
-    val dcfg = PipelineConfig(
-      sinks = Seq(SinkRule("all", kind = "parquet")),
-      dedup = Some(graft.model.DedupStageSpec("exact", s"$root/store")))
-    val table = new SnapshotTable(spark, s"$root/table")
-    val lineage = new LineageStore(spark, s"$root/lineage")
-    val out = s"$root/sinks"
-    table.append(Transcripts.synthesize(spark, numConvs = 5, turnsPerConv = 6).toDF())
-    val r1 = Pipeline.run(spark, table, lineage, dcfg, out)
-    assert(r1.perSinkDelivered("all") > 0)
+  test("dedup stage + invalidation: a rewritten file delivers its latest content once") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, concat, count, length, lit}
+    def conv(k: Int): DataFrame = Transcripts.synthesize(spark, numConvs = k + 1, turnsPerConv = 6)
+      .toDF().filter(col("conv_id") === f"conv-$k%08d")
+    val inputs = Seq("a file rewritten with its rows plus one conversation",
+      "a file copying another file's content, rewritten with one more conversation")
+    for (mode <- Seq("exact", "minhash"); input <- inputs) {
+      val what = s"$mode, $input"
+      val root = tmp()
+      val dcfg = PipelineConfig(
+        sinks = Seq(SinkRule("all", kind = "parquet")),
+        dedup = Some(graft.model.DedupStageSpec(mode, s"$root/store")))
+      val table = new SnapshotTable(spark, s"$root/table")
+      val lineage = new LineageStore(spark, s"$root/lineage")
+      val out = s"$root/sinks"
+      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def run(): Pipeline.RunReport = Pipeline.run(spark, table, lineage, dcfg, out)
+      val victim =
+        if (input == inputs.head) {
+          // the victim's rows are already in the store when it is rewritten
+          table.append(Transcripts.synthesize(spark, numConvs = 5, turnsPerConv = 6).toDF())
+          val r1 = run()
+          assert(r1.perSinkDelivered("all") > 0, what)
+          r1.processedFiles.head
+        } else {
+          // file B copies file A's content under new conv_ids, plus a
+          // conversation of its own; A's sink dirs keep holding the copied
+          // content after B is rewritten, so B's copy must not deliver
+          val a = Transcripts.synthesize(spark, numConvs = 4, turnsPerConv = 6).toDF()
+          table.append(a.coalesce(1))
+          run()
+          table.append(a.withColumn("conv_id", concat(lit("b-"), col("conv_id")))
+            .unionByName(conv(4)).coalesce(1))
+          val rb = run()
+          assert(rb.processedFiles.size == 1 && rb.perSinkDelivered("all") > 0, what)
+          rb.processedFiles.head
+        }
+      // rewrite the victim in place with one more conversation: the
+      // invalidation path deletes its old batch dirs
+      val tmpOut = s"$root/replacement"
+      spark.read.parquet(victim).unionByName(conv(5)).coalesce(1)
+        .write.mode("overwrite").parquet(tmpOut)
+      val newPart = fs.listStatus(new Path(tmpOut))
+        .map(_.getPath).find(_.getName.endsWith(".parquet")).get
+      fs.delete(new Path(victim), false)
+      require(fs.rename(newPart, new Path(victim)))
+      val r2 = run()
+      assert(r2.invalidatedFiles == Seq(victim), what)
+      assert(r2.perSinkDelivered("all") > 0, what)
 
-    // rewrite one committed file in place: SAME rows (already in the
-    // dedup store) plus one new conversation — the invalidation path
-    // deletes the file's old batch dirs, so if the store filtered the
-    // unchanged rows they would vanish from every sink
-    val victim = r1.processedFiles.head
-    val oldRows = spark.read.parquet(victim)
-    val extra = Transcripts.synthesize(spark, numConvs = 6, turnsPerConv = 6).toDF()
-      .filter(col("conv_id") === "conv-00000005")
-    val tmpOut = s"$root/replacement"
-    oldRows.unionByName(extra).coalesce(1).write.mode("overwrite").parquet(tmpOut)
-    val fs = new Path(victim).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val newPart = fs.listStatus(new Path(tmpOut))
-      .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-    fs.delete(new Path(victim), false)
-    require(fs.rename(newPart, new Path(victim)))
-
-    val r2 = Pipeline.run(spark, table, lineage, dcfg, out)
-    assert(r2.invalidatedFiles == Seq(victim))
-    assert(r2.perSinkDelivered("all") > 0)
-    // the true invariant: NO text of the latest snapshot content is
-    // missing from the sink — the regression made the victim's unchanged
-    // rows vanish from every sink (their old dirs deleted, their
-    // re-delivery filtered by the store)
-    import org.apache.spark.sql.functions.length
-    val sinkTexts = spark.read.parquet(s"$out/all").select(col("message")).distinct()
-    val snapTexts = spark.read
-      .parquet(table.filesAt(table.currentSnapshotId.get): _*)
-      .filter(length(col("text")) > 0).select(col("text")).distinct()
-    val missing = snapTexts
-      .join(sinkTexts, snapTexts("text") === sinkTexts("message"), "left_anti")
-    assert(missing.isEmpty,
-      s"latest content missing from sink: ${missing.count()} texts")
+      // NO text of the latest snapshot is missing from the sink (had the
+      // store filtered the victim's unchanged rows, they would vanish from
+      // every sink with its deleted dirs), and no (message, route_key)
+      // pair is in it twice
+      val sink = spark.read.parquet(s"$out/all")
+      val sinkTexts = sink.select(col("message")).distinct()
+      val snapTexts = spark.read
+        .parquet(table.filesAt(table.currentSnapshotId.get): _*)
+        .filter(length(col("text")) > 0).select(col("text")).distinct()
+      val missing = snapTexts
+        .join(sinkTexts, snapTexts("text") === sinkTexts("message"), "left_anti")
+      assert(missing.isEmpty, s"$what: latest content missing from sink: ${missing.count()} texts")
+      val twice = sink.groupBy("message", "route_key").agg(count(lit(1)).as("n"))
+        .filter(col("n") > 1)
+      assert(twice.isEmpty, s"$what: ${twice.count()} (message, route_key) pairs delivered twice")
+    }
   }
 
   test("minhash dedup stage: near-duplicate rows of earlier runs are dropped too") {
