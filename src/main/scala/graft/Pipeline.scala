@@ -142,7 +142,16 @@ object Pipeline {
       cfg: PipelineConfig,
       outDir: String): RunReport = {
 
-    cfg.validate().left.foreach(err => throw new IllegalArgumentException(err))
+    // isDir goes through the Hadoop FileSystem so a scheme-qualified
+    // directory include (file://, hdfs://, s3a://) classifies correctly,
+    // not just local paths; validation and the matcher share it, so they
+    // never disagree about what an include names
+    val hadoopIsDir: String => Boolean = p => try {
+      val hp = new Path(p)
+      hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(hp).isDirectory
+    } catch { case _: Exception => false }
+    cfg.validate(hadoopIsDir).left.foreach(err => throw new IllegalArgumentException(err))
     val runId = java.util.UUID.randomUUID().toString.take(12)
 
     val snapId = table.currentSnapshotId.getOrElse(
@@ -150,14 +159,7 @@ object Pipeline {
     // S3: include/exclude path filtering over the manifest — the batch
     // analogue of the watcher's walk filter (watcher.go:173-179). The
     // manifest is driver-side metadata, so the compiled matcher runs here;
-    // PathFilter.column is the distributed twin for path columns. isDir
-    // goes through the Hadoop FileSystem so a scheme-qualified directory
-    // include (hdfs://, s3a://) classifies correctly, not just local paths.
-    val hadoopIsDir: String => Boolean = p => try {
-      val hp = new Path(p)
-      hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getFileStatus(hp).isDirectory
-    } catch { case _: Exception => false }
+    // PathFilter.column is the distributed twin for path columns.
     val pathSpec = operators.PathFilter.compile(cfg.include, cfg.exclude, hadoopIsDir)
     val files = table.filesAt(snapId)
       .filter(f => operators.PathFilter.matches(pathSpec, f))

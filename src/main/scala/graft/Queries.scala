@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.checkpoint.FingerprintStrategy
 import graft.functions.Hashing
 import graft.model.{MultilineMode, SinkRule}
 import graft.operators.{AsOf, Cardinality, Conversations, CorpusLm, Dedup, Drift, Enrich, Frequency, Mixing, Multimodal, Parse, Quantile, Route, Segments, Similarity, TextAnalysis}
@@ -173,17 +174,20 @@ object Queries {
         col("ts_parsed"), col("note"))
     }),
 
-    // A1 window formulation: haltBefore — header lines start records
+    // A1 haltBefore — header lines start records. The oracle derives the
+    // records through a boundary window, independently of the FSM
     "q_multiline_haltbefore" -> ((s, dir) =>
-      Segments.assembleWindow(tx(s, dir), MultilineMode.HaltBefore, "^(CALL|INFO|ask)")),
+      Segments.assembleFsm(tx(s, dir),
+        graft.model.MultilineSpec(MultilineMode.HaltBefore, "^(CALL|INFO|ask)"))),
 
-    // A1 window formulation: continueThrough — non-matching lines start records
+    // A1 continueThrough — non-matching lines start records; the oracle is
+    // the same boundary window with the condition negated
     "q_multiline_through" -> ((s, dir) =>
-      Segments.assembleWindow(tx(s, dir), MultilineMode.ContinueThrough, "^(CALL|INFO|ask)")),
+      Segments.assembleFsm(tx(s, dir),
+        graft.model.MultilineSpec(MultilineMode.ContinueThrough, "^(CALL|INFO|ask)"))),
 
-    // A1 exact FSM formulation (repartition+sortWithinPartitions+mapPartitions);
-    // for haltBefore-without-StartPattern it is provably equal to the window
-    // formulation (SegmentsSpec property), so it shares that oracle
+    // A1 FSM (repartition+sortWithinPartitions+mapPartitions) in the same
+    // mode and pattern as q_multiline_haltbefore, so it shares that oracle
     "q_multiline_fsm" -> ((s, dir) =>
       Segments.assembleFsm(tx(s, dir),
         graft.model.MultilineSpec(MultilineMode.HaltBefore, "^(CALL|INFO|ask)"))),
@@ -291,8 +295,8 @@ object Queries {
       documents(s, dir)
         .filter(length(col("text")) >= 64 && size(split(col("text"), " ")) > 3)
         .select(col("doc_id"),
-          sha2(substring(col("text"), 1, 64), 256).as("fp_checksum"),
-          sha2(concat(substring_index(col("text"), " ", 3), lit(" ")), 256).as("fp_sep"))),
+          FingerprintStrategy.Checksum(64).column(col("text")).as("fp_checksum"),
+          FingerprintStrategy.ChecksumSeparator(" ", 3).column(col("text")).as("fp_sep"))),
 
     // S8: separator split + explode (blob-ingestion parity)
     "q_split_explode" -> ((s, dir) =>
@@ -334,15 +338,11 @@ object Queries {
         n = 3, bands = 4, rowsPerBand = 2, threshold = 0.6)
         .select(col("id").as("doc_id"), col("cluster"), col("n_members"))),
 
-    // same clusters via the ALTERNATING-STAR algorithm (the O(log n)-round
-    // long-chain variant): a different distributed iteration whose converged
-    // labels must equal label-propagation's — and the recursive-CTE oracle
-    // re-derives them a third way
+    // kept as a query name: the same label-propagation clusters as
+    // q_dedup_clusters, checked against the same recursive-CTE oracle
     "q_dedup_clusters_star" -> ((s, dir) =>
-      Dedup.connectedComponentsAltStar(
-        Dedup.minhashLsh(nearDupFixture(s, dir), "doc_id", "text",
-          n = 3, bands = 4, rowsPerBand = 2, threshold = 0.6)
-          .select(col("a"), col("b")))
+      Dedup.nearDupClusters(nearDupFixture(s, dir), "doc_id", "text",
+        n = 3, bands = 4, rowsPerBand = 2, threshold = 0.6)
         .select(col("id").as("doc_id"), col("cluster"), col("n_members"))),
 
     // canonical-representative selection over the same clusters: keep the
@@ -3209,11 +3209,10 @@ object Queries {
   )
 
   // the bloom pre-filter variant is exact-equivalent by construction, so
-  // it shares q_decontaminate's oracle verbatim; the alternating-star
-  // clusters variant shares q_dedup_clusters' — the recursive CTE is
-  // algorithm-agnostic (transitive closure), so ONE oracle pins both
-  // distributed iterations to the same converged minima (declared AFTER
-  // oracleBase: object-init order — see CLAUDE.md)
+  // it shares q_decontaminate's oracle verbatim; q_dedup_clusters_star
+  // runs the same label propagation as q_dedup_clusters and shares its
+  // recursive-CTE oracle (declared AFTER oracleBase: object-init order —
+  // a forward reference would read null)
   val oracleSql: Map[String, String] = oracleBase +
     ("q_decontaminate_bloom" -> oracleBase("q_decontaminate")) +
     ("q_dedup_clusters_star" -> oracleBase("q_dedup_clusters")) +
@@ -3243,7 +3242,8 @@ object Queries {
        |  FROM transcripts) p
        |GROUP BY 1, 2""".stripMargin
 
-  /** Shared window-formulation oracle body; `boundaryExpr` decides whether
+  /** Shared boundary-window oracle body for the lag-1 multiline modes,
+    * derived independently of the Spark FSM; `boundaryExpr` decides whether
     * the current row starts a record (in addition to first-in-conversation).
     */
   private def multilineOracle(boundaryExpr: String): String =

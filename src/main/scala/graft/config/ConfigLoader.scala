@@ -93,7 +93,10 @@ object ConfigLoader {
   /** Load with viper's precedence: defaults < file < env < flags. Flag keys
     * are the reference's flag names (`include`, `exclude`, `separator`, …)
     * or full dotted keys; values are raw strings (arrays comma-split, like
-    * pflag StringSlice).
+    * pflag StringSlice). Loading has no Spark session, so include roots are
+    * classified by the local filesystem (`PathFilter.localIsDir`);
+    * `Pipeline.run` re-validates them through the Hadoop FileSystem, which
+    * also classifies scheme-qualified directories.
     */
   def load(
       file: Option[String] = None,

@@ -787,11 +787,9 @@ object Dedup {
     * result (truncating the iterative lineage). Rounds are bounded by the
     * cluster DIAMETER, not the corpus: near-dup families are shallow
     * (copies of copies), so 2-4 rounds converge. The label table carries
-    * two longs per clustered doc — at 100 TB the loop shuffles ids only;
-    * for adversarial long-chain graphs swap in the alternating
-    * small-star/large-star variant (same join shape, fewer rounds). The
-    * converged labels are the unique component minima, so the result is
-    * deterministic regardless of round count — which is what makes an
+    * two longs per clustered doc — at 100 TB the loop shuffles ids only.
+    * The converged labels are the unique component minima, so the result
+    * is deterministic regardless of round count — which is what makes an
     * iterative distributed loop DuckDB-oracle-able (recursive CTE).
     *
     * Returns (id, cluster, n_members) for docs in clusters of size ≥ 2;
@@ -839,7 +837,14 @@ object Dedup {
     * label-propagation core of [[nearDupClusters]], reusable over every
     * pair producer in the family ([[simhashPairs]], [[embeddingNearDup]],
     * [[ngramJaccard]]). See nearDupClusters for the scale analysis.
-    * Returns (id, cluster, n_members) for ids appearing in any pair.
+    * Returns (id, cluster, n_members) for ids appearing in any pair; an
+    * id seen only in a self-pair is its own singleton cluster.
+    *
+    * Scope: one round per hop of component diameter, and a component
+    * deeper than `maxRounds` hops fails with an IllegalStateException
+    * rather than running one Spark job per hop. No query, pipeline run or
+    * benchmark builds such a graph: near-dup families are shallow, and on
+    * them label propagation is the fast path.
     */
   def connectedComponents(pairs0: DataFrame, maxRounds: Int = 50): DataFrame = {
     val pairs = pairs0.select(col("a"), col("b"))
@@ -859,9 +864,7 @@ object Dedup {
       // Spark job per hop) — fail loudly instead of spinning
       if (round >= maxRounds) throw new IllegalStateException(
         s"connectedComponents: no fixpoint after $maxRounds rounds — " +
-          "component diameter exceeds the bound; for long-chain graphs use " +
-          "connectedComponentsAltStar (alternating small-star/large-star, " +
-          "O(log n) rounds) or raise maxRounds")
+          s"a component is deeper than the maxRounds bound of $maxRounds hops")
       round += 1
       val nbrMin = edges.join(labels.select(col("id").as("b"), col("cluster").as("bc")), "b")
         .groupBy(col("a")).agg(min(col("bc")).as("nm"))
@@ -873,94 +876,6 @@ object Dedup {
       changed = next.filter(col("moved")).count()
       labels = next.drop("moved")
     }
-    val sizes = labels.groupBy(col("cluster")).agg(count(lit(1)).as("n_members"))
-    labels.join(sizes, "cluster").select(col("id"), col("cluster"), col("n_members"))
-  }
-
-  /** Connected components by ALTERNATING large-star / small-star rounds —
-    * the long-chain escape hatch for [[connectedComponents]]. Min-label
-    * propagation needs one round per hop of component DIAMETER (a 10k-link
-    * plagiarism chain = 10k Spark jobs); the alternating-star algorithm
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC 2014) contracts chains geometrically and converges in
-    * O(log n) rounds regardless of diameter, with the same per-round
-    * shuffle shape (one groupBy on node id over an ids-only edge table).
-    *
-    * Each round rewrites the edge set (kept canonical: `u > v`):
-    *  - large-star: every node links its LARGER neighbors directly to the
-    *    minimum of its closed neighborhood — long tails fold toward minima;
-    *  - small-star: every node links its smaller neighbors AND itself to
-    *    that minimum — stars flatten to depth one.
-    * Fixpoint: the edge set stops changing, at which point every edge is
-    * `(member, component-min)`. Both phases only ever re-point a node at a
-    * SMALLER label from its own component, so the converged minima are
-    * identical to [[connectedComponents]]' — callers can swap algorithms
-    * without changing results (and the DuckDB recursive-CTE oracle still
-    * applies). Same return contract: (id, cluster, n_members) for every id
-    * appearing in any input pair.
-    *
-    * The 100 TB shape: edges are two ids per row, each phase is one
-    * aggregate + one join on the same key, and localCheckpoint truncates
-    * the iterative lineage each round. Rounds are O(log n) ≈ 40 for 2^40
-    * nodes, so `maxRounds` is a true anomaly guard, not a tuning knob.
-    */
-  def connectedComponentsAltStar(pairs0: DataFrame, maxRounds: Int = 60): DataFrame = {
-    // ONE pinned evaluation of the pair producer: both the edge set and
-    // the end-of-run singleton anti-join derive from this snapshot, so an
-    // unstable producer (sampled/generated ids) can't hand them
-    // inconsistent id sets
-    val pairs = pairs0.select(col("a"), col("b")).localCheckpoint(true)
-    val allIds = pairs.select(col("a").as("id"))
-      .unionByName(pairs.select(col("b").as("id"))).distinct()
-    var edges = pairs
-      .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint(true)
-    var edgeCount = edges.count()
-    var converged = false
-    var round = 0
-    while (!converged) {
-      if (round >= maxRounds) throw new IllegalStateException(
-        s"connectedComponentsAltStar: no fixpoint after $maxRounds rounds — " +
-          "O(log n) convergence bound exceeded; the input edge table is " +
-          "growing adversarially or ids are unstable across evaluations")
-      round += 1
-      // large-star over the SYMMETRIC view: per node, the min of the closed
-      // neighborhood; larger neighbors re-point at it
-      val sym = edges.select(col("u").as("s"), col("v").as("d"))
-        .unionByName(edges.select(col("v").as("s"), col("u").as("d")))
-      val mins = sym.groupBy(col("s")).agg(least(min(col("d")), first(col("s"))).as("m"))
-      // not checkpointed: `next` is the round's only materialization —
-      // large's distinct-exchange subtree appears in both the smins
-      // aggregate and the join probe below, and ReuseExchange computes it
-      // once inside next's plan; a separate eager checkpoint here paid one
-      // extra job per round for lineage next's own checkpoint already cuts
-      val large = sym.join(mins, "s")
-        .filter(col("d") > col("s"))
-        .select(col("d").as("u"), col("m").as("v"))
-        .distinct()
-      // small-star over the canonical (u > v) view: u and its smaller
-      // neighbors all re-point at the neighborhood min
-      val smins = large.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val next = large.join(smins, "u")
-        .select(explode(array(
-          struct(col("u").as("u"), col("m").as("v")),
-          struct(col("v").as("u"), col("m").as("v")))).as("e"))
-        .select(col("e.u"), col("e.v"))
-        .filter(col("u") =!= col("v"))
-        .distinct().localCheckpoint(true)
-      val nextCount = next.count()
-      converged = nextCount == edgeCount &&
-        next.join(edges, Seq("u", "v"), "left_anti").isEmpty
-      edges = next
-      edgeCount = nextCount
-    }
-    // converged edges are (member, component-min) stars; the minima label
-    // themselves, and ids only ever seen in self-pairs are singletons
-    val starred = edges.select(col("u").as("id"), col("v").as("cluster"))
-      .unionByName(edges.select(col("v").as("id"), col("v").as("cluster")).distinct())
-    val singles = allIds.join(starred.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("cluster"))
-    val labels = starred.unionByName(singles)
     val sizes = labels.groupBy(col("cluster")).agg(count(lit(1)).as("n_members"))
     labels.join(sizes, "cluster").select(col("id"), col("cluster"), col("n_members"))
   }

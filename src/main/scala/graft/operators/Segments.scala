@@ -2,28 +2,22 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 
-import graft.model.{MultilineMode, MultilineSpec}
+import graft.model.MultilineSpec
 import graft.model.MultilineMode._
 
 /** Multiline record assembly — the reference's 4-mode stateful line folder
   * (internal/tailer/multline_reader.go:139-264) re-expressed for Spark.
   *
-  * Two formulations behind one semantic:
-  *
-  *  1. [[assembleFsm]] — exact: repartition by conv_id, sort within
-  *     partitions by (conv_id, turn_idx), run the FSM per conversation in
-  *     `mapPartitions`. Handles all 4 modes + StartPattern standalone
-  *     emission. One shuffle; conversations never split across partitions.
-  *
-  *  2. [[assembleWindow]] — declarative: for ContinueThrough and
-  *     HaltBefore *without* StartPattern, the record boundary is a pure function of the current
-  *     and previous line, so a window `sum(boundary) over (partition by
-  *     conv_id order by turn_idx)` yields the segment id; fully
-  *     Catalyst-optimizable and DuckDB-oracle-expressible.
+  * One formulation: [[assembleFsm]] repartitions by conv_id, sorts within
+  * partitions by (conv_id, turn_idx) and runs the FSM per conversation in
+  * `mapPartitions`. It handles all 4 modes and StartPattern standalone
+  * emission in one shuffle; conversations never split across partitions.
+  * The DuckDB oracles of the multiline queries derive the same records
+  * independently (a boundary window for the lag-1 modes, closed forms for
+  * the periodic fixtures), so no second Spark formulation is kept.
   *
   * End-of-batch behavior: the final open buffer is always flushed —
   * the reference's ReadOnce residual flush (tail_reader.go:229-249).
@@ -172,44 +166,5 @@ object Segments {
         spec, partitions)(_.conv_id, _.text,
         (first, idx, r, _) => first.copy(turn_idx = idx, text = r))
       .toDF()
-  }
-
-  /** Declarative boundary column. Only `ContinueThrough` and `HaltBefore`
-    * (without StartPattern) have lag-1-Markovian boundaries: in both, the
-    * closing line itself starts the next record, so "row starts a record"
-    * is a pure function of the current row (and first-ness). In
-    * `ContinuePast`/`HaltWith` the closing line is *absorbed* into the
-    * record, and the reference's empty-buffer branch
-    * (multline_reader.go:147-169) never closes — making boundaries depend
-    * on run-length parity (e.g. HaltWith over all-matching lines pairs
-    * them up). Those two modes require the FSM formulation.
-    */
-  def boundaryCol(mode: MultilineMode, condRe: String): Column = {
-    val w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    val m = col("text").rlike(condRe)
-    val first = lag(col("text"), 1).over(w).isNull
-    mode match {
-      case ContinueThrough => first || !m // non-matching line starts a record
-      case HaltBefore      => first || m  // matching line starts a record
-      case other => throw new IllegalArgumentException(
-        s"$other boundaries are not lag-expressible; use assembleFsm")
-    }
-  }
-
-  /** Window formulation (ContinueThrough/HaltBefore, no StartPattern):
-    * segment id = running sum of boundaries; records = per-(conv, segment)
-    * ordered concat. Matches [[assembleFsm]] exactly for these modes
-    * (property-tested) and is DuckDB-oracle-expressible.
-    */
-  def assembleWindow(df: DataFrame, mode: MultilineMode, condRe: String): DataFrame = {
-    val w = Window.partitionBy("conv_id").orderBy("turn_idx")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.select("conv_id", "turn_idx", "text")
-      .withColumn("seg", sum(when(boundaryCol(mode, condRe), 1).otherwise(0)).over(w) - 1)
-      .groupBy(col("conv_id"), col("seg").cast("int").as("record_idx"))
-      .agg(
-        array_join(transform(array_sort(collect_list(struct(col("turn_idx"), col("text")))),
-          s => s.getField("text")), "\n").as("record"),
-        count(lit(1)).cast("int").as("n_lines"))
   }
 }

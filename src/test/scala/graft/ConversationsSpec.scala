@@ -114,6 +114,44 @@ class ConversationsSpec extends AnyFunSuite {
     }
   }
 
+  test("fingerprintSalted ≡ fingerprint over generated conversations and bucket widths") {
+    import org.scalacheck.Gen
+    // turn indexes: dense from 0, gapped, or starting past 0 (near a
+    // 4096 boundary too), so conversations span several buckets
+    val genIdx = for {
+      n <- Gen.choose(1, 30)
+      start <- Gen.frequency(3 -> Gen.const(0), 1 -> Gen.choose(1, 10000),
+        1 -> Gen.choose(4090, 4095))
+      gaps <- Gen.oneOf(Gen.listOfN(n - 1, Gen.const(1)),
+        Gen.listOfN(n - 1, Gen.frequency(3 -> Gen.const(1),
+          1 -> Gen.choose(2, 9), 1 -> Gen.choose(100, 5000))))
+    } yield gaps.scanLeft(start)(_ + _)
+    val genText = Gen.frequency(
+      3 -> Gen.listOfN(3, Gen.alphaNumStr.map(_.take(5))).map(_.mkString(" ")),
+      1 -> Gen.const(""),
+      2 -> Gen.oneOf("héllo wörld", "日本語のテキスト", "emoji 🙂 ok", "Ωmega ∑ ≥ 0", "naïve\ttab"))
+    val genConv = genIdx.flatMap(idx => Gen.sequence[Seq[(Int, String, String)], (Int, String, String)](
+      idx.map(t => Gen.zip(Gen.oneOf("user", "assistant", "tool"), genText)
+        .map { case (r, x) => (t, r, x) })))
+    Cases.check(genConv) { convs =>
+      val rows = convs.zipWithIndex.flatMap { case (turns, i) =>
+        turns.map { case (t, r, x) => (f"case$i%04d", t, r, x) }
+      }
+      val t = rows.toDF("conv_id", "turn_idx", "role", "text")
+      def fps(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val plain = fps(Conversations.fingerprint(t))
+      Seq(1, 3, 4096).flatMap { w =>
+        val salted = fps(Conversations.fingerprintSalted(t, bucketWidth = w))
+        convs.indices.flatMap { i =>
+          val c = f"case$i%04d"
+          if (plain.contains(c) && salted.get(c) == plain.get(c)) None
+          else Some((w, c, convs(i), plain.get(c), salted.get(c)))
+        }
+      }
+    }
+  }
+
   test("fingerprintSalted: a mega-conversation folds identically") {
     val mega = (0 until 5000).map(i =>
       ("mega", i, if (i % 2 == 0) "user" else "assistant", s"turn $i words"))

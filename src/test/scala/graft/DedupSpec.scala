@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.SimHashHelper
@@ -80,41 +81,79 @@ class DedupSpec extends AnyFunSuite {
     val ex = intercept[IllegalStateException] {
       Dedup.connectedComponents(chain, maxRounds = 3).count()
     }
-    assert(ex.getMessage.contains("small-star"))
+    assert(ex.getMessage.contains("deeper than the maxRounds bound of 3 hops"))
     val labels = Dedup.connectedComponents(chain)
       .select("id", "cluster", "n_members").as[(Long, Long, Long)].collect()
     assert(labels.length == 12)
     assert(labels.forall { case (_, c, n) => c == 0L && n == 12L })
   }
 
-  test("connectedComponentsAltStar: deep chain converges in O(log n) rounds; labels match label-propagation") {
-    // a 60-node chain: min-label propagation needs ~59 rounds (over the
-    // default 50 cap); alternating stars contract it within ~log2 rounds
-    val chain = (0L until 59L).map(i => (i, i + 1)).toDF("a", "b")
-    val labels = Dedup.connectedComponentsAltStar(chain, maxRounds = 15)
-      .select("id", "cluster", "n_members").as[(Long, Long, Long)].collect()
-    assert(labels.length == 60)
-    assert(labels.forall { case (_, c, n) => c == 0L && n == 60L })
+  /** The JVM model: (id, minimum id of its component, component size) for
+    * every id of `edges`, by union-find that always links the larger root
+    * under the smaller, so each root is its component's minimum.
+    */
+  private def unionFind(edges: Seq[(Long, Long)]): Set[(Long, Long, Long)] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val root = parent.keys.map(i => i -> find(i)).toMap
+    val size = root.values.groupBy(identity).view.mapValues(_.size.toLong).toMap
+    root.map { case (i, r) => (i, r, size(r)) }.toSet
+  }
 
-    // multi-component mixed graph: alt-star and label propagation agree
-    // exactly (both converge to component minima)
+  /** A random graph over fewer than 25 local ids, so every component is
+    * far shallower than the 50-round bound: chains and cycles over random
+    * node orders, random edges and self-loops, each edge possibly reversed
+    * and possibly repeated.
+    */
+  private val genGraph: Gen[Seq[(Long, Long)]] = Gen.choose(1, 24).flatMap { n =>
+    val node = Gen.choose(0L, n - 1L)
+    val order = Gen.listOfN(n, Gen.choose(0, Int.MaxValue))
+      .map(ks => (0L until n).zip(ks).sortBy(_._2).map(_._1))
+    val chain = Gen.zip(order, Gen.choose(1, n), Gen.oneOf(false, true)).map {
+      case (o, k, closed) =>
+        val p = o.take(k)
+        p.zip(p.drop(1)) ++ (if (closed && k > 2) Seq((p.last, p.head)) else Nil)
+    }
+    val piece = Gen.frequency(
+      3 -> chain,
+      2 -> Gen.zip(node, node).map(Seq(_)),
+      1 -> node.map(x => Seq((x, x))))
+    val edge = (e: (Long, Long)) => Gen.frequency(
+      4 -> Seq(e), 2 -> Seq(e.swap), 1 -> Seq(e, e), 1 -> Seq(e, e.swap))
+    Gen.choose(1, 4).flatMap(Gen.listOfN(_, piece))
+      .flatMap(ps => Gen.sequence[Seq[Seq[(Long, Long)]], Seq[(Long, Long)]](ps.flatten.map(edge)))
+      .map(_.flatten)
+  }
+
+  test("connectedComponents matches a union-find model over random graphs") {
     val mixed = Seq(
       (1L, 2L), (2L, 3L), (3L, 1L),        // triangle
       (10L, 11L), (11L, 12L), (12L, 13L),  // path
       (20L, 21L),                          // pair
-      (30L, 30L)                           // self-loop only => singleton
-    ).toDF("a", "b")
-    def asSet(df: org.apache.spark.sql.DataFrame) =
-      df.select("id", "cluster", "n_members").as[(Long, Long, Long)].collect().toSet
-    val viaStar = asSet(Dedup.connectedComponentsAltStar(mixed))
-    val viaProp = asSet(Dedup.connectedComponents(mixed))
-    assert(viaStar == viaProp)
-    assert(viaStar.contains((13L, 10L, 4L)) && viaStar.contains((30L, 30L, 1L)))
-
-    // deterministic pseudo-random graph, many components of varied shape
-    val rand = (0L until 100L).map(i => (i, (i * i * 31 + 7) % 100)).toDF("a", "b")
-    assert(asSet(Dedup.connectedComponentsAltStar(rand))
-      == asSet(Dedup.connectedComponents(rand)))
+      (30L, 30L))                          // self-loop only => singleton
+    val span = 1000L // every case's ids lie in [i·span, (i+1)·span)
+    Cases.check(genGraph, Seq(mixed)) { cases =>
+      val shifted = cases.zipWithIndex.map { case (es, i) =>
+        es.map { case (a, b) => (a + i * span, b + i * span) }
+      }
+      // ONE connectedComponents call over every case's edges
+      val got = Dedup.connectedComponents(shifted.flatten.toDF("a", "b"))
+        .select("id", "cluster", "n_members").as[(Long, Long, Long)].collect()
+        .groupBy(_._1 / span)
+      shifted.zipWithIndex.flatMap { case (es, i) =>
+        val want = unionFind(es)
+        val have = got.getOrElse(i.toLong, Array.empty[(Long, Long, Long)]).toSet
+        if (have == want) None
+        else Some((cases(i), "missing", want -- have, "extra", have -- want))
+      }
+    }
   }
 
   test("retractSources (exact store): only the retracted source's exclusive hashes reopen") {

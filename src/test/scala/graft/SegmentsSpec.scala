@@ -6,15 +6,17 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.model.{MultilineSpec, MultilineMode}
+import graft.model.MultilineSpec
 import graft.model.MultilineMode._
 import graft.operators.Segments
 import graft.sources.Transcripts
 
-/** Distributed segment assembly vs the single-threaded FSM model, the
-  * window≡FSM equivalence for the two Markovian modes, and the metadata
-  * carried by assembleFsmRows — randomized properties ([[Cases.check]])
-  * whose fixed cases are the seeded fixtures.
+/** Distributed segment assembly vs the single-threaded FSM model and the
+  * metadata carried by assembleFsmRows — randomized properties
+  * ([[Cases.check]]) whose fixed cases are the seeded fixtures. `specs`
+  * covers all 4 modes with and without start patterns, including the
+  * mode and pattern of every multiline query over the raw transcript
+  * lines (q_multiline_haltbefore, q_multiline_fsm, q_multiline_through).
   */
 class SegmentsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -80,6 +82,7 @@ class SegmentsSpec extends AnyFunSuite {
   private val specs = Seq(
     MultilineSpec(ContinuePast, "^\\s"),
     MultilineSpec(ContinueThrough, "^\\s"),
+    MultilineSpec(ContinueThrough, "^(INFO|CALL|ask)"),
     MultilineSpec(HaltBefore, "^(INFO|CALL|ask)"),
     MultilineSpec(HaltWith, "END"),
     MultilineSpec(ContinuePast, "^\\s", startPattern = Some("^(INFO|CALL)")),
@@ -95,22 +98,6 @@ class SegmentsSpec extends AnyFunSuite {
         val got = Segments.assembleFsm(df, spec, partitions = 5)
           .as[(String, Int, String, Int)].collect().toSeq
         diff(model(spec, convs), got).map((spec, _))
-      }
-    }
-  }
-
-  test("window formulation equals FSM for ContinueThrough and HaltBefore") {
-    Cases.check(genConv, fixture(seed = 7, convs = 40, maxTurns = 20)) { convs =>
-      val df = linesDf(convs)
-      Seq(
-        (ContinueThrough: MultilineMode, "^(INFO|CALL|ask)"),
-        (HaltBefore: MultilineMode, "^(INFO|CALL|ask)")
-      ).flatMap { case (mode, re) =>
-        val win = Segments.assembleWindow(df, mode, re)
-          .select("conv_id", "record_idx", "record", "n_lines")
-        val fsm = Segments.assembleFsm(df, MultilineSpec(mode, re), partitions = 3)
-        win.exceptAll(fsm).as[(String, Int, String, Int)].collect().map(("window only", mode, _)) ++
-          fsm.exceptAll(win).as[(String, Int, String, Int)].collect().map(("fsm only", mode, _))
       }
     }
   }

@@ -5,7 +5,12 @@ Runs graft.Verify output (parquet per query + oracle_sql.json) against
 DuckDB over the same sf parquet tables; compares row count, column names
 (sorted), and value-hash like the driver does.
 
-Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [query ...]
+
+With no query names every query in oracle_sql.json is checked. With names
+(as after `graft.Verify <sfDir> <outDir> <query ...>`) exactly those are
+checked; a named query with no oracle or no dump dir is a FAIL. Any FAIL
+exits 1.
 """
 import sys, os, json, hashlib
 import duckdb
@@ -29,7 +34,7 @@ def canon(df: pd.DataFrame) -> str:
     out = out.sort_values(by=list(out.columns)).reset_index(drop=True)
     return hashlib.sha256(out.to_csv(index=False).encode()).hexdigest()
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, only=()):
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
@@ -37,8 +42,14 @@ def main(sf_dir, out_dir):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
-    for name, sql in sorted(oracle.items()):
+    for name in sorted(set(only) if only else oracle):
         spark_path = f"{out_dir}/{name}"
+        if name not in oracle or not os.path.isdir(spark_path):
+            what = "no oracle" if name not in oracle else "no dump dir"
+            print(f"FAIL {name}: {what}")
+            n_fail += 1
+            continue
+        sql = oracle[name]
         try:
             got = con.sql(f"SELECT * FROM '{spark_path}/*.parquet'").df()
             want = con.sql(sql).df()
@@ -67,4 +78,4 @@ def main(sf_dir, out_dir):
     sys.exit(1 if n_fail else 0)
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    main(sys.argv[1], sys.argv[2], sys.argv[3:])
