@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
-import graft.checkpoint.{Fingerprint, LineageStore}
+import graft.checkpoint.{CommitLog, Fingerprint, LineageStore}
 import graft.model.PipelineConfig
 import graft.operators.{Enrich, Parse, Route}
 import graft.sources.TranscriptTable
@@ -36,7 +36,8 @@ import graft.sources.TranscriptTable
   *                     drops content earlier runs delivered; invalidated
   *                     files' sources are retracted from the store first
   *  5. deliver       — ONE distributed write for every sink, partitioned by
-  *                     (sink, batch, route_key) under a per-run staging dir,
+  *                     (sink, batch, route_key) under a per-run `_tmp-*`
+  *                     staging dir (a crashed run's one ages out),
   *                     then one atomic rename per new
   *                     `<outDir>/<sink>/batch=<id>` dir. The batch id is a
   *                     pure function of ONE file's path and content hash
@@ -142,16 +143,10 @@ object Pipeline {
       cfg: PipelineConfig,
       outDir: String): RunReport = {
 
-    // isDir goes through the Hadoop FileSystem so a scheme-qualified
-    // directory include (file://, hdfs://, s3a://) classifies correctly,
-    // not just local paths; validation and the matcher share it, so they
-    // never disagree about what an include names
-    val hadoopIsDir: String => Boolean = p => try {
-      val hp = new Path(p)
-      hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getFileStatus(hp).isDirectory
-    } catch { case _: Exception => false }
-    cfg.validate(hadoopIsDir).left.foreach(err => throw new IllegalArgumentException(err))
+    // validation and the matcher share the one directory test, over the
+    // session's Hadoop configuration
+    val isDir = operators.PathFilter.isDir(spark.sparkContext.hadoopConfiguration)
+    cfg.validate(isDir).left.foreach(err => throw new IllegalArgumentException(err))
     val runId = java.util.UUID.randomUUID().toString.take(12)
 
     val snapId = table.currentSnapshotId.getOrElse(
@@ -160,7 +155,7 @@ object Pipeline {
     // analogue of the watcher's walk filter (watcher.go:173-179). The
     // manifest is driver-side metadata, so the compiled matcher runs here;
     // PathFilter.column is the distributed twin for path columns.
-    val pathSpec = operators.PathFilter.compile(cfg.include, cfg.exclude, hadoopIsDir)
+    val pathSpec = operators.PathFilter.compile(cfg.include, cfg.exclude, isDir)
     val files = table.filesAt(snapId)
       .filter(f => operators.PathFilter.matches(pathSpec, f))
 
@@ -291,14 +286,11 @@ object Pipeline {
     locally {
       val fsRoot = new Path(outDir)
       val fs = fsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-      // leftover staging dirs from a crashed earlier run are never commit
-      // targets (each run stages under a fresh runId) — clear them so they
-      // cannot accumulate orphan data under the sink root
-      if (fs.exists(fsRoot))
-        fs.listStatus(fsRoot).map(_.getPath)
-          .filter(_.getName.startsWith("_staging-"))
-          .foreach(p => fs.delete(p, true))
+      // the sink root's commits are the `<sink>/batch=<id>` dirs one level
+      // down, published below; its log stages each run under a `_tmp-*`
+      // dir and ages out the ones a crashed run left
+      val sinkLog = new CommitLog(fs, fsRoot, "batch=")
+      sinkLog.sweep()
 
       // an invalidated file's OLD content dirs are superseded — remove them
       // so sink totals always reflect the latest content exactly once
@@ -342,8 +334,7 @@ object Pipeline {
             .toSet
         todo.map(bids).filterNot(existing).map(rule.name -> _)
       }
-      if (pending.nonEmpty) {
-        val staging = new Path(fsRoot, s"_staging-$runId")
+      if (pending.nonEmpty) sinkLog.scratch(runId) { staging =>
         // an upstream shuffle (dedup, multiline) spreads every batch over
         // all shuffle partitions, and each partition would write its own
         // file into every (sink, batch, route_key) dir: re-cluster by
@@ -390,7 +381,6 @@ object Pipeline {
             require(fs.rename(src, dest),
               s"sink commit rename failed for $sink/batch=$b")
         }
-        fs.delete(staging, true)
       }
 
       // Wire sinks (rule.url set) additionally POST the just-committed rows

@@ -4,46 +4,120 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** The on-disk protocol every persisted dir-per-commit store shares — the
-  * engine's analogue of freader's single offsets upsert
-  * (internal/store/sqlite_store.go:104-119), spelled as directories:
+/** The on-disk protocol every persisted store shares — the engine's
+  * analogue of freader's single offsets upsert
+  * (internal/store/sqlite_store.go:104-119), spelled as directories. It is
+  * the only code that renames, retires or deletes a store's commits,
+  * manifests and `_tmp-*` dirs; every store follows one rule:
   *
-  *  - a commit is written under `_tmp-<id>` and published by ONE rename to
-  *    `<prefix><id>` — the commit point; a crash mid-write leaves only an
-  *    unread `_tmp-*` dir, never partial state;
-  *  - the store's content is the union of its [[live]] dirs; a store
-  *    supersedes dirs either by deleting them or by [[retire]]-marking them
-  *    (readers skip marked dirs, the [[sweep]] deletes them later);
-  *  - mutations that rewrite live dirs serialize under [[withLock]].
+  *  - publish: a commit is written under a fresh `_tmp-*` dir (or file)
+  *    and published by ONE rename ([[commit]], [[putFile]],
+  *    [[publishFiles]]) — the commit point; a crash mid-write leaves only
+  *    an unread `_tmp-*`, never partial state;
+  *  - rewrite: compaction, prune and retraction write ONE fresh commit
+  *    under the lease ([[withLock]]) and then retire their sources
+  *    ([[replace]], [[compact]]); the store's content is the union of its
+  *    [[live]] commits, and a retired commit drops out of it at once but
+  *    stays physically intact, so a reader may run during any rewrite: a
+  *    DataFrame read before it keeps reading the files its plan pinned;
+  *  - clean up: crash leftovers and retired commits age out through
+  *    [[sweep]].
   *
   * Layout (byte-identical to the stores' hand-written predecessors, so
   * existing stores read unchanged):
-  * `<root>/<prefix><id>/`, `<root>/_tmp-<id>/`, `<root>/<prefix><id>/_retired`,
-  * `<root>/_lock`, and store-level files `<root>/_<name>` ([[putFile]]).
+  * `<root>/<prefix><label>-<id>/`, `<root>/_tmp-*`,
+  * `<root>/<prefix><label>-<id>/_retired`, `<root>/_lock`, and store-level
+  * files `<root>/<name>` ([[putFile]]).
   */
 private[graft] final class CommitLog(val fs: FileSystem, val root: Path, prefix: String) {
   import CommitLog._
 
-  /** Committed dirs without a `_retired` marker, sorted by name. */
+  /** Published commits without a `_retired` marker, sorted by name. A
+    * commit is a dir ([[commit]]) or a file ([[putFile]]); only a dir can
+    * carry the marker.
+    */
   def live: Seq[Path] =
     if (!fs.exists(root)) Nil
-    else fs.listStatus(root).toSeq.map(_.getPath)
-      .filter(p => p.getName.startsWith(prefix) &&
-        !fs.exists(new Path(p, RetiredMarker)))
-      .sortBy(_.getName)
+    else fs.listStatus(root).toSeq
+      .filter(st => st.getPath.getName.startsWith(prefix) &&
+        (st.isFile || !fs.exists(new Path(st.getPath, RetiredMarker))))
+      .map(_.getPath).sortBy(_.getName)
 
-  /** Atomic publish: `write` fills `_tmp-<id>`, then one rename makes it
-    * `<prefix><id>`. A `write` that returns false abandons the commit: its
-    * `_tmp-<id>` is deleted and nothing is published. Returns whether the
-    * commit was published.
+  /** Atomic publish: `write` fills a fresh `_tmp-*` dir, then one rename
+    * makes it `<prefix><label>-<fresh id>`. The fresh id keeps every commit
+    * out of every other: Hadoop's local `rename` of a dir onto an existing
+    * non-empty dir moves it INSIDE that dir, where readers skip it as
+    * hidden, so no commit may target a name that can exist. A `write` that
+    * returns false abandons the commit: its tmp dir is deleted and nothing
+    * is published. Returns whether the commit was published.
     */
-  def commit(id: String)(write: Path => Boolean): Boolean = {
+  def commit(label: String)(write: Path => Boolean): Boolean = {
+    val id = s"$label-${freshId()}"
     val tmp = new Path(root, s"_tmp-$id")
     val dest = new Path(root, s"$prefix$id")
     if (!write(tmp)) { fs.delete(tmp, true); false }
     else {
       require(fs.rename(tmp, dest), s"commit rename $tmp -> $dest failed")
       true
+    }
+  }
+
+  /** Supersede `sources` by ONE fresh commit that `write` fills from them:
+    * the commit lands first and only then do the sources retire, so a
+    * crash in between leaves duplicates (which every store reads as
+    * harmless), never a hole. A `write` that returns false publishes
+    * nothing, and the sources still retire: a rewrite that keeps no row.
+    * The caller holds the lease ([[withLock]]) and listed and read
+    * `sources` under it, so no other rewrite changed them meanwhile.
+    *
+    * A retired dir carries a `_retired` marker (the leading `_` keeps
+    * parquet readers ignoring it): it drops out of [[live]] at once but
+    * stays physically intact until the [[sweep]], so a concurrent reader
+    * whose plan pinned its file paths never hits a deleted file mid-scan.
+    */
+  def replace(sources: Seq[Path])(write: Path => Boolean): Unit = {
+    commit("rewrite")(write)
+    sources.foreach(d => fs.create(new Path(d, RetiredMarker), true).close())
+  }
+
+  /** Past-N compaction: when more than `maxDirs` commits are live, all of
+    * them merge into one ([[replace]]), `merge(dirs)` writing it. The count
+    * is first checked without the lease, so a store within its bound takes
+    * none; the lease holder lists again before it merges.
+    */
+  def compact(maxDirs: Int)(merge: Seq[Path] => Path => Boolean): Unit =
+    if (live.size > maxDirs) withLock {
+      val dirs = live
+      if (dirs.size > maxDirs) replace(dirs)(merge(dirs))
+    }
+
+  /** Run `body` over a fresh scratch dir `_tmp-<label>-<id>`, deleted once
+    * `body` returns or throws; a crash leaves it to [[sweep]]. For writes
+    * that publish piecewise out of the scratch dir rather than by one
+    * rename of it.
+    */
+  def scratch[T](label: String)(body: Path => T): T = {
+    val tmp = new Path(root, s"_tmp-$label-${freshId()}")
+    try body(tmp) finally fs.delete(tmp, true)
+  }
+
+  /** Publish the data files `write` leaves in a scratch dir, each by one
+    * rename into `dest` as `<id>-<name>` under one fresh id; returns their
+    * paths, sorted. Hidden files (`_*`, `.*`: job markers, checksums) are
+    * not data and stay behind.
+    */
+  def publishFiles(dest: Path)(write: Path => Unit): Seq[Path] = {
+    val id = freshId()
+    scratch(id) { tmp =>
+      write(tmp)
+      fs.mkdirs(dest)
+      fs.listStatus(tmp).toSeq.map(_.getPath)
+        .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+        .map { p =>
+          val to = new Path(dest, s"$id-${p.getName}")
+          require(fs.rename(p, to), s"publish rename $p -> $to failed")
+          to
+        }.sortBy(_.toString)
     }
   }
 
@@ -62,8 +136,8 @@ private[graft] final class CommitLog(val fs: FileSystem, val root: Path, prefix:
   }
 
   /** Publish the store-level file `<root>/<name>` atomically: written under
-    * `_tmp-<id>` and renamed, so a crash leaves the whole file or none (the
-    * leftover is swept like any `_tmp-*`). Returns false, publishing
+    * a fresh `_tmp-*` and renamed, so a crash leaves the whole file or none
+    * (the leftover is swept like any `_tmp-*`). Returns false, publishing
     * nothing, when `<root>/<name>` already exists — another writer got
     * there first.
     */
@@ -91,28 +165,22 @@ private[graft] final class CommitLog(val fs: FileSystem, val root: Path, prefix:
         text.getBytes(StandardCharsets.UTF_8), java.nio.file.StandardOpenOption.CREATE_NEW)
     else write(p, text, overwrite = false)
 
-  /** Supersede `dir` in place: it drops out of [[live]] at once but stays
-    * physically intact until the [[sweep]], so a concurrent reader whose
-    * plan pinned its file paths never hits a deleted file mid-scan. The
-    * leading `_` keeps parquet readers ignoring the marker.
-    */
-  def retire(dir: Path): Unit = fs.create(new Path(dir, RetiredMarker), true).close()
-
-  /** Serialize store MUTATIONS (compaction, retraction) against each
-    * other: both rewrite-and-supersede live dirs, and unserialized they can
-    * resurrect retracted rows (a compaction that listed dirs before a
-    * concurrent retraction rewrote them merges the pre-retraction rows
-    * back in). A `_lock` file at the store root is the lease: an exclusive
-    * create acquires it ([[createExclusive]]), so of several contenders
-    * exactly one holds it at a time; it is deleted to release.
+  /** Serialize store REWRITES (compaction, prune, retraction) against each
+    * other: each rewrites-and-supersedes live commits, and unserialized
+    * they can resurrect removed rows (a compaction that listed dirs before
+    * a concurrent retraction rewrote them merges the pre-retraction rows
+    * back in). Ordinary commits and reads never take it. A `_lock` file at
+    * the store root is the lease: an exclusive create acquires it
+    * ([[createExclusive]]), so of several contenders exactly one holds it
+    * at a time; it is deleted to release.
     *
     * Ownership and liveness (nothing here may break a LIVE lease — a
     * broken live lease is exactly the resurrection this lock prevents):
     *
-    *  - the lock file carries the holder's unique TOKEN, and release
-    *    deletes the lock only while it still holds that token — a waiter
-    *    that (wrongly or rightly) re-took the path is never un-locked by
-    *    the previous holder's `finally`;
+    *  - the lock file carries the holder's unique TOKEN and the time it was
+    *    taken, and release deletes the lock only while it still holds that
+    *    text — a waiter that (wrongly or rightly) re-took the path is never
+    *    un-locked by the previous holder's `finally`;
     *  - the holder HEARTBEATS the lock's mtime on a daemon thread every
     *    [[LockHeartbeatMs]], so "stale" ([[LockStaleMs]] without a touch)
     *    means a dead holder, not a long Spark job inside the lease;
@@ -121,20 +189,22 @@ private[graft] final class CommitLog(val fs: FileSystem, val root: Path, prefix:
     *    wins the rename, so two waiters can never both "free" the path
     *    and both acquire;
     *  - a waiter never breaks a live lease; if one is still held past the
-    *    acquire timeout it THROWS rather than proceeding unserialized.
-    *
-    * Readers never take the lock: retention-delayed retirement already
-    * keeps their pinned files alive.
+    *    acquire timeout it THROWS rather than proceeding unserialized;
+    *  - a wait past [[LockWaitReportMs]] prints one stderr line naming the
+    *    lock, the holder's token and the lease's age, so a stalled run
+    *    leaves evidence of what it waited for.
     */
   def withLock[T](body: => T): T = {
     fs.mkdirs(root)
     val lock = new Path(root, "_lock")
     val token = java.util.UUID.randomUUID().toString
-    val giveUpAt = System.currentTimeMillis() + 10L * 60 * 1000
+    val started = System.currentTimeMillis()
+    val holder = s"$token $started"
     var acquired = false
+    var reported = false
     while (!acquired) {
       try {
-        createExclusive(lock, token)
+        createExclusive(lock, holder)
         acquired = true
       } catch {
         case _: java.io.IOException =>
@@ -146,11 +216,22 @@ private[graft] final class CommitLog(val fs: FileSystem, val root: Path, prefix:
             val broken = new Path(root, s"_lock.broken-$token")
             try { if (fs.rename(lock, broken)) fs.delete(broken, false) }
             catch { case _: java.io.IOException => () }
-          } else if (now > giveUpAt)
+          } else if (now - started > LockGiveUpMs)
             throw new IllegalStateException(
               s"store lock $lock still held live after the acquire " +
                 "timeout; refusing to mutate unserialized")
-          else Thread.sleep(200)
+          else {
+            if (!reported && now - started > LockWaitReportMs) {
+              reported = true
+              val held = (try read(lock) catch { case _: java.io.IOException => None })
+                .getOrElse("").split(" ")
+              val age = held.lift(1).flatMap(_.toLongOption)
+                .fold("unknown")(t => s"${(now - t) / 1000} s")
+              System.err.println(s"graft: waited ${(now - started) / 1000} s for store lock " +
+                s"$lock, held by ${held(0)}, lease age $age")
+            }
+            Thread.sleep(200)
+          }
       }
     }
     @volatile var done = false
@@ -160,7 +241,7 @@ private[graft] final class CommitLog(val fs: FileSystem, val root: Path, prefix:
         try fs.setTimes(lock, System.currentTimeMillis(), -1)
         catch {
           case _: java.io.IOException => // fs without setTimes: rewrite
-            try write(lock, token) catch { case _: java.io.IOException => () }
+            try write(lock, holder) catch { case _: java.io.IOException => () }
         }
         try Thread.sleep(LockHeartbeatMs)
         catch { case _: InterruptedException => interrupted = true }
@@ -171,19 +252,18 @@ private[graft] final class CommitLog(val fs: FileSystem, val root: Path, prefix:
     try body finally {
       done = true
       hb.interrupt()
-      try { if (read(lock).contains(token)) fs.delete(lock, false) }
+      try { if (read(lock).contains(holder)) fs.delete(lock, false) }
       catch { case _: java.io.IOException => () }
     }
   }
 
-  /** Sweep crash leftovers and expired retirements: `_tmp-*` dirs are
-    * never read and every commit gets a fresh id, so a long crash-prone
-    * campaign must not accrete them — the sink root's `_staging-*` sweep,
-    * applied here. Retired dirs physically delete here too. Only items
-    * OLDER than an hour go: a commit in flight from another writer sharing
-    * the store finishes in seconds, and a concurrent reader's pinned plan
-    * over a just-retired dir drains long before the retention window
-    * closes.
+  /** Sweep crash leftovers and expired retirements: `_tmp-*` entries are
+    * never read and every publish gets a fresh name, so a long crash-prone
+    * campaign must not accrete them; retired commits physically delete
+    * here too. Only items OLDER than an hour go: a publish in flight from
+    * another writer sharing the store finishes in seconds, and a
+    * concurrent reader's pinned plan over a just-retired dir drains long
+    * before the retention window closes.
     */
   def sweep(): Unit =
     if (fs.exists(root)) {
@@ -205,10 +285,12 @@ private[graft] object CommitLog {
   private val RetiredMarker = "_retired"
   private val LockHeartbeatMs = 20L * 1000
   private val LockStaleMs = 5L * 60 * 1000
+  private val LockGiveUpMs = 10L * 60 * 1000
+  private val LockWaitReportMs = 30L * 1000
   private val RetentionMs = 60L * 60 * 1000
 
-  /** A fresh commit id: every commit gets its own, so two writers sharing
-    * a store never collide on `_tmp-<id>` or `<prefix><id>`.
+  /** A fresh id: every publish gets its own, so two writers sharing a
+    * store never collide on a `_tmp-*` or a commit name.
     */
-  def freshId(): String = java.util.UUID.randomUUID().toString.take(8)
+  private def freshId(): String = java.util.UUID.randomUUID().toString.take(8)
 }

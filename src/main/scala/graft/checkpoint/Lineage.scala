@@ -3,7 +3,7 @@ package graft.checkpoint
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** One committed lineage entry: data file × sink, the engine's analogue of
@@ -31,24 +31,27 @@ final case class LineageEntry(
     committedAtMs: Long)
 
 /** Lineage checkpoint store as a PARQUET TABLE: one atomic commit
-  * directory per run (`commit-<id>/`, written distributed by Spark and
-  * published by one [[CommitLog]] rename), so committing a run's entries
-  * never funnels per-file rows through the driver — at ~800k data files ×
-  * S sinks the entries are themselves a dataset. Readers take the union of
-  * all commit dirs; duplicates per (file, sink) resolve last-writer-wins
-  * by `committedAtMs` (Pipeline.run), which is what makes every mutation
-  * here crash-safe: additions and compactions both land as a whole
-  * directory rename, and a crash between steps only ever leaves
-  * superseded duplicates, never a hole. Superseded dirs are deleted at
-  * once (the dedup seen-store retires them instead), so the physical
-  * `commit-*` count is the store's size.
+  * directory per run (`commit-<runId>-<id>/`, written distributed by Spark
+  * and published by one [[CommitLog]] rename), so committing a run's
+  * entries never funnels per-file rows through the driver — at ~800k data
+  * files × S sinks the entries are themselves a dataset. Readers take the
+  * union of the live commit dirs; duplicates per (file, sink) resolve
+  * last-writer-wins by `committedAtMs` (Pipeline.run), which is what makes
+  * every mutation here crash-safe: additions and rewrites both land as a
+  * whole directory rename, and a crash between steps only ever leaves
+  * superseded duplicates, never a hole. Compaction and [[pruneTo]] follow
+  * the [[CommitLog]] rewrite rule — one fresh commit under the store lease,
+  * then the sources retire — so readers may run during any rewrite: a
+  * DataFrame from [[entriesDf]] keeps reading the files its plan pinned
+  * until the retention sweep. Ordinary commits and reads take no lease.
   */
 final class LineageStore(spark: SparkSession, root: String,
     maxCommitDirs: Int = 16) {
-  private val conf = spark.sparkContext.hadoopConfiguration
-  private val rootPath = new Path(root)
-  private def fs: FileSystem = rootPath.getFileSystem(conf)
-  private def log = new CommitLog(fs, rootPath, "commit-")
+  private val log = {
+    val rootPath = new Path(root)
+    new CommitLog(rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      rootPath, "commit-")
+  }
 
   /** All committed entries as a DataFrame (LineageEntry schema).
     *
@@ -100,67 +103,50 @@ final class LineageStore(spark: SparkSession, root: String,
   /** Distributed atomic commit: Spark writes the entries, then one rename
     * publishes the commit — the WAL commit point. Sweeps crash leftovers
     * first. `df` must have the LineageEntry schema.
+    *
+    * Size-triggered compaction follows: a long-lived store otherwise
+    * accrues one `commit-*` dir per run, so the reader-side union grows
+    * O(runs) — unlike the reference's SQLite upsert, which never grows
+    * (internal/store/sqlite_store.go:104-119). Past `maxCommitDirs` live
+    * dirs, every live dir merges into ONE fresh commit
+    * ([[CommitLog.compact]]). Row-preserving (duplicates resolve
+    * last-writer-wins at read, as always); entriesOf, not a raw read,
+    * normalizes old-schema dirs.
     */
   def commitDf(df: org.apache.spark.sql.DataFrame, commitId: String): Unit = {
     log.sweep()
-    writeCommit(df, commitId)
-    compactIfNeeded()
+    log.commit(commitId)(writeEntries(df, _))
+    log.compact(maxCommitDirs)(dirs => writeEntries(entriesOf(dirs), _))
   }
 
-  private def writeCommit(df: org.apache.spark.sql.DataFrame, commitId: String): Unit =
-    log.commit(commitId) { tmp =>
-      // fixed column order so every commit dir carries the identical schema
-      val cols = Seq("runId", "snapshotId", "file", "sink", "rowsDelivered",
-        "rowsFailed", "contentHash", "committedAtMs")
-      df.select(cols.map(org.apache.spark.sql.functions.col): _*)
-        .write.mode("overwrite").parquet(tmp.toString)
-      true
-    }
-
-  /** Replace `sources` by ONE fresh commit holding `merged`: the merged
-    * dir lands first and only then are the sources deleted, so a crash in
-    * between leaves duplicate entries (harmless, last-writer-wins), never
-    * a hole. `merged` must be derived from [[entriesOf]]`(sources)`.
-    */
-  private def replace(sources: Seq[Path], merged: org.apache.spark.sql.DataFrame): Unit = {
-    writeCommit(merged, s"compact-${CommitLog.freshId()}")
-    sources.foreach(p => fs.delete(p, true))
-  }
-
-  /** Size-triggered compaction: a long-lived store otherwise accrues one
-    * `commit-*` dir per run, so the reader-side union grows O(runs) —
-    * unlike the reference's SQLite upsert, which never grows
-    * (internal/store/sqlite_store.go:104-119). When the dir count exceeds
-    * `maxCommitDirs`, merge every current dir into ONE fresh commit.
-    * Row-preserving (duplicates resolve last-writer-wins at read, as
-    * always); entriesOf, not a raw read, normalizes old-schema dirs.
-    */
-  private def compactIfNeeded(): Unit = {
-    val dirs = log.live
-    if (dirs.size > maxCommitDirs) replace(dirs, entriesOf(dirs))
+  private def writeEntries(df: org.apache.spark.sql.DataFrame, tmp: Path): Boolean = {
+    // fixed column order so every commit dir carries the identical schema
+    val cols = Seq("runId", "snapshotId", "file", "sink", "rowsDelivered",
+      "rowsFailed", "contentHash", "committedAtMs")
+    df.select(cols.map(org.apache.spark.sql.functions.col): _*)
+      .write.mode("overwrite").parquet(tmp.toString)
+    true
   }
 
   /** Remove entries for files no longer present (J4 removal set-difference,
-    * mirroring offset Delete on file removal — collector.go:206-214),
-    * through the same crash-safe [[replace]] as compaction. Not followed
-    * by an auto-compaction, which would merge the about-to-be-deleted
-    * source dirs and let the pruned entries survive their own prune.
-    * Returns removed entries.
+    * mirroring offset Delete on file removal — collector.go:206-214): under
+    * the store lease, the live dirs are read and, when any entry goes, ONE
+    * fresh commit of the kept entries replaces them ([[CommitLog.replace]]).
+    * Not followed by an auto-compaction: the replacement already is the
+    * store's one live dir. Returns removed entries.
     */
   def pruneTo(liveFiles: Set[String]): Seq[LineageEntry] = {
     import spark.implicits._
     import org.apache.spark.sql.functions.broadcast
-    val old = log.live
-    if (old.isEmpty) return Seq.empty
-    val liveDf = spark.createDataset(liveFiles.toSeq).toDF("file")
-    val all = entriesOf(old)
-    val drop = all.join(broadcast(liveDf), Seq("file"), "left_anti")
-      .select("runId", "snapshotId", "file", "sink", "rowsDelivered",
-        "rowsFailed", "contentHash", "committedAtMs")
-      .as[LineageEntry].collect().toSeq
-    if (drop.nonEmpty)
-      replace(old, all.join(broadcast(liveDf), Seq("file"), "left_semi"))
-    drop
+    log.withLock {
+      val old = log.live
+      val liveDf = broadcast(spark.createDataset(liveFiles.toSeq).toDF("file"))
+      val all = entriesOf(old)
+      val drop = all.join(liveDf, Seq("file"), "left_anti").as[LineageEntry].collect().toSeq
+      if (drop.nonEmpty)
+        log.replace(old)(writeEntries(all.join(liveDf, Seq("file"), "left_semi"), _))
+      drop
+    }
   }
 }
 

@@ -93,10 +93,10 @@ object ConfigLoader {
   /** Load with viper's precedence: defaults < file < env < flags. Flag keys
     * are the reference's flag names (`include`, `exclude`, `separator`, …)
     * or full dotted keys; values are raw strings (arrays comma-split, like
-    * pflag StringSlice). Loading has no Spark session, so include roots are
-    * classified by the local filesystem (`PathFilter.localIsDir`);
-    * `Pipeline.run` re-validates them through the Hadoop FileSystem, which
-    * also classifies scheme-qualified directories.
+    * pflag StringSlice). Include roots are classified by
+    * `PathFilter.isDir` over a plain Hadoop `Configuration` (loading has no
+    * Spark session); `Pipeline.run` re-validates them with the same test
+    * over the session's configuration.
     */
   def load(
       file: Option[String] = None,

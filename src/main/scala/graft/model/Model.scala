@@ -191,7 +191,8 @@ final case class PipelineConfig(
     batchRetries: Int = 0
 ) {
   def validate(
-      isDir: String => Boolean = graft.operators.PathFilter.localIsDir
+      isDir: String => Boolean =
+        graft.operators.PathFilter.isDir(new org.apache.hadoop.conf.Configuration())
   ): Either[String, PipelineConfig] =
     if (sinks.isEmpty) Left("at least one sink is required")
     else if (sinks.map(_.name).distinct.size != sinks.size)

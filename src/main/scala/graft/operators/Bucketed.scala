@@ -24,7 +24,9 @@ import graft.functions.Hashing
   * retraction/provenance machinery (`Dedup.retractSources`), and fix their
   * bucket count at write time — so this is the read-mostly, append-rarely
   * layout; the directory store remains the mutating one. Both key on the
-  * same [[Hashing.sha60]] content hash.
+  * same [[Hashing.sha60]] content hash. It is the one persisted layout
+  * outside [[graft.checkpoint.CommitLog]]: a catalog table written whole
+  * by overwrite has no commit, supersede or sweep step to share.
   *
   * Reference role: the committed-offset store of
   * internal/file_tracker/file_tracker.go re-expressed as a co-located

@@ -91,11 +91,11 @@ object Dedup {
   val StoreBands = 4
   val StoreRowsPerBand = 2
 
-  /** The seen-store's commit log: `seen-<id>` dirs, superseded ones
-    * retired rather than deleted (a concurrent reader whose plan pinned
-    * their files — the streaming near-dup stage shares the store with
-    * batch runs, streaming/TranscriptStream.scala — never hits a deleted
-    * file mid-scan).
+  /** The seen-store's commit log: `seen-*` dirs, superseded ones retired
+    * rather than deleted (a concurrent reader whose plan pinned their
+    * files — the streaming near-dup stage shares the store with batch
+    * runs, streaming/TranscriptStream.scala — never hits a deleted file
+    * mid-scan).
     */
   private def seenLog(fs: FileSystem, root: Path) = new CommitLog(fs, root, "seen-")
 
@@ -198,65 +198,55 @@ object Dedup {
   private def bandsOf(hs: Column, bands: Int, rowsPerBand: Int): Column =
     column(MinhashBands(expression(hs), bands, rowsPerBand))
 
-  /** Publish `rows` as one store commit with its `_srcs` manifest. The
+  /** Write `rows` into the commit dir `tmp` with its `_srcs` manifest;
+    * whether any row was written, so that zero rows publish nothing. The
     * write is the only Spark job: the row count and the distinct non-null
     * srcs are observed on it ([[graft.metrics.Metrics.observedOrCounted]]).
-    * Zero rows publish nothing.
     */
-  private def publish(log: CommitLog, rows: DataFrame): Unit = {
+  private def writeSeen(log: CommitLog, rows: DataFrame)(tmp: Path): Boolean = {
     val aggs = Seq(count(lit(1)).as("n"), collect_set(col("src")).as("srcs"))
     val obs = new Observation()
-    log.commit(CommitLog.freshId()) { tmp =>
-      rows.observe(obs, aggs.head, aggs.tail: _*)
-        .write.mode("overwrite").parquet(tmp.toString)
-      val m = graft.metrics.Metrics.observedOrCounted(obs, rows, aggs)
-      val n = m("n").asInstanceOf[Long]
-      if (n > 0) log.write(new Path(tmp, SrcsManifest),
-        encSrcs(m("srcs").asInstanceOf[scala.collection.Seq[String]]))
-      n > 0
-    }
+    rows.observe(obs, aggs.head, aggs.tail: _*)
+      .write.mode("overwrite").parquet(tmp.toString)
+    val m = graft.metrics.Metrics.observedOrCounted(obs, rows, aggs)
+    val n = m("n").asInstanceOf[Long]
+    if (n > 0) log.write(new Path(tmp, SrcsManifest),
+      encSrcs(m("srcs").asInstanceOf[scala.collection.Seq[String]]))
+    n > 0
   }
 
-  /** Stage-time store upkeep, under the store lease
-    * ([[CommitLog.withLock]]), after a sweep of crash leftovers:
+  /** Stage-time store upkeep, after a sweep of crash leftovers:
     *
-    *  - identity: the first stage of a store writes `_meta`; a later stage
-    *    whose identity differs fails ([[requireSame]]), and so does any
-    *    stage of a store from before format 2 ([[readMeta]]);
-    *  - compaction: past `maxDirs` live dirs (a long campaign otherwise
-    *    accretes one `seen-*` dir per batch, and every later stage lists
-    *    and unions all of them), every live dir merges into one, duplicate
-    *    rows dropped, and only then do the sources retire; a crash in
-    *    between leaves duplicate rows (harmless — every reader is an
-    *    anti-join or a verification join), never a hole.
+    *  - identity: the first stage of a store writes `_meta`, under the
+    *    store lease ([[CommitLog.withLock]]); a later stage whose identity
+    *    differs fails ([[requireSame]]), and so does any stage of a store
+    *    from before format 2 ([[readMeta]]);
+    *  - compaction ([[CommitLog.compact]]): past `maxDirs` live dirs (a
+    *    long campaign otherwise accretes one `seen-*` dir per batch, and
+    *    every later stage lists and unions all of them), every live dir
+    *    merges into one, duplicate rows dropped, and only then do the
+    *    sources retire; a crash in between leaves duplicate rows
+    *    (harmless — every reader is an anti-join or a verification join),
+    *    never a hole.
     *
-    * Runs at STAGE time, before the batch's read plans are built: a
-    * staged batch's `fresh` plan pins the store dirs it was staged
-    * against, so superseding those dirs at commit time would break a
-    * caller that (correctly) consumes `fresh` after `commit()`. Returns
-    * the store's rows for those plans.
+    * Runs at STAGE time, before the batch's read plans are built, so a
+    * batch's plans never read a dir its own stage is about to supersede.
+    * Returns the store's rows for those plans.
     */
   private def openSeen(spark: SparkSession, log: CommitLog, meta: Meta,
       maxDirs: Int): DataFrame = {
     val schema = seenSchema(meta)
     log.sweep()
-    log.withLock {
-      readMeta(log) match {
-        case Some(have) => requireSame(log.root, have, meta)
-        // only the lease holder publishes _meta, and it found none
-        case None =>
-          require(log.putFile(MetaFile, meta.map { case (k, v) => s"$k=$v" }.mkString("\n")),
-            s"seen-store ${log.root}: _meta appeared while the lease was held")
-      }
-      val dirs = log.live
-      if (dirs.size > maxDirs) {
-        // the merge's distinct exchange lets adaptive execution size the
-        // merged files: one file for a fixture-sized store, advisory-sized
-        // ones for a large one, instead of one file per source partition
-        publish(log, rowsOf(spark, dirs, schema).distinct())
-        dirs.foreach(log.retire)
-      }
+    if (readMeta(log).isEmpty) log.withLock {
+      // read again under the lease: a concurrent first stage may have won
+      if (readMeta(log).isEmpty)
+        log.putFile(MetaFile, meta.map { case (k, v) => s"$k=$v" }.mkString("\n"))
     }
+    requireSame(log.root, readMeta(log).get, meta)
+    // the merge's distinct exchange lets adaptive execution size the
+    // merged files: one file for a fixture-sized store, advisory-sized
+    // ones for a large one, instead of one file per source partition
+    log.compact(maxDirs)(dirs => writeSeen(log, rowsOf(spark, dirs, schema).distinct()))
     rowsOf(spark, log.live, schema)
   }
 
@@ -302,8 +292,9 @@ object Dedup {
       .withColumn("__h60", Hashing.sha60(col(textCol)))
       .join(stored.select(col("content_h60").as("__h60")), Seq("__h60"), "left_anti")
       .cache()
-    val commit = () =>
-      try publish(log, fresh.select(col("__h60").as("content_h60"), srcOf(srcCol)))
+    val commit: () => Unit = () =>
+      try log.commit("batch")(writeSeen(log, fresh.select(col("__h60").as("content_h60"),
+        srcOf(srcCol))))
       finally fresh.unpersist(false)
     IncrementalBatch(fresh.drop("__h60"), commit)
   }
@@ -401,9 +392,10 @@ object Dedup {
       .select(when(col("__self"), col("b")).otherwise(col("a")).as(idCol))
       .distinct()
     val fresh = unseen.join(dropped, Seq(idCol), "left_anti").cache()
-    val commit = () =>
-      try publish(log, fresh.select(col(idCol).as("id"), col("__h60").as("content_h60"),
-        col("__hs").as("hs"), col("__bh").as("bh"), srcOf(srcCol)))
+    val commit: () => Unit = () =>
+      try log.commit("batch")(writeSeen(log, fresh.select(col(idCol).as("id"),
+        col("__h60").as("content_h60"), col("__hs").as("hs"), col("__bh").as("bh"),
+        srcOf(srcCol))))
       finally { fresh.unpersist(false); unseen.unpersist(false) }
     IncrementalBatch(fresh.drop("__h60", "__hs", "__bh"), commit)
   }
@@ -419,13 +411,12 @@ object Dedup {
     * `_srcs` provenance manifest, and a dir whose manifest is disjoint
     * from the retracted set is left byte-for-byte untouched (a dir without
     * a manifest is conservatively rewritten). Each affected dir is rewritten —
-    * one read with the store schema, one write — as its own
-    * atomically-renamed fresh commit (none when no row survives), and the
-    * old dir is RETIRED (marker file, retention-delayed delete — see
-    * [[listSeen]]) rather than deleted, so a concurrent reader whose plan
-    * pinned the old files keeps reading them; the whole pass holds the
-    * store mutation lease ([[CommitLog.withLock]]) so a concurrent
-    * compaction cannot merge pre-retraction rows back in. A crash between
+    * one read with the store schema, one write — as its own fresh commit
+    * that supersedes it ([[CommitLog.replace]]: none is published when no
+    * row survives, and the old dir is RETIRED, so a concurrent reader whose
+    * plan pinned the old files keeps reading them); the whole pass holds
+    * the store lease ([[CommitLog.withLock]]) so a concurrent compaction
+    * cannot merge pre-retraction rows back in. A crash between
     * a rewrite commit and its retire leaves the old dir live beside its
     * rewrite — never a hole, and running the retraction again converges
     * to the uninterrupted answer: the old dir is rewritten again, its
@@ -450,9 +441,8 @@ object Dedup {
         log.live.filter(d => log.read(new Path(d, SrcsManifest)).map(decSrcs)
             .forall(_.exists(srcSet))).foreach { d =>
           // a rewrite is 1:1 with the dir it replaces: no exchange
-          publish(log, rowsOf(spark, Seq(d), seenSchema(meta))
-            .filter(col("src").isNull || !col("src").isin(sources: _*)))
-          log.retire(d)
+          log.replace(Seq(d))(writeSeen(log, rowsOf(spark, Seq(d), seenSchema(meta))
+            .filter(col("src").isNull || !col("src").isin(sources: _*))))
         }
       }
     }

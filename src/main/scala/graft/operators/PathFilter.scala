@@ -26,7 +26,9 @@ import org.apache.spark.sql.functions._
   * the same plan, so the two cannot drift.
   *
   * Directory-likeness needs a stat (Go uses os.Stat, watcher.go:246); the
-  * `isDir` function injects it, defaulting to the local filesystem.
+  * `isDir` function injects it — [[PathFilter.isDir]] for every real
+  * path, so config loading, validation and `Pipeline.run` never disagree
+  * about what an include names.
   */
 object PathFilter {
 
@@ -150,13 +152,22 @@ object PathFilter {
   final case class Compiled(includes: Seq[Pat], excludes: Seq[GlobPat],
       hasSpecific: Boolean)
 
-  def localIsDir: String => Boolean = p => new java.io.File(p).isDirectory
+  /** The one directory test: a stat through the Hadoop FileSystem of
+    * `conf`, so a scheme-qualified include (file://, hdfs://, s3a://)
+    * classifies like a plain local path. A path that cannot be stat'ed is
+    * not a directory.
+    */
+  def isDir(conf: org.apache.hadoop.conf.Configuration): String => Boolean = p =>
+    try {
+      val hp = new org.apache.hadoop.fs.Path(p)
+      hp.getFileSystem(conf).getFileStatus(hp).isDirectory
+    } catch { case _: Exception => false }
 
   /** Compile include/exclude pattern lists (watcher.go:213-239 pattern
     * classification). `isDir` plays os.Stat's role.
     */
   def compile(include: Seq[String], exclude: Seq[String],
-      isDir: String => Boolean = localIsDir): Compiled = {
+      isDir: String => Boolean): Compiled = {
     val pats = include.map { pattern =>
       val cp = clean(pattern)
       if (hasMeta(cp)) GlobPat(globToRegex(cp))
@@ -237,7 +248,7 @@ object PathFilter {
 
   /** Include patterns → distinct walk roots (util.go:58-111). */
   def deriveScanRoots(includes: Seq[String],
-      isDir: String => Boolean = localIsDir): Seq[String] = {
+      isDir: String => Boolean): Seq[String] = {
     val roots = includes.flatMap { pat =>
       val p = clean(pat)
       val root =
@@ -260,7 +271,7 @@ object PathFilter {
     * not nest. Duplicates are fine (deriveScanRoots dedups).
     */
   def validateRoots(includes: Seq[String],
-      isDir: String => Boolean = localIsDir): Either[String, Unit] = {
+      isDir: String => Boolean): Either[String, Unit] = {
     val roots = deriveScanRoots(includes, isDir)
     val bad = for {
       a <- roots; b <- roots if a != b && isSubPath(a, b)

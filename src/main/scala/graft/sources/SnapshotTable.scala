@@ -1,9 +1,9 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.checkpoint.CommitLog
 
 /** Minimal snapshot-table layer over Parquet: atomic snapshot commit,
   * monotonically increasing snapshot ids, read-at-snapshot.
@@ -18,9 +18,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Layout: `<root>/data/<uuid>-partNNN.parquet`,
   * `<root>/manifests/manifest-<id>.txt` (line 1 = snapshot id, then one
-  * data-file path per line). All I/O goes through the Hadoop FileSystem
-  * API, so the same code runs on HDFS/S3A (with the caveat that S3 rename
-  * is copy-based; a real deployment would use a metastore commit).
+  * data-file path per line). The manifests dir is the table's
+  * [[CommitLog]]: an append stages its data under a `_tmp-*` dir there,
+  * moves the files into `data/` ([[CommitLog.publishFiles]]) and publishes
+  * the next manifest with [[CommitLog.putFile]]; a crashed append's
+  * `_tmp-*` ages out through [[CommitLog.sweep]]. Published files are
+  * never rewritten, so readers may run during any append. All I/O goes
+  * through the Hadoop FileSystem API, so the same code runs on HDFS/S3A
+  * (with the caveat that S3 rename is copy-based; a real deployment would
+  * use a metastore commit).
   */
 trait TranscriptTable {
   def currentSnapshotId: Option[Long]
@@ -30,34 +36,23 @@ trait TranscriptTable {
 }
 
 final class SnapshotTable(spark: SparkSession, root: String) extends TranscriptTable {
-  private val conf = spark.sparkContext.hadoopConfiguration
-  private def fs(p: Path): FileSystem = p.getFileSystem(conf)
-
   private val rootPath = new Path(root)
   private val dataDir = new Path(rootPath, "data")
-  private val manifestDir = new Path(rootPath, "manifests")
-
-  override def currentSnapshotId: Option[Long] = {
-    val f = fs(manifestDir)
-    if (!f.exists(manifestDir)) None
-    else {
-      val ids = f.listStatus(manifestDir).map(_.getPath.getName)
-        .collect { case n if n.startsWith("manifest-") && n.endsWith(".txt") =>
-          n.stripPrefix("manifest-").stripSuffix(".txt").toLong }
-      if (ids.isEmpty) None else Some(ids.max)
-    }
+  private val log = {
+    val manifestDir = new Path(rootPath, "manifests")
+    new CommitLog(manifestDir.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      manifestDir, "manifest-")
   }
 
-  private def manifestPath(id: Long): Path =
-    new Path(manifestDir, f"manifest-$id%012d.txt")
+  private def manifestName(id: Long): String = f"manifest-$id%012d.txt"
+
+  override def currentSnapshotId: Option[Long] =
+    log.live.map(_.getName.stripPrefix("manifest-").stripSuffix(".txt").toLong).maxOption
 
   override def filesAt(snapshotId: Long): Seq[String] = {
-    val p = manifestPath(snapshotId)
-    val in = fs(p).open(p)
-    try {
-      val text = new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
-      text.split("\n").toSeq.drop(1).filter(_.nonEmpty)
-    } finally in.close()
+    val p = new Path(log.root, manifestName(snapshotId))
+    log.read(p).getOrElse(throw new java.io.FileNotFoundException(s"no manifest $p"))
+      .split("\n").toSeq.drop(1).filter(_.nonEmpty)
   }
 
   override def read(spark: SparkSession, snapshotId: Long): DataFrame = {
@@ -70,28 +65,14 @@ final class SnapshotTable(spark: SparkSession, root: String) extends TranscriptT
     * manifest = previous files + new files.
     */
   override def append(df: DataFrame): Long = {
-    val f = fs(rootPath)
-    f.mkdirs(dataDir)
-    f.mkdirs(manifestDir)
-    val uuid = java.util.UUID.randomUUID().toString.take(8)
-    val staging = new Path(rootPath, s"_staging-$uuid")
-    df.write.mode("overwrite").parquet(staging.toString)
-    val newFiles = f.listStatus(staging)
-      .filter(s => s.getPath.getName.endsWith(".parquet"))
-      .map { s =>
-        val dst = new Path(dataDir, s"$uuid-${s.getPath.getName}")
-        require(f.rename(s.getPath, dst), s"rename failed: ${s.getPath}")
-        dst.toString
-      }.toSeq.sorted
-    f.delete(staging, true)
+    log.sweep()
+    val newFiles = log.publishFiles(dataDir)(tmp =>
+      df.write.mode("overwrite").parquet(tmp.toString)).map(_.toString)
     val prevId = currentSnapshotId
-    val prevFiles = prevId.map(filesAt).getOrElse(Seq.empty)
     val newId = prevId.getOrElse(0L) + 1
-    val body = (newId.toString +: (prevFiles ++ newFiles)).mkString("\n")
-    val tmp = new Path(manifestDir, s"_tmp-$uuid")
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    require(f.rename(tmp, manifestPath(newId)), "manifest commit rename failed")
+    val body = newId.toString +: (prevId.map(filesAt).getOrElse(Nil) ++ newFiles)
+    require(log.putFile(manifestName(newId), body.mkString("\n")),
+      s"snapshot $newId of $root was committed by a concurrent append")
     newId
   }
 }

@@ -1,11 +1,13 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CyclicBarrier, Executors}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.DataFrame
@@ -22,6 +24,8 @@ import graft.sources.{SnapshotTable, Transcripts}
   * shared commit log. One table of cases runs against every store. Each
   * crash state is built directly on disk with file-system calls, then the
   * store's answer is checked against a model of the batches it committed.
+  * The snapshot table's append and the protocol's single ownership of
+  * renames and deletes are checked beside them.
   */
 class CommitLogSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -38,8 +42,14 @@ class CommitLogSpec extends AnyFunSuite {
     def root: Path
     def prefix: String
     def commit(k: Int): Unit
+    /** Commit batch `k` through a store whose compaction threshold is 0,
+      * so the commit compacts every live dir.
+      */
+    def commitCompacting(k: Int): Unit
     def retract(k: Int): Unit
-    def answer(): Set[String]
+    /** The answer of a read taken now and evaluated when called. */
+    def pinned(): () => Set[String]
+    def answer(): Set[String] = pinned()()
     def model(ks: Set[Int]): Set[String]
     /** A resume against the store re-processes nothing. */
     def resumeIsNoop(): Boolean = true
@@ -76,10 +86,15 @@ class CommitLogSpec extends AnyFunSuite {
       s"${e.file}|${e.sink}|${e.rowsDelivered}|${e.contentHash}"
 
     def commit(k: Int): Unit = store.commit(entries(k))
+    def commitCompacting(k: Int): Unit =
+      new LineageStore(spark, root.toString, maxCommitDirs = 0).commit(entries(k))
     def retract(k: Int): Unit =
       store.pruneTo(synchronized(files.toMap).removed(k).values.flatten.toSet)
-    def answer(): Set[String] = store.readAll().groupBy(e => (e.file, e.sink))
-      .values.map(es => render(es.maxBy(_.committedAtMs))).toSet
+    def pinned(): () => Set[String] = {
+      val df = store.entriesDf()
+      () => df.as[LineageEntry].collect().groupBy(e => (e.file, e.sink))
+        .values.map(es => render(es.maxBy(_.committedAtMs))).toSet
+    }
     def model(ks: Set[Int]): Set[String] = ks.flatMap(entries(_).map(render))
     override def resumeIsNoop(): Boolean =
       Pipeline.run(spark, table, store, cfg, s"$dir/sinks").processedFiles.isEmpty
@@ -97,19 +112,24 @@ class CommitLogSpec extends AnyFunSuite {
     private def texts(k: Int): Seq[String] =
       Seq("a", "b").map(d => (0 until 12).map(j => s"b$k${d}w$j").mkString(" "))
 
-    private def stage(src: String, ks: Seq[Int]): Dedup.IncrementalBatch = {
+    private def stage(src: String, ks: Seq[Int],
+        maxSeenDirs: Int = 16): Dedup.IncrementalBatch = {
       val df: DataFrame = ks.flatMap(texts).zipWithIndex
         .map { case (t, i) => (s"$src#$i", t, src) }.toDF("id", "text", "src")
       if (minhash) Dedup.incrementalMinhashStaged(df, "id", "text", root.toString,
-        bands = 8, rowsPerBand = 2, threshold = 0.6, srcCol = Some("src"))
-      else Dedup.incrementalExactStaged(df, "id", "text", root.toString,
+        bands = 8, rowsPerBand = 2, threshold = 0.6, maxSeenDirs = maxSeenDirs,
         srcCol = Some("src"))
+      else Dedup.incrementalExactStaged(df, "id", "text", root.toString,
+        maxSeenDirs = maxSeenDirs, srcCol = Some("src"))
     }
 
     def commit(k: Int): Unit = stage(s"f$k", Seq(k)).commit()
+    def commitCompacting(k: Int): Unit = stage(s"f$k", Seq(k), maxSeenDirs = 0).commit()
     def retract(k: Int): Unit = Dedup.retractSources(spark, root.toString, Seq(s"f$k"))
-    def answer(): Set[String] =
-      stage("probe", batches).fresh.select("text").as[String].collect().toSet
+    def pinned(): () => Set[String] = {
+      val probe = stage("probe", batches)
+      () => probe.fresh.select("text").as[String].collect().toSet
+    }
     def model(ks: Set[Int]): Set[String] = batches.filterNot(ks).flatMap(texts).toSet
   }
 
@@ -206,6 +226,75 @@ class CommitLogSpec extends AnyFunSuite {
       assert(commitDirs(s).size == 2)
       assert(s.answer() == s.model(Set(0, 1)))
       assert(named(s, _.startsWith("_tmp-")).isEmpty)
+  }
+
+  crashCase("(f) a read taken before a compaction or a rewrite reads the same rows after it") {
+    (s, _, _) =>
+      Seq(0, 1).foreach(s.commit)
+      val beforeCompaction = s.pinned()
+      s.commitCompacting(2)
+      val beforeRewrite = s.pinned()
+      s.retract(0)
+      assert(beforeCompaction() == s.model(Set(0, 1)))
+      assert(beforeRewrite() == s.model(Set(0, 1, 2)))
+      assert(s.answer() == s.model(Set(1, 2)))
+  }
+
+  test("two lineage commits under one id both land and both read back") {
+    val store = new LineageStore(spark,
+      Files.createTempDirectory("graft-commit-twice").resolve("lineage").toString)
+    def entry(file: String) = LineageEntry("run-1", 1L, file, "all", 1L, 0L, "h", 1000L)
+    store.commit(Seq(entry("a")))
+    store.commit(Seq(entry("b")))
+    assert(store.readAll().map(_.file).toSet == Set("a", "b"))
+  }
+
+  test("a snapshot table sweeps a crashed append's stale _tmp-* dir and keeps a fresh one") {
+    val dir = Files.createTempDirectory("graft-table").toString
+    val table = new SnapshotTable(spark, dir)
+    def rows = Transcripts.synthesize(spark, 1, 2).toDF()
+    val first = table.filesAt(table.append(rows))
+    // a crashed append leaves its staged data under the manifests dir,
+    // never in `data/` or a manifest
+    val manifests = new Path(dir, "manifests")
+    val stale = new Path(manifests, "_tmp-crashed")
+    val inFlight = new Path(manifests, "_tmp-inflight")
+    Seq(stale, inFlight).foreach(p => rows.write.parquet(p.toString))
+    fs.setTimes(stale, System.currentTimeMillis() - 2L * 60 * 60 * 1000, -1)
+    val snap = table.append(rows)
+    assert(!fs.exists(stale), "a stale _tmp-* dir must be swept by the next append")
+    assert(fs.exists(inFlight), "a fresh _tmp-* dir may be an append in flight")
+    val files = table.filesAt(snap)
+    assert(files.take(first.size) == first && files.size > first.size)
+    assert(fs.listStatus(manifests).map(_.getPath.getName).filter(_.startsWith("_"))
+      .toSeq == Seq("_tmp-inflight"))
+    assert(table.read(spark, snap).count() == 2 * rows.count())
+  }
+
+  test("src/main renames and deletes store commits, manifests and _tmp-* only in CommitLog") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    // the named exceptions: Pipeline publishes each (sink, batch) dir and
+    // deletes a rewritten file's stale batch dirs; Bucketed overwrites the
+    // location of a catalog table, which has no commit protocol
+    val allowed = Seq(
+      "Pipeline.scala" -> "require(fs.rename(src, dest),",
+      "Pipeline.scala" -> "} fs.delete(new Path(fsRoot,",
+      "Bucketed.scala" -> "if (fs.exists(loc)) fs.delete(loc, true)")
+    val call = raw"\.(rename|delete\w*|fullyDelete)\((?!\))".r
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val hits = files.filter(_.getFileName.toString != "CommitLog.scala").flatMap { f =>
+      val name = f.getFileName.toString
+      val lines = new String(Files.readAllBytes(f), StandardCharsets.UTF_8).split("\n")
+      lines.zipWithIndex.collect {
+        case (l, i) if call.findFirstIn(l).isDefined &&
+            !allowed.exists { case (n, text) => n == name && l.contains(text) } =>
+          s"${root.relativize(f)}:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(files.size > 40)
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("the store lease has one holder at a time: 4 threads released together contend it") {

@@ -117,6 +117,13 @@ class ConfigLoaderSpec extends AnyFunSuite {
     assert(bad.swap.toOption.get.contains("identifier"))
   }
 
+  test("a file:// directory include and a glob under it load, as Pipeline.run accepts them") {
+    val d = Files.createTempDirectory("graft-cfg-include").toUri.getPath.stripSuffix("/")
+    val include = Seq(s"file://$d", s"file://$d/*.parquet")
+    val cfg = ConfigLoader.load(None, Map.empty, Map("include" -> include.mkString(",")))
+    assert(cfg.map(_.include) == Right(include))
+  }
+
   test("validation matrix (config.go:190-237 + multline_reader.go:37-48)") {
     val cases: Seq[(String, String)] = Seq(
       ("""[sink.x]

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.checkpoint.LineageStore
+import graft.checkpoint.{CommitLog, LineageStore}
 import graft.model.{PipelineConfig, SinkRule}
 import graft.sources.{SnapshotTable, Transcripts}
 
@@ -503,8 +503,9 @@ class PipelineSpec extends AnyFunSuite {
     val lineage = new LineageStore(spark, s"$root/lineage", maxCommitDirs = 3)
     val out = s"$root/sinks"
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def commitDirCount: Int = fs.listStatus(new Path(s"$root/lineage"))
-      .count(_.getPath.getName.startsWith("commit-"))
+    // LIVE dirs only: compaction retires superseded dirs in place
+    // (retention-delayed delete), and readers skip `_retired` dirs
+    def commitDirCount: Int = new CommitLog(fs, new Path(s"$root/lineage"), "commit-").live.size
     (1 to 6).foreach { i =>
       table.append(Transcripts.synthesize(spark, 2, 4).toDF()
         .withColumn("conv_id", org.apache.spark.sql.functions.concat(
