@@ -74,16 +74,7 @@ object Main {
           val report = Pipeline.run(spark, new SnapshotTable(spark, tableRoot),
             new LineageStore(spark, lineageRoot), cfg, outDir)
           metricsState = metricsState.add(report)
-          val sinks = report.perSinkDelivered
-            .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-          val failed = report.perSinkFailed
-            .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-          println(s"""{"run_id":"${report.runId}","snapshot":${report.snapshotId},""" +
-            s""""processed_files":${report.processedFiles.size},""" +
-            s""""invalidated":${report.invalidatedFiles.size},""" +
-            s""""pruned":${report.prunedFiles.size},""" +
-            s""""input_rows":${report.inputRows},"blank_rows":${report.blankRows},""" +
-            s""""delivered":$sinks,"failed":$failed}""")
+          println(graft.metrics.Metrics.runLine(report))
           if (stopMetrics.nonEmpty && lingerMs > 0) Thread.sleep(lingerMs)
         } finally stopMetrics.foreach(_.apply())
 

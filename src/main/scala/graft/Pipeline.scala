@@ -3,31 +3,36 @@ package graft
 import java.security.MessageDigest
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 import graft.checkpoint.{CommitLog, Fingerprint, LineageStore}
+import graft.metrics.Metrics
 import graft.model.PipelineConfig
-import graft.operators.{Enrich, Parse, Route}
+import graft.operators.{Dedup, Enrich, Parse, PathFilter, Route}
+import graft.sinks.HttpSink
 import graft.sources.TranscriptTable
 
-/** One pipeline run = freader's collector loop re-expressed as a batch:
+/** One pipeline run = freader's collector loop re-expressed as a batch,
+  * in five phases, each handing a small record to the next:
   *
-  *  1. discovery     — manifest listing of the current snapshot (S1/S5),
-  *                     each file fingerprinted in ONE executor-side pass
-  *  2. resume diff   — ONE query over ONE lineage read: the per-file
+  *  1. `discover`    — manifest listing of the current snapshot (S1/S5),
+  *                     path-filtered (S3), each file fingerprinted in ONE
+  *                     executor-side pass
+  *  2. `diff`        — ONE query over ONE lineage read: the per-file
   *                     lineage summary full-outer-joined with the
   *                     fingerprints, collecting only the files not done
   *                     ([[resumeDiff]]): new files and files some sink
   *                     lacks are todo (the offset-restore join, J3); a
   *                     hash mismatch invalidates that file's lineage and
   *                     reprocesses it from scratch (S9); lineage files
-  *                     no longer in the manifest are vanished
-  *  3. removal       — vanished files' lineage entries are pruned (J4
-  *                     set-difference → offset Delete); the store is
-  *                     rewritten only when the diff found any
-  *  4. process       — parse → enrich → route as ONE lazy plan, never
+  *                     no longer in the manifest are vanished, and their
+  *                     entries are pruned (J4 set-difference → offset
+  *                     Delete) — the store is rewritten only when the diff
+  *                     found any. The result is one work list: a record
+  *                     per todo file
+  *  3. `stage`       — parse → enrich → route as ONE lazy plan, never
   *                     persisted: the source is a pinned snapshot of
   *                     immutable files, so the delivery write and the
   *                     lineage counts each recompute the identical fan-out
@@ -35,11 +40,12 @@ import graft.sources.TranscriptTable
   *                     dedup stage, ONE staged batch over every todo row
   *                     drops content earlier runs delivered; invalidated
   *                     files' sources are retracted from the store first
-  *  5. deliver       — ONE distributed write for every sink, partitioned by
+  *  4. `deliver`     — ONE distributed write for every sink, partitioned by
   *                     (sink, batch, route_key) under a per-run `_tmp-*`
   *                     staging dir (a crashed run's one ages out),
   *                     then one atomic rename per new
-  *                     `<outDir>/<sink>/batch=<id>` dir. The batch id is a
+  *                     `<outDir>/<sink>/batch=<id>` dir, then the wire
+  *                     flush of exactly the renamed dirs. The batch id is a
   *                     pure function of ONE file's path and content hash
   *                     (content-addressed per file, NOT per run): a batch
   *                     dir that already exists is never rewritten, so
@@ -47,14 +53,14 @@ import graft.sources.TranscriptTable
   *                     todo set has meanwhile changed (a run-wide id would
   *                     mint fresh dirs for already-delivered files in
   *                     exactly that window)
-  *  6. commit        — per-(file, sink) lineage rows written atomically
+  *  5. `commit`      — per-(file, sink) lineage rows written atomically
   *                     AFTER all sink writes succeeded, mirroring "offset
   *                     saved only after the callback batch completed"
-  *                     (internal/collector/collector.go:104-117); the rows
-  *                     are computed and written distributed (one shared
-  *                     scan), never collected per-file to the driver, and
-  *                     the report's per-sink totals are observed on that
-  *                     same write
+  *                     (internal/collector/collector.go:104-117), then the
+  *                     dedup store; the rows are computed and written
+  *                     distributed (one shared scan), never collected
+  *                     per-file to the driver, and the report's per-sink
+  *                     totals are observed on that same write
   */
 object Pipeline {
 
@@ -142,148 +148,198 @@ object Pipeline {
       lineage: LineageStore,
       cfg: PipelineConfig,
       outDir: String): RunReport = {
+    val phases = new Phases(spark, cfg)
+    // a table with no snapshot yet has nothing to diff
+    val todo = phases.discover(table).fold(Todo(-1L, 0, Nil, Nil))(phases.diff(lineage, _))
+    // the report of a run with nothing to process; `commit` adds the totals
+    val report = RunReport(phases.runId, todo.snapId, todo.work.map(_.file),
+      todo.invalidated.map(_.file), todo.pruned, Map.empty, 0L, 0L,
+      manifestFiles = todo.manifestFiles)
+    if (todo.work.isEmpty) report
+    else {
+      val staged = phases.stage(todo)
+      phases.commit(lineage, report, staged, phases.deliver(outDir, todo, staged))
+    }
+  }
+
+  /** `discover`'s result: the snapshot's path-filtered files and their
+    * fingerprints (`file`, `contentHash`).
+    */
+  private final case class Snapshot(id: Long, files: Seq[String], fingerprints: DataFrame)
+
+  /** One file the run processes. `fname` is its basename, the key the
+    * scanned rows join on: `input_file_name()` is a qualified URI while
+    * manifest paths may be scheme-less, but data-file names are unique
+    * (SnapshotTable.append uuid-prefixes them). `oldBatch` is the batch id
+    * of an invalidated file's superseded content.
+    */
+  private final case class FileWork(file: String, fname: String,
+      contentHash: String, batch: String, oldBatch: Option[String])
+
+  /** `diff`'s result: the work list, sorted by file, and the files pruned. */
+  private final case class Todo(snapId: Long, manifestFiles: Int,
+      work: Seq[FileWork], pruned: Seq[String]) {
+    def invalidated: Seq[FileWork] = work.filter(_.oldBatch.isDefined)
+  }
+
+  /** `stage`'s result: the routed rows with their `fname` and `batch`, the
+    * broadcast work frame (`fname`, `file`, `contentHash`, `batch`), the
+    * scan the input observation rides on, and the staged dedup batch.
+    */
+  private final case class Staged(rows: DataFrame, work: DataFrame,
+      scanned: DataFrame, obs: Observation, dedup: Option[Dedup.IncrementalBatch])
+
+  // A5 collector metrics (lines_total / bytes_total / blank) ride on the
+  // delivery jobs via Observation — no extra scan of the input
+  private val InputAggs: Seq[Column] = Seq(
+    count(lit(1)).as("lines_total"),
+    coalesce(sum(length(col("text"))), lit(0L)).as("bytes_total"),
+    coalesce(sum(when(length(col("text")) === 0, 1L).otherwise(0L)), lit(0L))
+      .as("blank_total"))
+
+  /** The phases of one run over its session and config; constructing it
+    * validates the config and draws the run id.
+    */
+  private final class Phases(spark: SparkSession, cfg: PipelineConfig) {
+    import spark.implicits._
 
     // validation and the matcher share the one directory test, over the
     // session's Hadoop configuration
-    val isDir = operators.PathFilter.isDir(spark.sparkContext.hadoopConfiguration)
+    private val isDir = PathFilter.isDir(spark.sparkContext.hadoopConfiguration)
     cfg.validate(isDir).left.foreach(err => throw new IllegalArgumentException(err))
-    val runId = java.util.UUID.randomUUID().toString.take(12)
+    val runId: String = java.util.UUID.randomUUID().toString.take(12)
 
-    val snapId = table.currentSnapshotId.getOrElse(
-      return RunReport(runId, -1L, Nil, Nil, Nil, Map.empty, 0L, 0L))
-    // S3: include/exclude path filtering over the manifest — the batch
-    // analogue of the watcher's walk filter (watcher.go:173-179). The
-    // manifest is driver-side metadata, so the compiled matcher runs here;
-    // PathFilter.column is the distributed twin for path columns.
-    val pathSpec = operators.PathFilter.compile(cfg.include, cfg.exclude, isDir)
-    val files = table.filesAt(snapId)
-      .filter(f => operators.PathFilter.matches(pathSpec, f))
+    /** None when the table has no snapshot yet. */
+    def discover(table: TranscriptTable): Option[Snapshot] =
+      table.currentSnapshotId.map { snapId =>
+        // S3: include/exclude path filtering over the manifest — the batch
+        // analogue of the watcher's walk filter (watcher.go:173-179). The
+        // manifest is driver-side metadata, so the compiled matcher runs
+        // here; PathFilter.column is the distributed twin for path columns.
+        val pathSpec = PathFilter.compile(cfg.include, cfg.exclude, isDir)
+        val files = table.filesAt(snapId).filter(f => PathFilter.matches(pathSpec, f))
+        // fingerprint strategy (watcher/config.go:21-42): deviceAndInode is
+        // storage identity — the path — so in-place rewrites are undetected
+        // by design; checksum/checksumSeparator hash a content prefix +
+        // length (separator framing belongs to text rows; for binary
+        // snapshot files it maps to the prefix checksum — Model.scala
+        // divergence note)
+        val fingerprints =
+          if (cfg.fingerprintStrategy == "deviceAndInode")
+            files.toDF("file").select(col("file"), col("file").as("contentHash"))
+          else Fingerprint.ofFilesDf(spark, files, cfg.fingerprintSize)
+        Snapshot(snapId, files, fingerprints)
+      }
 
-    // fingerprint strategy (watcher/config.go:21-42): deviceAndInode is
-    // storage identity — the path — so in-place rewrites are undetected by
-    // design; checksum/checksumSeparator hash a content prefix + length
-    // (separator framing belongs to text rows; for binary snapshot files
-    // it maps to the prefix checksum — Model.scala divergence note)
-    import spark.implicits._
-    val fpDf =
-      if (cfg.fingerprintStrategy == "deviceAndInode")
-        files.toDF("file").select(col("file"), col("file").as("contentHash"))
-      else Fingerprint.ofFilesDf(spark, files, cfg.fingerprintSize)
-    val diff = resumeDiff(lineage.entriesDf(), fpDf, cfg.sinks.map(_.name))
-    val invalidated = diff.invalidated.map(_._1)
-    val oldHashByFile = diff.invalidated.toMap
-
-    // J4: prune lineage of vanished files — a rewrite of the store, so it
-    // runs only when the diff saw any, and still before delivery
-    val pruned =
-      if (diff.vanished.isEmpty) Nil
-      else lineage.pruneTo(files.toSet).map(_.file).distinct.sorted
-
-    val todo = diff.todo.map(_._1)
-    if (todo.isEmpty)
-      return RunReport(runId, snapId, Nil, invalidated, pruned, Map.empty,
-        0L, 0L, manifestFiles = files.size)
-
-    // the distributed fingerprints serve both as the idempotency key (a
-    // reprocessed file with NEW content must land in a NEW batch dir) and
-    // as the lineage rows' content hash
-    val fps = diff.todo.toMap
-    val bids = todo.map(f => f -> fileBatchId(f, fps(f))).toMap
-    // A5 collector metrics (lines_total / bytes_total / blank) ride on the
-    // delivery jobs via Observation — no extra scan of the input
-    val obs = new Observation(s"graft-$runId")
-    val inputAggs = Seq(
-      count(lit(1)).as("lines_total"),
-      coalesce(sum(length(col("text"))), lit(0L)).as("bytes_total"),
-      coalesce(sum(when(length(col("text")) === 0, 1L).otherwise(0L)), lit(0L))
-        .as("blank_total"))
-    val scanned = spark.read.parquet(todo: _*)
-      .withColumn("src_file", input_file_name())
-    val src = scanned.observe(obs, inputAggs.head, inputAggs.tail: _*)
-
-    // Optional multiline assembly: blank lines are dropped first (the
-    // blank-record rule — counted in the observation, never delivered,
-    // tail_reader.go:272-279), records inherit first-line metadata.
-    val turns = cfg.multiline match {
-      case Some(spec) =>
-        operators.Segments.assembleFsmRows(
-          src.filter(length(col("text")) > 0), spec, cfg.lineagePartitions)
-      case None => src
+    def diff(lineage: LineageStore, snap: Snapshot): Todo = {
+      val d = resumeDiff(lineage.entriesDf(), snap.fingerprints, cfg.sinks.map(_.name))
+      // J4: prune lineage of vanished files — a rewrite of the store, so it
+      // runs only when the diff saw any, and still before delivery
+      val pruned =
+        if (d.vanished.isEmpty) Nil
+        else lineage.pruneTo(snap.files.toSet).map(_.file).distinct.sorted
+      // the fingerprint is both the idempotency key (a reprocessed file
+      // with NEW content must land in a NEW batch dir) and the lineage
+      // rows' content hash
+      val prevHash = d.invalidated.toMap
+      val work = d.todo.map { case (f, h) =>
+        FileWork(f, new Path(f).getName, h, fileBatchId(f, h),
+          prevHash.get(f).map(fileBatchId(f, _)))
+      }
+      Todo(snap.id, snap.files.size, work, pruned)
     }
 
-    // Optional incremental content-dedup stage: rows whose text any
-    // earlier run delivered (exact — or near-dup under minhash) are
-    // dropped before routing. The stage is STAGED (operators/Dedup): the
-    // survivors flow on, but the store publishes only after the lineage
-    // commit below, so a crash-and-replay before that point re-derives the
-    // identical survivor set instead of losing it to an eagerly-committed
-    // store. (The converse window — lineage committed, store not — only
-    // risks a FUTURE batch re-delivering the same content once; replays of
-    // THIS batch are no-ops via the sink batch-dir check regardless.)
-    // The dedup id is a content-addressed stable key, not a row number:
-    // deterministic under reshuffles and re-runs.
-    //
-    // INVALIDATED files (S9) are read again from the start, as freader
-    // treats a file whose fingerprint no longer matches as new
-    // (internal/tailer/tail_reader.go:95-106): their rows stage with the
-    // rest of the run. What keeps a rewritten file's content deliverable
-    // is RETRACTION (offset Delete on removal, collector.go:206-214):
-    // every store commit carries (content_h60, src-basename) provenance,
-    // and an invalidated file's hashes are rewritten OUT of the store
-    // before staging — its old delivery dirs are deleted below, so content
-    // only that file delivered must deliver again. Hashes whose provenance
-    // is another (still-live) file stay: that file's sink dirs still hold
-    // the content, so the rewritten file's copy of it is dropped, not
-    // delivered twice.
-    //
-    // CRASH-REPLAY ATTRIBUTION WINDOW (documented, accepted): the within-
-    // run exact dedup attributes each surviving row to the
-    // lexicographically-lowest __dedup_id (uuid-prefixed src_file). If a
-    // crash lands between a sink batch-dir rename and the lineage commit,
-    // AND a new file with the same content arrives before replay, the
-    // replayed run can attribute the survivor to the NEW file — the
-    // content then exists in the old (renamed, never-rewritten) batch dir
-    // and the new file's dir: at-least-once in exactly that window. Any
-    // survivor choice over a candidate set that changed between runs can
-    // flip; the exactly-once guarantee is per content-addressed FILE
-    // delivery, and the window closes at the lineage commit.
-    val dedupStage = cfg.dedup.map { dd =>
-      operators.Dedup.retractSources(spark, dd.storeDir,
-        invalidated.map(f => new Path(f).getName))
-      // the dedup id is length-prefixed per field (and null-flagged), so
-      // no '#' inside conv_id — and no null — can make two distinct rows
-      // share an id (a shared id would drop BOTH rows when either loses
-      // a near-dup verdict, silently losing a distinct row)
-      def lp(c: org.apache.spark.sql.Column) =
-        when(c.isNull, lit("-:")).otherwise(
-          concat(length(c).cast("string"), lit(":"), c))
-      val withId = turns
-        .withColumn("__dedup_id",
+    def stage(todo: Todo): Staged = {
+      val obs = new Observation(s"graft-$runId")
+      val scanned = spark.read.parquet(todo.work.map(_.file): _*)
+        .withColumn("src_file", input_file_name())
+      val src = scanned.observe(obs, InputAggs.head, InputAggs.tail: _*)
+
+      // Optional multiline assembly: blank lines are dropped first (the
+      // blank-record rule — counted in the observation, never delivered,
+      // tail_reader.go:272-279), records inherit first-line metadata. The
+      // basename is derived after it, because the assembly projects fixed
+      // columns.
+      val turns = cfg.multiline.fold(src)(spec => operators.Segments.assembleFsmRows(
+          src.filter(length(col("text")) > 0), spec, cfg.lineagePartitions))
+        .withColumn("fname", substring_index(col("src_file"), "/", -1))
+
+      // Optional incremental content-dedup stage: rows whose text any
+      // earlier run delivered (exact — or near-dup under minhash) are
+      // dropped before routing. The stage is STAGED (operators/Dedup): the
+      // survivors flow on, but the store publishes only after the lineage
+      // commit, so a crash-and-replay before that point re-derives the
+      // identical survivor set instead of losing it to an eagerly-committed
+      // store. (The converse window — lineage committed, store not — only
+      // risks a FUTURE batch re-delivering the same content once; replays
+      // of THIS batch are no-ops via the sink batch-dir check regardless.)
+      // The dedup id is a content-addressed stable key, not a row number:
+      // deterministic under reshuffles and re-runs.
+      //
+      // INVALIDATED files (S9) are read again from the start, as freader
+      // treats a file whose fingerprint no longer matches as new
+      // (internal/tailer/tail_reader.go:95-106): their rows stage with the
+      // rest of the run. What keeps a rewritten file's content deliverable
+      // is RETRACTION (offset Delete on removal, collector.go:206-214):
+      // every store commit carries (content_h60, src-basename) provenance,
+      // and an invalidated file's hashes are rewritten OUT of the store
+      // before staging — its old delivery dirs are deleted at delivery, so
+      // content only that file delivered must deliver again. Hashes whose
+      // provenance is another (still-live) file stay: that file's sink
+      // dirs still hold the content, so the rewritten file's copy of it is
+      // dropped, not delivered twice.
+      //
+      // CRASH-REPLAY ATTRIBUTION WINDOW (documented, accepted): the within-
+      // run exact dedup attributes each surviving row to the
+      // lexicographically-lowest __dedup_id (uuid-prefixed src_file). If a
+      // crash lands between a sink batch-dir rename and the lineage commit,
+      // AND a new file with the same content arrives before replay, the
+      // replayed run can attribute the survivor to the NEW file — the
+      // content then exists in the old (renamed, never-rewritten) batch dir
+      // and the new file's dir: at-least-once in exactly that window. Any
+      // survivor choice over a candidate set that changed between runs can
+      // flip; the exactly-once guarantee is per content-addressed FILE
+      // delivery, and the window closes at the lineage commit.
+      val dedup = cfg.dedup.map { dd =>
+        Dedup.retractSources(spark, dd.storeDir, todo.invalidated.map(_.fname))
+        // the dedup id is length-prefixed per field (and null-flagged), so
+        // no '#' inside conv_id — and no null — can make two distinct rows
+        // share an id (a shared id would drop BOTH rows when either loses
+        // a near-dup verdict, silently losing a distinct row)
+        def lp(c: Column) = when(c.isNull, lit("-:"))
+          .otherwise(concat(length(c).cast("string"), lit(":"), c))
+        val withId = turns.withColumn("__dedup_id",
           concat(lp(col("src_file")), lit("#"), lp(col("conv_id")),
             lit("#"), col("turn_idx").cast("string")))
-        .withColumn("__src", substring_index(col("src_file"), "/", -1))
-      if (dd.mode == "minhash")
-        operators.Dedup.incrementalMinhashStaged(withId, "__dedup_id", "text",
-          dd.storeDir, dd.ngram, dd.bands, dd.rowsPerBand, dd.threshold,
-          srcCol = Some("__src"))
-      else
-        operators.Dedup.incrementalExactStaged(withId, "__dedup_id", "text",
-          dd.storeDir, srcCol = Some("__src"))
+        if (dd.mode == "minhash")
+          Dedup.incrementalMinhashStaged(withId, "__dedup_id", "text",
+            dd.storeDir, dd.ngram, dd.bands, dd.rowsPerBand, dd.threshold,
+            srcCol = Some("fname"))
+        else
+          Dedup.incrementalExactStaged(withId, "__dedup_id", "text",
+            dd.storeDir, srcCol = Some("fname"))
+      }
+      val toRoute = dedup.map(_.fresh.drop("__dedup_id")).getOrElse(turns)
+
+      // batch ids ride the rows through a join with the broadcast work frame
+      val work = broadcast(todo.work.map(w => (w.fname, w.file, w.contentHash, w.batch))
+        .toDF("fname", "file", "contentHash", "batch"))
+      // One logical fan-out; every sink and count derives from this plan.
+      // NOT persisted: the source is a pinned snapshot of immutable files,
+      // so recomputation is deterministic (consistency comes from snapshot
+      // isolation, not caching) — and measured cache build+read here is
+      // slower than re-running the codegen'd parse. For a non-snapshot
+      // source, stage this projection to parquet once instead.
+      val rows = Route.routed(Enrich.enrich(Parse.parseTurns(toRoute)))
+        .select(col("ts"), col("host"), col("route_key"), col("text"),
+          col("conv_id"), col("turn_idx"), col("verb"), col("dur_ms"),
+          col("status"), col("tool_family"), col("src_file"), col("fname"))
+        .join(work.select("fname", "batch"), "fname")
+      Staged(rows, work, scanned, obs, dedup)
     }
-    val toRoute = dedupStage.map(_.fresh.drop("__dedup_id", "__src")).getOrElse(turns)
 
-    // One logical fan-out; every sink and count derives from this plan.
-    // NOT persisted: the source is a pinned snapshot of immutable files, so
-    // recomputation is deterministic (consistency comes from snapshot
-    // isolation, not caching) — and measured cache build+read here is
-    // slower than re-running the codegen'd parse. For a non-snapshot
-    // source, stage this projection to parquet once instead.
-    val routed = Route.routed(Enrich.enrich(Parse.parseTurns(toRoute)))
-      .select(col("ts"), col("host"), col("route_key"), col("text"),
-        col("conv_id"), col("turn_idx"), col("verb"), col("dur_ms"),
-        col("status"), col("tool_family"), col("src_file"))
-
-    locally {
+    /** Returns the wire sinks' per-(sink, fname) accounting. */
+    def deliver(outDir: String, todo: Todo, staged: Staged): Seq[DataFrame] = {
       val fsRoot = new Path(outDir)
       val fs = fsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
       // the sink root's commits are the `<sink>/batch=<id>` dirs one level
@@ -291,50 +347,24 @@ object Pipeline {
       // dir and ages out the ones a crashed run left
       val sinkLog = new CommitLog(fs, fsRoot, "batch=")
       sinkLog.sweep()
+      val sinkRoots = cfg.sinks.map(rule => rule -> new Path(fsRoot, rule.name))
 
       // an invalidated file's OLD content dirs are superseded — remove them
       // so sink totals always reflect the latest content exactly once
-      for {
-        f <- invalidated; oldHash <- oldHashByFile.get(f); rule <- cfg.sinks
-      } fs.delete(new Path(fsRoot,
-        s"${rule.name}/batch=${fileBatchId(f, oldHash)}"), true)
+      for { w <- todo.work; old <- w.oldBatch; (_, root) <- sinkRoots }
+        fs.delete(new Path(root, s"batch=$old"), true)
 
-      // batch ids ride the rows: basename → bid via a tiny broadcast join
-      // (input_file_name() is a qualified URI while manifest paths may be
-      // scheme-less, but data-file names are unique — SnapshotTable.append
-      // uuid-prefixes them)
-      import spark.implicits._
-      val bidDf = broadcast(
-        todo.map(f => (new Path(f).getName, bids(f))).toDF("fname", "batch"))
-      val routedB = routed
-        .withColumn("fname", substring_index(col("src_file"), "/", -1))
-        .join(bidDf, "fname")
-
-      // every (row, accepting sink) pair, flagged where that sink's remote
-      // rejects the row: the one sink fan-out the delivery write and the
-      // lineage counts both derive from
-      val failFlag = cfg.sinks.foldLeft(lit(false)) { (acc, r) =>
-        when(col("sink") === r.name,
-          Route.rejectPredicate(r, col("text"))).otherwise(acc)
-      }
-      def perSink(rows: DataFrame): DataFrame = rows
-        .withColumn("sink", explode(Route.acceptingSinks(cfg.sinks, col("text"))))
-        .withColumn("failed", failFlag)
-
-      // deliver: ONE distributed write for every sink, partitioned by
+      // ONE distributed write for every sink, partitioned by
       // (sink, batch, route_key), then one atomic rename per NEW
       // (sink, batch) dir. Already-present dirs (crash-replay window) are
       // never rewritten, whatever the current todo set looks like.
-      val pending: Seq[(String, String)] = cfg.sinks.flatMap { rule =>
-        val sinkRoot = new Path(fsRoot, rule.name)
-        val existing: Set[String] =
-          if (!fs.exists(sinkRoot)) Set.empty
-          else fs.listStatus(sinkRoot).map(_.getPath.getName)
-            .collect { case n if n.startsWith("batch=") => n.stripPrefix("batch=") }
-            .toSet
-        todo.map(bids).filterNot(existing).map(rule.name -> _)
+      val pending = sinkRoots.flatMap { case (rule, root) =>
+        val existing =
+          if (!fs.exists(root)) Set.empty[String]
+          else fs.listStatus(root).map(_.getPath.getName).toSet
+        todo.work.map(_.batch).filterNot(b => existing(s"batch=$b")).map((rule, root, _))
       }
-      if (pending.nonEmpty) sinkLog.scratch(runId) { staging =>
+      val renamed = if (pending.isEmpty) Nil else sinkLog.scratch(runId) { staging =>
         // an upstream shuffle (dedup, multiline) spreads every batch over
         // all shuffle partitions, and each partition would write its own
         // file into every (sink, batch, route_key) dir: re-cluster by
@@ -343,18 +373,18 @@ object Pipeline {
         // Without such a stage the scan is already aligned with the input
         // files (one batch per file), so no exchange is added.
         val clustered =
-          if (cfg.dedup.isEmpty && cfg.multiline.isEmpty) routedB
-          else routedB.repartition(
+          if (cfg.dedup.isEmpty && cfg.multiline.isEmpty) staged.rows
+          else staged.rows.repartition(
             spark.conf.get("spark.sql.shuffle.partitions").toInt,
             col("batch"), col("route_key"))
-        // remote-rejected rows are attempted (counted as failed below)
-        // but never land in the sink — NumFailed semantics
+        // remote-rejected rows are attempted (counted as failed at the
+        // commit) but never land in the sink — NumFailed semantics
         val accepted = perSink(clustered).filter(!col("failed"))
         // batch ids are fixed-width hex, so "<sink>/<batch>" is unambiguous
         val subset =
-          if (pending.size == cfg.sinks.size * todo.size) accepted
+          if (pending.size == cfg.sinks.size * todo.work.size) accepted
           else accepted.filter(concat(col("sink"), lit("/"), col("batch"))
-            .isin(pending.map { case (s, b) => s"$s/$b" }: _*))
+            .isin(pending.map { case (rule, _, b) => s"${rule.name}/$b" }: _*))
         // constant labels ride every delivered row (SinkConfig.Labels
         // parity — the K5/K6 label-map slot)
         val labelsCol =
@@ -369,40 +399,38 @@ object Pipeline {
             col("tool_family"), col("src_file"), labelsCol.as("labels"))
           .write.mode("overwrite").partitionBy("sink", "batch", "route_key")
           .parquet(staging.toString)
-        pending.foreach { case (sink, b) =>
-          val sinkRoot = new Path(fsRoot, sink)
-          fs.mkdirs(sinkRoot)
+        pending.map(_._2).distinct.foreach(fs.mkdirs)
+        pending.filter { case (rule, root, b) =>
           // the staged dir name is Spark's partition-path escaping of the
-          // sink name (a name with '=', '%', ':' … differs on disk)
+          // sink name (a name with '=', '%', ':' … differs on disk); a
+          // (sink, batch) with no accepted row has no staged dir
           val src = new Path(staging,
-            s"${ExternalCatalogUtils.getPartitionPathString("sink", sink)}/batch=$b")
-          val dest = new Path(sinkRoot, s"batch=$b")
-          if (fs.exists(src) && !fs.exists(dest))
-            require(fs.rename(src, dest),
-              s"sink commit rename failed for $sink/batch=$b")
+            s"${ExternalCatalogUtils.getPartitionPathString("sink", rule.name)}/batch=$b")
+          val dest = new Path(root, s"batch=$b")
+          val fresh = fs.exists(src) && !fs.exists(dest)
+          if (fresh)
+            require(fs.rename(src, dest), s"sink commit rename failed for ${rule.name}/batch=$b")
+          fresh
         }
       }
 
-      // Wire sinks (rule.url set) additionally POST the just-committed rows
+      // Wire sinks (rule.url set) additionally POST the just-renamed rows
       // over HTTP AFTER the renames — at-most-once per batch dir: a crash
       // between rename and POST is a missed flush on replay, the
       // reference's logged-and-dropped flush analogue — and their exact
-      // per-item accounting lands in `wireAcc` for the lineage rows.
-      val wireAcc: Seq[DataFrame] = for {
-        rule <- cfg.sinks
+      // per-item accounting goes to the lineage rows.
+      for {
+        (rule, root) <- sinkRoots
         wireUrl <- rule.url
-        sinkRoot = new Path(fsRoot, rule.name)
-        // wire flush: read the committed dirs back (no re-parse — the
-        // parquet IS the attempted row set, fan-out included) and POST
-        committed = pending.filter(_._1 == rule.name).map(_._2).sorted
-          .map(b => new Path(sinkRoot, s"batch=$b").toString)
-          .filter(p => fs.exists(new Path(p)))
-        if committed.nonEmpty
+        batches = renamed.collect { case (r, _, b) if r.name == rule.name => b }.sorted
+        if batches.nonEmpty
       } yield {
-        // basePath anchors partition discovery over the subset of
-        // batch= dirs (leaf roots alone conflict)
-        val rows = spark.read.option("basePath", sinkRoot.toString)
-          .parquet(committed: _*)
+        // read the renamed dirs back (no re-parse — the parquet IS the
+        // attempted row set, fan-out included) and POST; basePath anchors
+        // partition discovery over the subset of batch= dirs (leaf roots
+        // alone conflict)
+        val rows = spark.read.option("basePath", root.toString)
+          .parquet(batches.map(b => new Path(root, s"batch=$b").toString): _*)
         val doc =
           if (rule.kind == "clickhouse")
             // the INSERT column shape (clickhouse.go:113):
@@ -415,9 +443,8 @@ object Pipeline {
               date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
                 .as("@timestamp"),
               col("message"), col("host"), col("labels")))
-        val spec = graft.sinks.HttpSink.WireSpec(rule.kind, wireUrl,
-          rule.target, rule.user, rule.pass,
-          cfg.batchSize, cfg.batchIntervalMs,
+        val spec = HttpSink.WireSpec(rule.kind, wireUrl, rule.target,
+          rule.user, rule.pass, cfg.batchSize, cfg.batchIntervalMs,
           maxRetries = cfg.batchRetries)
         // the POSTs are a task side effect: a SPECULATIVE duplicate
         // attempt re-delivers its partition's rows, so the
@@ -433,28 +460,24 @@ object Pipeline {
         // accounting frame is otherwise lazy and a recomputation
         // (fetch failure, speculative task) would re-POST delivered
         // rows; the pinned result is a handful of per-file counts
-        graft.sinks.HttpSink.deliver(
-          rows.select(
-            substring_index(col("src_file"), "/", -1).as("fname"),
-            doc.as("doc")),
-          spec).withColumn("sink", lit(rule.name))
-          .localCheckpoint(true)
+        HttpSink.deliver(
+          rows.select(substring_index(col("src_file"), "/", -1).as("fname"), doc.as("doc")),
+          spec).withColumn("sink", lit(rule.name)).localCheckpoint(true)
       }
+    }
 
+    def commit(lineage: LineageStore, report: RunReport, staged: Staged,
+        wire: Seq[DataFrame]): RunReport = {
       // per-(sink, file) delivered counts in ONE shared scan, kept
       // DISTRIBUTED: the (todo × sinks) grid left-joins the counts and the
       // lineage rows are written by Spark — nothing per-file ever reaches
       // the driver (at ~800k files × S sinks that is a dataset, not
       // driver metadata)
-      val now = System.currentTimeMillis()
       // attempted rows per (sink, fname), split into delivered vs remote-
       // rejected
-      val countsDf = perSink(routedB)
-        .groupBy("sink", "fname")
+      val countsDf = perSink(staged.rows).groupBy("sink", "fname")
         .agg(sum(when(col("failed"), 0L).otherwise(1L)).as("n"),
           sum(when(col("failed"), 1L).otherwise(0L)).as("nf"))
-      val fileDf = todo.map(f => (new Path(f).getName, f, fps(f)))
-        .toDF("fname", "file", "contentHash")
       val sinkDf = cfg.sinks.map(_.name).toDF("sink")
       // the grid (not countsDf's keys): a sink that delivered zero rows
       // still needs lineage entries, else its files would retry forever.
@@ -463,14 +486,13 @@ object Pipeline {
       // modeled-rejected (never attempted) + wire-rejected. A (sink, file)
       // with no wire row this run (replay of an already-renamed dir — the
       // at-most-once window) falls back to the modeled count.
-      val grid = broadcast(fileDf).crossJoin(sinkDf)
+      val grid = staged.work.crossJoin(sinkDf)
         .join(countsDf, Seq("sink", "fname"), "left")
       val withWire =
-        if (wireAcc.isEmpty)
+        if (wire.isEmpty)
           grid.withColumn("wd", lit(null).cast("long"))
             .withColumn("wf", lit(null).cast("long"))
-        else grid.join(wireAcc.reduce(_ unionByName _),
-          Seq("sink", "fname"), "left")
+        else grid.join(wire.reduce(_ unionByName _), Seq("sink", "fname"), "left")
       // report totals are observed on the commit write itself, one
       // index-named (delivered, failed) aggregate pair per sink — sink
       // names never become Catalyst identifiers
@@ -481,32 +503,38 @@ object Pipeline {
           sum(when(mine, col("rowsFailed")).otherwise(0L)).as(s"f_$i"))
       }
       val entriesDf = withWire
-        .select(lit(runId).as("runId"), lit(snapId).as("snapshotId"),
+        .select(lit(runId).as("runId"), lit(report.snapshotId).as("snapshotId"),
           col("file"), col("sink"),
           coalesce(col("wd"), col("n"), lit(0L)).as("rowsDelivered"),
           (coalesce(col("nf"), lit(0L)) + coalesce(col("wf"), lit(0L)))
             .as("rowsFailed"),
-          col("contentHash"), lit(now).as("committedAtMs"))
+          col("contentHash"), lit(System.currentTimeMillis()).as("committedAtMs"))
         .observe(sinkObs, sinkAggs.head, sinkAggs.tail: _*)
       lineage.commitDf(entriesDf, runId)
       // dedup store publishes strictly AFTER the lineage commit (the
-      // crash-ordering contract above); also releases the stage's caches
-      dedupStage.foreach(_.commit())
+      // crash-ordering contract of `stage`); also releases its caches
+      staged.dedup.foreach(_.commit())
 
-      val totals = sinkObs.get
       def perSinkTotal(prefix: String): Map[String, Long] =
         cfg.sinks.zipWithIndex.map { case (r, i) =>
-          r.name -> totals(s"${prefix}_$i").asInstanceOf[Long] }.toMap
-      // the lineage write's plan holds src, so its observation is complete
-      // here unless AQE pruned it
-      val metrics = graft.metrics.Metrics.observedOrCounted(obs, scanned, inputAggs)
-      RunReport(runId, snapId, todo, invalidated, pruned,
-        perSinkTotal("d"),
-        metrics("lines_total").asInstanceOf[Long],
-        metrics("blank_total").asInstanceOf[Long],
-        perSinkTotal("f"),
-        inputBytes = metrics("bytes_total").asInstanceOf[Long],
-        manifestFiles = files.size)
+          r.name -> sinkObs.get(s"${prefix}_$i").asInstanceOf[Long] }.toMap
+      // the lineage write's plan holds the scan, so its observation is
+      // complete here unless AQE pruned it
+      val metrics = Metrics.observedOrCounted(staged.obs, staged.scanned, InputAggs)
+      report.copy(perSinkDelivered = perSinkTotal("d"), perSinkFailed = perSinkTotal("f"),
+        inputRows = metrics("lines_total").asInstanceOf[Long],
+        blankRows = metrics("blank_total").asInstanceOf[Long],
+        inputBytes = metrics("bytes_total").asInstanceOf[Long])
     }
+
+    // every (row, accepting sink) pair, flagged where that sink's remote
+    // rejects the row: the one sink fan-out the delivery write and the
+    // lineage counts both derive from
+    private def perSink(rows: DataFrame): DataFrame = rows
+      .withColumn("sink", explode(Route.acceptingSinks(cfg.sinks, col("text"))))
+      .withColumn("failed", cfg.sinks.foldLeft(lit(false)) { (acc, r) =>
+        when(col("sink") === r.name,
+          Route.rejectPredicate(r, col("text"))).otherwise(acc)
+      })
   }
 }

@@ -203,7 +203,7 @@ object ConfigLoader {
       fpSize <- lk.int("collector.fingerprint-size", 64 * 1024)
       _ <- parityChecks(lk)
       promAddr <- prometheusChecks(lk)
-      batch <- batchChecks(lk)
+      batch <- batchSettings(lk)
       ml <- multiline(lk)
       dd <- dedupStage(lk)
       sinks <- sinkRules(kvs, lk)
@@ -299,8 +299,9 @@ object ConfigLoader {
       }
   } yield if (en) Some(addr) else None
 
-  /** sink.batch-size > 0, sink.batch-interval > 0 when set — the reference
-    * validations (config.go:198-204). The values are CONSUMED by the HTTP
+  /** sink.batch-size, sink.batch-interval (a duration) and sink.retries;
+    * their ranges are the reference validations (config.go:198-204), checked
+    * by [[PipelineConfig.validate]]. The values are CONSUMED by the HTTP
     * wire sinks (rows per bulk POST / max flush gap — interval is
     * best-effort, see PipelineConfig.batchIntervalMs); the parquet/file
     * flavors remain lossless-batch (COVERAGE.md §2.6). sink.retries is the
@@ -308,14 +309,11 @@ object ConfigLoader {
     * (the reference drops a failed flush; 0 keeps that parity). Yields
     * (size, ms, retries).
     */
-  private def batchChecks(lk: Lookup): Either[String, (Int, Long, Int)] = for {
+  private def batchSettings(lk: Lookup): Either[String, (Int, Long, Int)] = for {
     bs <- lk.int("sink.batch-size", 200)
     bi <- lk.str("sink.batch-interval", "2s")
     rt <- lk.int("sink.retries", 0)
-    _ <- if (bs > 0) Right(()) else Left("sink.batch-size must be > 0")
     ms <- parseDuration(bi)
-    _ <- if (ms > 0) Right(()) else Left("sink.batch-interval must be > 0")
-    _ <- if (rt >= 0) Right(()) else Left("sink.retries must be >= 0")
   } yield (bs, ms, rt)
 
   /** The multiline sub-unmarshal incl. the Java preset (config.go:100-131),

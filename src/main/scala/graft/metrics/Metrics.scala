@@ -58,6 +58,21 @@ object Metrics {
       r.getValuesMap[Any](r.schema.fieldNames.toSeq)
     }
 
+  /** The one-line JSON summary `graft.Main run` prints for a run. Sink
+    * names are config-supplied, so they are JSON-escaped as keys.
+    */
+  def runLine(r: RunReport): String = {
+    def perSink(m: Map[String, Long]): String =
+      m.map { case (k, v) => s""""${graft.sinks.HttpSink.jsonEsc(k)}":$v""" }
+        .mkString("{", ",", "}")
+    s"""{"run_id":"${r.runId}","snapshot":${r.snapshotId},""" +
+      s""""processed_files":${r.processedFiles.size},""" +
+      s""""invalidated":${r.invalidatedFiles.size},""" +
+      s""""pruned":${r.prunedFiles.size},""" +
+      s""""input_rows":${r.inputRows},"blank_rows":${r.blankRows},""" +
+      s""""delivered":${perSink(r.perSinkDelivered)},"failed":${perSink(r.perSinkFailed)}}"""
+  }
+
   /** Accumulated counter state over a campaign of runs (the registry). */
   final case class State(reports: Seq[RunReport] = Nil) {
     def add(r: RunReport): State = State(reports :+ r)

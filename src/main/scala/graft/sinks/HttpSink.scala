@@ -73,7 +73,10 @@ object HttpSink {
       .map(p => "`" + p.replace("`", "``") + "`")
       .mkString(".")
 
-  private def jsonEsc(s: String): String = {
+  /** A JSON string literal's body for `s` (quotes, backslashes and
+    * control characters escaped).
+    */
+  private[graft] def jsonEsc(s: String): String = {
     val sb = new StringBuilder
     s.foreach {
       case '"' => sb.append("\\\"")

@@ -279,7 +279,7 @@ class CommitLogSpec extends AnyFunSuite {
     // location of a catalog table, which has no commit protocol
     val allowed = Seq(
       "Pipeline.scala" -> "require(fs.rename(src, dest),",
-      "Pipeline.scala" -> "} fs.delete(new Path(fsRoot,",
+      "Pipeline.scala" -> "fs.delete(new Path(root, s\"batch=$old\"), true)",
       "Bucketed.scala" -> "if (fs.exists(loc)) fs.delete(loc, true)")
     val call = raw"\.(rename|delete\w*|fullyDelete)\((?!\))".r
     val files = Files.walk(root).iterator().asScala

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.CorpusLm
@@ -56,23 +57,49 @@ class CorpusLmSpec extends AnyFunSuite {
   test("two-phase tercile rank equals ntile(3) over the full stratum") {
     // the r7 rewrite computes the tercile from a coarse-bucket offset plus
     // a within-bucket row_number; it must equal SQL ntile(3) OVER
-    // (PARTITION BY lang ORDER BY bits, doc_id) for strata whose sizes
-    // exercise n % 3 ∈ {0, 1, 2} and repeated bits values
-    val rows = (0 until 25).map { i =>
+    // (PARTITION BY lang ORDER BY bits, doc_id). Property: the 25 fixed
+    // docs plus drawn ones, all in ONE corpus (bits depend on the corpus).
+    val fixed = (0 until 25).map { i =>
       val lang = if (i % 2 == 0) "en" else "fr"
-      val words = (0 to i % 7 + 1).map(j => s"w${(i * 3 + j) % 9}").mkString(" ")
-      (i.toLong, lang, "s", words)
+      lang -> (0 to i % 7 + 1).map(j => s"w${(i * 3 + j) % 9}").mkString(" ")
     }
-    val out = CorpusLm.bigramBits(docs(rows: _*))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("lang").orderBy(col("bits"), col("doc_id"))
-    val mismatches = out
-      .withColumn("expected", element_at(
-        typedlit(Seq("head", "middle", "tail")), ntile(3).over(w)))
-      .filter(col("bucket") =!= col("expected"))
-      .count()
-    assert(mismatches == 0L)
-    assert(out.count() == 25L)
+    // a skewed language pool gives strata of random sizes; texts drawn
+    // from a small repeated pool tie on bits, and random 2–12-token texts
+    // over 12 words spread bits across several coarse (floor) buckets
+    val repeated = Seq("x y x y", "a b c", "q q q q q", "u v", "m n o p m n")
+    val genText = Gen.choose(2, 12)
+      .flatMap(n => Gen.listOfN(n, Gen.choose(0, 11)))
+      .map(_.map(w => s"w$w").mkString(" "))
+    val genDoc = Gen.zip(
+      Gen.frequency(3 -> Gen.const("en"), 2 -> Gen.const("fr"),
+        10 -> Gen.choose(0, 29).map(i => s"l$i")),
+      Gen.frequency(1 -> Gen.oneOf(repeated), 3 -> genText))
+    Cases.check(genDoc, fixed, n = 240) { cases =>
+      val d = docs(cases.zipWithIndex.map { case ((lang, text), i) =>
+        (i.toLong, lang, "s", text) }: _*)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("lang").orderBy(col("bits"), col("doc_id"))
+      val rows = CorpusLm.bigramBits(d)
+        .withColumn("expected", element_at(
+          typedlit(Seq("head", "middle", "tail")), ntile(3).over(w)))
+        .select("doc_id", "lang", "bits", "bucket", "expected").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getString(3),
+          r.getString(4)))
+      // every doc has >= 2 tokens, so every doc is scored
+      val missing = cases.indices.map(_.toLong).toSet -- rows.map(_._1)
+      // the draw must reach what the two-phase form could get wrong
+      val strata = rows.groupBy(_._2).values.toSeq
+      val unreached = Seq(
+        "a stratum size for every n % 3" ->
+          (strata.map(_.length % 3).toSet == Set(0, 1, 2)),
+        "repeated bits within a stratum" ->
+          strata.exists(s => s.map(_._3).distinct.length < s.length),
+        "a stratum over more than one coarse bucket" ->
+          strata.exists(s => s.map(r => math.floor(r._3)).distinct.length > 1))
+        .collect { case (what, false) => s"draw lacks $what" }
+      rows.filter(r => r._4 != r._5).toSeq ++
+        missing.toSeq.sorted.map(i => s"doc $i not scored") ++ unreached
+    }
   }
 
   test("dsirWeights: target-typical tokens outrank target-absent tokens") {

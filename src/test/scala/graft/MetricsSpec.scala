@@ -49,6 +49,20 @@ class MetricsSpec extends AnyFunSuite {
     }
   }
 
+  test("the JSON run line parses back for sink names that need escaping") {
+    val line = Metrics.runLine(report("r1", files = 2, manifest = 3, rows = 7,
+      bytes = 70, delivered = Map("a\"b" -> 5L, "c\\d" -> 2L),
+      failed = Map("a\"b" -> 1L)))
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(json.get("run_id").asText == "r1")
+    assert(json.get("processed_files").asLong == 2L)
+    assert(json.get("input_rows").asLong == 7L)
+    assert(json.get("delivered").get("a\"b").asLong == 5L)
+    assert(json.get("delivered").get("c\\d").asLong == 2L)
+    assert(json.get("failed").get("a\"b").asLong == 1L)
+    assert(json.get("failed").size == 1)
+  }
+
   test("the /metrics endpoint serves the current state per scrape (Start/Stop shape)") {
     @volatile var st = Metrics.State()
     // port 0 -> ephemeral bind, like the reference's test servers
