@@ -192,6 +192,22 @@ class ConfigLoaderSpec extends AnyFunSuite {
     }
   }
 
+  test("several faults: a section's parse error is reported before a batch range error") {
+    // the sink batch ranges are checked by PipelineConfig.validate, after
+    // every section has parsed, so the multiline fault wins here
+    val got = loadText(
+      """[sink]
+        |batch-size = 0
+        |
+        |[collector.multiline]
+        |mode = "sideways"
+        |start-pattern = "^A"
+        |condition-pattern = "^B"
+        |timeout = "1s"
+        |""".stripMargin)
+    assert(got.left.toOption.exists(_.contains("invalid multiline mode")), got)
+  }
+
   test("missing file errors; no sinks configured falls back to console default") {
     assert(ConfigLoader.load(Some("/nonexistent/x.toml")).isLeft)
     val cfg = loadText("[collector]\nlineage-partitions = 2\n").toOption.get

@@ -85,8 +85,14 @@ class CorpusLmSpec extends AnyFunSuite {
         .select("doc_id", "lang", "bits", "bucket", "expected").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getString(3),
           r.getString(4)))
-      // every doc has >= 2 tokens, so every doc is scored
-      val missing = cases.indices.map(_.toLong).toSet -- rows.map(_._1)
+      // every doc has >= 2 tokens, so every doc is scored exactly once
+      val ids = rows.map(_._1).toSeq
+      val want = cases.indices.map(_.toLong)
+      val coverage =
+        if (ids.sorted == want) Nil
+        else Seq(s"${ids.length} rows for ${want.length} docs; " +
+          s"unscored ${(want.toSet -- ids).toSeq.sorted.mkString(",")}; " +
+          s"repeated ${ids.diff(ids.distinct).distinct.sorted.mkString(",")}")
       // the draw must reach what the two-phase form could get wrong
       val strata = rows.groupBy(_._2).values.toSeq
       val unreached = Seq(
@@ -97,8 +103,7 @@ class CorpusLmSpec extends AnyFunSuite {
         "a stratum over more than one coarse bucket" ->
           strata.exists(s => s.map(r => math.floor(r._3)).distinct.length > 1))
         .collect { case (what, false) => s"draw lacks $what" }
-      rows.filter(r => r._4 != r._5).toSeq ++
-        missing.toSeq.sorted.map(i => s"doc $i not scored") ++ unreached
+      rows.filter(r => r._4 != r._5).toSeq ++ coverage ++ unreached
     }
   }
 

@@ -102,7 +102,10 @@ class DedupSpec extends AnyFunSuite {
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    val root = parent.keys.map(i => i -> find(i)).toMap
+    // iterate a copy of the keys: find's path compression writes `parent`,
+    // and a write can grow the hash table, which skips keys of a live
+    // iteration over it
+    val root = parent.keys.toList.map(i => i -> find(i)).toMap
     val size = root.values.groupBy(identity).view.mapValues(_.size.toLong).toMap
     root.map { case (i, r) => (i, r, size(r)) }.toSet
   }
