@@ -122,11 +122,7 @@ object ConfigLoader {
     * (config.go:80-83,158-170); dotted keys pass through.
     */
   private def flagKey(k: String): String =
-    if (k.contains(".")) k
-    else k match {
-      case "include" | "exclude" | "separator" => s"collector.$k"
-      case other => s"collector.$other"
-    }
+    if (k.contains(".")) k else s"collector.$k"
 
   private def coerceAll(kvs: Seq[(String, String)]): Either[String, Seq[(String, Value)]] = {
     val out = mutable.ArrayBuffer.empty[(String, Value)]
@@ -275,28 +271,7 @@ object ConfigLoader {
     _ <- if (!en) Right(())
       else if (addr.isEmpty)
         Left("prometheus.addr must be set when prometheus.enable is true")
-      else {
-        // validate exactly what Metrics.serve accepts: a bare host (port
-        // defaults to 9090), or host:port with a numeric port; IPv6 hosts
-        // must be bracketed or serve would split them at the wrong colon
-        val i = addr.lastIndexOf(':')
-        if (i < 0) Right(())
-        // "[::1]" — bracketed IPv6 with no port: the last ':' is inside the
-        // brackets; serve treats the whole token as host, port 9090
-        else if (addr.indexOf(']', i) >= 0)
-          if (addr.startsWith("[") && addr.endsWith("]")) Right(())
-          else Left(s"prometheus.addr: malformed IPv6 literal '$addr'")
-        else {
-          val host = addr.substring(0, i)
-          if (!addr.substring(i + 1).toIntOption.exists(p => p >= 0 && p <= 65535))
-            Left(s"prometheus.addr: invalid port in '$addr'")
-          else if (host.contains(':') &&
-            !(host.startsWith("[") && host.endsWith("]")))
-            Left(s"prometheus.addr: IPv6 host must be bracketed, " +
-              s"""e.g. "[::1]:2112" (got '$addr')""")
-          else Right(())
-        }
-      }
+      else graft.metrics.Metrics.listenAddr(addr).left.map(e => s"prometheus.addr: $e")
   } yield if (en) Some(addr) else None
 
   /** sink.batch-size, sink.batch-interval (a duration) and sink.retries;

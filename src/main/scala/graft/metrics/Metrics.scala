@@ -78,8 +78,11 @@ object Metrics {
     def add(r: RunReport): State = State(reports :+ r)
   }
 
+  /** A label value in the text exposition format: backslash, double quote
+    * and line feed escaped (a raw line feed would split the sample line).
+    */
   private def esc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
+    s.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", "\\n")
 
   /** Render the accumulated state in Prometheus text exposition format. */
   def renderText(st: State): String = {
@@ -132,25 +135,42 @@ object Metrics {
     sb.toString
   }
 
-  /** Serve `/metrics` on `addr` ("host:port" or ":port"; port 0 binds an
+  /** The listen address of `/metrics`: "host:port", ":port" (all
+    * interfaces) or a bare host (port 9090). An IPv6 host is bracketed,
+    * with or without a port ("[::1]:2112", "[::1]"), and comes back
+    * unbracketed for [[InetSocketAddress]]. The config loader validates
+    * `prometheus.addr` with this and [[serve]] binds with it, so a config
+    * that loads is one `serve` can parse.
+    */
+  private[graft] def listenAddr(addr: String): Either[String, (String, Int)] = {
+    def unbracket(h: String) = h.stripPrefix("[").stripSuffix("]")
+    addr.lastIndexOf(':') match {
+      case -1 => Right((addr, 9090))
+      // a ']' AFTER the last ':' means that colon is inside the brackets:
+      // a port-less bracketed IPv6 literal like "[::1]", not host:port
+      case i if addr.indexOf(']', i) >= 0 =>
+        if (addr.startsWith("[") && addr.endsWith("]")) Right((unbracket(addr), 9090))
+        else Left(s"malformed IPv6 literal '$addr'")
+      case i =>
+        val host = addr.substring(0, i)
+        addr.substring(i + 1).toIntOption.filter(p => p >= 0 && p <= 65535) match {
+          case None => Left(s"invalid port in '$addr'")
+          // an unbracketed IPv6 host would be split at the wrong colon
+          case Some(_) if host.contains(':') && !(host.startsWith("[") && host.endsWith("]")) =>
+            Left(s"""IPv6 host must be bracketed, e.g. "[::1]:2112" (got '$addr')""")
+          case Some(p) => Right((if (host.isEmpty) "0.0.0.0" else unbracket(host), p))
+        }
+    }
+  }
+
+  /** Serve `/metrics` on `addr` (see [[listenAddr]]; port 0 binds an
     * ephemeral port) — the metrics.Start/Stop shape
     * (internal/metrics/metrics.go:22-47). `text` is re-evaluated per
     * scrape, so updating the backing state between runs is visible to the
     * next GET. Returns (bound port, stop function).
     */
   def serve(addr: String, text: () => String): (Int, () => Unit) = {
-    val (host, port) = addr.lastIndexOf(':') match {
-      case -1 => (addr, 9090)
-      // a ']' AFTER the last ':' means that colon is inside the brackets —
-      // a port-less bracketed IPv6 literal like "[::1]", not host:port
-      // (previously "1]".toInt threw NumberFormatException)
-      case i if addr.indexOf(']', i) >= 0 =>
-        (addr.stripPrefix("[").stripSuffix("]"), 9090)
-      case i =>
-        // bracketed IPv6 ("[::1]:2112") unwraps for InetSocketAddress
-        val h = addr.substring(0, i).stripPrefix("[").stripSuffix("]")
-        (if (h.isEmpty) "0.0.0.0" else h, addr.substring(i + 1).toInt)
-    }
+    val (host, port) = listenAddr(addr).fold(e => throw new IllegalArgumentException(e), identity)
     val server = HttpServer.create(new InetSocketAddress(host, port), 0)
     server.createContext("/metrics", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {

@@ -22,22 +22,6 @@ final case class Turn(
     ts: Timestamp
 )
 
-/** A turn after the grok/regex parse stage (reference parser outputs:
-  * pkg/parser/audit/audit.go:23-30 shape, generalized).
-  */
-final case class ParsedTurn(
-    conv_id: String,
-    turn_idx: Int,
-    role: String,
-    text: String,
-    tool: String,
-    ts: Timestamp,
-    verb: String,              // leading verb: CALL | INFO | ask | ""
-    dur_ms: Option[Long],      // CALL ... dur=<n>ms
-    status: Option[String],    // CALL ... status=<ok|err>
-    kv: Map[String, String]    // quoted key=value fields (audit.go:82-147 semantics)
-)
-
 /** Routing rule: a named sink with include/exclude substring predicates,
   * the reference's sink filter semantics verbatim
   * (cmd/freader/sink/common/filter.go:11-30):

@@ -29,6 +29,25 @@ import graft.functions.{CdcChunks, Hashing, MinhashBands, ShingleHashes, SimHash
   * All pseudo-randomness comes from [[graft.functions.Hashing]], so every
   * path here is reproducible in DuckDB for the oracle gate — the engine
   * path and the oracle path are the same code.
+  *
+  * Each candidate → verify step is written once:
+  *
+  *  - `bucketPairs`, the bucket self-join that yields distinct `(a, b)`
+  *    candidates: [[ngramJaccard]] (prefix index), [[minhashLsh]] and
+  *    [[incrementalMinhashStaged]] (band values), [[embeddingNearDup]]
+  *    (hyperplane sketches);
+  *  - `jaccardPairs`, exact-Jaccard verification of candidates over hashed
+  *    shingle sets: [[ngramJaccard]], [[minhashLsh]],
+  *    [[incrementalMinhashStaged]];
+  *  - `unseen` (within-batch exact dedup, then the anti-join on stored
+  *    `content_h60`) and `stagedBatch` (publish, then release the caches):
+  *    both incremental modes.
+  *
+  * Three joins stay their own, because sharing a kernel would change their
+  * plans: [[simhashPairs]] carries both fingerprints into the distance
+  * before its distinct, [[semDedup]] pairs within a k-means cluster on
+  * `cid` with its own tie-break, and [[Similarity.lshKnn]] joins queries
+  * to a corpus rather than a set to itself.
   */
 object Dedup {
 
@@ -288,15 +307,8 @@ object Dedup {
     val spark = df.sparkSession
     val log = seenLog(spark, storeDir)
     val stored = openSeen(spark, log, seenMeta("exact"), maxSeenDirs)
-    val fresh = exactDeduped(df, idCol, textCol)
-      .withColumn("__h60", Hashing.sha60(col(textCol)))
-      .join(stored.select(col("content_h60").as("__h60")), Seq("__h60"), "left_anti")
-      .cache()
-    val commit: () => Unit = () =>
-      try log.commit("batch")(writeSeen(log, fresh.select(col("__h60").as("content_h60"),
-        srcOf(srcCol))))
-      finally fresh.unpersist(false)
-    IncrementalBatch(fresh.drop("__h60"), commit)
+    val fresh = unseen(df, idCol, textCol, stored).cache()
+    stagedBatch(log, fresh, Seq(col("__h60").as("content_h60"), srcOf(srcCol)), fresh)
   }
 
   /** INCREMENTAL near-dup (MinHash-LSH) against a persisted signature
@@ -346,9 +358,7 @@ object Dedup {
     // the shingle-less idempotency hole is closed structurally. The
     // survivors' shingle sets and bands are computed once, as columns of
     // the cached rows: the LSH pass and the commit both read them there
-    val unseen = exactDeduped(df, idCol, textCol)
-      .withColumn("__h60", Hashing.sha60(col(textCol)))
-      .join(stored.select(col("content_h60").as("__h60")), Seq("__h60"), "left_anti")
+    val batch = unseen(df, idCol, textCol, stored)
       .withColumn("__hs", column(ShingleHashes(expression(col(textCol)), n)))
       .withColumn("__hs", when(size(col("__hs")) > 0, col("__hs")))
       .withColumn("__bh", bandsOf(col("__hs"), bands, rowsPerBand))
@@ -366,7 +376,7 @@ object Dedup {
     // optimizer prunes from both unions. The `__self` flag rides the
     // candidate AND the set lookup so colliding id VALUES between batch
     // and store can never cross-verify.
-    val sets = unseen.filter(col("__hs").isNotNull)
+    val sets = batch.filter(col("__hs").isNotNull)
       .select(col(idCol).as("id"), col("__hs").as("hs"), col("__bh").as("bh"))
     val old = stored.filter(col("hs").isNotNull)
     def bandRows(s: DataFrame): DataFrame =
@@ -374,31 +384,39 @@ object Dedup {
     val selfBands = bandRows(sets)
     val rightBands = selfBands.withColumn("__self", lit(true))
       .unionByName(bandRows(old).withColumn("__self", lit(false)))
-    val cand = selfBands.as("l").join(rightBands.as("r"),
-        col("l.band") === col("r.band") && col("l.bhash") === col("r.bhash") &&
-          (!col("r.__self") || col("l.id") < col("r.id")))
-      .select(col("l.id").as("a"), col("r.id").as("b"),
-        col("r.__self").as("__self"))
-      .distinct()
+    val cand = bucketPairs(selfBands, rightBands, Seq("band", "bhash"),
+      !col("r.__self") || col("l.id") < col("r.id"), "__self")
     val rightSets = sets.select(col("id"), col("hs"), lit(true).as("__self"))
       .unionByName(old.select(col("id"), col("hs"), lit(false).as("__self")))
-    val dropped = cand
-      .join(sets.select(col("id").as("a"), col("hs").as("hsa_")), "a")
-      .join(rightSets.select(col("id").as("b"), col("__self"),
-        col("hs").as("hsb_")), Seq("b", "__self"))
-      .withColumn("inter", size(array_intersect(col("hsa_"), col("hsb_"))))
-      .filter(col("inter").cast("double") /
-        (size(col("hsa_")) + size(col("hsb_")) - col("inter")) >= threshold)
+    val dropped = jaccardPairs(cand, sets, rightSets, threshold, "__self")
       .select(when(col("__self"), col("b")).otherwise(col("a")).as(idCol))
       .distinct()
-    val fresh = unseen.join(dropped, Seq(idCol), "left_anti").cache()
-    val commit: () => Unit = () =>
-      try log.commit("batch")(writeSeen(log, fresh.select(col(idCol).as("id"),
-        col("__h60").as("content_h60"), col("__hs").as("hs"), col("__bh").as("bh"),
-        srcOf(srcCol))))
-      finally { fresh.unpersist(false); unseen.unpersist(false) }
-    IncrementalBatch(fresh.drop("__h60", "__hs", "__bh"), commit)
+    val fresh = batch.join(dropped, Seq(idCol), "left_anti").cache()
+    stagedBatch(log, fresh, Seq(col(idCol).as("id"), col("__h60").as("content_h60"),
+      col("__hs").as("hs"), col("__bh").as("bh"), srcOf(srcCol)), fresh, batch)
   }
+
+  /** Steps 1 and 2 of both incremental modes: the batch exact-deduped
+    * within itself, with its `__h60` content hash, minus every row whose
+    * hash the store already holds — a replay of a committed batch drops
+    * here in full.
+    */
+  private def unseen(df: DataFrame, idCol: String, textCol: String,
+      stored: DataFrame): DataFrame =
+    exactDeduped(df, idCol, textCol)
+      .withColumn("__h60", Hashing.sha60(col(textCol)))
+      .join(stored.select(col("content_h60").as("__h60")), Seq("__h60"), "left_anti")
+
+  /** The staged batch of both incremental modes over the cached survivors
+    * `fresh`: `commit()` publishes their `store` columns as one commit,
+    * then releases `caches`; `fresh` is handed out without the staging
+    * columns.
+    */
+  private def stagedBatch(log: CommitLog, fresh: DataFrame, store: Seq[Column],
+      caches: DataFrame*): IncrementalBatch =
+    IncrementalBatch(fresh.drop("__h60", "__hs", "__bh"), () =>
+      try log.commit("batch")(writeSeen(log, fresh.select(store: _*)))
+      finally caches.foreach(_.unpersist(false)))
 
   /** RETRACT a set of sources from an incremental store (exact or
     * minhash): every store row whose `src` provenance is in `sources` is
@@ -540,6 +558,37 @@ object Dedup {
           size(col("fps")).cast("double") / col("n_kgrams")).as("density"))
   }
 
+  /** Candidate pairs of the bucket joins: distinct `(a, b)` = (`l.id`,
+    * `r.id`) over the rows of `left` and `right` that agree on every
+    * `buckets` column and pass `keep` (written over `l.` and `r.`), plus
+    * the right row's `carry` columns. Only ids and the carried columns
+    * cross the join and the distinct; callers rejoin anything wider.
+    */
+  private def bucketPairs(left: DataFrame, right: DataFrame, buckets: Seq[String],
+      keep: Column, carry: String*): DataFrame =
+    left.as("l").join(right.as("r"),
+        buckets.map(c => col(s"l.$c") === col(s"r.$c")).reduce(_ && _) && keep)
+      .select(Seq(col("l.id").as("a"), col("r.id").as("b")) ++
+        carry.map(c => col(s"r.$c").as(c)): _*)
+      .distinct()
+
+  /** Exact-Jaccard verification of candidate pairs `cand`: `a` finds its
+    * hashed-shingle set in `aSets` (id, hs), `b` in `bSets` (id, hs,
+    * `keys`) on `b` and the carried `keys`; the pairs with
+    * |A ∩ B| / |A ∪ B| ≥ `threshold` come back as (a, b, keys, jaccard).
+    */
+  private def jaccardPairs(cand: DataFrame, aSets: DataFrame, bSets: DataFrame,
+      threshold: Double, keys: String*): DataFrame =
+    cand
+      .join(aSets.select(col("id").as("a"), col("hs").as("hsa_")), "a")
+      .join(bSets.select(Seq(col("id").as("b")) ++ keys.map(col(_)) :+
+        col("hs").as("hsb_"): _*), "b" +: keys)
+      .withColumn("inter", size(array_intersect(col("hsa_"), col("hsb_"))))
+      .withColumn("jaccard", col("inter").cast("double") /
+        (size(col("hsa_")) + size(col("hsb_")) - col("inter")))
+      .filter(col("jaccard") >= threshold)
+      .select((Seq("a", "b") ++ keys :+ "jaccard").map(col(_)): _*)
+
   /** Exact all-pairs n-gram Jaccard ≥ threshold — same result set as the
     * naive shingle inverted index (explode → self-join → per-pair counts),
     * computed with the AllPairs/PPJoin prefix filter (Bayardo et al.
@@ -602,20 +651,10 @@ object Dedup {
       .select(col("id"), col("sz"),
         explode(slice(col("__or"), lit(1), p)).as("__e"))
       .select(col("id"), col("sz"), col("__e.h").as("h"))
-    val candidates = pre.as("l").join(pre.as("r"),
-        col("l.h") === col("r.h") && col("l.id") < col("r.id") &&
-          col("l.sz").cast("double") >= col("r.sz") * lit(threshold) - lit(1e-9) &&
-          col("r.sz").cast("double") >= col("l.sz") * lit(threshold) - lit(1e-9))
-      .select(col("l.id").as("a"), col("r.id").as("b"))
-      .distinct()
-    candidates
-      .join(sets.select(col("id").as("a"), col("hs").as("hsa_")), "a")
-      .join(sets.select(col("id").as("b"), col("hs").as("hsb_")), "b")
-      .withColumn("inter", size(array_intersect(col("hsa_"), col("hsb_"))))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("hsa_")) + size(col("hsb_")) - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), col("jaccard"))
+    val candidates = bucketPairs(pre, pre, Seq("h"), col("l.id") < col("r.id") &&
+      col("l.sz").cast("double") >= col("r.sz") * lit(threshold) - lit(1e-9) &&
+      col("r.sz").cast("double") >= col("l.sz") * lit(threshold) - lit(1e-9))
+    jaccardPairs(candidates, sets, sets, threshold)
   }
 
   // ------------------------------------------------------------ content-defined chunking
@@ -746,22 +785,9 @@ object Dedup {
         bandRows0.join(sizes, Seq("band", "bhash"), "left_semi")
     }
 
-    val candidates = bandRows.as("l").join(bandRows.as("r"),
-        col("l.band") === col("r.band") && col("l.bhash") === col("r.bhash") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("a"), col("r.id").as("b"))
-      .distinct()
-
     // exact-Jaccard verification of candidates only (on the hash sets)
-    val withSets = candidates
-      .join(sets.select(col("id").as("a"), col("hs").as("hsa_")), "a")
-      .join(sets.select(col("id").as("b"), col("hs").as("hsb_")), "b")
-    withSets
-      .withColumn("inter", size(array_intersect(col("hsa_"), col("hsb_"))))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("hsa_")) + size(col("hsb_")) - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), col("jaccard"))
+    jaccardPairs(bucketPairs(bandRows, bandRows, Seq("band", "bhash"),
+      col("l.id") < col("r.id")), sets, sets, threshold)
   }
 
   /** Near-dup CLUSTERS: connected components over the verified LSH pair
@@ -918,16 +944,10 @@ object Dedup {
     val blocks = withNorm.select(col("id"),
       posexplode(Similarity.allBandSketches(col("v"), bands, planesPerBand))
         .as(Seq("band", "sk")))
-    val pairs = blocks.as("l").join(blocks.as("r"),
-        col("l.band") === col("r.band") && col("l.sk") === col("r.sk") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("a"), col("r.id").as("b"))
-      .distinct()
-    pairs
+    bucketPairs(blocks, blocks, Seq("band", "sk"), col("l.id") < col("r.id"))
       .join(withNorm.select(col("id").as("a"), col("v").as("av"), col("norm").as("an")), "a")
       .join(withNorm.select(col("id").as("b"), col("v").as("bv"), col("norm").as("bn")), "b")
-      .withColumn("cosine",
-        Similarity.dot(col("av"), col("bv")) / (col("an") * col("bn")))
+      .withColumn("cosine", Similarity.cosine(col("av"), col("bv"), col("an"), col("bn")))
       .filter(col("cosine") >= minCosine)
       .select(col("a"), col("b"), col("cosine"))
   }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing: image/audio/video payloads as opaque
   * `binary` columns with typed metadata, processed in partition-local
@@ -17,13 +16,6 @@ import org.apache.spark.sql.types._
   * Swap [[FakeCodec]] for a real JNI/FFI codec without touching the plan.
   */
 object Multimodal {
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("blob", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("kind", StringType, nullable = false),
-      StructField("declared_len", IntegerType, nullable = false))), nullable = false)))
 
   /** Deterministic fake decoder standing in for the real codec.
     * ??? -> replace with libjpeg/ffmpeg FFI in a real deployment.

@@ -26,6 +26,13 @@ import graft.functions.{Hashing, PlaneSketch, VecDot}
   * All arithmetic is promoted to double before any accumulation so results
   * are reproducible across engines and partitionings (the fold order inside
   * one row's array is fixed).
+  *
+  * `rerank` (the two vector joins plus the r6 cosine) serves [[ivfKnnWith]]
+  * and [[lshKnn]]; `topK` (the per-query window) serves those two and
+  * [[bruteForceKnn]], which scores its broadcast cross join directly. The
+  * candidate joins stay with their callers: each pairs queries with a
+  * corpus (on `cid`, or on (band, sketch)), not a set with itself as the
+  * near-dup bucket joins of [[Dedup]] do.
   */
 object Similarity {
 
@@ -59,16 +66,33 @@ object Similarity {
     val q = queries.select(col(idCol).as("query_id"),
       toDoubleVec(col(embCol)).as("qv"))
       .withColumn("qnorm", l2norm(col("qv")))
-    val scored = c.crossJoin(broadcast(q))
+    topK(c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", TextAnalysis.r6(
-        cosine(col("qv"), col("cv"), col("qnorm"), col("cnorm"))))
+        cosine(col("qv"), col("cv"), col("qnorm"), col("cnorm")))), k)
+  }
+
+  /** The `k` highest-`cosine` rows per `query_id`, ties to the smaller
+    * `neighbor_id`, numbered by `rank`.
+    */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("query_id", "neighbor_id", "cosine", "rank")
   }
+
+  /** Exact rerank of ids-only candidates `cand` (query_id, neighbor_id):
+    * the vectors rejoin from `queries` (query_id, query_id_v,
+    * query_id_norm) and `corpus` (neighbor_id, neighbor_id_v,
+    * neighbor_id_norm), and `cosine` is their r6-rounded exact cosine.
+    */
+  private def rerank(cand: DataFrame, queries: DataFrame, corpus: DataFrame): DataFrame =
+    cand.join(queries, "query_id").join(corpus, "neighbor_id")
+      .withColumn("cosine", TextAnalysis.r6(
+        cosine(col("query_id_v"), col("neighbor_id_v"),
+          col("query_id_norm"), col("neighbor_id_norm"))))
 
   /** Deterministic hyperplane matrix: component (p, i) is sha256-derived
     * and affinely mapped into [-1, 1). Computed once on the driver
@@ -206,19 +230,11 @@ object Similarity {
       .join(cb.select(col("neighbor_id"), col("cid")), Seq("cid"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id").distinct()
-    val scored = pairs
-      .join(qb.select(col("query_id"), col("query_id_v"), col("query_id_norm"))
-        .dropDuplicates("query_id"), "query_id")
-      .join(cb.select(col("neighbor_id"), col("neighbor_id_v"), col("neighbor_id_norm"))
-        .dropDuplicates("neighbor_id"), "neighbor_id")
-      .withColumn("cosine", TextAnalysis.r6(
-        cosine(col("query_id_v"), col("neighbor_id_v"),
-          col("query_id_norm"), col("neighbor_id_norm"))))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+    topK(rerank(pairs,
+      qb.select(col("query_id"), col("query_id_v"), col("query_id_norm"))
+        .dropDuplicates("query_id"),
+      cb.select(col("neighbor_id"), col("neighbor_id_v"), col("neighbor_id_norm"))
+        .dropDuplicates("neighbor_id")), k)
   }
 
   /** [[ivfKnnWith]] over the deterministic seed quantizer (first
@@ -261,16 +277,6 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id")
       .dropDuplicates("query_id", "neighbor_id")
-    val scored = cand
-      .join(withNorm(queries, "query_id"), "query_id")
-      .join(withNorm(corpus, "neighbor_id"), "neighbor_id")
-      .withColumn("cosine", TextAnalysis.r6(
-        cosine(col("query_id_v"), col("neighbor_id_v"),
-          col("query_id_norm"), col("neighbor_id_norm"))))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+    topK(rerank(cand, withNorm(queries, "query_id"), withNorm(corpus, "neighbor_id")), k)
   }
 }

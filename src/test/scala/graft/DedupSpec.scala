@@ -481,6 +481,97 @@ class DedupSpec extends AnyFunSuite {
     assert(hashed == strs)
   }
 
+  test("native shingle_hashes equals its documented Column composition") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.graft.Catalyst.{column, expression}
+    import graft.functions.{Hashing, ShingleHashes}
+    // the Column form: token hashes sha60 % P, each n-token window folded
+    // (acc·8191 + h) mod P left to right, then distinct; fewer than n
+    // tokens yield an empty array and a null text a null one
+    def colForm(t: Column, n: Int): Column = {
+      val ht = transform(split(lower(trim(t)), "\\s+"), x => Hashing.sha60(x) % Hashing.P)
+      val folds = transform(sequence(lit(1), size(ht) - (n - 1)), i =>
+        aggregate(slice(ht, i, lit(n)), lit(0L), (acc, h) => (acc * 8191L + h) % Hashing.P))
+      when(size(ht) >= n, array_distinct(folds))
+        .when(ht.isNotNull, array().cast("array<bigint>"))
+    }
+    def native(t: Column, n: Int): Column = column(ShingleHashes(expression(t), n))
+    val ns = 1 to 4
+    def byN(f: (Column, Int) => Column): Column =
+      ns.foldLeft(lit(null): Column)((acc, n) => when($"n" === n, f($"text", n)).otherwise(acc))
+    // texts over a small vocabulary, so shingles repeat within and across
+    // texts; separators mix spaces, tabs and runs; some texts are empty,
+    // blank or null, and many are shorter than n
+    val genText: Gen[Option[String]] = Gen.frequency(
+      1 -> Gen.const(None),
+      1 -> Gen.oneOf("", " ", "\t").map(Some(_)),
+      12 -> (for {
+        nTok <- Gen.choose(1, 9)
+        toks <- Gen.listOfN(nTok, Gen.oneOf("a", "b", "B", "c", "straße", "Ärger", "x1"))
+        seps <- Gen.listOfN(nTok + 1, Gen.oneOf("", " ", " ", "  ", "\t", " \t "))
+      } yield Some(seps.head + toks.zip(seps.tail).map { case (t, sp) =>
+        t + (if (sp.isEmpty) " " else sp) }.mkString)))
+    val genCase = for (t <- genText; n <- Gen.oneOf(ns)) yield (t, n)
+    val fixed = Seq(None -> 3, Some("") -> 1, Some("a b") -> 3, Some("a a a a") -> 2,
+      Some(" A\tb  a b ") -> 2)
+    Cases.check(genCase, fixed) { cases =>
+      cases.toDF("text", "n")
+        .select($"text", $"n", byN(native).as("native"), byN(colForm).as("col_form"))
+        .as[(Option[String], Int, Option[Seq[Long]], Option[Seq[Long]])].collect().toSeq
+        .filter { case (_, _, nat, cf) => nat != cf }
+    }
+  }
+
+  test("minhashLsh equals a model: pairs sharing a band value with Jaccard ≥ t") {
+    import org.apache.spark.sql.graft.Catalyst.{column, expression}
+    import graft.functions.MinhashBands
+    val (n, bands, rpb, t) = (2, 6, 2, 0.5)
+    // a case: 2–7 docs over a 5-word vocabulary, bases and one-token edits
+    // of them, so pairs land on both sides of t and exactly on it
+    val vocab = Seq("p", "q", "r", "s", "t")
+    val genDoc = Gen.choose(1, 7).flatMap(Gen.listOfN(_, Gen.oneOf(vocab)))
+    def edit(b: List[String]): Gen[List[String]] = for {
+      op <- Gen.choose(0, 2); i <- Gen.choose(0, b.size - 1); w <- Gen.oneOf(vocab)
+    } yield op match {
+      case 0 => b.updated(i, w)
+      case 1 => b :+ w
+      case _ => if (b.size > 1) b.patch(i, Nil, 1) else b
+    }
+    val genCase: Gen[Seq[List[String]]] = for {
+      bases <- Gen.choose(1, 3).flatMap(Gen.listOfN(_, genDoc))
+      derived <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, Gen.oneOf(bases).flatMap(edit)))
+    } yield bases ++ derived
+    // copies (Jaccard 1), Jaccard exactly 1/2 ({pq, qr} vs {pq, qr, rs, st})
+    // and a doc too short to shingle
+    val fixed = Seq(Seq(List("p", "q", "r"), List("p", "q", "r"), List("p", "q", "r", "s", "t"),
+      List("p")))
+    Cases.check(genCase, fixed) { cases =>
+      // every token carries its case id, so no two cases share a shingle
+      val docs = cases.zipWithIndex.flatMap { case (c, ci) =>
+        c.zipWithIndex.map { case (toks, i) =>
+          (f"c$ci%03d-$i%02d", toks.map(w => s"c${ci}_$w").mkString(" ")) }
+      }.toDF("id", "text")
+      val got = Dedup.minhashLsh(docs, "id", "text", n, bands, rpb, t)
+        .as[(String, String, Double)].collect().toSet
+      // the model: native shingle sets and band values, paired on the
+      // driver by any equal (band, value), verified by exact Jaccard
+      val sets = Dedup.shingleHashSets(docs, "id", "text", n)
+        .select($"id", $"hs", column(MinhashBands(expression($"hs"), bands, rpb)).as("bh"))
+        .as[(String, Seq[Long], Seq[Long])].collect().toSeq
+      val hs = sets.map(r => r._1 -> r._2.toSet).toMap
+      val model = sets.flatMap { case (id, _, bh) => bh.zipWithIndex.map(_.swap -> id) }
+        .groupBy(_._1).values.flatMap { ids =>
+          for (a <- ids.map(_._2); b <- ids.map(_._2) if a < b) yield (a, b)
+        }.toSet.flatMap { (p: (String, String)) =>
+          val inter = (hs(p._1) & hs(p._2)).size
+          val j = inter.toDouble / (hs(p._1).size + hs(p._2).size - inter)
+          if (j >= t) Some((p._1, p._2, j)) else None
+        }
+      (got -- model).toSeq.map(p => s"not in model: $p") ++
+        (model -- got).toSeq.map(p => s"missed: $p")
+    }
+  }
+
   test("simhash: expression equals model; identical docs at distance 0; near-dups close") {
     val got = docs.select($"doc_id", Dedup.simhash($"text").as("fp"))
       .as[(Long, Long)].collect().toMap

@@ -63,6 +63,22 @@ class MetricsSpec extends AnyFunSuite {
     assert(json.get("failed").size == 1)
   }
 
+  test("a sink name with a line feed renders as one escaped sample line per counter") {
+    // the loader's sink-name pattern accepts a line feed, so such a name
+    // can reach the exposition text
+    val cfg = graft.config.ConfigLoader.load(env = Map.empty,
+      flags = Map("sink.a\nb.type" -> "parquet"))
+    assert(cfg.toOption.get.sinks.map(_.name) == Seq("a\nb"))
+    val txt = Metrics.renderText(Metrics.State().add(report("r1", files = 1, manifest = 1,
+      rows = 5, bytes = 50, delivered = Map("a\nb" -> 4L), failed = Map("a\nb" -> 1L))))
+    // every non-comment line is exactly one `name{labels} value` sample,
+    // each label value a quoted string of escaped or plain characters
+    val sample = """[a-z_]+(\{[a-z_]+="(\\[\\"n]|[^\\"\n])*"(,[a-z_]+="(\\[\\"n]|[^\\"\n])*")*\})? -?\d+"""
+    val samples = txt.split("\n", -1).toSeq.filterNot(l => l.startsWith("#") || l.isEmpty)
+    samples.foreach(l => assert(l.matches(sample), l))
+    assert(samples.count(_.contains("""sink="a\nb"""")) == 4, txt)
+  }
+
   test("the /metrics endpoint serves the current state per scrape (Start/Stop shape)") {
     @volatile var st = Metrics.State()
     // port 0 -> ephemeral bind, like the reference's test servers
