@@ -261,7 +261,7 @@ object Pipeline {
       // basename is derived after it, because the assembly projects fixed
       // columns.
       val turns = cfg.multiline.fold(src)(spec => operators.Segments.assembleFsmRows(
-          src.filter(length(col("text")) > 0), spec, cfg.lineagePartitions))
+          src.filter(length(col("text")) > 0), spec))
         .withColumn("fname", substring_index(col("src_file"), "/", -1))
 
       // Optional incremental content-dedup stage: rows whose text any

@@ -95,8 +95,12 @@ object Queries {
       s.read.parquet(s"$dir/lineitem.parquet")
         .groupBy("l_returnflag").agg(sum("l_quantity").as("sum_qty"))),
 
-    // P4-shaped grok over the transcript text column
-    "q_parse_grok" -> ((s, dir) => Parse.parseTurnsSql(tx(s, dir))),
+    // P4-shaped grok over the transcript text column: the native
+    // parse_turn every run executes, against the oracle's regex grok
+    "q_parse_grok" -> ((s, dir) =>
+      Parse.parseTurns(tx(s, dir)).select(col("conv_id"), col("turn_idx"),
+        col("verb"), col("tool_x"), col("dur_ms"), col("status"),
+        try_element_at(col("kv"), lit("note")).as("note"))),
 
     // P5: quoted key=value tokenizer (custom Catalyst expression), exploded
     "q_parse_kv" -> ((s, dir) =>
@@ -280,15 +284,11 @@ object Queries {
         .agg(count(lit(1)).as("n_turns"), max("turn_idx").as("last_turn"))),
 
     // per-tool usage tallies (north-star aggregate)
-    "q_tool_usage" -> ((s, dir) => {
-      val t = tx(s, dir).filter(col("tool") =!= "")
-        .withColumn("dur_ms", regexp_extract(col("text"), "dur=(\\d+)ms", 1).cast("long"))
-        .withColumn("is_err", when(col("text").contains("status=err"), 1L).otherwise(0L))
-      t.join(broadcast(Enrich.toolDimDf(s)), Seq("tool"), "left")
+    "q_tool_usage" -> ((s, dir) =>
+      Enrich.enrich(Parse.parseTurns(tx(s, dir).filter(col("tool") =!= "")))
         .groupBy("tool_family")
         .agg(count(lit(1)).as("n_calls"), sum("dur_ms").as("total_dur_ms"),
-          sum("is_err").as("n_err"))
-    }),
+          sum(when(col("status") === "err", 1L).otherwise(0L)).as("n_err"))),
 
     // S4: fingerprint strategies (checksum + checksumSeparator)
     "q_fingerprint" -> ((s, dir) =>

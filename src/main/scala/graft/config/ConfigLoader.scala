@@ -2,7 +2,8 @@ package graft.config
 
 import scala.collection.mutable
 
-import graft.model.{MultilineMode, MultilineSpec, PipelineConfig, SinkRule}
+import graft.model.{DedupStageSpec, MultilineMode, MultilineSpec, PipelineConfig, SinkRule}
+import graft.operators.Dedup
 
 /** External configuration for [[graft.model.PipelineConfig]] — the analogue
   * of the reference's viper loading stack (cmd/freader/config.go:55-131):
@@ -14,22 +15,27 @@ import graft.model.{MultilineMode, MultilineSpec, PipelineConfig, SinkRule}
   *  - explicit flag overrides (flags override env override file — the
   *    viper binding order),
   *  - the `[collector.multiline]` sub-section with kebab-case keys and the
-  *    `java = true` preset filling unset fields (config.go:100-131),
-  *  - the validation matrix (config.go:190-237 + multline_reader.go:37-48):
-  *    sink type whitelist, batch-size/batch-interval > 0, multiline
-  *    mode/start-pattern/condition-pattern/timeout requirements, plus
-  *    PipelineConfig.validate for the collector-side checks.
+  *    `java = true` preset filling unset fields (config.go:100-131).
+  *
+  * The loader is a parser only. A key's type is the one its `build` call
+  * site reads it as, its default is the `PipelineConfig()` /
+  * `DedupStageSpec` one, and every value rule — the validation matrix of
+  * config.go:190-237 and multline_reader.go:37-48 — lives in
+  * [[PipelineConfig.validate]], which `load` ends with, so a loaded config
+  * and a built one pass the same checks. The loader keeps only what the
+  * model cannot express: the Java preset, the fields a section requires,
+  * `prometheus.enable` ⇒ `prometheus.addr`, and the parity-only keys.
   *
   * Key map (reference key → engine field):
-  *   collector.include / exclude / lineage-partitions → same
+  *   collector.include / exclude → same
   *   collector.fingerprint-strategy / fingerprint-size → same
   *   collector.multiline.{mode,start-pattern,condition-pattern,java}
   *     → PipelineConfig.multiline
   *   collector.dedup.{mode,store-dir,threshold,ngram,bands,rows-per-band}
   *     → PipelineConfig.dedup (engine extension, no reference analogue)
   *   collector.separator / poll-interval / workers, multiline.timeout →
-  *     validated only: the batch engine has no line separator, poll loop,
-  *     worker pool or idle flush for them to set
+  *     parity-only, checked here: the batch engine has no line separator,
+  *     poll loop, worker pool or idle flush for them to set
   *   sink.batch-size / batch-interval / retries → batchSize /
   *     batchIntervalMs / batchRetries (the HTTP wire sinks)
   *   prometheus.enable / addr → prometheusAddr
@@ -48,17 +54,21 @@ object ConfigLoader {
   final case class F(v: Double) extends Value
   final case class B(v: Boolean) extends Value
   final case class A(v: Seq[String]) extends Value
+  /** An env or flag value: a string that [[Lookup]] parses for the type
+    * its key is read as. The TOML parser never yields it, so a quoted file
+    * string stays a string.
+    */
+  final case class Raw(v: String) extends Value
 
   /** Known scalar keys and their env-override names; sink.<name>.* keys are
     * dynamic and file/flag-only (the reference configures sink backends via
     * file or FREADER_SINK__* double-underscore forms; single-level env
     * parity covers the fixed surface).
     */
-  private val knownKeys: Seq[String] = Seq(
+  private[graft] val knownKeys: Seq[String] = Seq(
     "collector.separator", "collector.include", "collector.exclude",
-    "collector.lineage-partitions", "collector.poll-interval",
-    "collector.workers", "collector.fingerprint-strategy",
-    "collector.fingerprint-size",
+    "collector.poll-interval", "collector.workers",
+    "collector.fingerprint-strategy", "collector.fingerprint-size",
     "collector.multiline.mode", "collector.multiline.start-pattern",
     "collector.multiline.condition-pattern", "collector.multiline.timeout",
     "collector.multiline.java",
@@ -68,25 +78,20 @@ object ConfigLoader {
     "sink.batch-size", "sink.batch-interval", "sink.retries",
     "prometheus.enable", "prometheus.addr")
 
+  /** The keys of a `[sink.<name>]` section. */
+  private[graft] val sinkKeys: Seq[String] = Seq("type", "include", "exclude",
+    "reject-where", "url", "index", "table", "database", "user", "password")
+
   def envName(key: String): String =
     "GRAFT_" + key.toUpperCase.replace('.', '_').replace('-', '_')
-
-  private val arrayKeys = Set("collector.include", "collector.exclude")
-  private val boolKeys = Set("collector.multiline.java", "prometheus.enable")
-  private val intKeys = Set(
-    "collector.lineage-partitions", "sink.batch-size", "sink.retries",
-    "collector.workers", "collector.fingerprint-size",
-    "collector.dedup.ngram", "collector.dedup.bands",
-    "collector.dedup.rows-per-band")
-
-  val sinkKinds: Set[String] =
-    Set("console", "file", "clickhouse", "opensearch", "parquet")
 
   private val modes: Map[String, MultilineMode] = Map(
     "continuePast" -> MultilineMode.ContinuePast,
     "continueThrough" -> MultilineMode.ContinueThrough,
     "haltBefore" -> MultilineMode.HaltBefore,
     "haltWith" -> MultilineMode.HaltWith)
+
+  private val Defaults = PipelineConfig()
 
   // ------------------------------------------------------------------ load
 
@@ -111,8 +116,8 @@ object ConfigLoader {
             Left(s"failed to read config file: $f")
           else parseToml(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
       }
-      envKv <- coerceAll(knownKeys.flatMap(k => env.get(envName(k)).map(k -> _)))
-      flagKv <- coerceAll(flags.toSeq.map { case (k, v) => flagKey(k) -> v })
+      envKv = knownKeys.flatMap(k => env.get(envName(k)).map(k -> Raw(_)))
+      flagKv = flags.toSeq.map { case (k, v) => flagKey(k) -> Raw(v) }
       cfg <- build(fileKv ++ envKv ++ flagKv)
       validated <- cfg.validate()
     } yield validated
@@ -124,124 +129,122 @@ object ConfigLoader {
   private def flagKey(k: String): String =
     if (k.contains(".")) k else s"collector.$k"
 
-  private def coerceAll(kvs: Seq[(String, String)]): Either[String, Seq[(String, Value)]] = {
-    val out = mutable.ArrayBuffer.empty[(String, Value)]
-    for ((k, raw) <- kvs) coerce(k, raw) match {
-      case Left(e) => return Left(e)
-      case Right(v) => out += k -> v
-    }
-    Right(out.toSeq)
-  }
-
-  private def coerce(k: String, raw: String): Either[String, Value] =
-    if (arrayKeys(k) || k.endsWith(".include") || k.endsWith(".exclude") ||
-      k.endsWith(".reject-where"))
-      Right(A(raw.split(",").toSeq.map(_.trim).filter(_.nonEmpty)))
-    else if (boolKeys(k)) raw.trim.toLowerCase match {
-      case "true" | "1" => Right(B(true))
-      case "false" | "0" => Right(B(false))
-      case other => Left(s"$k: invalid bool '$other'")
-    }
-    else if (intKeys(k)) raw.trim.toLongOption.map(I(_))
-      .toRight(s"$k: invalid integer '$raw'")
-    else Right(S(raw))
-
   // ------------------------------------------------------------------ build
 
+  /** The merged sources, each key's values in precedence order. A getter
+    * reads its key as one type: a file value must already be of it, and
+    * every env or flag string of the key must parse as it — also one a
+    * later source overrides — then the highest-precedence value wins.
+    * An absent key reads as None, so the caller's default applies.
+    */
   private final class Lookup(kvs: Seq[(String, Value)]) {
-    val map: Map[String, Value] = kvs.toMap // later wins (Seq order = precedence)
-    def str(k: String, dflt: String): Either[String, String] = map.get(k) match {
-      case None => Right(dflt)
-      case Some(S(v)) => Right(v)
-      case Some(I(v)) => Right(v.toString)
-      case Some(other) => Left(s"$k: expected string, got $other")
-    }
-    def arr(k: String): Either[String, Seq[String]] = map.get(k) match {
-      case None => Right(Nil)
-      case Some(A(v)) => Right(v)
-      case Some(S(v)) => Right(Seq(v))
-      case Some(other) => Left(s"$k: expected array, got $other")
-    }
-    def int(k: String, dflt: Int): Either[String, Int] = map.get(k) match {
-      case None => Right(dflt)
-      case Some(I(v)) =>
+    private val values: Map[String, Seq[Value]] = kvs.groupMap(_._1)(_._2)
+
+    def present(prefix: String): Boolean = values.keys.exists(_.startsWith(prefix))
+
+    private def get[T](k: String, what: String)(raw: String => Either[String, Value])(
+        read: PartialFunction[Value, Either[String, T]]): Either[String, Option[T]] =
+      values.get(k) match {
+        case None => Right(None)
+        case Some(vs) =>
+          vs.map { case Raw(v) => raw(v); case v => Right(v) }
+            .reduceLeft((earlier, later) => earlier.flatMap(_ => later)) // first fault, or the last value
+            .flatMap(read.applyOrElse(_, (v: Value) => Left(s"$k: expected $what, got $v")))
+            .map(Some(_))
+      }
+
+    def str(k: String): Either[String, Option[String]] =
+      get(k, "string")(v => Right(S(v))) {
+        case S(v) => Right(v)
+        case I(v) => Right(v.toString)
+      }
+    def arr(k: String): Either[String, Option[Seq[String]]] =
+      get(k, "array")(v => Right(A(v.split(",").toSeq.map(_.trim).filter(_.nonEmpty)))) {
+        case A(v) => Right(v)
+        case S(v) => Right(Seq(v))
+      }
+    def int(k: String): Either[String, Option[Int]] =
+      get(k, "integer")(v => v.trim.toLongOption.map(I(_)).toRight(s"$k: invalid integer '$v'")) {
         // no silent Long→Int wrap: 2^32+1 must not become 1 (a 1-byte
         // fingerprint prefix would alias distinct files as unchanged)
-        if (v < Int.MinValue || v > Int.MaxValue)
-          Left(s"$k: $v out of 32-bit integer range")
-        else Right(v.toInt)
-      case Some(other) => Left(s"$k: expected integer, got $other")
-    }
-    def bool(k: String, dflt: Boolean): Either[String, Boolean] = map.get(k) match {
-      case None => Right(dflt)
-      case Some(B(v)) => Right(v)
-      case Some(other) => Left(s"$k: expected bool, got $other")
-    }
-    def dbl(k: String, dflt: Double): Either[String, Double] = map.get(k) match {
-      case None => Right(dflt)
-      case Some(F(v)) => Right(v)
-      case Some(I(v)) => Right(v.toDouble)
-      // env/flag overrides arrive as S — parse, rejecting NaN/Inf here so
-      // range validators downstream see only ordered numbers
-      case Some(S(v)) => v.toDoubleOption.filter(d => !d.isNaN && !d.isInfinite)
-        .toRight(s"$k: invalid number '$v'")
-      case Some(other) => Left(s"$k: expected number, got $other")
-    }
+        case I(v) =>
+          if (v < Int.MinValue || v > Int.MaxValue)
+            Left(s"$k: $v out of 32-bit integer range")
+          else Right(v.toInt)
+      }
+    def bool(k: String): Either[String, Option[Boolean]] =
+      get(k, "bool")(_.trim.toLowerCase match {
+        case "true" | "1" => Right(B(true))
+        case "false" | "0" => Right(B(false))
+        case other => Left(s"$k: invalid bool '$other'")
+      }) { case B(v) => Right(v) }
+    def dbl(k: String): Either[String, Option[Double]] =
+      get(k, "number")(v => Right(S(v))) {
+        case F(v) => Right(v)
+        case I(v) => Right(v.toDouble)
+        // a string (an env/flag value, or quoted in the file) parses,
+        // rejecting NaN/Inf here so range validators downstream see only
+        // ordered numbers
+        case S(v) => v.toDoubleOption.filter(d => !d.isNaN && !d.isInfinite)
+          .toRight(s"$k: invalid number '$v'")
+      }
+  }
+
+  private implicit final class OrDefault[T](private val got: Either[String, Option[T]])
+      extends AnyVal {
+    def or(dflt: => T): Either[String, T] = got.map(_.getOrElse(dflt))
   }
 
   private def build(kvs: Seq[(String, Value)]): Either[String, PipelineConfig] = {
     val lk = new Lookup(kvs)
     for {
-      include <- lk.arr("collector.include")
-      exclude <- lk.arr("collector.exclude")
-      lineageParts <- lk.int("collector.lineage-partitions", 32)
-      fpStrategy <- lk.str("collector.fingerprint-strategy", "checksum")
-      fpSize <- lk.int("collector.fingerprint-size", 64 * 1024)
+      include <- lk.arr("collector.include").or(Defaults.include)
+      exclude <- lk.arr("collector.exclude").or(Defaults.exclude)
+      fpStrategy <- lk.str("collector.fingerprint-strategy").or(Defaults.fingerprintStrategy)
+      fpSize <- lk.int("collector.fingerprint-size").or(Defaults.fingerprintSize)
       _ <- parityChecks(lk)
-      promAddr <- prometheusChecks(lk)
-      batch <- batchSettings(lk)
+      promAddr <- prometheus(lk)
+      batchSize <- lk.int("sink.batch-size").or(Defaults.batchSize)
+      interval <- lk.str("sink.batch-interval")
+      retries <- lk.int("sink.retries").or(Defaults.batchRetries)
+      intervalMs <- interval.fold[Either[String, Long]](Right(Defaults.batchIntervalMs))(parseDuration)
       ml <- multiline(lk)
       dd <- dedupStage(lk)
       sinks <- sinkRules(kvs, lk)
-      labels <- Right(kvs.collect {
-        case (k, S(v)) if k.startsWith("sink.labels.") =>
-          k.stripPrefix("sink.labels.") -> v
-      }.toMap)
     } yield PipelineConfig(
       multiline = ml,
       sinks = sinks,
-      lineagePartitions = lineageParts,
       include = include,
       exclude = exclude,
       fingerprintStrategy = fpStrategy,
       fingerprintSize = fpSize,
-      labels = labels,
+      labels = kvs.collect {
+        case (k, S(v)) if k.startsWith("sink.labels.") => k.stripPrefix("sink.labels.") -> v
+        case (k, Raw(v)) if k.startsWith("sink.labels.") => k.stripPrefix("sink.labels.") -> v
+      }.toMap,
       dedup = dd,
       prometheusAddr = promAddr,
-      batchSize = batch._1,
-      batchIntervalMs = batch._2,
-      batchRetries = batch._3)
+      batchSize = batchSize,
+      batchIntervalMs = intervalMs,
+      batchRetries = retries)
   }
 
   /** The `[collector.dedup]` sub-section — an engine-side extension (no
     * reference analogue: freader re-delivers duplicate content by design;
-    * a training-data pipeline must not). Section present at all ⇒ mode and
-    * store-dir are required; the spec re-validates via
-    * [[graft.model.DedupStageSpec.validate]] (mode whitelist, threshold
-    * range) from PipelineConfig.validate.
+    * a training-data pipeline must not). Section present at all ⇒ a
+    * stage; an unset mode or store-dir reaches
+    * [[graft.model.DedupStageSpec.validate]] empty, which refuses it.
     */
-  private def dedupStage(lk: Lookup): Either[String, Option[graft.model.DedupStageSpec]] = {
-    val present = lk.map.keys.exists(_.startsWith("collector.dedup."))
-    if (!present) return Right(None)
-    for {
-      mode <- lk.str("collector.dedup.mode", "")
-      dir <- lk.str("collector.dedup.store-dir", "")
-      thr <- lk.dbl("collector.dedup.threshold", 0.8)
-      ngram <- lk.int("collector.dedup.ngram", graft.operators.Dedup.StoreNgram)
-      bands <- lk.int("collector.dedup.bands", graft.operators.Dedup.StoreBands)
-      rpb <- lk.int("collector.dedup.rows-per-band", graft.operators.Dedup.StoreRowsPerBand)
-    } yield Some(graft.model.DedupStageSpec(mode, dir, thr, ngram, bands, rpb))
-  }
+  private def dedupStage(lk: Lookup): Either[String, Option[DedupStageSpec]] =
+    if (!lk.present("collector.dedup.")) Right(None)
+    else for {
+      mode <- lk.str("collector.dedup.mode")
+      dir <- lk.str("collector.dedup.store-dir")
+      thr <- lk.dbl("collector.dedup.threshold").or(Dedup.StoreThreshold)
+      ngram <- lk.int("collector.dedup.ngram").or(Dedup.StoreNgram)
+      bands <- lk.int("collector.dedup.bands").or(Dedup.StoreBands)
+      rpb <- lk.int("collector.dedup.rows-per-band").or(Dedup.StoreRowsPerBand)
+    } yield Some(DedupStageSpec(mode.getOrElse(""), dir.getOrElse(""), thr, ngram, bands, rpb))
 
   /** separator non-empty, poll-interval > 0 and workers >= 1 when set —
     * the reference's checks (config.go:190-237), kept because they reject
@@ -250,123 +253,93 @@ object ConfigLoader {
     * (snapshot poll cadence, task parallelism) absorbs the other two.
     */
   private def parityChecks(lk: Lookup): Either[String, Unit] = for {
-    sep <- lk.str("collector.separator", "\n")
+    sep <- lk.str("collector.separator").or("\n")
     _ <- if (sep.nonEmpty) Right(()) else Left("separator must be non-empty")
-    pi <- lk.str("collector.poll-interval", "2s")
+    pi <- lk.str("collector.poll-interval").or("2s")
     ms <- parseDuration(pi).left.map(e => s"collector.poll-interval: $e")
     _ <- if (ms > 0) Right(()) else Left("collector.poll-interval must be > 0")
-    w <- lk.int("collector.workers", 1)
+    w <- lk.int("collector.workers").or(1)
     _ <- if (w >= 1) Right(()) else Left("collector.workers must be >= 1")
   } yield ()
 
-  /** prometheus.addr must be set when prometheus.enable (config.go:227-229)
-    * and must be a listenable host:port — Go's net.Listen rejects a
-    * port-less address at startup; validating here surfaces it at config
-    * time instead of as a bind failure mid-run. Yields the endpoint
-    * address when enabled.
+  /** prometheus.addr must be set when prometheus.enable
+    * (config.go:227-229). Yields the endpoint address when enabled;
+    * [[PipelineConfig.validate]] checks it is listenable.
     */
-  private def prometheusChecks(lk: Lookup): Either[String, Option[String]] = for {
-    en <- lk.bool("prometheus.enable", dflt = false)
-    addr <- lk.str("prometheus.addr", "")
-    _ <- if (!en) Right(())
-      else if (addr.isEmpty)
+  private def prometheus(lk: Lookup): Either[String, Option[String]] = for {
+    en <- lk.bool("prometheus.enable").or(false)
+    addr <- lk.str("prometheus.addr")
+    _ <- if (en && addr.forall(_.isEmpty))
         Left("prometheus.addr must be set when prometheus.enable is true")
-      else graft.metrics.Metrics.listenAddr(addr).left.map(e => s"prometheus.addr: $e")
-  } yield if (en) Some(addr) else None
-
-  /** sink.batch-size, sink.batch-interval (a duration) and sink.retries;
-    * their ranges are the reference validations (config.go:198-204), checked
-    * by [[PipelineConfig.validate]]. The values are CONSUMED by the HTTP
-    * wire sinks (rows per bulk POST / max flush gap — interval is
-    * best-effort, see PipelineConfig.batchIntervalMs); the parquet/file
-    * flavors remain lossless-batch (COVERAGE.md §2.6). sink.retries is the
-    * engine-side bounded re-POST count for transiently failed wire batches
-    * (the reference drops a failed flush; 0 keeps that parity). Yields
-    * (size, ms, retries).
-    */
-  private def batchSettings(lk: Lookup): Either[String, (Int, Long, Int)] = for {
-    bs <- lk.int("sink.batch-size", 200)
-    bi <- lk.str("sink.batch-interval", "2s")
-    rt <- lk.int("sink.retries", 0)
-    ms <- parseDuration(bi)
-  } yield (bs, ms, rt)
+      else Right(())
+  } yield addr.filter(_ => en)
 
   /** The multiline sub-unmarshal incl. the Java preset (config.go:100-131),
     * which fills unset fields from [[MultilineSpec.Java]] and
     * [[MultilineSpec.JavaTimeoutMs]], and MultilineReader.Validate
     * strictness (multline_reader.go:37-48: start-pattern,
     * condition-pattern and timeout > 0 are all required).
-    * The timeout is validated only: a run's batch assembly closes every
+    * The timeout is checked only: a run's batch assembly closes every
     * record at the end of its conversation and has no idle flush to set
     * (the streaming flush takes its timeout as a parameter).
     * Returns the spec when the section is present at all.
     */
-  private def multiline(lk: Lookup): Either[String, Option[MultilineSpec]] = {
-    val present = lk.map.keys.exists(_.startsWith("collector.multiline."))
-    if (!present) return Right(None)
-    for {
-      java <- lk.bool("collector.multiline.java", dflt = false)
-      mode0 <- lk.str("collector.multiline.mode", "")
-      start0 <- lk.str("collector.multiline.start-pattern", "")
-      cond0 <- lk.str("collector.multiline.condition-pattern", "")
-      tout <- lk.str("collector.multiline.timeout", "")
-      m <- if (java && mode0.isEmpty) Right(MultilineSpec.Java.mode)
-        else modes.get(mode0).toRight(s"invalid multiline mode: '$mode0'")
-      start = if (java && start0.isEmpty) MultilineSpec.Java.startPattern.mkString else start0
-      cond = if (java && cond0.isEmpty) MultilineSpec.Java.condPattern else cond0
-      _ <- if (start.nonEmpty) Right(()) else Left("multiline start-pattern is required")
-      _ <- if (cond.nonEmpty) Right(()) else Left("multiline condition-pattern is required")
-      _ <- compile(start, "start-pattern")
-      _ <- compile(cond, "condition-pattern")
-      ms <- if (tout.nonEmpty) parseDuration(tout).left.map(e => s"multiline timeout: $e")
-        else Right(if (java) MultilineSpec.JavaTimeoutMs else 0L)
+  private def multiline(lk: Lookup): Either[String, Option[MultilineSpec]] =
+    if (!lk.present("collector.multiline.")) Right(None)
+    else for {
+      java <- lk.bool("collector.multiline.java").or(false)
+      preset = Option.when(java)(MultilineSpec.Java)
+      mode0 <- lk.str("collector.multiline.mode")
+      start0 <- lk.str("collector.multiline.start-pattern")
+      cond0 <- lk.str("collector.multiline.condition-pattern")
+      tout <- lk.str("collector.multiline.timeout")
+      mode <- mode0.filter(_.nonEmpty).fold(preset.map(_.mode))(modes.get)
+        .toRight(s"invalid multiline mode: '${mode0.getOrElse("")}'")
+      start <- start0.filter(_.nonEmpty).orElse(preset.flatMap(_.startPattern))
+        .toRight("multiline start-pattern is required")
+      cond <- cond0.filter(_.nonEmpty).orElse(preset.map(_.condPattern))
+        .toRight("multiline condition-pattern is required")
+      ms <- tout.filter(_.nonEmpty) match {
+        case Some(t) => parseDuration(t).left.map(e => s"multiline timeout: $e")
+        case None => Right(if (java) MultilineSpec.JavaTimeoutMs else 0L)
+      }
       _ <- if (ms > 0) Right(()) else Left("multiline timeout must be > 0")
-    } yield Some(MultilineSpec(m, cond, Some(start)))
-  }
+    } yield Some(MultilineSpec(mode, cond, Some(start)))
 
-  private def compile(re: String, what: String): Either[String, Unit] =
-    try { java.util.regex.Pattern.compile(re); Right(()) }
-    catch { case e: Exception => Left(s"invalid $what regex: ${e.getMessage}") }
+  private val sinkKey = ("^sink\\.([^.]+)\\.(" + sinkKeys.mkString("|") + ")$").r
 
   /** `[sink.<name>]` sections, in first-appearance order; no section ⇒ the
-    * reference default console sink (config.go DefaultConfig).
+    * default console sink (config.go DefaultConfig).
     */
   private def sinkRules(kvs: Seq[(String, Value)], lk: Lookup): Either[String, Seq[SinkRule]] = {
-    val names = mutable.LinkedHashSet.empty[String]
-    val re = ("^sink\\.([^.]+)\\.(type|include|exclude|reject-where|url|" +
-      "index|table|database|user|password)$").r
-    kvs.foreach {
-      case (re(name, _), _) if name != "labels" => names += name
-      case _ => ()
-    }
-    if (names.isEmpty) return Right(Seq(SinkRule("console", kind = "console")))
+    val names = kvs.collect { case (sinkKey(name, _), _) if name != "labels" => name }.distinct
+    if (names.isEmpty) return Right(Defaults.sinks)
     val out = mutable.ArrayBuffer.empty[SinkRule]
     for (n <- names) {
+      val base = SinkRule(n)
       val rule = for {
-        kind <- lk.str(s"sink.$n.type", "parquet")
-        _ <- if (sinkKinds(kind)) Right(()) else Left(s"invalid sink.type: $kind")
-        inc <- lk.arr(s"sink.$n.include")
-        exc <- lk.arr(s"sink.$n.exclude")
-        rej <- lk.arr(s"sink.$n.reject-where")
+        kind <- lk.str(s"sink.$n.type").or(base.kind)
+        inc <- lk.arr(s"sink.$n.include").or(base.include)
+        exc <- lk.arr(s"sink.$n.exclude").or(base.exclude)
+        rej <- lk.arr(s"sink.$n.reject-where").or(base.rejectWhere)
         // wire endpoint surface (opensearch.go:26 url/index/user/pass;
         // clickhouse.go:26 addr/database/table/user/pass): the OS index or
         // the CH [db.]table collapse into SinkRule.target
-        url <- lk.str(s"sink.$n.url", "")
-        index <- lk.str(s"sink.$n.index", "")
-        table <- lk.str(s"sink.$n.table", "")
-        database <- lk.str(s"sink.$n.database", "")
-        user <- lk.str(s"sink.$n.user", "")
-        pass <- lk.str(s"sink.$n.password", "")
+        url <- lk.str(s"sink.$n.url")
+        index <- lk.str(s"sink.$n.index")
+        table <- lk.str(s"sink.$n.table")
+        database <- lk.str(s"sink.$n.database")
+        user <- lk.str(s"sink.$n.user").or(base.user)
+        pass <- lk.str(s"sink.$n.password").or(base.pass)
       } yield {
         val target =
-          if (kind == "clickhouse")
-            if (table.nonEmpty && database.nonEmpty && !table.contains("."))
-              s"$database.$table"
-            else table
-          else index
-        SinkRule(n, inc, exc, rej, kind,
-          url = if (url.isEmpty) None else Some(url),
-          target = target, user = user, pass = pass)
+          if (kind != "clickhouse") index.getOrElse(base.target)
+          else (table, database) match {
+            case (Some(t), Some(db)) if t.nonEmpty && db.nonEmpty && !t.contains(".") =>
+              s"$db.$t"
+            case _ => table.getOrElse(base.target)
+          }
+        SinkRule(n, inc, exc, rej, kind, url.filter(_.nonEmpty), target, user, pass)
       }
       rule match {
         case Left(e) => return Left(e)
@@ -435,7 +408,7 @@ object ConfigLoader {
           case Right(I(v)) => vals += v.toString
           case Right(F(v)) => vals += v.toString
           case Right(B(v)) => vals += v.toString
-          case Right(A(_)) => return Left("nested arrays are not supported")
+          case Right(_) => return Left("nested arrays are not supported") // an A
           case Left(e) => return Left(e)
         }
         Right(A(vals.toSeq))
@@ -444,7 +417,7 @@ object ConfigLoader {
     else if (s == "true") Right(B(true))
     else if (s == "false") Right(B(false))
     else s.toLongOption.map(I(_): Value)
-      // bare floats (e.g. dedup threshold = 0.8) are a typed variant: only
+      // bare floats (e.g. dedup threshold = 0.7) are a typed variant: only
       // keys read via Lookup.dbl accept them, so `separator = 1.5` is a
       // config error ("expected string"), not a silent string "1.5"
       .orElse(s.toDoubleOption.filter(d => !d.isNaN && !d.isInfinite)

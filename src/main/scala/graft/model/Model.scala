@@ -106,8 +106,8 @@ object MultilineSpec {
   */
 final case class PipelineConfig(
     multiline: Option[MultilineSpec] = None,
-    sinks: Seq[SinkRule] = Seq(SinkRule("console")),
-    lineagePartitions: Int = 32,
+    /** Default: the reference's one console sink (config.go DefaultConfig). */
+    sinks: Seq[SinkRule] = Seq(SinkRule("console", kind = "console")),
     /** Path include patterns over manifest/data-file paths — S3 semantics
       * of internal/watcher/watcher.go:213-275 (Go filepath.Match globs,
       * broad-dir vs specific includes). Empty ⇒ admit all.
@@ -130,7 +130,7 @@ final case class PipelineConfig(
       * parquet, whose first bytes are format-similar across files, so the
       * engine default is 64 KiB (+ length always mixed in).
       */
-    fingerprintSize: Int = 64 * 1024,
+    fingerprintSize: Int = graft.checkpoint.Fingerprint.DefaultPrefixBytes,
     /** Constant labels stamped on every delivered row (SinkConfig.Labels,
       * cmd/freader/config.go DefaultConfig; applied at delivery like the
       * ClickHouse/OpenSearch label maps).
@@ -174,49 +174,58 @@ final case class PipelineConfig(
       */
     batchRetries: Int = 0
 ) {
+  /** The one check of a config, whether it was loaded or built: the
+    * reference's Config.Validate matrix (config.go:190-237 +
+    * multline_reader.go:37-48) and the collector-side checks. Yields the
+    * first fault in rule order.
+    */
   def validate(
       isDir: String => Boolean =
         graft.operators.PathFilter.isDir(new org.apache.hadoop.conf.Configuration())
-  ): Either[String, PipelineConfig] =
-    if (sinks.isEmpty) Left("at least one sink is required")
-    else if (sinks.map(_.name).distinct.size != sinks.size)
-      Left("sink names must be unique")
-    else if (lineagePartitions < 1) Left("lineagePartitions must be >= 1")
+  ): Either[String, PipelineConfig] = Seq(
+    Option.when(sinks.isEmpty)("at least one sink is required"),
+    Option.when(sinks.map(_.name).distinct.size != sinks.size)("sink names must be unique"),
+    // Go's net.Listen rejects a port-less address at startup; checking it
+    // here surfaces it at config time instead of as a bind failure mid-run
+    prometheusAddr.flatMap(graft.metrics.Metrics.listenAddr(_).left.toOption)
+      .map(e => s"prometheus.addr: $e"),
+    // a bad pattern fails here, not inside a Spark task mid-run
+    multiline.flatMap(m => (m.startPattern.map("start-pattern" -> _) ++
+      Seq("condition-pattern" -> m.condPattern)).flatMap { case (what, re) =>
+        scala.util.Try(java.util.regex.Pattern.compile(re)).failed.toOption
+          .map(e => s"invalid $what regex: ${e.getMessage}")
+      }.headOption),
+    // the sink.type whitelist (config.go:192-196) + the native "parquet"
+    sinks.map(_.kind).find(!Set("console", "file", "clickhouse", "opensearch", "parquet")
+      .contains(_)).map(k => s"invalid sink.type: $k"),
     // the watcher fingerprint matrix (internal/watcher/config.go:21-42)
-    else if (!Set("checksum", "deviceAndInode", "checksumSeparator")
-      .contains(fingerprintStrategy))
-      Left(s"unsupported fingerprint strategy: $fingerprintStrategy")
-    else if (fingerprintStrategy != "deviceAndInode" && fingerprintSize <= 0)
-      Left("fingerprint size must be greater than 0")
-    else if (include.nonEmpty &&
-      graft.operators.PathFilter.validateRoots(include, isDir).isLeft)
-      Left(graft.operators.PathFilter.validateRoots(include, isDir)
-        .left.getOrElse(""))
+    Option.when(!Set("checksum", "deviceAndInode", "checksumSeparator")
+      .contains(fingerprintStrategy))(s"unsupported fingerprint strategy: $fingerprintStrategy"),
+    Option.when(fingerprintStrategy != "deviceAndInode" && fingerprintSize <= 0)(
+      "fingerprint size must be greater than 0"),
+    graft.operators.PathFilter.validateRoots(include, isDir).left.toOption,
     // wire-config completeness: the reference's New() preconditions
     // (opensearch.go:26-28, clickhouse.go:27-29) — a half-configured wire
     // sink is a config error, not a silent fallback to modeled delivery
-    else if (sinks.exists(s => s.kind == "opensearch" &&
-      (s.url.isDefined != s.target.nonEmpty)))
-      Left("opensearch url and index are required")
-    else if (sinks.exists(s => s.kind == "clickhouse" &&
-      s.url.isDefined && s.target.isEmpty))
-      Left("clickhouse addr and table are required")
-    else if (sinks.exists(s => s.url.isDefined &&
-      !Set("opensearch", "clickhouse").contains(s.kind)))
-      Left("sink url is only supported for opensearch/clickhouse kinds")
+    Option.when(sinks.exists(s => s.kind == "opensearch" &&
+      (s.url.isDefined != s.target.nonEmpty)))("opensearch url and index are required"),
+    Option.when(sinks.exists(s => s.kind == "clickhouse" && s.url.isDefined &&
+      s.target.isEmpty))("clickhouse addr and table are required"),
+    Option.when(sinks.exists(s => s.url.isDefined &&
+      !Set("opensearch", "clickhouse").contains(s.kind)))(
+      "sink url is only supported for opensearch/clickhouse kinds"),
     // the ClickHouse target is interpolated into an INSERT statement —
     // reject anything that isn't a plain [db.]table identifier so a
     // malformed or hostile config value can't smuggle SQL to the endpoint
     // (HttpSink additionally backtick-quotes the parts)
-    else if (sinks.exists(s => s.kind == "clickhouse" && s.url.isDefined &&
-      !s.target.matches("[A-Za-z0-9_]+(\\.[A-Za-z0-9_]+)?")))
-      Left("clickhouse table must be a [db.]table identifier " +
-        "([A-Za-z0-9_] parts)")
-    else if (batchSize < 1) Left("sink.batch-size must be > 0")
-    else if (batchIntervalMs < 1) Left("sink.batch-interval must be > 0")
-    else if (batchRetries < 0) Left("sink.retries must be >= 0")
-    else dedup.fold[Either[String, PipelineConfig]](Right(this))(
-      _.validate().map(_ => this))
+    Option.when(sinks.exists(s => s.kind == "clickhouse" && s.url.isDefined &&
+      !s.target.matches("[A-Za-z0-9_]+(\\.[A-Za-z0-9_]+)?")))(
+      "clickhouse table must be a [db.]table identifier ([A-Za-z0-9_] parts)"),
+    Option.when(batchSize < 1)("sink.batch-size must be > 0"),
+    Option.when(batchIntervalMs < 1)("sink.batch-interval must be > 0"),
+    Option.when(batchRetries < 0)("sink.retries must be >= 0"),
+    dedup.flatMap(_.validate().left.toOption)
+  ).flatten.headOption.toLeft(this)
 }
 
 /** Configuration of the optional incremental dedup stage
@@ -228,7 +237,7 @@ final case class PipelineConfig(
 final case class DedupStageSpec(
     mode: String,
     storeDir: String,
-    threshold: Double = 0.8,
+    threshold: Double = graft.operators.Dedup.StoreThreshold,
     ngram: Int = graft.operators.Dedup.StoreNgram,
     bands: Int = graft.operators.Dedup.StoreBands,
     rowsPerBand: Int = graft.operators.Dedup.StoreRowsPerBand) {

@@ -104,11 +104,13 @@ object Dedup {
   /** Default shingle size and LSH geometry of the incremental near-dup
     * store. A store's `_meta` pins the values of its first stage, so every
     * stage that may share a store ([[graft.model.DedupStageSpec]], the
-    * streaming near-dup stage, [[incrementalMinhash]]) defaults to these.
+    * streaming near-dup stage, [[incrementalMinhash]]) defaults to these,
+    * and to the one Jaccard threshold they verify against.
     */
   val StoreNgram = 3
   val StoreBands = 4
   val StoreRowsPerBand = 2
+  val StoreThreshold = 0.8
 
   /** The seen-store's commit log: `seen-*` dirs, superseded ones retired
     * rather than deleted (a concurrent reader whose plan pinned their
@@ -336,7 +338,7 @@ object Dedup {
     */
   def incrementalMinhash(df: DataFrame, idCol: String, textCol: String,
       storeDir: String, n: Int = StoreNgram, bands: Int = StoreBands,
-      rowsPerBand: Int = StoreRowsPerBand, threshold: Double = 0.8,
+      rowsPerBand: Int = StoreRowsPerBand, threshold: Double = StoreThreshold,
       maxSeenDirs: Int = 16): DataFrame =
     incrementalMinhashStaged(df, idCol, textCol, storeDir, n, bands, rowsPerBand,
       threshold, maxSeenDirs).committed()
@@ -346,7 +348,7 @@ object Dedup {
     */
   def incrementalMinhashStaged(df: DataFrame, idCol: String, textCol: String,
       storeDir: String, n: Int = StoreNgram, bands: Int = StoreBands,
-      rowsPerBand: Int = StoreRowsPerBand, threshold: Double = 0.8,
+      rowsPerBand: Int = StoreRowsPerBand, threshold: Double = StoreThreshold,
       maxSeenDirs: Int = 16, srcCol: Option[String] = None): IncrementalBatch = {
     val spark = df.sparkSession
     val log = seenLog(spark, storeDir)

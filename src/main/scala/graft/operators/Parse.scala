@@ -44,22 +44,6 @@ object Parse {
       p.getField("kv").as("kv"))
   }
 
-  /** `parseTurns` variant for SQL-oracle checks: same columns minus the map
-    * (DuckDB map comparison is not part of the driver gate); adds a
-    * deterministic projection of one kv field instead.
-    */
-  def parseTurnsSql(df: DataFrame): DataFrame = {
-    val text = col("text")
-    df.select(
-      col("conv_id"), col("turn_idx"),
-      regexp_extract(text, "^([A-Za-z]+)", 1).as("verb"),
-      regexp_extract(text, "tool=([A-Za-z0-9_]+)", 1).as("tool_x"),
-      nullif(regexp_extract(text, "dur=(\\d+)ms", 1), lit("")).cast("long").as("dur_ms"),
-      nullif(regexp_extract(text, "status=([a-z]+)", 1), lit("")).as("status"),
-      nullif(regexp_extract(text, "note=\"([^\"]*)\"", 1), lit("")).as("note")
-    )
-  }
-
   /** Passthrough/drop wrapper, the reference's parser-transform closure
     * (cmd/freader/main.go:99-120): on parse hit emit rendered JSON, on miss
     * pass the raw line through or drop it.

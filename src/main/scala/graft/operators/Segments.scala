@@ -93,22 +93,21 @@ object Segments {
     fsm.flush().iterator.zipWithIndex.map { case ((r, _), i) => (i, r) }
   }
 
-  /** The batch driver: one hash shuffle on conv_id, an in-partition sort
-    * by (conv_id, turn_idx), and one FSM per conversation, fed one line
-    * at a time. Records emit as soon as the FSM closes them, so per-task
-    * memory is O(open buffer), not O(records per conversation) — a
-    * 10^7-turn mega-conversation costs only its largest record. Emitted
-    * records always consume the oldest open lines (standalone emission
-    * only happens on an empty buffer), so a FIFO of the open lines yields
-    * each record's first line. `record` builds the output row from that
+  /** The batch driver: one hash shuffle on conv_id into the session's
+    * shuffle partitions (the count a run's `deliver` re-clusters with),
+    * an in-partition sort by (conv_id, turn_idx), and one FSM per
+    * conversation, fed one line at a time. Records emit as soon as the
+    * FSM closes them, so per-task memory is O(open buffer), not
+    * O(records per conversation) — a 10^7-turn mega-conversation costs
+    * only its largest record. Emitted records always consume the oldest
+    * open lines (standalone emission only happens on an empty buffer), so
+    * a FIFO of the open lines yields each record's first line. `record` builds the output row from that
     * first line, the record index, the record and its line count.
     */
-  private def assemble[A, B: Encoder](lines: Dataset[A], spec: MultilineSpec,
-      partitions: Int)(conv: A => String, text: A => String,
-      record: (A, Int, String, Int) => B): Dataset[B] = {
-    val parts = if (partitions > 0) partitions
-      else lines.sparkSession.sessionState.conf.numShufflePartitions
-    lines.repartition(parts, col("conv_id"))
+  private def assemble[A, B: Encoder](lines: Dataset[A], spec: MultilineSpec)(
+      conv: A => String, text: A => String,
+      record: (A, Int, String, Int) => B): Dataset[B] =
+    lines.repartition(lines.sparkSession.sessionState.conf.numShufflePartitions, col("conv_id"))
       .sortWithinPartitions("conv_id", "turn_idx")
       .mapPartitions { it =>
         new Iterator[B] {
@@ -142,15 +141,14 @@ object Segments {
           }
         }
       }
-  }
 
   /** Exact formulation over (conv_id, turn_idx, text) lines.
     * Output: (conv_id, record_idx, record, n_lines).
     */
-  def assembleFsm(df: DataFrame, spec: MultilineSpec, partitions: Int = 0): DataFrame = {
+  def assembleFsm(df: DataFrame, spec: MultilineSpec): DataFrame = {
     import df.sparkSession.implicits._
     assemble(df.select("conv_id", "turn_idx", "text").as[(String, Int, String)],
-        spec, partitions)(_._1, _._3, (first, idx, r, n) => (first._1, idx, r, n))
+        spec)(_._1, _._3, (first, idx, r, n) => (first._1, idx, r, n))
       .toDF("conv_id", "record_idx", "record", "n_lines")
   }
 
@@ -159,11 +157,11 @@ object Segments {
     * transcript shape with `turn_idx` = record index and `text` = assembled
     * record, so the parse→enrich→route stages compose on top unchanged.
     */
-  def assembleFsmRows(df: DataFrame, spec: MultilineSpec, partitions: Int = 0): DataFrame = {
+  def assembleFsmRows(df: DataFrame, spec: MultilineSpec): DataFrame = {
     import df.sparkSession.implicits._
     assemble(df.select(col("conv_id"), col("turn_idx"), col("text"), col("role"),
         col("tool"), col("ts").cast("timestamp").as("ts"), col("src_file")).as[MetaRow],
-        spec, partitions)(_.conv_id, _.text,
+        spec)(_.conv_id, _.text,
         (first, idx, r, _) => first.copy(turn_idx = idx, text = r))
       .toDF()
   }

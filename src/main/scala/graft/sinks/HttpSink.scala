@@ -139,15 +139,18 @@ object HttpSink {
     * with the same token), and each OpenSearch action gets an explicit
     * `_id` of `<batch-token>-<position>` (a replayed `index` op overwrites
     * the same document instead of appending a duplicate). The token is
-    * salted with the batch body, so genuinely identical rows in DIFFERENT
-    * batches keep distinct ids — only a replay of the SAME batch collides,
-    * which is the point.
+    * salted with the batch's identity `batchKey` as well as its body: the
+    * docs carry no row identity, so two files with identical rows (a
+    * verbatim re-ingest) would otherwise POST byte-identical batches, and
+    * the remote would drop or overwrite the second file's rows. Only a
+    * replay of the SAME batch collides, which is the point.
     */
-  def postBatch(spec: WireSpec, docs: IndexedSeq[String]): IndexedSeq[Boolean] = {
+  def postBatch(spec: WireSpec, docs: IndexedSeq[String],
+      batchKey: String = ""): IndexedSeq[Boolean] = {
     if (docs.isEmpty) return IndexedSeq.empty
     val base = spec.url.stripSuffix("/")
     val batchToken =
-      java.lang.Long.toHexString(Hashing.sha60Jvm(docs.mkString("\n")))
+      java.lang.Long.toHexString(Hashing.sha60Jvm((batchKey +: docs).mkString("\n")))
     val (urlStr, body, contentType) = spec.kind match {
       case "clickhouse" =>
         val q = java.net.URLEncoder.encode(
@@ -243,8 +246,14 @@ object HttpSink {
         val buf = mutable.ArrayBuffer.empty[(String, String)]
         val acc = mutable.LinkedHashMap.empty[String, (Long, Long)]
         var lastFlush = System.nanoTime()
+        // a batch is identified by its partition, its ordinal within it
+        // and its rows' source files — the same on every re-POST of it
+        val part = org.apache.spark.TaskContext.getPartitionId()
+        var ordinal = 0
         def flush(): Unit = if (buf.nonEmpty) {
-          val oks = postBatch(spec, buf.map(_._2).toIndexedSeq)
+          val key = s"$part/$ordinal/${buf.map(_._1).distinct.mkString(",")}"
+          ordinal += 1
+          val oks = postBatch(spec, buf.map(_._2).toIndexedSeq, key)
           var i = 0
           while (i < buf.size) {
             val f = buf(i)._1

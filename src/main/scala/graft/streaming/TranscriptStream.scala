@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
 
 import graft.model.{MultilineSpec, Turn}
 import graft.operators.{Parse, Route, Segments}
-import graft.operators.Dedup.{StoreBands, StoreNgram, StoreRowsPerBand}
+import graft.operators.Dedup.{StoreBands, StoreNgram, StoreRowsPerBand, StoreThreshold}
 
 /** Structured Streaming flavor of the engine — the "tail -f" capability the
   * batch pipeline supplies via resumable runs, expressed natively:
@@ -106,7 +106,7 @@ object TranscriptStream {
     */
   def dedupStreamNearDup(turns: Dataset[Turn], storeDir: String,
       n: Int = StoreNgram, bands: Int = StoreBands, rowsPerBand: Int = StoreRowsPerBand,
-      threshold: Double = 0.8,
+      threshold: Double = StoreThreshold,
       /** Streaming checkpoint location — REQUIRED in production for the
         * "at-least-once bounded to one crash" contract: without it the
         * engine's temp checkpoint dies with the process and a restart

@@ -15,8 +15,6 @@ class ConfigAndFingerprintSpec extends AnyFunSuite {
     assert(PipelineConfig(sinks = Nil).validate() == Left("at least one sink is required"))
     assert(PipelineConfig(sinks = Seq(SinkRule("a"), SinkRule("a"))).validate() ==
       Left("sink names must be unique"))
-    assert(PipelineConfig(lineagePartitions = 0).validate() ==
-      Left("lineagePartitions must be >= 1"))
   }
 
   test("Checksum strategy: hash of prefix; too-small content yields null") {

@@ -2,10 +2,14 @@ package graft
 
 import java.nio.file.Files
 
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.Prop.propBoolean
+import org.scalacheck.rng.Seed
+import org.scalacheck.util.Pretty
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config.ConfigLoader
-import graft.model.{MultilineMode, MultilineSpec}
+import graft.model.{MultilineMode, MultilineSpec, PipelineConfig, SinkRule}
 
 /** Config loading parity with the reference's viper stack
   * (cmd/freader/config.go:55-131 precedence, :190-237 validation;
@@ -13,6 +17,7 @@ import graft.model.{MultilineMode, MultilineSpec}
   * multline_reader.go:37-48 strictness).
   */
 class ConfigLoaderSpec extends AnyFunSuite {
+  import ConfigLoaderSpec._
 
   private def loadText(toml: String,
       env: Map[String, String] = Map.empty,
@@ -50,7 +55,6 @@ class ConfigLoaderSpec extends AnyFunSuite {
         |""".stripMargin).toOption.get
     assert(cfg.include == Seq("/data/logs/*.log", "file_1*.txt"))
     assert(cfg.exclude == Seq("*.tmp"))
-    assert(cfg.lineagePartitions == 12)
     assert(cfg.multiline.contains(MultilineSpec(
       MultilineMode.HaltBefore, "^(CALL|INFO|ask)", Some("^(CALL|INFO)"))))
     assert(cfg.sinks.map(_.name) == Seq("all", "errors", "clean"))
@@ -434,4 +438,222 @@ class ConfigLoaderSpec extends AnyFunSuite {
     assert(ConfigLoader.parseToml("k = [1, \"a\", true]")
       == Right(Seq("k" -> ConfigLoader.A(Seq("1", "a", "true")))))
   }
+
+  test("no file, env or flags: load yields PipelineConfig()") {
+    assert(ConfigLoader.load(None, env = Map.empty) == Right(PipelineConfig()))
+  }
+
+  test("a built config is refused by validate with the message load gives for the same value") {
+    val cases: Seq[(PipelineConfig, String)] = Seq(
+      PipelineConfig(sinks = Seq(SinkRule("x", kind = "kafka"))) ->
+        "[sink.x]\ntype = \"kafka\"\n",
+      PipelineConfig(multiline = Some(MultilineSpec(MultilineMode.HaltWith, "^B", Some("^(A")))) ->
+        """[collector.multiline]
+          |mode = "haltWith"
+          |start-pattern = "^(A"
+          |condition-pattern = "^B"
+          |timeout = "1s"
+          |""".stripMargin,
+      PipelineConfig(multiline = Some(MultilineSpec(MultilineMode.HaltWith, "^(A", Some("^B")))) ->
+        """[collector.multiline]
+          |mode = "haltWith"
+          |start-pattern = "^B"
+          |condition-pattern = "^(A"
+          |timeout = "1s"
+          |""".stripMargin,
+      PipelineConfig(prometheusAddr = Some("[::1]junk")) ->
+        "[prometheus]\nenable = true\naddr = \"[::1]junk\"\n")
+    for ((cfg, toml) <- cases) {
+      val loaded = loadText(toml)
+      assert(loaded.isLeft, toml)
+      assert(cfg.validate() == loaded, toml)
+    }
+  }
+
+  test("examples.toml lists every key the loader knows, in its section") {
+    // commented-out lines count: the file documents the surface, it need
+    // not switch every part of it on
+    val header = """#?\s*\[([^\]]+)\]""".r
+    val keyLine = """#?\s*([A-Za-z][A-Za-z0-9_-]*)\s*=.*""".r
+    var section = ""
+    val listed = Files.readString(java.nio.file.Paths.get("examples.toml"))
+      .linesIterator.toSeq.flatMap(_.trim match {
+        case header(sec) => section = sec.trim; None
+        case keyLine(k) => Some(s"$section.$k")
+        case _ => None
+      }).toSet
+    assert(ConfigLoader.knownKeys.filterNot(listed).isEmpty,
+      s"missing from examples.toml: ${ConfigLoader.knownKeys.filterNot(listed)}")
+    val sinkSectionKeys = listed.collect {
+      case k if k.startsWith("sink.") && !k.startsWith("sink.labels.") &&
+        k.count(_ == '.') == 2 => k.substring(k.lastIndexOf('.') + 1)
+    }
+    assert(ConfigLoader.sinkKeys.filterNot(sinkSectionKeys).isEmpty,
+      s"no [sink.<name>] section of examples.toml lists " +
+        ConfigLoader.sinkKeys.filterNot(sinkSectionKeys))
+  }
+
+  test("randomized sources: load yields each key's highest-precedence value, malformed values are refused") {
+    val seed = Seed.random()
+    val params = Test.Parameters.default
+      .withMinSuccessfulTests(200).withWorkers(1).withInitialSeed(seed)
+    val result = Test.check(params, Prop.forAllNoShrink(genDraw) { draw =>
+      val f = Files.createTempFile("graft-cfg-prop", ".toml")
+      val got = try {
+        Files.writeString(f, draw.toml)
+        ConfigLoader.load(Some(f.toString), draw.env, draw.flags)
+      } finally Files.delete(f)
+      val parseFaults = draw.keys.flatMap(_.parseFaults).toSet
+      val ruleFaults = draw.keys.flatMap(_.effective.flatMap(_.out.left.toOption))
+        .filterNot(_.atLoad).map(_.msg).toSet
+      val ok = got match {
+        case Left(e) if parseFaults.nonEmpty => parseFaults(e)
+        case Left(e) => ruleFaults(e)
+        case Right(cfg) => parseFaults.isEmpty && ruleFaults.isEmpty &&
+          draw.keys.forall(k => k.key.read(cfg) == k.effective.fold(k.key.dflt)(_.out.toOption.get))
+      }
+      ok :| s"file:\n${draw.toml}env: ${draw.env}\nflags: ${draw.flags}\ngot: $got\n" +
+        s"parse faults: $parseFaults\nrule faults: $ruleFaults"
+    })
+    assert(result.passed,
+      s"seed ${seed.toBase64}: ${Pretty.pretty(result, Pretty.Params(1))}")
+  }
+}
+
+object ConfigLoaderSpec {
+  /** Why a drawn value is refused: `atLoad` when the loader cannot read it
+    * as its key's type, else a rule of `PipelineConfig.validate`.
+    */
+  final case class Fault(msg: String, atLoad: Boolean)
+
+  /** A value rendered for one source, and what it loads as. */
+  final case class Drawn(text: String, out: Either[Fault, Any])
+
+  private def ok(text: String, v: Any) = Drawn(text, Right(v))
+  private def unreadable(text: String, msg: String) = Drawn(text, Left(Fault(msg, atLoad = true)))
+  private def refused(text: String, msg: String) = Drawn(text, Left(Fault(msg, atLoad = false)))
+
+  /** A typed key: how its file literal and env/flag string are drawn
+    * (mostly well-formed), its default, and where the loaded config holds
+    * it. `strictRaw`: an unreadable env/flag string is refused even where
+    * a later source overrides it (the int and bool keys).
+    */
+  final case class Typed(key: String, file: Gen[Drawn], raw: Gen[Drawn],
+      dflt: Any, read: PipelineConfig => Any, strictRaw: Boolean = false)
+
+  private def mostly(good: Gen[Drawn], bad: Gen[Drawn]*): Gen[Drawn] =
+    Gen.frequency((12 -> good) +: bad.map(1 -> _): _*)
+
+  private def quoted(s: String) = "\"" + s + "\""
+
+  val typedKeys: Seq[Typed] = Seq(
+    Typed("sink.batch-size",
+      mostly(Gen.choose(1, 5000).map(n => ok(n.toString, n)),
+        Gen.const(unreadable("\"5\"", "sink.batch-size: expected integer, got S(5)")),
+        Gen.const(refused("0", "sink.batch-size must be > 0"))),
+      mostly(Gen.choose(1, 5000).map(n => ok(s" $n", n)),
+        Gen.oneOf("x1", "1.5", "").map(r => unreadable(r, s"sink.batch-size: invalid integer '$r'")),
+        Gen.const(refused("0", "sink.batch-size must be > 0"))),
+      200, _.batchSize, strictRaw = true),
+    Typed("sink.retries",
+      mostly(Gen.choose(0, 9).map(n => ok(n.toString, n)),
+        Gen.const(unreadable("\"1\"", "sink.retries: expected integer, got S(1)")),
+        Gen.const(refused("-1", "sink.retries must be >= 0"))),
+      mostly(Gen.choose(0, 9).map(n => ok(n.toString, n)),
+        Gen.oneOf("two", "1e3").map(r => unreadable(r, s"sink.retries: invalid integer '$r'")),
+        Gen.const(refused("-1", "sink.retries must be >= 0"))),
+      0, _.batchRetries, strictRaw = true),
+    Typed("prometheus.enable",
+      mostly(Gen.oneOf(true, false).map(b => ok(b.toString, b)),
+        Gen.const(unreadable("\"true\"", "prometheus.enable: expected bool, got S(true)"))),
+      mostly(Gen.oneOf("true" -> true, "1" -> true, " FALSE " -> false, "0" -> false)
+          .map { case (r, b) => ok(r, b) },
+        Gen.oneOf("yes", "maybe", "2").map(r =>
+          unreadable(r, s"prometheus.enable: invalid bool '${r.trim.toLowerCase}'"))),
+      false, _.prometheusAddr.isDefined, strictRaw = true),
+    {
+      val globs = Gen.nonEmptyListOf(Gen.oneOf("*.log", "*.txt", "x*.parquet"))
+      Typed("collector.include",
+        mostly(globs.map(gs => ok(gs.map(quoted).mkString("[", ", ", "]"), gs)),
+          Gen.const(unreadable("5", "collector.include: expected array, got I(5)"))),
+        globs.map(gs => ok(gs.mkString(","), gs)),
+        Nil, _.include)
+    },
+    Typed("collector.dedup.threshold",
+      mostly(Gen.choose(0.05, 1.0).map(d => ok(d.toString, d)),
+        Gen.const(unreadable("\"abc\"", "collector.dedup.threshold: invalid number 'abc'")),
+        Gen.const(refused("1.5", "dedup threshold must be in (0, 1]"))),
+      mostly(Gen.choose(0.05, 1.0).map(d => ok(d.toString, d)),
+        Gen.oneOf("abc", "NaN", "0.5x").map(r =>
+          unreadable(r, s"collector.dedup.threshold: invalid number '$r'")),
+        Gen.const(refused("1.5", "dedup threshold must be in (0, 1]"))),
+      0.8, _.dedup.get.threshold),
+    {
+      val durations = Gen.oneOf("500ms" -> 500L, "2s" -> 2000L, "1m30s" -> 90000L, "1.5s" -> 1500L)
+      Typed("sink.batch-interval",
+        mostly(durations.map { case (t, ms) => ok(quoted(t), ms) },
+          Gen.const(unreadable("5", "invalid duration '5'")),
+          Gen.const(refused(quoted("0s"), "sink.batch-interval must be > 0"))),
+        mostly(durations.map { case (t, ms) => ok(t, ms) },
+          Gen.oneOf("10", "fast").map(r => unreadable(r, s"invalid duration '$r'")),
+          Gen.const(refused("0s", "sink.batch-interval must be > 0"))),
+        2000L, _.batchIntervalMs)
+    },
+    {
+      val strategies = Gen.oneOf("checksum", "checksumSeparator", "deviceAndInode")
+      Typed("collector.fingerprint-strategy",
+        mostly(strategies.map(t => ok(quoted(t), t)),
+          Gen.const(unreadable("true", "collector.fingerprint-strategy: expected string, got B(true)")),
+          Gen.const(refused(quoted("sha1"), "unsupported fingerprint strategy: sha1"))),
+        mostly(strategies.map(t => ok(t, t)),
+          Gen.const(refused("sha1", "unsupported fingerprint strategy: sha1"))),
+        "checksum", _.fingerprintStrategy)
+    })
+
+  /** One key's draw: its value in the file, env and flags (each maybe
+    * unset), and the flag's name.
+    */
+  final case class KeyDraw(key: Typed, file: Option[Drawn], env: Option[Drawn],
+      flag: Option[(String, Drawn)]) {
+    /** The value load must yield: flags over env over file. */
+    def effective: Option[Drawn] = flag.map(_._2).orElse(env).orElse(file)
+    /** Messages of the unreadable values load may report. */
+    def parseFaults: Seq[String] =
+      ((if (key.strictRaw) env.toSeq ++ flag.map(_._2) else Nil) ++ effective)
+        .flatMap(_.out.left.toOption).filter(_.atLoad).map(_.msg)
+  }
+
+  final case class Draw(keys: Seq[KeyDraw]) {
+    private def section(k: String) = k.substring(0, k.lastIndexOf('.'))
+    /** Every section that needs a companion key has it: the dedup stage
+      * its mode and store, prometheus its address.
+      */
+    def toml: String = {
+      val fixed = Seq("collector.dedup.mode" -> quoted("minhash"),
+        "collector.dedup.store-dir" -> quoted("/tmp/graft-prop-store"),
+        "prometheus.addr" -> quoted(":2112"))
+      val kvs = fixed ++ keys.flatMap(d => d.file.map(d.key.key -> _.text))
+      kvs.groupBy(kv => section(kv._1)).toSeq.sortBy(_._1).map { case (sec, ls) =>
+        ls.map { case (k, v) => s"${k.substring(sec.length + 1)} = $v\n" }
+          .mkString(s"[$sec]\n", "", "\n")
+      }.mkString
+    }
+    def env: Map[String, String] =
+      keys.flatMap(d => d.env.map(ConfigLoader.envName(d.key.key) -> _.text)).toMap
+    def flags: Map[String, String] = keys.flatMap(_.flag.map { case (n, v) => n -> v.text }).toMap
+  }
+
+  private def maybe[A](g: Gen[A]): Gen[Option[A]] =
+    Gen.oneOf(true, false).flatMap(set => if (set) g.map(Some(_)) else Gen.const(None))
+
+  val genDraw: Gen[Draw] = Gen.sequence[Seq[KeyDraw], KeyDraw](typedKeys.map { t =>
+    // a collector key's flag may use its short reference name
+    val names = if (t.key.count(_ == '.') == 1 && t.key.startsWith("collector."))
+      Gen.oneOf(t.key, t.key.stripPrefix("collector.")) else Gen.const(t.key)
+    for {
+      file <- maybe(t.file)
+      env <- maybe(t.raw)
+      flag <- maybe(Gen.zip(names, t.raw))
+    } yield KeyDraw(t, file, env, flag)
+  }).map(Draw(_))
 }

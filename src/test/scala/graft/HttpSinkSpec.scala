@@ -316,4 +316,45 @@ class HttpSinkSpec extends AnyFunSuite {
       assert(sawAuth.get == expected)
     } finally server.stop(0)
   }
+
+  test("two files of identical rows POST distinct _ids and dedup tokens") {
+    // a verbatim re-ingest with dedup off: the docs carry no row identity,
+    // so a token of the body alone would let the remote overwrite (OS) or
+    // drop (CH) the second file's rows while the lineage counts them
+    val seen = new java.util.concurrent.CopyOnWriteArrayList[(String, String)]()
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", new HttpHandler {
+      override def handle(ex: HttpExchange): Unit = {
+        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+        seen.add((ex.getRequestURI.toString, body))
+        val resp = """{"took":1,"errors":false,"items":[]}""".getBytes(StandardCharsets.UTF_8)
+        ex.sendResponseHeaders(200, resp.length.toLong)
+        val os = ex.getResponseBody
+        try os.write(resp) finally os.close()
+      }
+    })
+    server.start()
+    try {
+      import spark.implicits._
+      import scala.jdk.CollectionConverters._
+      val url = s"http://127.0.0.1:${server.getAddress.getPort}"
+      val n = 3
+      // each file in its own delivery, as two runs deliver them: one
+      // partition, one batch
+      def deliverFile(f: String, spec: WireSpec) =
+        HttpSink.deliver((0 until n).map(i => (f, s"""{"message":"row-$i"}"""))
+          .toDF("fname", "doc").coalesce(1), spec).collect()
+      for (f <- Seq("f-a", "f-b"))
+        assert(deliverFile(f, WireSpec("opensearch", url, "idx", batchSize = n))
+          .map(r => (r.getString(0), r.getLong(1))).toSeq == Seq(f -> n.toLong))
+      val ids = seen.asScala.toSeq.flatMap(p => """"_id":"([^"]+)"""".r
+        .findAllMatchIn(p._2).map(_.group(1)))
+      assert(ids.size == 2 * n && ids.distinct.size == 2 * n, ids)
+
+      seen.clear()
+      for (f <- Seq("f-a", "f-b")) deliverFile(f, WireSpec("clickhouse", url, "db.t", batchSize = n))
+      val tokens = seen.asScala.toSeq.map(_._1.split("insert_deduplication_token=")(1))
+      assert(tokens.size == 2 && tokens.distinct.size == 2, tokens)
+    } finally server.stop(0)
+  }
 }

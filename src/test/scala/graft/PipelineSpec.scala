@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.checkpoint.{CommitLog, LineageStore}
-import graft.model.{PipelineConfig, SinkRule}
+import graft.model.{MultilineMode, MultilineSpec, PipelineConfig, SinkRule}
 import graft.sources.{SnapshotTable, Transcripts}
 
 /** Resume semantics, mirroring the reference restart suite
@@ -857,6 +857,26 @@ class PipelineSpec extends AnyFunSuite {
       assert(writesUnder(out) { r = Pipeline.run(spark, table, lineage, c, out) } == 1,
         s"${c.sinks.size} sinks")
       c.sinks.foreach(s => assert(sinkRows(out, s.name) == r.perSinkDelivered(s.name)))
+    }
+  }
+
+  test("a config validate refuses is refused before any Spark job runs") {
+    val root = tmp()
+    val table = new SnapshotTable(spark, s"$root/table")
+    val lineage = new LineageStore(spark, s"$root/lineage")
+    table.append(Transcripts.synthesize(spark, numConvs = 2, turnsPerConv = 3).toDF())
+    val refused = Seq(
+      cfg.copy(sinks = Seq(SinkRule("x", kind = "kafka"))),
+      cfg.copy(multiline = Some(MultilineSpec(MultilineMode.HaltBefore, "^(A"))),
+      cfg.copy(prometheusAddr = Some("[::1]junk")))
+    for (bad <- refused) {
+      var err: IllegalArgumentException = null
+      val work = SparkWork(spark) {
+        err = intercept[IllegalArgumentException](
+          Pipeline.run(spark, table, lineage, bad, s"$root/sinks"))
+      }
+      assert(work.jobs == 0, s"${err.getMessage}: ${work.jobs} Spark jobs")
+      assert(bad.validate() == Left(err.getMessage))
     }
   }
 }

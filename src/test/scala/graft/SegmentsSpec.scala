@@ -95,7 +95,7 @@ class SegmentsSpec extends AnyFunSuite {
     Cases.check(genConv, fixture(seed = 42, convs = 30, maxTurns = 25)) { convs =>
       val df = linesDf(convs)
       specs.flatMap { spec =>
-        val got = Segments.assembleFsm(df, spec, partitions = 5)
+        val got = Segments.assembleFsm(df, spec)
           .as[(String, Int, String, Int)].collect().toSeq
         diff(model(spec, convs), got).map((spec, _))
       }
@@ -115,9 +115,9 @@ class SegmentsSpec extends AnyFunSuite {
         }
       }.toDF("conv_id", "turn_idx", "text", "role", "tool", "ts", "src_file")
       specs.flatMap { spec =>
-        val rows = Segments.assembleFsmRows(df, spec, partitions = 5)
+        val rows = Segments.assembleFsmRows(df, spec)
           .as[Segments.MetaRow].collect().toSeq
-        val plain = Segments.assembleFsm(df, spec, partitions = 5)
+        val plain = Segments.assembleFsm(df, spec)
           .as[(String, Int, String, Int)].collect().toSeq
         // the model's line counts place each record's first line
         val expected = model(spec, convs).groupBy(_._1).toSeq.flatMap { case (c, recs) =>
@@ -138,7 +138,7 @@ class SegmentsSpec extends AnyFunSuite {
     val df = Transcripts.synthesize(spark, numConvs = 50, turnsPerConv = 8,
       megaTurns = 5000, numPartitions = 8).toDF()
     val spec = MultilineSpec(HaltBefore, "^(INFO|CALL|ask)")
-    val got = Segments.assembleFsm(df, spec, partitions = 8)
+    val got = Segments.assembleFsm(df, spec)
     val rows = df.select("conv_id", "turn_idx", "text")
       .as[(String, Int, String)].collect().toSeq
     val expected = fsmExpected(spec, rows)
